@@ -45,9 +45,3 @@ def jaccard(a: Column, b: Column) -> Column:
     compute the identical expression."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     return inter / (F.size(a) + F.size(b) - inter)
-
-
-def token_profile_score(tokens_col: Column, profile: list[str]) -> Column:
-    """Fraction of tokens (with multiplicity) that appear in `profile`."""
-    hits = F.size(F.filter(tokens_col, lambda t: t.isin(*profile)))
-    return hits.cast("double") / F.size(tokens_col)

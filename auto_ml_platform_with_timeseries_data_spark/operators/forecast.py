@@ -38,6 +38,18 @@ double dot-product diverges cross-engine by one FMA contraction, a
 failure observed, not theorized.  Would hold at 1000 executors: series
 are user-keyed
 (numerous small partitions), no skew, no driver loop, no collect.
+
+Shared structure.  Every lag-window kernel starts from ONE prelude,
+``_lagged`` (timeseries.ordered_series's projected series plus the row
+index, the W lags and the last-row flag); the fixed-filter kernels
+score each model through ``_score_cols`` and the model-pooling kernels
+(q343/q348) aggregate through ``_pooled``.  The filter itself is
+``_filt_q_col`` on the Spark side and ``_filt_sql`` in the oracles.
+The oracles share ``_lagged_sql`` and three builders of their own —
+``_fanned_oracle`` (any set of fixed filters, q309/q343/q348, and
+through ``_filter_oracle`` the single filters q310/q328/q332) and
+``_mase_oracle`` (q312/q333) — and never SQL generated from the Spark
+side, so each stays an independent reference.
 """
 
 from __future__ import annotations
@@ -46,6 +58,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    EVENT_CENTS_SRC_SQL,
+    _dominant_lag_oracle,
+    dominant_acf_lag,
+    event_cents_query,
+    ordered_series,
+    pin,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -90,6 +110,98 @@ def holt_weights(alpha: float = _HOLT_ALPHA, beta: float = _HOLT_BETA,
     return [c / s for c in cs]
 
 
+def _lagged(df: DataFrame, group_col: str, order: str, value: Column,
+            tie_break: str | None, nlags: int) -> DataFrame:
+    """The shared prelude of the lag-window kernels: per row of the
+    ordered integer series, __l0 = v_t, __i = its 1-based index,
+    __v1 = the series' first value, __l1..__l{nlags} = its lags and
+    __last = "is the series' final row".  ONE window pass; a kernel
+    that never reads __v1 or __last loses it to column pruning."""
+    src, w = ordered_series(df, group_col, order, value, tie_break)
+    lagged = src.select(
+        "__g", F.col("__v").alias("__l0"),
+        F.row_number().over(w).alias("__i"),
+        F.first("__v").over(w.rowsBetween(
+            Window.unboundedPreceding, 0)).alias("__v1"),
+        *[F.lag("__v", j).over(w).alias(f"__l{j}")
+          for j in range(1, nlags + 1)])
+    return lagged.withColumn(
+        "__last",
+        F.col("__i") == F.max("__i").over(Window.partitionBy("__g")))
+
+
+def _filt_q_col(cs: list[float], off: int, quantum: float,
+                prefix: str = "__l") -> Column:
+    """The exact-integer linear filter Σⱼ floor(cⱼ·colⱼ·Q) over the
+    columns ``{prefix}{j + off}`` as ONE parsed SQL expression.
+
+    Each coefficient*lag product quantizes to floor(c*l*Q) BEFORE the
+    sum, so the filter output is an exact INTEGER in both engines — a
+    16-term double dot-product would be one FMA-contraction away from
+    a cross-engine ulp (the q295 per-product discipline, learned here
+    the hard way).  One expression per model (guide §1.2 "per-task
+    work" applied to the DRIVER: building this sum term-by-term
+    through the Column API cost q343 ~12 s of py4j round trips per
+    build — 62k socket messages + PySpark's per-call call-site capture
+    — while one F.expr per model is a single round trip and a sub-ms
+    JVM parse).
+
+    The parsed tree is node-identical to the Column build it replaced:
+    `{c!r}D` lexes through Double.parseDouble (correctly-rounded
+    strtod, same bits as F.lit(c)), products stay left-associated,
+    each term keeps its CAST(FLOOR(..) AS BIGINT), and `+` parses
+    left-assoc exactly like the incremental `expr + term` loop. Same
+    analyzed plan ⇒ bit-identical results."""
+    return F.expr(" + ".join(
+        f"CAST(FLOOR({float(c)!r}D * {prefix}{j + off}"
+        f" * {float(quantum)!r}D) AS BIGINT)"
+        for j, c in enumerate(cs)))
+
+
+def _score_cols(models: list[tuple[float, list[float]]],
+                window: int) -> list[Column]:
+    """Per model m over a ``_lagged`` frame: __e2_m = the squared
+    walk-forward one-step error (rows with a full W-lag history) and
+    __fn_m = the next-step forecast (the last row only).
+
+    Backtest quantum 1e2 (not 1e6): the exact-integer SSE must stay
+    under 2^53 so its double readout is EXACT in both engines — a
+    DECIMAL(38,0)->double (Spark) vs HUGEINT->double (DuckDB) cast of
+    the SAME >2^53 integer can land one ulp apart (observed at sf0.1
+    with quantum 1e6).  Contract: sum of (e*1e2)^2 per series under
+    9.0e11 value^2 units, i.e. under 2^53.  r15: the squares
+    accumulate as BIGINT, not DECIMAL(38,0) — the per-row BigDecimal
+    multiply was the kernel's measured allocation wall, and under the
+    SAME 2^53 contract the double readout already needs, the long
+    arithmetic is value-identical (sums below 2^53 are exact in
+    either type)."""
+    cols = []
+    for m, (_, cs) in enumerate(models):
+        eq = F.col("__l0") * F.lit(100) - _filt_q_col(cs, 1, 1e2)
+        cols.append(F.when(F.col("__i") > window, eq * eq)
+                    .alias(f"__e2_{m}"))
+        cols.append(F.when(F.col("__last"), _filt_q_col(cs, 0, 1e6))
+                    .alias(f"__fn_{m}"))
+    return cols
+
+
+def _pooled(df: DataFrame, group_col: str, order: str, value: Column,
+            tie_break: str | None,
+            models: list[tuple[float, list[float]]]) -> DataFrame:
+    """(__g, n_scored, __s_m, __f_m per model): every model scores in
+    its OWN aggregate columns over ONE grouped pass (the q343/q348
+    no-explode shape, see best_family_forecast); all models share one
+    window, so one count serves them all."""
+    window = len(models[0][1])
+    lagged = _lagged(df, group_col, order, value, tie_break, window)
+    return lagged.select("__g", *_score_cols(models, window)).groupBy(
+        "__g").agg(
+        F.count("__e2_0").cast("long").alias("n_scored"),
+        *[a for m in range(len(models)) for a in (
+            F.sum(f"__e2_{m}").alias(f"__s_{m}"),
+            F.max(f"__fn_{m}").alias(f"__f_{m}"))])
+
+
 def linear_filter_forecast(df: DataFrame, group_col: str, order: str,
                            value: Column,
                            models: list[tuple[float, list[float]]],
@@ -112,45 +224,7 @@ def linear_filter_forecast(df: DataFrame, group_col: str, order: str,
     window = len(models[0][1])
     if any(len(cs) != window for _, cs in models):
         raise ValueError("all models must share one window length")
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, window + 1)])
-    last = Window.partitionBy("__g")
-    lagged = lagged.withColumn(
-        "__last", F.col("__i") == F.max("__i").over(last))
-
-    def filt_q(cs: list[float], off: int, quantum: float) -> Column:
-        # Each coefficient*lag product quantizes to floor(c*l*Q)
-        # BEFORE the sum, so the filter output is an exact INTEGER in
-        # both engines — a 16-term double dot-product would be one
-        # FMA-contraction away from a cross-engine ulp (the q295
-        # per-product discipline, learned here the hard way).
-        # r16: one parsed expression per model, not |window| Column
-        # calls — node-identical tree, see _filt_q_col.
-        return _filt_q_col(cs, quantum, lambda j: f"__l{j + off}")
-
-    # Backtest quantum 1e2 (not 1e6): the exact-integer SSE must stay
-    # under 2^53 so its double readout is EXACT in both engines — a
-    # DECIMAL(38,0)->double (Spark) vs HUGEINT->double (DuckDB) cast
-    # of the SAME >2^53 integer can land one ulp apart (observed at
-    # sf0.1 with quantum 1e6).  Contract: sum of (e*1e2)^2 per series
-    # under 9.0e11 value^2 units, i.e. under 2^53.  r15: the squares
-    # accumulate as BIGINT, not DECIMAL(38,0) — the per-row BigDecimal
-    # multiply was the kernel's measured allocation wall, and under the
-    # SAME 2^53 contract the double readout already needs, the long
-    # arithmetic is value-identical (sums below 2^53 are exact in
-    # either type).
-    #
+    lagged = _lagged(df, group_col, order, value, tie_break, window)
     # r15 plan shape (the q343 no-explode lesson applied back to this
     # kernel): every model scores in its OWN aggregate column pair over
     # ONE grouped pass, and the (group, alpha) row fan-out happens
@@ -161,14 +235,7 @@ def linear_filter_forecast(df: DataFrame, group_col: str, order: str,
     # whole-stage codegen at q343's width).  Per-(g, alpha) aggregates
     # are unchanged: same e2/fn expressions, same sums over the same
     # rows, regrouped by construction.
-    cols = []
-    for m, (_, cs) in enumerate(models):
-        eq = F.col("__l0") * F.lit(100) - filt_q(cs, 1, 1e2)
-        cols.append(F.when(F.col("__i") > window, eq * eq)
-                    .alias(f"__e2_{m}"))
-        cols.append(F.when(F.col("__last"), filt_q(cs, 0, 1e6))
-                    .alias(f"__fn_{m}"))
-    scored = lagged.select("__g", *cols)
+    scored = lagged.select("__g", *_score_cols(models, window))
     per = scored.groupBy("__g").agg(
         *[a for m in range(len(models)) for a in (
             F.count(f"__e2_{m}").cast("long").alias(f"__n_{m}"),
@@ -225,34 +292,8 @@ def holt_forecast(df: DataFrame, group_col: str, order: str,
     return per.select(group_col, "n_scored", "sse", "forecast_next")
 
 
-def _filt_q_col(cs: list[float], quantum: float, name) -> Column:
-    """The exact-integer linear filter Σⱼ floor(cⱼ·colⱼ·Q) as ONE
-    parsed SQL expression (guide §1.2 "per-task work" applied to the
-    DRIVER: building this sum term-by-term through the Column API cost
-    q343 ~12 s of py4j round trips per build — 62k socket messages +
-    PySpark's per-call call-site capture — while one F.expr per model
-    is a single round trip and a sub-ms JVM parse).
-
-    The parsed tree is node-identical to the Column build it replaces:
-    `{c!r}D` lexes through Double.parseDouble (correctly-rounded
-    strtod, same bits as F.lit(c)), products stay left-associated,
-    each term keeps its CAST(FLOOR(..) AS BIGINT), and `+` parses
-    left-assoc exactly like the incremental `expr + term` loop. Same
-    analyzed plan ⇒ bit-identical results."""
-    return F.expr(" + ".join(
-        f"CAST(FLOOR({float(c)!r}D * {name(j)} * {float(quantum)!r}D)"
-        f" AS BIGINT)"
-        for j, c in enumerate(cs)))
-
-
-def _lag_sql(window: int) -> str:
-    cols = ", ".join(
-        f"lag(v, {j}) OVER (PARTITION BY g ORDER BY ts, event_id)"
-        f" AS l{j}" for j in range(1, window + 1))
-    return cols
-
-
-def _filt_sql(cs: list[float], off: int, quantum: str) -> str:
+def _filt_sql(cs: list[float], off: int, quantum: str,
+              prefix: str = "l") -> str:
     # CAST('<repr>' AS DOUBLE) — the STRING cast — is LOAD-BEARING,
     # and a bare numeric cast is NOT enough.  DuckDB parses a 17-digit
     # float repr as DECIMAL; both the exact-decimal product path AND
@@ -269,19 +310,40 @@ def _filt_sql(cs: list[float], off: int, quantum: str) -> str:
     # repr is correctly rounded, so the oracle computes the engine's
     # exact doubles by construction.
     return " + ".join(
-        f"CAST(floor(CAST('{c!r}' AS DOUBLE) * l{j + off} * {quantum})"
-        f" AS BIGINT)"
+        f"CAST(floor(CAST('{c!r}' AS DOUBLE) * {prefix}{j + off}"
+        f" * {quantum}) AS BIGINT)"
         for j, c in enumerate(cs))
 
 
-def _ses_oracle(alphas: tuple[float, ...] = _FC_ALPHAS,
-                window: int = _FC_W) -> str:
-    models = [(a, ses_weights(a, window)) for a in alphas]
+def _lagged_sql(nlags: int) -> str:
+    """Oracle prelude: the events cents series per user with row index
+    i, the last-row flag is_last and lags l1..l{nlags}."""
+    lags = ",\n             ".join(
+        f"lag(v, {j}) OVER w AS l{j}" for j in range(1, nlags + 1))
+    return f"""
+    WITH {EVENT_CENTS_SRC_SQL},
+    lagged AS (
+      SELECT g, v AS l0,
+             row_number() OVER w AS i,
+             row_number() OVER w = count(*) OVER (PARTITION BY g)
+               AS is_last,
+             {lags}
+      FROM src
+      WINDOW w AS (PARTITION BY g ORDER BY ts, event_id)
+    )"""
+
+
+def _fanned_oracle(models: list[tuple[float, list[float]]]) -> str:
+    """CTEs through ``pinned`` (g, code, n_scored, sse, forecast_next):
+    each fixed filter's walk-forward SSE and next-step forecast per
+    series, one UNION branch per model; series with no scored row are
+    dropped."""
+    window = len(models[0][1])
     branches = []
-    for ai, (a, cs) in enumerate(models):
+    for code, cs in models:
         fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
         branches.append(f"""
-      SELECT g, CAST({a!r} AS DOUBLE) AS alpha,
+      SELECT g, CAST({code!r} AS DOUBLE) AS code,
              CASE WHEN i > {window} THEN
                CAST(l0 * 100 - ({fb}) AS HUGEINT)
                * (l0 * 100 - ({fb}))
@@ -289,79 +351,38 @@ def _ses_oracle(alphas: tuple[float, ...] = _FC_ALPHAS,
              CASE WHEN is_last THEN {fn} END AS fn
       FROM lagged""")
     union = "\n      UNION ALL".join(branches)
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
+    return f"""{_lagged_sql(window)},
     fanned AS ({union}
     ),
     per AS (
-      SELECT g, alpha, CAST(count(e2) AS BIGINT) AS n_scored,
+      SELECT g, code, CAST(count(e2) AS BIGINT) AS n_scored,
              sum(e2) AS sse_q, max(fn) AS fnext
-      FROM fanned GROUP BY g, alpha
+      FROM fanned GROUP BY g, code
     ),
     pinned AS (
-      SELECT g, alpha, n_scored,
+      SELECT g, code, n_scored,
              CAST(sse_q AS DOUBLE) / 1e4 AS sse,
              CAST(fnext AS DOUBLE) / 1e6 AS forecast_next
       FROM per WHERE n_scored > 0
-    )
-    SELECT g AS user_id, alpha AS best_alpha, n_scored, sse,
-           forecast_next
-    FROM (SELECT *, row_number() OVER (PARTITION BY g
-            ORDER BY sse ASC, alpha ASC) AS r FROM pinned)
-    WHERE r = 1
+    )"""
+
+
+def _filter_oracle(cs: list[float]) -> str:
+    """One fixed filter's (user, n_scored, sse, forecast_next)."""
+    return _fanned_oracle([(0.0, cs)]) + """
+    SELECT g AS user_id, n_scored, sse, forecast_next FROM pinned
     """
 
 
-def _holt_oracle(alpha: float = _HOLT_ALPHA, beta: float = _HOLT_BETA,
-                 window: int = _FC_W) -> str:
-    cs = holt_weights(alpha, beta, window)
-    fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    scored AS (
-      SELECT g,
-             CASE WHEN i > {window} THEN
-               CAST(l0 * 100 - ({fb}) AS HUGEINT)
-               * (l0 * 100 - ({fb}))
-             END AS e2,
-             CASE WHEN is_last THEN {fn} END AS fnext
-      FROM lagged
-    ),
-    per AS (
-      SELECT g, CAST(count(e2) AS BIGINT) AS n_scored,
-             sum(e2) AS sse_q, max(fnext) AS fnext
-      FROM scored GROUP BY g
-    )
-    SELECT g AS user_id, n_scored,
-           CAST(sse_q AS DOUBLE) / 1e4 AS sse,
-           CAST(fnext AS DOUBLE) / 1e6 AS forecast_next
-    FROM per WHERE n_scored > 0
+def _ses_oracle(alphas: tuple[float, ...] = _FC_ALPHAS,
+                window: int = _FC_W) -> str:
+    models = [(a, ses_weights(a, window)) for a in alphas]
+    return _fanned_oracle(models) + """
+    SELECT g AS user_id, code AS best_alpha, n_scored, sse,
+           forecast_next
+    FROM (SELECT *, row_number() OVER (PARTITION BY g
+            ORDER BY sse ASC, code ASC) AS r FROM pinned)
+    WHERE r = 1
     """
 
 
@@ -372,25 +393,15 @@ def q309_ses_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's RUL story implies (/root/reference/README.md:40-47),
     every (user, best_alpha, n_scored, sse, forecast_next) row
     hash-checked against the same python-generated filter weights."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return ses_best_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, ses_best_forecast)
 
 
-@query("q310_holt_forecast", oracle=_holt_oracle())
+@query("q310_holt_forecast", oracle=_filter_oracle(holt_weights()))
 def q310_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user Holt linear-trend one-step forecast at (0.5, 0.3) with
     its walk-forward SSE — read next to q309: where Holt's sse beats
     every SES alpha the series carries a trend worth modeling."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return holt_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, holt_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -469,59 +480,14 @@ def holt_winters_forecast(df: DataFrame, group_col: str, order: str,
     return per.select(group_col, "n_scored", "sse", "forecast_next")
 
 
-def _hw_oracle(alpha: float = _HW_ALPHA, gamma: float = _HW_GAMMA,
-               period: int = _HW_PERIOD, window: int = _HW_W) -> str:
-    cs = holt_winters_weights(alpha, gamma, period, window)
-    fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    scored AS (
-      SELECT g,
-             CASE WHEN i > {window} THEN
-               CAST(l0 * 100 - ({fb}) AS HUGEINT)
-               * (l0 * 100 - ({fb}))
-             END AS e2,
-             CASE WHEN is_last THEN {fn} END AS fnext
-      FROM lagged
-    ),
-    per AS (
-      SELECT g, CAST(count(e2) AS BIGINT) AS n_scored,
-             sum(e2) AS sse_q, max(fnext) AS fnext
-      FROM scored GROUP BY g
-    )
-    SELECT g AS user_id, n_scored,
-           CAST(sse_q AS DOUBLE) / 1e4 AS sse,
-           CAST(fnext AS DOUBLE) / 1e6 AS forecast_next
-    FROM per WHERE n_scored > 0
-    """
-
-
-@query("q328_holt_winters", oracle=_hw_oracle())
+@query("q328_holt_winters", oracle=_filter_oracle(holt_winters_weights()))
 def q328_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user additive Holt–Winters one-step forecast at
     (alpha=0.3, gamma=0.5, period=8) with its walk-forward SSE — the
     seasonal completion of the q309/q310 family; every (user,
     n_scored, sse, forecast_next) row hash-checked against the same
     python-generated companion-matrix filter weights."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return holt_winters_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, holt_winters_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -555,61 +521,15 @@ def damped_holt_forecast(df: DataFrame, group_col: str, order: str,
     return per.select(group_col, "n_scored", "sse", "forecast_next")
 
 
-def _damped_holt_oracle(alpha: float = _HOLT_ALPHA,
-                        beta: float = _HOLT_BETA,
-                        phi: float = _DHOLT_PHI,
-                        window: int = _FC_W) -> str:
-    cs = holt_weights(alpha, beta, window, phi=phi)
-    fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    scored AS (
-      SELECT g,
-             CASE WHEN i > {window} THEN
-               CAST(l0 * 100 - ({fb}) AS HUGEINT)
-               * (l0 * 100 - ({fb}))
-             END AS e2,
-             CASE WHEN is_last THEN {fn} END AS fnext
-      FROM lagged
-    ),
-    per AS (
-      SELECT g, CAST(count(e2) AS BIGINT) AS n_scored,
-             sum(e2) AS sse_q, max(fnext) AS fnext
-      FROM scored GROUP BY g
-    )
-    SELECT g AS user_id, n_scored,
-           CAST(sse_q AS DOUBLE) / 1e4 AS sse,
-           CAST(fnext AS DOUBLE) / 1e6 AS forecast_next
-    FROM per WHERE n_scored > 0
-    """
-
-
-@query("q332_damped_holt", oracle=_damped_holt_oracle())
+@query("q332_damped_holt",
+       oracle=_filter_oracle(holt_weights(phi=_DHOLT_PHI)))
 def q332_damped_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user phi-damped Holt one-step forecast at (0.5, 0.3,
     phi=0.85) with its walk-forward SSE — read against q310: a series
     where damping LOWERS the sse carries a transient trend the
     undamped filter over-extrapolates.  Every (user, n_scored, sse,
     forecast_next) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return damped_holt_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, damped_holt_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -644,14 +564,7 @@ def ar2_forecast(df: DataFrame, group_col: str, order: str,
     the forecast from the emitted b1/b2).  nobs counts the regression
     rows (t >= 3); nobs < 5 or a singular/degenerate system reports
     b1/b2/forecast NULL-by-contract (one row per series either way)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     means = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.sum("__v").cast("double")
@@ -695,7 +608,6 @@ def ar2_forecast(df: DataFrame, group_col: str, order: str,
             - F.col("__sxz") * F.col("__szy"))
     num2 = (F.col("__sxx") * F.col("__szy")
             - F.col("__sxz") * F.col("__sxy"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("nobs") >= 5) & (det.cast("double") > 0) \
         & F.col("__vn1").isNotNull()
     b1 = pin(num1.cast("double") / det.cast("double"))
@@ -710,12 +622,8 @@ def ar2_forecast(df: DataFrame, group_col: str, order: str,
         F.when(ok, pin(fc / F.lit(100.0))).alias("forecast_next"))
 
 
-_AR2_ORACLE = """
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+_AR2_ORACLE = f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     means AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(v) AS DOUBLE) / count(*) AS m
@@ -784,12 +692,7 @@ def q311_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters; every (user, n, nobs, b1, b2, forecast_next) row
     hash-checked with the 2x2 normal equations solved in exact
     integer arithmetic."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return ar2_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, ar2_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -830,22 +733,9 @@ def mase_backtest(df: DataFrame, group_col: str, order: str,
     row emit nothing."""
     cs = coeffs if coeffs is not None else ses_weights(alpha, window)
     window = len(cs)
-    nlags = max(window, naive_lag)
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, nlags + 1)])
-    # one parsed expression — node-identical tree, see _filt_q_col
-    filt = _filt_q_col(cs, 1e2, lambda j: f"__l{j + 1}")
+    lagged = _lagged(df, group_col, order, value, tie_break,
+                     max(window, naive_lag))
+    filt = _filt_q_col(cs, 1, 1e2)
     e_model = F.when(F.col("__i") > window,
                      F.abs(F.col("__l0") * F.lit(100) - filt))
     e_naive = F.when(F.col("__i") > naive_lag,
@@ -855,7 +745,6 @@ def mase_backtest(df: DataFrame, group_col: str, order: str,
         F.count(e_naive).cast("long").alias("n_naive"),
         F.sum(e_model.cast("decimal(38,0)")).alias("__sm"),
         F.sum(e_naive.cast("decimal(38,0)")).alias("__sn"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     mae_m = F.col("__sm").cast("double") / F.lit(1e2) \
         / F.col("n_model") / F.lit(100.0)
     mae_n = F.col("__sn").cast("double") / F.col("n_naive") \
@@ -870,28 +759,18 @@ def mase_backtest(df: DataFrame, group_col: str, order: str,
                     F.when(ok, pin(mae_m / mae_n)).alias("mase")))
 
 
-def _mase_oracle(alpha: float = _MASE_ALPHA, window: int = _FC_W) -> str:
-    cs = ses_weights(alpha, window)
+def _mase_oracle(cs: list[float], naive_lag: int) -> str:
+    """(user, n_model, n_naive, mae_model, mae_naive, mase) of one
+    fixed filter against the lag-``naive_lag`` naive forecast."""
+    window = len(cs)
     fb = _filt_sql(cs, 1, "1e2")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             {_lag_sql(window)}
-      FROM src
-    ),
+    return f"""{_lagged_sql(max(window, naive_lag))},
     scored AS (
       SELECT g,
              CASE WHEN i > {window} THEN
                CAST(abs(l0 * 100 - ({fb})) AS HUGEINT) END AS em,
-             CASE WHEN i > 1 THEN
-               CAST(abs(l0 - l1) AS HUGEINT) END AS en
+             CASE WHEN i > {naive_lag} THEN
+               CAST(abs(l0 - l{naive_lag}) AS HUGEINT) END AS en
       FROM lagged
     ),
     per AS (
@@ -914,66 +793,18 @@ def _mase_oracle(alpha: float = _MASE_ALPHA, window: int = _FC_W) -> str:
     """
 
 
-@query("q312_mase_backtest", oracle=_mase_oracle())
+@query("q312_mase_backtest",
+       oracle=_mase_oracle(ses_weights(_MASE_ALPHA), 1))
 def q312_mase_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user MASE of the SES(0.5) one-step forecast vs naive
     persistence — the scale-free accuracy score the forecast tier
     reports across series of different magnitudes; every row
     hash-checked over exact-integer absolute-error sums."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return mase_backtest(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, mase_backtest)
 
 
-def _seasonal_mase_oracle() -> str:
-    cs = holt_winters_weights()
-    window, m = len(cs), _HW_PERIOD
-    fb = _filt_sql(cs, 1, "1e2")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    scored AS (
-      SELECT g,
-             CASE WHEN i > {window} THEN
-               CAST(abs(l0 * 100 - ({fb})) AS HUGEINT) END AS em,
-             CASE WHEN i > {m} THEN
-               CAST(abs(l0 - l{m}) AS HUGEINT) END AS en
-      FROM lagged
-    ),
-    per AS (
-      SELECT g, CAST(count(em) AS BIGINT) AS n_model,
-             CAST(count(en) AS BIGINT) AS n_naive,
-             sum(em) AS sm, sum(en) AS sn
-      FROM scored GROUP BY g
-    )
-    SELECT g AS user_id, n_model, n_naive,
-           CASE WHEN n_model > 0 THEN
-             floor(CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0
-                   * 1e6 + 0.5) / 1e6 END AS mae_model,
-           floor(CAST(sn AS DOUBLE) / n_naive / 100.0
-                 * 1e6 + 0.5) / 1e6 AS mae_naive,
-           CASE WHEN n_model > 0 AND CAST(sn AS DOUBLE) > 0 THEN
-             floor((CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0)
-                   / (CAST(sn AS DOUBLE) / n_naive / 100.0)
-                   * 1e6 + 0.5) / 1e6 END AS mase
-    FROM per WHERE n_naive > 0
-    """
-
-
-@query("q333_seasonal_mase", oracle=_seasonal_mase_oracle())
+@query("q333_seasonal_mase",
+       oracle=_mase_oracle(holt_winters_weights(), _HW_PERIOD))
 def q333_seasonal_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user SEASONAL MASE: the q328 Holt–Winters filter's
     walk-forward MAE over the SEASONAL-naive (lag-8) MAE — the Hyndman
@@ -982,13 +813,9 @@ def q333_seasonal_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     flatters any model.  mase < 1 here means the HW filter genuinely
     beats repeating last season; every row hash-checked over
     exact-integer absolute-error sums."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return mase_backtest(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id",
-        coeffs=holt_winters_weights(), naive_lag=_HW_PERIOD)
+    return event_cents_query(spark, sf_dir, mase_backtest,
+                             coeffs=holt_winters_weights(),
+                             naive_lag=_HW_PERIOD)
 
 
 # ---------------------------------------------------------------------------
@@ -1017,35 +844,13 @@ def theta_forecast(df: DataFrame, group_col: str, order: str,
     nothing; a series shorter than W reports forecast_next NULL (the
     q309 contract)."""
     cs = ses_weights(alpha, window)
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        F.first("__v").over(w.rowsBetween(
-            Window.unboundedPreceding, 0)).alias("__v1"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, window + 1)])
-    last = Window.partitionBy("__g")
-    lagged = lagged.withColumn(
-        "__last", F.col("__i") == F.max("__i").over(last))
-    lagged = lagged.withColumn(
-        "__n", F.max("__i").over(last))
-
-    def filt_q(off: int, quantum: float):
-        # one parsed expression — node-identical tree, see _filt_q_col
-        return _filt_q_col(cs, quantum, lambda j: f"__l{j + off}")
-
+    lagged = _lagged(df, group_col, order, value, tie_break,
+                     window).withColumn(
+        "__n", F.max("__i").over(Window.partitionBy("__g")))
     drift_bt = F.floor((F.col("__l1") - F.col("__v1"))
                        / (F.col("__i") - 2) / F.lit(2.0)
                        * F.lit(1e2)).cast("long")
-    fq = filt_q(1, 1e2) + drift_bt
+    fq = _filt_q_col(cs, 1, 1e2) + drift_bt
     eq = F.col("__l0") * F.lit(100) - fq
     # BIGINT squares (r15): exact under the same 2^53 SSE contract the
     # double readout already requires — see linear_filter_forecast.
@@ -1055,7 +860,7 @@ def theta_forecast(df: DataFrame, group_col: str, order: str,
                          / (F.col("__n") - 1) / F.lit(2.0)
                          * F.lit(1e6)).cast("long")
     fn = F.when(F.col("__last") & (F.col("__n") >= 2),
-                filt_q(0, 1e6) + drift_next)
+                _filt_q_col(cs, 0, 1e6) + drift_next)
     per = lagged.groupBy("__g").agg(
         F.count(e2).cast("long").alias("n_scored"),
         F.sum(e2).alias("__sse"),
@@ -1071,23 +876,11 @@ def theta_forecast(df: DataFrame, group_col: str, order: str,
 def _theta_oracle(alpha: float = 0.5, window: int = _FC_W) -> str:
     cs = ses_weights(alpha, window)
     fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER w AS i,
-             first_value(v) OVER (PARTITION BY g ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS v1,
-             count(*) OVER (PARTITION BY g) AS nn,
-             row_number() OVER w = count(*) OVER (PARTITION BY g)
-               AS is_last,
-             {_lag_sql(window)}
-      FROM src
-      WINDOW w AS (PARTITION BY g ORDER BY ts, event_id)
+    return f"""{_lagged_sql(window)},
+    ext AS (
+      SELECT *, first_value(l0) OVER (PARTITION BY g ORDER BY i) AS v1,
+             max(i) OVER (PARTITION BY g) AS nn
+      FROM lagged
     ),
     scored AS (
       SELECT g,
@@ -1103,7 +896,7 @@ def _theta_oracle(alpha: float = 0.5, window: int = _FC_W) -> str:
                ({fn}) + CAST(floor((l0 - v1) / (nn - 1.0) / 2.0 * 1e6)
                              AS BIGINT)
              END AS fnext
-      FROM lagged
+      FROM ext
     ),
     per AS (
       SELECT g, CAST(count(e2) AS BIGINT) AS n_scored,
@@ -1123,12 +916,7 @@ def q323_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     its walk-forward SSE — read beside q309/q310: where theta's sse
     beats both, the series carries drift the level filter misses;
     every row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return theta_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, theta_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -1160,14 +948,8 @@ def croston_forecast(df: DataFrame, group_col: str, order: str,
     z_hat/q_hat/rate NULL-by-contract (one row per series with any
     demand)."""
     cs = ses_weights(alpha, window)
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    demand.cast("long").alias("__d")).filter(
-        F.col("__d").isNotNull())
+    src, w = ordered_series(df, group_col, order, demand, tie_break,
+                            name="__d")
     idx = src.select("__g", "__d", F.row_number().over(w).alias("__i"))
     w2 = Window.partitionBy("__g").orderBy("__i")
     nz = (idx.filter(F.col("__d") > 0)
@@ -1184,17 +966,12 @@ def croston_forecast(df: DataFrame, group_col: str, order: str,
     last = Window.partitionBy("__g")
     lags = lags.withColumn("__m", F.max("__j").over(last)).filter(
         F.col("__j") == F.col("__m"))
-
-    def filt(prefix: str) -> Column:
-        # one parsed expression — node-identical tree, see _filt_q_col
-        return _filt_q_col(cs, 1e6, lambda j: f"{prefix}{j}")
-
     counts = idx.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("n"))
     per = lags.join(counts, "__g")
-    zq, qq = filt("__dz"), filt("__qz")
+    zq = _filt_q_col(cs, 0, 1e6, "__dz")
+    qq = _filt_q_col(cs, 0, 1e6, "__qz")
     ok = F.col("__m") >= window + 1
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     z_hat = F.when(ok, zq.cast("double") / F.lit(1e6) / F.lit(100.0))
     q_hat = F.when(ok, qq.cast("double") / F.lit(1e6))
     return per.select(
@@ -1209,30 +986,15 @@ def croston_forecast(df: DataFrame, group_col: str, order: str,
 def _croston_oracle(alpha: float = _CR_ALPHA,
                     window: int = _CR_W) -> str:
     cs = ses_weights(alpha, window)
-
-    def filt(prefix: str) -> str:
-        # string-cast the coefficient for the same reason as
-        # _filt_sql: DuckDB's decimal literal (and even its
-        # decimal->double cast) double-rounds a 17-digit repr.
-        return " + ".join(
-            f"CAST(floor(CAST('{c!r}' AS DOUBLE) * {prefix}{j} * 1e6)"
-            f" AS BIGINT)"
-            for j, c in enumerate(cs))
-
+    dz, qz = _filt_sql(cs, 0, "1e6", "dz"), _filt_sql(cs, 0, "1e6", "qz")
     dlags = ",\n             ".join(
         f"lag(d, {j}) OVER w2 AS dz{j}" for j in range(0, window))
     qlags = ",\n             ".join(
         f"lag(q, {j}) OVER w2 AS qz{j}" for j in range(0, window))
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CASE WHEN CAST(floor(value * 100 + 0.5) AS BIGINT) >= 800
-               THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-               ELSE 0 END AS d
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     idx AS (
-      SELECT g, d,
+      SELECT g, CASE WHEN v >= 800 THEN v ELSE 0 END AS d,
              row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
                AS i
       FROM src
@@ -1260,14 +1022,14 @@ def _croston_oracle(alpha: float = _CR_ALPHA,
     )
     SELECT l.g AS user_id, n, CAST(m AS BIGINT) AS m_demands,
            CASE WHEN m >= {window + 1} THEN
-             floor(CAST({filt("dz")} AS DOUBLE) / 1e6 / 100.0
+             floor(CAST({dz} AS DOUBLE) / 1e6 / 100.0
                    * 1e6 + 0.5) / 1e6 END AS z_hat,
            CASE WHEN m >= {window + 1} THEN
-             floor(CAST({filt("qz")} AS DOUBLE) / 1e6
+             floor(CAST({qz} AS DOUBLE) / 1e6
                    * 1e6 + 0.5) / 1e6 END AS q_hat,
-           CASE WHEN m >= {window + 1} AND ({filt("qz")}) > 0 THEN
-             floor((CAST({filt("dz")} AS DOUBLE) / 1e6 / 100.0)
-                   / (CAST({filt("qz")} AS DOUBLE) / 1e6)
+           CASE WHEN m >= {window + 1} AND ({qz}) > 0 THEN
+             floor((CAST({dz} AS DOUBLE) / 1e6 / 100.0)
+                   / (CAST({qz} AS DOUBLE) / 1e6)
                    * 1e6 + 0.5) / 1e6 END AS rate
     FROM lastrow l JOIN counts USING (g)
     """
@@ -1328,33 +1090,13 @@ def conformal_forecast_interval(df: DataFrame, group_col: str,
     forecast is NULL when the tail is shorter than W (the filter
     contract) while the interval columns follow it."""
     cs = ses_weights(alpha, window)
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, window + 1)])
-    last = Window.partitionBy("__g")
-    lagged = lagged.withColumn(
-        "__last", F.col("__i") == F.max("__i").over(last))
-
-    def filt(off: int, quantum: float) -> Column:
-        # one parsed expression — node-identical tree, see _filt_q_col
-        return _filt_q_col(cs, quantum, lambda j: f"__l{j + off}")
-
+    lagged = _lagged(df, group_col, order, value, tie_break, window)
     scored = lagged.select(
         "__g",
         F.when(F.col("__i") > window,
-               F.abs(F.col("__l0") * F.lit(100) - filt(1, 1e2)))
-        .alias("__ae"),
-        F.when(F.col("__last"), filt(0, 1e6)).alias("__fn"))
+               F.abs(F.col("__l0") * F.lit(100)
+                     - _filt_q_col(cs, 1, 1e2))).alias("__ae"),
+        F.when(F.col("__last"), _filt_q_col(cs, 0, 1e6)).alias("__fn"))
     per = scored.groupBy("__g").agg(
         F.count("__ae").cast("long").alias("n_scored"),
         F.max("__fn").alias("__fnext"))
@@ -1368,7 +1110,6 @@ def conformal_forecast_interval(df: DataFrame, group_col: str,
             (F.lit(float(_PI_RANK_NUM)) * F.col("__cnt")
              + F.lit(_PI_RANK_DEN - 1)) / F.lit(float(_PI_RANK_DEN)))
     ).select("__g", F.col("__ae").alias("__q90"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     fc = F.col("__fnext").cast("double") / F.lit(1e6)
     hw = F.col("__q90").cast("double") / F.lit(1e4)
     return (per.join(pick, "__g")
@@ -1384,21 +1125,7 @@ def _conformal_pi_oracle(alpha: float = _PI_ALPHA,
                          window: int = _FC_W) -> str:
     cs = ses_weights(alpha, window)
     fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
+    return f"""{_lagged_sql(window)},
     scored AS (
       SELECT g,
              CASE WHEN i > {window} THEN
@@ -1446,12 +1173,7 @@ def q334_conformal_forecast_pi(spark: SparkSession,
     residuals — the uncertainty readout the q309-q333 point forecasts
     were missing; every (user, n_scored, forecast_next, q90_abs_err,
     pi_lo, pi_hi) row hash-checked over exact order statistics."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return conformal_forecast_interval(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, conformal_forecast_interval)
 
 
 # ---------------------------------------------------------------------------
@@ -1482,10 +1204,6 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
     series the naive errors and the forecast read.  Series whose ACF
     is all-NULL (constant) detect no period and emit no row
     (documented); n_scored = n - period."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (  # noqa: E501
-        dominant_acf_lag,
-    )
-
     # r15 optimization: per (one row per series) and idx (narrow
     # (g, v, i, n) over the source) each feed multiple downstream
     # subtrees (cur → the lag join AND the forecast filter; base) —
@@ -1498,14 +1216,8 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
         F.col("best_lag").isNotNull()).select(
         F.col(group_col).alias("__g"),
         F.col("best_lag").cast("long").alias("__m")).persist()
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    idx = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull()).select(
+    src, w = ordered_series(df, group_col, order, value, tie_break)
+    idx = src.select(
         "__g", "__v", F.row_number().over(w).alias("__i"),
         F.count(F.lit(1)).over(Window.partitionBy("__g")).alias("__n"))\
         .persist()
@@ -1531,7 +1243,6 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
               .cast("decimal(38,0)")).alias("__sae"))
     fc = (cur.filter(F.col("__ci") == F.col("__n") + 1 - F.col("__m"))
           .select("__g", F.col("__cv").alias("__fc")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (err.join(fc, "__g")
             .filter(F.col("n_scored") > 0)
             .select(F.col("__g").alias(group_col), "n", "period",
@@ -1544,23 +1255,19 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
 
 
 def _snaive_detected_oracle(max_lag: int = 10) -> str:
-    from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (  # noqa: E501
-        _dominant_lag_oracle,
-    )
-
     return f"""
     WITH dom AS ({_dominant_lag_oracle()}),
+    {EVENT_CENTS_SRC_SQL},
     per AS (
       SELECT user_id AS g, CAST(best_lag AS BIGINT) AS m
       FROM dom WHERE best_lag IS NOT NULL
     ),
     idx AS (
-      SELECT user_id AS g,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS i,
-             count(*) OVER (PARTITION BY user_id) AS n
-      FROM events WHERE value IS NOT NULL
+      SELECT g, v,
+             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
+               AS i,
+             count(*) OVER (PARTITION BY g) AS n
+      FROM src
     ),
     err AS (
       SELECT c.g, max(c.m) AS period, CAST(max(c.n) AS BIGINT) AS n,
@@ -1659,45 +1366,7 @@ def best_family_forecast(df: DataFrame, group_col: str, order: str,
     interpreted evaluation (measured steady-state at sf0.1: 16.5 s
     exploded vs 7.9 s for this plan, 2.1x)."""
     models = _best_family_models()
-    window = _BF_WINDOW
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, window + 1)])
-    lagged = lagged.withColumn(
-        "__last",
-        F.col("__i") == F.max("__i").over(Window.partitionBy("__g")))
-
-    def filt_q(cs: list[float], off: int, quantum: float) -> Column:
-        # one parsed expression per model — node-identical tree, see
-        # _filt_q_col (r16 driver-side build-cost fix)
-        return _filt_q_col(cs, quantum, lambda j: f"__l{j + off}")
-
-    cols = []
-    for m, (_, cs) in enumerate(models):
-        eq = F.col("__l0") * F.lit(100) - filt_q(cs, 1, 1e2)
-        # BIGINT squares (r15): exact under the same 2^53 SSE contract
-        # the double readout already requires — see
-        # linear_filter_forecast; drops the per-row BigDecimal multiply.
-        cols.append(F.when(F.col("__i") > window, eq * eq)
-                    .alias(f"__e2_{m}"))
-        cols.append(F.when(F.col("__last"), filt_q(cs, 0, 1e6))
-                    .alias(f"__fn_{m}"))
-    scored = lagged.select("__g", *cols)
-    per = scored.groupBy("__g").agg(
-        F.count("__e2_0").cast("long").alias("n_scored"),
-        *[a for m in range(len(models)) for a in (
-            F.sum(f"__e2_{m}").alias(f"__s_{m}"),
-            F.max(f"__fn_{m}").alias(f"__f_{m}"))])
+    per = _pooled(df, group_col, order, value, tie_break, models)
     best = F.array_sort(F.array(*[
         F.struct(
             (F.col(f"__s_{m}").cast("double") / F.lit(1e4)).alias("sse"),
@@ -1714,47 +1383,8 @@ def best_family_forecast(df: DataFrame, group_col: str, order: str,
                     F.col("__b.fn").alias("forecast_next")))
 
 
-def _best_family_oracle(window: int = _BF_WINDOW) -> str:
-    branches = []
-    for code, cs in _best_family_models():
-        fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-        branches.append(f"""
-      SELECT g, CAST({code!r} AS DOUBLE) AS code,
-             CASE WHEN i > {window} THEN
-               CAST(l0 * 100 - ({fb}) AS HUGEINT)
-               * (l0 * 100 - ({fb}))
-             END AS e2,
-             CASE WHEN is_last THEN {fn} END AS fn
-      FROM lagged""")
-    union = "\n      UNION ALL".join(branches)
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    fanned AS ({union}
-    ),
-    per AS (
-      SELECT g, code, CAST(count(e2) AS BIGINT) AS n_scored,
-             sum(e2) AS sse_q, max(fn) AS fnext
-      FROM fanned GROUP BY g, code
-    ),
-    pinned AS (
-      SELECT g, code, n_scored,
-             CAST(sse_q AS DOUBLE) / 1e4 AS sse,
-             CAST(fnext AS DOUBLE) / 1e6 AS forecast_next
-      FROM per WHERE n_scored > 0
-    )
+def _best_family_oracle() -> str:
+    return _fanned_oracle(_best_family_models()) + f"""
     SELECT g AS user_id,
            CASE WHEN code < 1.0 THEN 'ses'
                 WHEN code = {_BF_HOLT_CODE!r} THEN 'holt'
@@ -1774,12 +1404,7 @@ def q343_best_forecast_family(spark: SparkSession,
     window — the flat/trended/seasonal verdict per series as a table;
     every (user, family, model_code, n_scored, sse, forecast_next)
     row hash-checked against the same python-generated weights."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return best_family_forecast(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, best_family_forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -1830,44 +1455,7 @@ def forecast_combination(df: DataFrame, group_col: str, order: str,
     q343's 11 models, where the exploded plan fell off the JVM method
     limit."""
     models = _combination_models()
-    window = _BF_WINDOW
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
-    lagged = src.select(
-        "__g", F.col("__v").alias("__l0"),
-        F.row_number().over(w).alias("__i"),
-        *[F.lag("__v", j).over(w).alias(f"__l{j}")
-          for j in range(1, window + 1)])
-    lagged = lagged.withColumn(
-        "__last",
-        F.col("__i") == F.max("__i").over(Window.partitionBy("__g")))
-
-    def filt_q(cs: list[float], off: int, quantum: float) -> Column:
-        # one parsed expression per model — node-identical tree, see
-        # _filt_q_col (r16 driver-side build-cost fix)
-        return _filt_q_col(cs, quantum, lambda j: f"__l{j + off}")
-
-    cols = []
-    for m, (_, cs) in enumerate(models):
-        eq = F.col("__l0") * F.lit(100) - filt_q(cs, 1, 1e2)
-        # BIGINT squares (r15): exact under the same 2^53 SSE contract
-        # the double readout already requires — see
-        # linear_filter_forecast; drops the per-row BigDecimal multiply.
-        cols.append(F.when(F.col("__i") > window, eq * eq)
-                    .alias(f"__e2_{m}"))
-        cols.append(F.when(F.col("__last"), filt_q(cs, 0, 1e6))
-                    .alias(f"__fn_{m}"))
-    per = lagged.select("__g", *cols).groupBy("__g").agg(
-        F.count("__e2_0").cast("long").alias("n_scored"),
-        *[a for m in range(len(models)) for a in (
-            F.sum(f"__e2_{m}").alias(f"__s_{m}"),
-            F.max(f"__fn_{m}").alias(f"__f_{m}"))])
+    per = _pooled(df, group_col, order, value, tie_break, models)
     sse = lambda m: (F.col(f"__s_{m}").cast("double")  # noqa: E731
                      / F.lit(1e4))
     best = F.array_sort(F.array(*[
@@ -1888,53 +1476,18 @@ def forecast_combination(df: DataFrame, group_col: str, order: str,
                     .alias("forecast_next_combo")))
 
 
-def _combination_oracle(window: int = _BF_WINDOW) -> str:
-    branches = []
-    for code, cs in _combination_models():
-        fb, fn = _filt_sql(cs, 1, "1e2"), _filt_sql(cs, 0, "1e6")
-        branches.append(f"""
-      SELECT g, CAST({code!r} AS DOUBLE) AS code,
-             CASE WHEN i > {window} THEN
-               CAST(l0 * 100 - ({fb}) AS HUGEINT)
-               * (l0 * 100 - ({fb}))
-             END AS e2,
-             CASE WHEN is_last THEN {fn} END AS fn
-      FROM lagged""")
-    union = "\n      UNION ALL".join(branches)
-    return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
-    lagged AS (
-      SELECT g, v AS l0,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               AS i,
-             row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
-               = count(*) OVER (PARTITION BY g) AS is_last,
-             {_lag_sql(window)}
-      FROM src
-    ),
-    fanned AS ({union}
-    ),
-    per AS (
-      SELECT g, code, CAST(count(e2) AS BIGINT) AS n_scored,
-             CAST(sum(e2) AS DOUBLE) / 1e4 AS sse,
-             CAST(max(fn) AS DOUBLE) / 1e6 AS forecast_next
-      FROM fanned GROUP BY g, code
-      HAVING count(e2) > 0
-    ),
+def _combination_oracle() -> str:
+    return _fanned_oracle(_combination_models()) + """,
     best AS (
       SELECT g, code AS bc, sse AS sse_best FROM (
         SELECT *, row_number() OVER (PARTITION BY g
-          ORDER BY sse ASC, code ASC) AS r FROM per WHERE code < 4.0
+          ORDER BY sse ASC, code ASC) AS r FROM pinned WHERE code < 4.0
       ) WHERE r = 1
     ),
     combo AS (
       SELECT g, n_scored, sse AS sse_combo,
              forecast_next AS forecast_next_combo
-      FROM per WHERE code = 4.0
+      FROM pinned WHERE code = 4.0
     )
     SELECT c.g AS user_id, c.n_scored,
            CASE WHEN b.bc = 1.0 THEN 'ses'
@@ -1955,9 +1508,4 @@ def q348_forecast_combination(spark: SparkSession,
     rows — the Bates–Granger combination-vs-selection verdict as a
     table; every (user, n_scored, family_best, sse_best, sse_combo,
     combo_wins, forecast_next_combo) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return forecast_combination(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, forecast_combination)

@@ -175,8 +175,24 @@ def histogram_auto(df: DataFrame, col: str) -> DataFrame:
 def corr_with_label(df: DataFrame, features: list[str], label: str,
                     round_to: int = 6) -> DataFrame:
     """Pearson r of each feature vs the label — ONE aggregation
-    (data_analysis.py:125-129 `corrwith`). Output: (feature, corr)."""
-    agg = df.agg(*[F.round(F.corr(c, label), round_to).alias(c) for c in features])
+    (data_analysis.py:125-129 `corrwith`). Output: (feature, corr).
+    A feature (or label) that is constant over the rows where both are
+    non-NULL has no correlation: NULL, as pandas' NaN. Spark's corr
+    cannot say so — its final division runs before any CASE sees the
+    result, so it raises under ANSI on a zero variance and returns
+    noise when merging partial aggregates leaves a rounding residue —
+    hence r = cov / (sd_x * sd_y) over the same rows, evaluated only
+    when min < max on both sides (the exact constancy test)."""
+    def paired(a: str, b: str) -> Column:
+        return F.when(F.col(b).isNotNull(), F.col(a))
+
+    def corr(c: str) -> Column:
+        x, y = paired(c, label), paired(label, c)
+        return F.when((F.min(x) < F.max(x)) & (F.min(y) < F.max(y)),
+                      F.covar_pop(c, label)
+                      / (F.stddev_pop(x) * F.stddev_pop(y)))
+
+    agg = df.agg(*[F.round(corr(c), round_to).alias(c) for c in features])
     pairs = ", ".join(f"'{c}', `{c}`" for c in features)
     return agg.selectExpr(f"stack({len(features)}, {pairs}) as (feature, corr)")
 

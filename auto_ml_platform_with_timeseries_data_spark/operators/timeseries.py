@@ -24,12 +24,62 @@ table by group key removes the shuffle entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+
+# ---------------------------------------------------------------------------
+# Shared per-series prelude (the forecast and ts_features kernels)
+# ---------------------------------------------------------------------------
+
+
+def ordered_series(df: DataFrame, group_col: str, order: str,
+                   value: Column, tie_break: str | None = None,
+                   name: str = "__v") -> tuple[DataFrame, WindowSpec]:
+    """(src, w): the integer series projected as (__g, order,
+    [tie_break], <name> BIGINT) with NULL values dropped, and its
+    per-series window ``partitionBy(__g).orderBy(order, tie_break)``."""
+    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
+    src = df.select(F.col(group_col).alias("__g"),
+                    F.col(order).alias(order),
+                    *([F.col(tie_break).alias(tie_break)]
+                      if tie_break else []),
+                    value.cast("long").alias(name)).filter(
+        F.col(name).isNotNull())
+    return src, Window.partitionBy("__g").orderBy(*ob)
+
+
+def pin(c: Column) -> Column:
+    """Round half-up at 1e-6 — the cross-engine readout pin."""
+    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+
+
+def event_cents_query(spark: SparkSession, sf_dir: str,
+                      kernel: Callable[..., DataFrame],
+                      **kwargs) -> DataFrame:
+    """Run a per-series kernel over each user's non-NULL events value
+    series in integer cents, ordered by (ts, event_id)."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull())
+    return kernel(ev, "user_id", "ts",
+                  F.floor(F.col("value") * 100 + F.lit(0.5)),
+                  tie_break="event_id", **kwargs)
+
+
+# The oracles' counterpart of event_cents_query: the same series as a
+# DuckDB CTE, shared by oracles only (never generated from the Spark
+# side, so each oracle stays an independent reference).
+EVENT_CENTS_SRC_SQL = """src AS (
+      SELECT user_id AS g, ts, event_id,
+             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
+      FROM events WHERE value IS NOT NULL
+    )"""
+
 
 # ---------------------------------------------------------------------------
 # Reusable operators

@@ -25,6 +25,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    EVENT_CENTS_SRC_SQL,
+    event_cents_query,
+    ordered_series,
+    pin,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     load_table,
@@ -984,7 +990,6 @@ def theil_sen_sampled(ev: DataFrame, group_col: str,
                 .cast("long").alias("n_sampled"),
                 F.median(F.when(F.col("__keep"), F.col("__m")))
                 .alias("__samp")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     pinned = agg.select(
         "__g", "n_pairs", "n_sampled",
         pin(F.col("__full")).alias("slope_full"),
@@ -1384,7 +1389,6 @@ def logrank_test(df: DataFrame, duration: Column, event: Column,
                 F.sum(d).cast("long").alias("d_total"),
                 F.sum(e_term).alias("__es"),
                 F.sum(v_term).alias("__vs")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     z = (F.col("d_a").cast("double") - F.col("__es") / F.lit(1e12)) \
         / F.sqrt(F.col("__vs") / F.lit(1e12))
     return agg.select(
@@ -1497,7 +1501,6 @@ def turning_points(df: DataFrame, group_col: str, order: str,
     n = F.col("n").cast("double")
     e = 2 * (n - 2) / 3
     var = (16 * n - 29) / 90
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return per.select(
         F.col("__g").alias(group_col), "n", "n_turns",
         F.when(F.col("n") >= 3, pin(e)).alias("expected"),
@@ -1526,9 +1529,6 @@ def trend_seasonal_strength(df: DataFrame, group_col: str, order: str,
     q06/q135 accumulation-margin analysis — remainders are O(1), so
     order drift sits ~9 orders below the pin). Series with zero
     denominator variance report that strength NULL-by-contract."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = (Window.partitionBy(group_col).orderBy(*ob)
-         .rowsBetween(-half_window, half_window))
     base = df.select(F.col(group_col).alias("__g"),
                      F.col(value).cast("double").alias("__v"),
                      F.col(order).alias("__o"),
@@ -1559,7 +1559,6 @@ def trend_seasonal_strength(df: DataFrame, group_col: str, order: str,
     vr = var("__sr", "__qr")
     vd = var("__sd", "__qd")
     vu = var("__su", "__qu")
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         F.col("__g").alias(group_col), "n",
         F.when(vu > 0, pin(F.greatest(F.lit(0.0), 1 - vr / vu)))
@@ -1693,16 +1692,9 @@ def single_changepoint(df: DataFrame, group_col: str, order: str,
     identical both engines) pinned at 1e-6, so the argmax row
     hash-checks. Nothing is collected; the argmax is a
     WindowGroupLimit-prunable rank window."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     wt = Window.partitionBy("__g")
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
     pre = src.select(
         "__g",
         F.row_number().over(w).alias("__k"),
@@ -1716,7 +1708,6 @@ def single_changepoint(df: DataFrame, group_col: str, order: str,
     gain = (sk * sk / k
             + (sn - sk) * (sn - sk) / (n - k)
             - sn * sn / n)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     scored = (pre.filter(F.col("__k") < F.col("n"))
               .select("__g", "n", "__k", pin(gain).alias("gain")))
     wr = Window.partitionBy("__g").orderBy(F.desc("gain"), F.asc("__k"))
@@ -1745,14 +1736,7 @@ def von_neumann_ratio(df: DataFrame, group_col: str, order: str,
     map-side-combined group-by of exact integers — successive-diff
     squares and Σv² go through DECIMAL(38,0) (cents² × n tops int64
     at scale); the ratio and z pin once over exact integers."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     d = F.col("__v") - F.lag("__v", 1).over(w)
     per = (src.select("__g", "__v", d.alias("__d"))
@@ -1768,7 +1752,6 @@ def von_neumann_ratio(df: DataFrame, group_col: str, order: str,
         * F.col("__s") / n
     ratio = F.col("__sd2").cast("double") / den
     se = F.sqrt(4 * (n - 2) / (n * n - 1))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n") >= 3) & (den > 0)
     return per.select(
         F.col("__g").alias(group_col), "n",
@@ -1798,14 +1781,7 @@ def hac_variance(df: DataFrame, group_col: str, order: str,
     inflation pin once. n ≤ L (no usable lags) or zero γ₀ reports
     NULL-by-contract. One lead-window pass per series; L is a
     constant, so the per-row cost is O(L), never O(n)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     means = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.sum("__v").cast("double")
@@ -1831,7 +1807,6 @@ def hac_variance(df: DataFrame, group_col: str, order: str,
         wgt = 1.0 - l / (max_lag + 1.0)
         lrv = lrv + 2.0 * wgt * (F.col(f"__c{l}").cast("double")
                                  / 1e6 / n)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n") > max_lag) & (F.col("__c0") > 0)
     return per.select(
         F.col("__g").alias(group_col), "n",
@@ -1842,12 +1817,8 @@ def hac_variance(df: DataFrame, group_col: str, order: str,
 
 @query(
     "q292_changepoint",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     pre AS (
       SELECT g,
              row_number() OVER w AS k,
@@ -1880,22 +1851,13 @@ def q292_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best single level-shift per user value series (cents) — the
     binary-segmentation first step, every (user, n, split_at, gain)
     row hash-checked including the earliest-k tie-break."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return single_changepoint(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, single_changepoint)
 
 
 @query(
     "q293_von_neumann",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     d AS (
       SELECT g, v,
              v - lag(v) OVER (PARTITION BY g ORDER BY ts, event_id)
@@ -1934,12 +1896,7 @@ def q293_von_neumann(spark: SparkSession, sf_dir: str) -> DataFrame:
     value series — the magnitude-aware randomness screen beside
     q289's turning points; every (user, n, vn_ratio, z) row
     hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return von_neumann_ratio(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, von_neumann_ratio)
 
 
 def _hac_oracle(max_lag: int = _HAC_L) -> str:
@@ -1955,11 +1912,7 @@ def _hac_oracle(max_lag: int = _HAC_L) -> str:
         lrv += (f" + {wgt} * (CAST(c{l} AS DOUBLE) / 1e6"
                 f" / n)")
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     means AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(v) AS DOUBLE) / count(*) AS m
@@ -2004,12 +1957,7 @@ def q294_hac_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar inflation factor autocorrelation forces onto any mean-based
     readout. Every (user, n, var_iid, var_hac, inflation) row
     hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return hac_variance(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, hac_variance)
 
 
 _SPEC_MIN_P, _SPEC_MAX_P = 2, 12
@@ -2049,17 +1997,10 @@ def spectral_peak(df: DataFrame, group_col: str, order: str,
     so one map-side-combined group-by per (series, period) carries
     everything; powers pin once and the peak flag is a rank window
     over 11 rows per series."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     spark = df.sparkSession
     grid = spark.createDataFrame(
         _spec_rows(), "period int, phase int, c double, s double")
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
     idx = src.select(
         "__g", "__v", (F.row_number().over(w) - 1).alias("__t"))
     lo, hi = _SPEC_MIN_P, _SPEC_MAX_P
@@ -2078,7 +2019,6 @@ def spectral_peak(df: DataFrame, group_col: str, order: str,
         F.sum(q(F.col("__v") * F.col("s"))).alias("__ss"))
     e = F.col("__sc").cast("double") / 1e6
     f = F.col("__ss").cast("double") / 1e6
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     scored = per.select(
         "__g", "period", "n",
         pin((e * e + f * f) / F.col("n").cast("double"))
@@ -2104,11 +2044,7 @@ def _spec_oracle() -> str:
     WITH grid(period, phase, c, s) AS (VALUES
       {vals}
     ),
-    src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    {EVENT_CENTS_SRC_SQL},
     idx AS (
       SELECT g, v,
              row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
@@ -2148,12 +2084,7 @@ def q295_spectral_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     series with the per-series peak flagged — every (user, period, n,
     power, is_peak) row hash-checked against the same python-generated
     trig grid."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return spectral_peak(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, spectral_peak)
 
 
 def runs_test(df: DataFrame, group_col: str, order: str,
@@ -2171,13 +2102,7 @@ def runs_test(df: DataFrame, group_col: str, order: str,
     (numerous-small-groups contract), one count-up; a, b, R are exact
     integers and z pins once. a = 0, b = 0, or Var ≤ 0 reports
     z NULL-by-contract (one row per series with any kept rows)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     tot = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__v").cast("long").alias("__s"))
@@ -2189,7 +2114,6 @@ def runs_test(df: DataFrame, group_col: str, order: str,
                         .when(dec(F.col("__v")) * dec(F.col("__n"))
                               < F.col("__s"), F.lit(0)))
             .filter(F.col("__sgn").isNotNull()))
-    w = Window.partitionBy("__g").orderBy(*ob)
     flips = kept.select(
         "__g", "__sgn",
         (F.lag("__sgn", 1).over(w) != F.col("__sgn")).cast("long")
@@ -2207,7 +2131,6 @@ def runs_test(df: DataFrame, group_col: str, order: str,
     # a 1-kept-row series must land NULL-by-contract, not crash).
     var = (2 * a * b * (2 * a * b - a - b)
            / F.when(m > 1, m * m * (m - 1)))
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n_above") > 0) & (F.col("n_below") > 0) & (var > 0)
     return per.select(
         F.col("__g").alias(group_col), "n_above", "n_below", "runs",
@@ -2230,15 +2153,8 @@ def cox_stuart(df: DataFrame, group_col: str, order: str,
     the series key, so the join reuses the window's shuffle; counts
     are exact integers and z pins once. m = 0 reports
     z NULL-by-contract."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     wt = Window.partitionBy("__g")
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
     idx = src.select(
         "__g", "__v",
         F.row_number().over(w).alias("__i"),
@@ -2262,7 +2178,6 @@ def cox_stuart(df: DataFrame, group_col: str, order: str,
         .cast("long").alias("n_pos"))
     m = F.col("m_pairs").cast("double")
     z = (F.col("n_pos").cast("double") - m / 2) / F.sqrt(m / 4)
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return per.select(
         F.col("__g").alias(group_col), "n", "m_pairs", "n_pos",
         F.when(F.col("m_pairs") > 0, pin(z)).alias("z"))
@@ -2270,12 +2185,8 @@ def cox_stuart(df: DataFrame, group_col: str, order: str,
 
 @query(
     "q307_runs_test",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     tot AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(v) AS BIGINT) AS s
@@ -2320,22 +2231,13 @@ def q307_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test about the mean per user value series
     (exact-integer above/below split, ties-at-mean dropped) — every
     (user, n_above, n_below, runs, z) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return runs_test(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, runs_test)
 
 
 @query(
     "q308_cox_stuart",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     idx AS (
       SELECT g, v,
              row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
@@ -2368,12 +2270,7 @@ def q308_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_t vs v_{t+ceil(n/2)} pairs, ties dropped) — the linear-cost
     trend read you run before q228's Mann-Kendall; every
     (user, n, m_pairs, n_pos, z) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return cox_stuart(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, cox_stuart)
 
 
 # ---------------------------------------------------------------------------
@@ -2398,14 +2295,7 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
     m counts regression rows (t >= 2); m < 4, a degenerate regressor
     (den <= 0), or a perfect fit (ssr <= 0 after pinning) reports
     beta/df_t NULL-by-contract (one row per series either way)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     lagged = src.select(
         "__g", F.col("__v").alias("__l0"),
         F.lag("__v", 1).over(w).alias("__x"))
@@ -2423,7 +2313,6 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
     m = F.col("m").cast("decimal(38,0)")
     den = m * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     num = m * F.col("__sxy") - F.col("__sx") * F.col("__sy")
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     # NULL-guard the denominator: `ok` references ssr (hence beta), so
     # the division is evaluated OUTSIDE any lazy CASE branch — a
     # constant regressor (den = 0) must flow NULL, not raise ANSI
@@ -2445,12 +2334,8 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
         F.when(ok, pin(beta / se)).alias("df_t"))
 
 
-_DF_ORACLE = """
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+_DF_ORACLE = f"""
+    WITH {EVENT_CENTS_SRC_SQL},
     lagged AS (
       SELECT g, v AS l0,
              lag(v, 1) OVER (PARTITION BY g ORDER BY ts, event_id)
@@ -2504,12 +2389,7 @@ def q313_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     events value series — the stationarity screen in front of the
     q309-q312 forecast tier; every (user, m, beta, df_t) row
     hash-checked over exact-integer normal-equation sums."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return dickey_fuller(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, dickey_fuller)
 
 
 # ---------------------------------------------------------------------------
@@ -2541,14 +2421,7 @@ def hurst_aggvar(df: DataFrame, group_col: str, order: str,
     for g in grid:
         if g & (g - 1):
             raise ValueError("hurst_aggvar grid must be powers of two")
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     idx = src.select("__g", "__v", F.row_number().over(w).alias("__i"))
     ms = F.array(*[
         F.struct(F.lit(m).alias("m"),
@@ -2587,7 +2460,6 @@ def hurst_aggvar(df: DataFrame, group_col: str, order: str,
     p = F.col("p_points")
     den = p * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     num = p * F.col("__sxy") - F.col("__sx") * F.col("__sy")
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     # slope in ln units per log2 step -> convert by 1/ln(2); the yq
     # quantum 1e6 divides back out
     slope = (num.cast("double") / den.cast("double") / F.lit(1e6)
@@ -2602,11 +2474,7 @@ def hurst_aggvar(df: DataFrame, group_col: str, order: str,
 def _hurst_oracle(grid: tuple[int, ...] = _HURST_GRID) -> str:
     ms = ", ".join(f"({m}, {m.bit_length() - 1})" for m in grid)
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     idx AS (
       SELECT g, v,
              row_number() OVER (PARTITION BY g ORDER BY ts, event_id)
@@ -2668,12 +2536,7 @@ def q314_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     value series — the long-range-dependence readout beside q294's
     HAC inflation; every (user, p_points, slope, hurst) row
     hash-checked over order-free integer sums."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return hurst_aggvar(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, hurst_aggvar)
 
 
 # ---------------------------------------------------------------------------
@@ -2748,7 +2611,6 @@ def ccf_lags(df: DataFrame, group_col: str, order: str,
         aggs.append(F.count(F.col(f"__y{lag}")).cast("long")
                     .alias(f"__n{lag}"))
     per = j.groupBy("__g").agg(*aggs)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     den = F.sqrt(F.col("__sxx").cast("double")
                  * F.col("__syy").cast("double"))
     ok = (F.col("n") >= 3) & (F.col("__sxx") > 0) & (F.col("__syy") > 0)
@@ -2906,7 +2768,6 @@ def seasonal_mann_kendall(df: DataFrame, group_col: str,
         F.count(F.lit(1)).cast("long").alias("n_seasons"),
         F.sum("__s").cast("long").alias("s_total"),
         F.sum("__v18").cast("long").alias("var18_total"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     z = ((F.col("s_total") - F.signum(F.col("s_total")))
          / F.sqrt(F.col("var18_total") / F.lit(18.0)))
     return tot.select(
@@ -3007,15 +2868,8 @@ def page_hinkley(df: DataFrame, group_col: str, order: str,
     1-based row index of the first crossing (NULL when none).  delta
     and lambda are in original value units; increments quantize at
     1e-2 cents — the documented resolution."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
     dc = delta * 100.0
     lam_q = int(round(lam * 100.0 * _PH_Q))
     stepped = src.select(
@@ -3043,7 +2897,6 @@ def page_hinkley(df: DataFrame, group_col: str, order: str,
               .otherwise(F.lit(0))).cast("long").alias("n_alarms"),
         F.min(F.when(F.col("__gap") > F.lit(lam_q), F.col("__i")))
         .cast("long").alias("first_alarm"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return out.select(
         F.col("__g").alias(group_col), "n",
         pin(F.col("__maxgap") / F.lit(_PH_Q) / F.lit(100.0))
@@ -3055,11 +2908,7 @@ def _ph_oracle(delta: float = 0.05, lam: float = 10.0) -> str:
     dc = delta * 100.0
     lam_q = int(round(lam * 100.0 * _PH_Q))
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     stepped AS (
       SELECT g,
              row_number() OVER w AS i,
@@ -3104,12 +2953,7 @@ def q317_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     value series — the walking-forward counterpart of q292's offline
     changepoint; every (user, n, ph_stat, n_alarms, first_alarm) row
     hash-checked over exact integer cumulative sums."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return page_hinkley(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, page_hinkley)
 
 
 # ---------------------------------------------------------------------------
@@ -3136,14 +2980,7 @@ def ljung_box(df: DataFrame, group_col: str, order: str,
     """(group, n, q_stat): Ljung–Box over lags 1..max_lag per series.
     n <= max_lag + 1 or zero variance reports q_stat NULL-by-contract
     (one row per series either way)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     means = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.sum("__v").cast("double")
@@ -3166,7 +3003,6 @@ def ljung_box(df: DataFrame, group_col: str, order: str,
             vl.isNotNull(), qt(cent * (vl - F.col("__m")))))
             .alias(f"__c{l}"))
     per = j.groupBy("__g").agg(*aggs)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     nd = F.col("n").cast("double")
     q = None
     for l in range(1, max_lag + 1):
@@ -3192,11 +3028,7 @@ def _lb_oracle(max_lag: int = _LB_L) -> str:
         f" * (floor(CAST(c{l} AS DOUBLE) / c0 * 1e6 + 0.5) / 1e6)"
         f" / (CAST(n AS DOUBLE) - {l})" for l in range(1, max_lag + 1))
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     means AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(v) AS DOUBLE) / count(*) AS m
@@ -3230,12 +3062,7 @@ def q321_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     events value series — the joint residual diagnostic behind the
     q309-q311 forecast tier; every (user, n, q_stat) row
     hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return ljung_box(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, ljung_box)
 
 
 # ---------------------------------------------------------------------------
@@ -3260,15 +3087,8 @@ def kpss_level(df: DataFrame, group_col: str, order: str,
     """(group, n, eta): KPSS level-stationarity statistic per series.
     n <= max_lag + 1 or zero long-run variance reports eta
     NULL-by-contract (one row per series either way)."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
     means = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.sum("__v").cast("double")
@@ -3304,7 +3124,6 @@ def kpss_level(df: DataFrame, group_col: str, order: str,
                                   / F.lit(1e6) / nd)
     eta = (F.col("__ss2").cast("double") / F.lit(1e2)
            / (nd * nd) / lrv)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n") > max_lag + 1) & (lrv > 0)
     return per.select(
         F.col("__g").alias(group_col), "n",
@@ -3323,11 +3142,7 @@ def _kpss_oracle(max_lag: int = _HAC_L) -> str:
         wgt = repr(2.0 * (1.0 - l / (max_lag + 1.0)))
         lrv += f" + {wgt} * (CAST(c{l} AS DOUBLE) / 1e6 / n)"
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     means AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n,
              CAST(sum(v) AS DOUBLE) / count(*) AS m
@@ -3367,12 +3182,7 @@ def q322_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     value series — the stationary-null mirror of q313's Dickey-Fuller
     (run both: the textbook confirmatory protocol); every
     (user, n, eta) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return kpss_level(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, kpss_level)
 
 
 # ---------------------------------------------------------------------------
@@ -3445,7 +3255,6 @@ def granger_lag1(df: DataFrame, group_col: str, order: str,
             - F.col("__sab") * F.col("__sby"))
     num2 = (F.col("__saa") * F.col("__sby")
             - F.col("__sab") * F.col("__say"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     det_d = F.when(det.cast("double") > 0, det.cast("double"))
     b1 = pin(num1.cast("double") / det_d)
     bx = pin(num2.cast("double") / det_d)
@@ -3660,7 +3469,6 @@ def hbos_scores(df: DataFrame, id_col: str,
             term = F.log(F.col(f"__m_{k}").cast("double")
                          / F.col(f"__c_{k}").cast("double"))
             score = term if score is None else score + term
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return out.select(
         F.col("__id").alias(id_col), *[f"bin_{k}" for k in names],
         pin(score).alias("hbos"))
@@ -3753,14 +3561,7 @@ def seasonal_decompose_ma(df: DataFrame, group_col: str, order: str,
     full ±4 window) report trend/remainder NULL; a phase with no
     interior rows reports seasonal/remainder NULL for its rows."""
     m = _STL_PERIOD
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     lagged = src.select(
         "__g", F.col("__v").alias("cents"),
         F.row_number().over(w).alias("i"),
@@ -3784,7 +3585,6 @@ def seasonal_decompose_ma(df: DataFrame, group_col: str, order: str,
     ctr = ph.groupBy("__g").agg(
         F.floor(F.sum("__pm").cast("double") / F.lit(float(m))
                 + F.lit(0.5)).alias("__ctr"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     trend = pin(F.col("__t2").cast("double") / F.lit(16.0))
     seasonal = (F.col("__pm") - F.col("__ctr")) / F.lit(1e6)
     return (base.join(ph, ["__g", "__ph"])
@@ -3797,11 +3597,7 @@ def seasonal_decompose_ma(df: DataFrame, group_col: str, order: str,
 
 
 _STL_ORACLE = f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     lagged AS (
       SELECT g, v AS cents,
              row_number() OVER w AS i,
@@ -3851,12 +3647,7 @@ def q340_seasonal_decompose(spark: SparkSession,
     remainder) — the table behind q290's strength ratio and q328's
     seasonal forecast; every (user, i, cents, trend, seasonal,
     remainder) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return seasonal_decompose_ma(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, seasonal_decompose_ma)
 
 
 # ---------------------------------------------------------------------------
@@ -3974,12 +3765,7 @@ def q344_residual_anomaly_windows(spark: SparkSession,
     fleet-triage read that flags a DEGRADING series (a sustained
     residual run) rather than a point outlier; every (user, i_end,
     win_abs_micro, series_abs_micro, n_interior) row hash-checked."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return residual_anomaly_windows(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, residual_anomaly_windows)
 
 
 # ---------------------------------------------------------------------------
@@ -4019,14 +3805,7 @@ def matrix_profile_discord(df: DataFrame, group_col: str, order: str,
     admissible pair emit nothing: the first admissible pair is the
     windows ending at rows width and 2*width (exactly width apart), so
     that means n < 2*width rows."""
-    ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
-    w = Window.partitionBy("__g").orderBy(*ob)
-    src = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__v").isNotNull())
+    src, w = ordered_series(df, group_col, order, value, tie_break)
     win = (src.select(
         "__g", F.row_number().over(w).alias("__i"),
         F.col("__v").alias("__l0"),
@@ -4072,11 +3851,7 @@ def _matrix_profile_oracle(width: int = _MP_W) -> str:
     dist2 = " + ".join(
         f"(a.l{j} - b.l{j}) * (a.l{j} - b.l{j})" for j in range(width))
     return f"""
-    WITH src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events WHERE value IS NOT NULL
-    ),
+    WITH {EVENT_CENTS_SRC_SQL},
     win AS (
       SELECT * FROM (
         SELECT g,
@@ -4112,12 +3887,7 @@ def q345_matrix_profile_discord(spark: SparkSession,
     express (a discord can be REGULAR in level but unlike every other
     window in shape); every (user, discord_i, mp_dist2, n_windows)
     row hash-checked against the brute-force SQL."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull())
-    return matrix_profile_discord(
-        ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
-        tie_break="event_id")
+    return event_cents_query(spark, sf_dir, matrix_profile_discord)
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,6 @@
 """Physical-plan inspection helpers — the engine's ".explain and iterate"
-loop (SURVEY.md §4). Used by tests to ASSERT the plans we want:
-filters pushed to the parquet scan, dims broadcast, aggregates partial,
-whole-stage codegen covering the hot path.
+loop (SURVEY.md §4). Used by tests to ASSERT the plans we want, e.g.
+filters pushed to the parquet scan or the join AQE actually ran.
 """
 
 from __future__ import annotations
@@ -37,15 +36,3 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
         "PushedFilters" in line and fragment in line
         for line in plan.splitlines()
     )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_partial_aggregate(df: DataFrame) -> bool:
-    return "partial_" in formatted_plan(df) or "HashAggregate" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

@@ -94,6 +94,22 @@ def _ship_package(spark: SparkSession) -> None:
     sc._sparkgraft_pkg_shipped = True
 
 
+def _driver_memory() -> str:
+    """$SPARK_DRIVER_MEMORY, else half the machine's physical memory
+    in whole GiB (at least 1g, at most 48g). The driver JVM grows past
+    its heap (metaspace, Arrow and shuffle buffers), and the Python
+    workers and the OS need the rest: a fixed 48g heap on a 16 GB box
+    let the JVM grow until the kernel's OOM killer ended it."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2 ** 31))}g"
+
+
 def get_spark(app_name: str = "auto_ml_platform_with_timeseries_data_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -108,7 +124,7 @@ def get_spark(app_name: str = "auto_ml_platform_with_timeseries_data_spark",
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")

@@ -214,19 +214,6 @@ def read_excel(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def ingest_to_parquet(spark: SparkSession, src_path: str, dest_dir: str,
-                      name: str = "train_data",
-                      skip_if_exists: bool = True) -> str:
-    """Upload sink (S4/S5, app.py:23-51): persist the ingested table as
-    the task's canonical columnar copy; idempotent like the reference's
-    skip-if-exists."""
-    dest = os.path.join(dest_dir, f"{name}.parquet")
-    if skip_if_exists and os.path.exists(dest):
-        return dest
-    read_any(spark, src_path).write.mode("overwrite").parquet(dest)
-    return dest
-
-
 @query(
     "q56_jsonl_roundtrip",
     oracle="""

@@ -62,12 +62,18 @@ def test_corr_with_label_matches_numpy(spark):
     x = rng.normal(size=200)
     y = 2 * x + rng.normal(size=200)
     z = rng.normal(size=200)
-    rows = [(float(a), float(b), float(c)) for a, b, c in zip(x, y, z)]
-    df = spark.createDataFrame(rows, "x double, label double, z double")
+    rows = [(float(a), float(b), float(c), 7.0, 0.0)
+            for a, b, c in zip(x, y, z)]
+    df = spark.createDataFrame(
+        rows, "x double, label double, z double, k double, k0 double")
     got = {r["feature"]: r["corr"]
-           for r in prof.corr_with_label(df, ["x", "z"], "label").collect()}
+           for r in prof.corr_with_label(
+               df, ["x", "z", "k", "k0"], "label").collect()}
     assert math.isclose(got["x"], float(np.corrcoef(x, y)[0, 1]), abs_tol=1e-6)
     assert math.isclose(got["z"], float(np.corrcoef(z, y)[0, 1]), abs_tol=1e-6)
+    # constant features have no correlation (pandas corrwith: NaN) —
+    # whether the merged variance is exactly zero (k0) or not (k)
+    assert got["k"] is None and got["k0"] is None
 
 
 def test_corr_non_numeric_yields_null(spark):

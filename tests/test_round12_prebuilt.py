@@ -39,9 +39,16 @@ _NEW = (
     "q305_chow", "q306_levene_bf", "q307_runs_test", "q308_cox_stuart",
     "q309_ses_forecast", "q310_holt_forecast",
 )
+# every oracle-backed query of the per-series forecast and
+# time-series-feature kernels, selected by module
+_SERIES_MODULES = (forecast.__name__, ts_features.__name__)
+_SERIES = tuple(
+    name for name, fn in registry.queries().items()
+    if fn.__module__ in _SERIES_MODULES and name in registry.oracles()
+    and name not in _NEW)
 
 
-@pytest.mark.parametrize("name", _NEW)
+@pytest.mark.parametrize("name", _NEW + _SERIES)
 def test_registered_oracle_gate(spark, sf_dir, name):
     """Driver-style compare: registered Spark query vs its registered
     DuckDB oracle on the same parquet tables."""
