@@ -45,6 +45,8 @@ from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, release
+
 SEED = 42
 
 
@@ -200,7 +202,7 @@ def automl(train: DataFrame, features: list[str], label: str,
     npart = max(1, train.sparkSession.sparkContext.defaultParallelism // 4)
     if train.rdd.getNumPartitions() < npart:
         train = train.repartition(npart)
-    train = train.cache()
+    train = keep(train)
     if mode == "regression":
         evaluator = RegressionEvaluator(labelCol="__label", metricName="rmse")
         better = min
@@ -235,7 +237,7 @@ def automl(train: DataFrame, features: list[str], label: str,
         with ThreadPoolExecutor(max_workers=max(1, len(families))) as pool:
             results = list(pool.map(_run_family, families.items()))
     finally:
-        train.unpersist()
+        release(train)
     best = better(results, key=lambda r: r.cv_metric)
     return AutoMLResult(best=best, all_results=results)
 

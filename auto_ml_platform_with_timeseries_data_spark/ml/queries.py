@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from auto_ml_platform_with_timeseries_data_spark.ml.automl import SEED, automl
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 _FEATURES = ["l_quantity", "l_discount", "l_tax"]
 _LABEL = "l_extendedprice"
@@ -24,14 +24,13 @@ def q15_cv_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast — the full-grid path is exercised in tests/bench)."""
     # Deterministic 1-in-3 hash sample, NOT limit(): a global limit
     # collapses to one partition, serializing every fold×grid fit; the
-    # filter keeps scan parallelism. cache() because CrossValidator
+    # filter keeps scan parallelism. keep() because CrossValidator
     # re-reads the train set for every fold split + refit — without it
     # each of the ~14 fits re-scans parquet.
-    li = (
+    li = keep(
         load_table(spark, sf_dir, "lineitem")
         .select(*_FEATURES, _LABEL)
         .filter(F.abs(F.xxhash64(*_FEATURES, _LABEL)) % 10 == 0)
-        .cache()
     )
     li.count()
     lr = LinearRegression(featuresCol="features", labelCol="__label")
@@ -41,11 +40,8 @@ def q15_cv_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "linear": (lr, ParamGridBuilder().addGrid(lr.regParam, [0.0, 0.1]).build()),
         "decision_tree": (dt, ParamGridBuilder().addGrid(dt.maxDepth, [3, 5]).build()),
     }
-    try:
-        result = automl(li, _FEATURES, _LABEL, mode="regression",
-                        families=families, num_folds=3, parallelism=8)
-    finally:
-        li.unpersist()
+    result = automl(li, _FEATURES, _LABEL, mode="regression",
+                    families=families, num_folds=3, parallelism=8)
     rows = [
         (r.family, str(sorted(r.best_params.items())), round(r.cv_metric, 4),
          1 if r.family == result.best.family else 0)

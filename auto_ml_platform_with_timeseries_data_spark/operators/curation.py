@@ -40,8 +40,9 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     tokens,
     word_ngrams,
 )
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 # Knuth multiplicative hash over a bounded residue: the pre-mod by
 # 1000003 (prime) keeps the product ≤ ~2.6e15, far inside BIGINT, so
@@ -563,8 +564,7 @@ def chi_square_independence(df: DataFrame, a_col: str,
     e = (F.col("__ra").cast("double") * F.col("__cb")) / F.col("__tot")
     term = (F.col("__n") - e) * (F.col("__n") - e) / e
     return m.agg(
-        (F.floor((F.sum(term) + F.max("__tot") - F.sum(e))
-                 * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
+        pin(F.sum(term) + F.max("__tot") - F.sum(e)).alias("chi2"),
         ((F.countDistinct("__a") - 1)
          * (F.countDistinct("__b") - 1)).alias("dof"),
         F.max("__tot").alias("n"),
@@ -653,7 +653,7 @@ def ks_two_sample(df: DataFrame, value_col: str, group_col: str,
         F.abs(F.col("__cuma").cast("double") / F.col("__na")
               - F.col("__cumb").cast("double") / F.col("__nb")))
     return m.agg(
-        (F.floor(F.max(gap) * 1e6 + F.lit(0.5)) / 1e6).alias("ks"),
+        pin(F.max(gap)).alias("ks"),
         F.max("__na").alias("n_a"),
         F.max("__nb").alias("n_b"),
     )
@@ -735,8 +735,7 @@ def split_leakage(df: DataFrame, text_col: str,
         F.sum(leaked.cast("long")).alias("n_leaked_groups"),
         F.sum(F.when(leaked, F.col("__n")).otherwise(0)).alias(
             "n_docs_in_leaked"),
-        (F.floor(F.sum(leaked.cast("double")) / F.count(F.lit(1))
-                 * 1e6 + F.lit(0.5)) / 1e6).alias("leak_rate"),
+        pin(F.sum(leaked.cast("double")) / F.count(F.lit(1))).alias("leak_rate"),
     )
 
 
@@ -1455,11 +1454,10 @@ def q169_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.md5(norm).alias("__fp"),
                     F.size(tokens(norm)).alias("__nw")))
     w = Window.partitionBy("__fp")
-    deduped = (slim
-               .withColumn("__canon", F.min("doc_id").over(w))
-               .filter(F.col("doc_id") == F.col("__canon"))
-               .drop("__canon", "__fp")
-               .persist())
+    deduped = keep(slim
+                   .withColumn("__canon", F.min("doc_id").over(w))
+                   .filter(F.col("doc_id") == F.col("__canon"))
+                   .drop("__canon", "__fp"))
     rates = _mix_rates(deduped, "source", budget_frac=0.5)
     mixed = (deduped.join(F.broadcast(rates), "source")
              .filter(hash_u32("doc_id") < F.col("__th")))
@@ -1703,11 +1701,9 @@ def quality_classifier_score(df: DataFrame, id_col: str,
             F.size("__c").cast("long").alias("n_feats"),
             F.col("raw_score"),
             F.when(F.size("__c") == 0, F.lit(0.5)).otherwise(
-                F.floor(
-                    (F.lit(1.0) / (F.lit(1.0) + F.exp(
-                        -(F.col("raw_score").cast("double")
-                          / (F.size("__c") * F.lit(_FTC_SCALE))))))
-                    * 1e6 + F.lit(0.5)) / 1e6).alias("score"),
+                pin(F.lit(1.0) / (F.lit(1.0) + F.exp(
+                    -(F.col("raw_score").cast("double")
+                      / (F.size("__c") * F.lit(_FTC_SCALE))))))).alias("score"),
             (F.col("raw_score") > 0).alias("keep"),
         )
     )
@@ -1794,7 +1790,7 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
     )
 
     scored = bigram_logprob(df, id_col, text_col)
-    per_doc = (
+    per_doc = keep(
         df.select(F.col(id_col).alias("doc_id"),
                   F.col(domain_col).alias("domain"),
                   F.size(tokens(normalize_text(text_col))).cast("long")
@@ -1810,7 +1806,6 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
         # every branch re-ran the whole LM scoring pipeline (24 source
         # scans in the plan). Persist the narrow (domain, ntok,
         # neg_micro) decision rows once.
-        .persist()
     )
     dom = per_doc.groupBy("domain").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1818,7 +1813,7 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
         F.sum("__neg_micro").alias("__s"))
     corpus = per_doc.agg(
         (F.sum("__neg_micro") / F.count(F.lit(1))).alias("__gmean"))
-    out = (
+    out = keep(
         dom.crossJoin(F.broadcast(corpus))
         .withColumn("mean_neg_lp_micro",
                     F.expr("__s div n_docs").cast("long"))
@@ -1840,7 +1835,6 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
                 F.lit(1_000_000) +
                 F.floor(F.col("excess_ppm") / 4).cast("long"))
             .cast("long"))
-        .persist()
     )
     total = out.agg(F.sum(F.col("tokens") * F.col("factor_ppm"))
                     .alias("__tot"))
@@ -2071,7 +2065,7 @@ def dsir_select(df: DataFrame, id_col: str, text_col: str,
     return (
         scored.select(
             F.col("__id").alias("doc_id"), "n_tokens",
-            (F.floor(F.col("__lw") * 1e6 + F.lit(0.5)) / 1e6)
+            pin(F.col("__lw"))
             .alias("dsir_weight"))
         .orderBy(F.desc("dsir_weight"), F.asc("doc_id")).limit(top_n))
 
@@ -2283,7 +2277,7 @@ def js_divergence_sources(df: DataFrame, text_col: str,
         F.sum(F.floor(term * 1e12).cast("long")).alias("__jsd"))
     return agg.select(
         "vocab", "n_p_tokens", "n_q_tokens",
-        (F.floor(F.col("__jsd") / 1e12 * 1e6 + F.lit(0.5)) / 1e6)
+        pin(F.col("__jsd") / 1e12)
         .alias("jsd_nats"))
 
 
@@ -2366,7 +2360,7 @@ def wasserstein1(df: DataFrame, value_col: str, group_col: str,
         * (F.col("__vn") - F.col("__v")) * F.lit(1e12)).cast("long")
     gated = F.when((F.col("__na") > 0) & (F.col("__nb") > 0), term)
     return m.agg(
-        (F.floor(F.sum(gated) / F.lit(1e12) * 1e6 + F.lit(0.5)) / 1e6)
+        pin(F.sum(gated) / F.lit(1e12))
         .alias("w1"),
         F.max("__na").alias("n_a"),
         F.max("__nb").alias("n_b"),
@@ -2476,7 +2470,7 @@ def t_closeness(df: DataFrame, quasi_cols: list[str],
     return agg.select(
         *quasi_cols, "n",
         F.when(F.col("__k") > 1,
-               F.floor(emd * 1e6 + F.lit(0.5)) / 1e6)
+               pin(emd))
         .alias("emd"))
 
 
@@ -2569,8 +2563,7 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     e = (F.col("__ra").cast("double") * F.col("__cb")) / F.col("__tot")
     term = (F.col("__n") - e) * (F.col("__n") - e) / e
     agg = m.agg(
-        (F.floor((F.sum(term) + F.max("__tot") - F.sum(e))
-                 * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
+        pin(F.sum(term) + F.max("__tot") - F.sum(e)).alias("chi2"),
         ((F.countDistinct("__a") - 1)
          * (F.countDistinct("__b") - 1)).alias("dof"),
         F.max("__tot").alias("n"),
@@ -2581,7 +2574,7 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     return agg.select(
         "chi2", "dof", "n",
         F.when(F.col("__mink") > 1,
-               F.floor(v * 1e6 + F.lit(0.5)) / 1e6).alias("v"))
+               pin(v)).alias("v"))
 
 
 @query(
@@ -2678,7 +2671,7 @@ def cramer_von_mises(df: DataFrame, value_col: str, group_col: str,
     return agg.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
-        (F.floor(cvm * 1e6 + F.lit(0.5)) / 1e6).alias("cvm"))
+        pin(cvm).alias("cvm"))
 
 
 def _cvm_oracle() -> str:
@@ -2786,7 +2779,6 @@ def mixture_conformance(df: DataFrame, dim_col: str,
     obs_ppm = F.expr("(n * 1000000) div __tot")
     e = (F.col("expected_ppm").cast("double") / 1e6
          * F.col("__tot"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     chi = F.when(F.col("expected_ppm") > 0,
                  pin((F.col("n") - e) * (F.col("n") - e) / e))
     return full.select(
@@ -2849,7 +2841,6 @@ def anderson_darling_2s(df: DataFrame, value_col: str, group_col: str,
            .agg(F.sum(qterm).alias("__ts"),
                 F.max("__na").alias("n_a"),
                 F.max("__nb").alias("n_b")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
@@ -3002,7 +2993,6 @@ def dp_noisy_counts(df: DataFrame, dim: Column, epsilon: float = 1.0,
     c = u - F.lit(0.5)
     noise = (F.lit(-1.0 / epsilon) * F.signum(c)
              * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(c)))
-    pin = lambda x: F.floor(x * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return cells.select(
         "cohort", "n",
         pin(noise).alias("noise"),

@@ -93,7 +93,7 @@ def _hash_grams(grams: DataFrame) -> DataFrame:
         "__grams", F.transform("__grams", lambda g: F.xxhash64(g))
     )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table, release
 
 # ---------------------------------------------------------------------------
 # Exact dedup + fingerprint
@@ -248,7 +248,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     # sides (it's ~two orders of magnitude smaller than the text; the
     # signature family is xxhash64(gram_hash, i), so it derives from the
     # hashed grams without touching strings again).
-    grams = _hash_grams(_grams_df(df, id_col, text_col, shingle_n)).persist()
+    grams = keep(_hash_grams(_grams_df(df, id_col, text_col, shingle_n)))
     cands = minhash_lsh_candidates(df, id_col, text_col, num_hashes, bands,
                                    shingle_n, grams_hashed=grams)
     ga = grams.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
@@ -400,10 +400,10 @@ def jaccard_pairs_blocked(df: DataFrame, id_col: str, text_col: str,
       count Σ df² (no sampling needed — it's a sum over gram frequencies)
       and picks ``index`` iff it fits ``index_budget`` rows.
     """
-    grams = _hash_grams(_grams_df(
+    grams = keep(_hash_grams(_grams_df(
         df.withColumnRenamed(block_col, "__blk"), id_col, text_col, shingle_n,
         extra_cols=("__blk",),
-    )).persist()
+    )))
     if strategy == "auto":
         cost = (
             grams.select("__blk", F.explode("__grams").alias("__g"))
@@ -669,11 +669,10 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # Persist the DIRECTED edges before mirroring: the union references
     # the edge plan twice, and an expensive upstream (e.g. a similarity
     # join) would otherwise execute once per direction.
-    directed = edges.select(F.col(src).alias("u"),
-                            F.col(dst).alias("v")).persist()
-    e = directed.unionAll(
-        directed.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    directed = keep(edges.select(F.col(src).alias("u"),
+                                 F.col(dst).alias("v")))
+    e = keep(directed.unionAll(
+        directed.select(F.col("v").alias("u"), F.col("u").alias("v"))))
     # Iterate ONLY over vertices that touch an edge: isolated vertices
     # are their own component by definition and never change, and the
     # near-dup graph is always sparse next to the corpus (hundreds of
@@ -686,7 +685,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         .distinct()
     )
     all_labels = vertices.select(F.col(id_col).alias("id"))
-    labels = edge_vertices.select("id", F.col("id").alias("comp")).persist()
+    labels = keep(edge_vertices.select("id", F.col("id").alias("comp")))
     cached = labels  # the DF actually holding the persisted round state
     for _ in range(max_iter):
         nbr_min = (
@@ -696,7 +695,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         )
         # Carry a per-row changed flag through the same select instead of
         # re-joining new vs old labels: one job per round, not two.
-        stepped = (
+        stepped = keep(
             labels.join(nbr_min, labels["id"] == nbr_min["u"], "left")
             .select(
                 "id",
@@ -705,16 +704,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 (F.coalesce("nbr_comp", F.col("comp")) < F.col("comp"))
                 .alias("__chg"),
             )
-            .persist()
         )
         changed = stepped.filter("__chg").limit(1).count()
-        cached.unpersist()
+        release(cached)
         cached = stepped
         labels = stepped.select("id", "comp")
         if changed == 0:
             break
-    e.unpersist()
-    directed.unpersist()
+    release(e, directed)
     # isolated vertices: component = own id (left join keeps every vertex)
     return (
         all_labels.join(labels, "id", "left")
@@ -1505,16 +1502,16 @@ def q183_neardup_leakfree_split(spark: SparkSession,
     comp = connected_components(
         docs.select("doc_id"), pairs.select("id_a", "id_b"),
         id_col="doc_id").select(F.col("id").alias("doc_id"), "component")
-    s = split_by_neardup_cluster(docs, comp, "doc_id").persist()
+    s = keep(split_by_neardup_cluster(docs, comp, "doc_id"))
     bad = (s.groupBy("component")
            .agg(F.countDistinct("split").alias("__ns"))
            .filter(F.col("__ns") > 1).count())
-    out = s.groupBy("split").agg(
+    out = keep(s.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("component").alias("n_clusters"),
         F.lit(bad == 0).alias("leak_free"),
-    ).localCheckpoint(eager=True)   # ≤3 rows; lets s release immediately
-    s.unpersist()
+    ), checkpoint=True)   # ≤3 rows; lets s release immediately
+    release(s)
     return out
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -201,7 +202,7 @@ def roc_auc(df: DataFrame, score: Column, label: Column) -> DataFrame:
     return agg.select(
         "n", "n_pos", (F.col("n") - F.col("n_pos")).alias("n_neg"),
         F.when((F.col("n_pos") > 0) & (F.col("n") > F.col("n_pos")),
-               F.floor(auc * 1e6 + F.lit(0.5)) / 1e6).alias("auc"))
+               pin(auc)).alias("auc"))
 
 
 @query(
@@ -281,7 +282,7 @@ def cohens_kappa(df: DataFrame, rater_a: Column,
     return out.select(
         "n", "agree", "chance_cross",
         F.when(F.col("n") * F.col("n") > F.col("chance_cross"),
-               F.floor(kappa * 1e6 + F.lit(0.5)) / 1e6).alias("kappa"))
+               pin(kappa)).alias("kappa"))
 
 
 @query(
@@ -410,7 +411,6 @@ def brier_decomposition(df: DataFrame, prob: Column, label: Column,
         F.max(F.col("__ty").cast("double") / F.col("n")).alias("__ob"),
         F.sum(nb * (pbar - obar_b) * (pbar - obar_b)).alias("__rel"),
         F.sum(nb * (obar_b - obar) * (obar_b - obar)).alias("__res"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     rel = F.col("__rel") / F.col("n")
     res = F.col("__res") / F.col("n")
     unc = F.col("__ob") * (1 - F.col("__ob"))
@@ -451,7 +451,7 @@ def roc_auc_by_group(df: DataFrame, group_col: str, score: Column,
         F.col("__g").alias(group_col), "n", "n_pos",
         (F.col("n") - F.col("n_pos")).alias("n_neg"),
         F.when((F.col("n_pos") > 0) & (F.col("n") > F.col("n_pos")),
-               F.floor(auc * 1e6 + F.lit(0.5)) / 1e6).alias("auc"))
+               pin(auc)).alias("auc"))
 
 
 @query(
@@ -605,7 +605,6 @@ def calibration_error(df: DataFrame, prob: Column, label: Column,
                     F.count(F.lit(1)).cast("long").alias("n_bins"),
                     F.sum(nb * gap).alias("__wce"),
                     F.max(gap).alias("__mce"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         "n", "n_bins",
         pin(F.col("__wce") / F.col("n")).alias("ece"),
@@ -714,7 +713,7 @@ def ndcg_at_k(df: DataFrame, group_col: str, score: Column,
     return agg.select(
         F.col("__g").alias(group_col), "n", "dcg_scaled", "idcg_scaled",
         F.when(F.col("idcg_scaled") > 0,
-               F.floor(ndcg * 1e6 + F.lit(0.5)) / 1e6).alias("ndcg"))
+               pin(ndcg)).alias("ndcg"))
 
 
 def _ndcg_oracle() -> str:
@@ -788,7 +787,7 @@ def mrr(df: DataFrame, group_col: str, score: Column,
     return agg.select(
         F.col("__g").alias(group_col), "n", "first_pos_rank",
         F.when(F.col("first_pos_rank").isNotNull(),
-               F.floor(rr * 1e6 + F.lit(0.5)) / 1e6).alias("rr"))
+               pin(rr)).alias("rr"))
 
 
 @query(
@@ -860,7 +859,7 @@ def average_precision_by_group(df: DataFrame, group_col: str,
     return agg.select(
         F.col("__g").alias(group_col), "n", "n_pos",
         F.when(F.col("n_pos") > 0,
-               F.floor(ap * 1e6 + F.lit(0.5)) / 1e6).alias("ap"))
+               pin(ap)).alias("ap"))
 
 
 @query(
@@ -938,7 +937,6 @@ def decile_lift(df: DataFrame, score: Column, label: Column,
            .agg(F.sum("__c").cast("long").alias("n"),
                 F.sum("__pv").cast("long").alias("n_pos"),
                 F.max("__tn").alias("__tn"), F.max("__tp").alias("__tp")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     rate = F.col("n_pos").cast("double") / F.col("n")
     lift = rate / (F.col("__tp").cast("double") / F.col("__tn"))
     return agg.select(
@@ -1021,7 +1019,6 @@ def threshold_sweep(df: DataFrame, score: Column,
         F.sum("__cn").over(wt).alias("__n"))
     fn = F.col("__p") - F.col("tp")
     tn = F.col("__n") - F.col("fp")
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     f1d = 2 * F.col("tp") + F.col("fp") + fn
     f1 = F.when(f1d > 0, pin(2 * F.col("tp") / f1d))
     j = F.when((F.col("__p") > 0) & (F.col("__n") > 0),
@@ -1124,7 +1121,6 @@ def fleiss_kappa(df: DataFrame, item_col: str, rating: Column,
              / (ni * nn * (nn - 1)))
     p_e = (F.col("__m2").cast("double")
            / (F.col("__tot").cast("double") * F.col("__tot")))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n_items") > 0) & (p_e < 1)
     return j.select(
         "n_items", F.lit(nraters).cast("long").alias("n_raters"),
@@ -1166,7 +1162,6 @@ def weighted_kappa(df: DataFrame, rater_a: Column,
           .agg(F.sum(dec(dd * dd) * dec(F.col("__r")) * dec(F.col("__c")))
                .alias("__we")))
     j = obs.crossJoin(F.broadcast(we))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ratio = (F.col("__wo").cast("double") * F.col("n")
              / F.col("__we").cast("double"))
     return j.select(
@@ -1336,7 +1331,6 @@ def cronbach_alpha(df: DataFrame,
     for j in range(k):
         v = sv(f"__s{j}", f"__q{j}")
         var_sum = v if var_sum is None else var_sum + v
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     if k < 2:
         return agg.select(
             "n", F.lit(k).cast("long").alias("k"),
@@ -1398,7 +1392,6 @@ def kendall_tau_b(df: DataFrame, x: Column, y: Column) -> DataFrame:
     n2_2 = F.col("__ty2").cast("double")
     diff = F.col("__cc").cast("double") - F.col("__dd").cast("double")
     den = F.sqrt((n0_2 - n1_2) * (n0_2 - n2_2)) / 2
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (n0_2 > n1_2) & (n0_2 > n2_2)
     return agg.select(
         F.col("__n1").cast("long").alias("n"),

@@ -67,7 +67,7 @@ from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     pin,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 _FC_W = 16
 _FC_ALPHAS = (0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
@@ -1209,18 +1209,16 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
     # subtrees (cur → the lag join AND the forecast filter; base) —
     # unpersisted, the plan re-ran the ACF detection twice and the
     # source scan + index window four times (7 source scans). Persist
-    # both; callers run under sessions that clear caches between
-    # queries.
-    per = dominant_acf_lag(df, group_col, order, detect_col, max_lag,
-                           tie_break=tie_break).filter(
+    # both.
+    per = keep(dominant_acf_lag(df, group_col, order, detect_col, max_lag,
+                                tie_break=tie_break).filter(
         F.col("best_lag").isNotNull()).select(
         F.col(group_col).alias("__g"),
-        F.col("best_lag").cast("long").alias("__m")).persist()
+        F.col("best_lag").cast("long").alias("__m")))
     src, w = ordered_series(df, group_col, order, value, tie_break)
-    idx = src.select(
+    idx = keep(src.select(
         "__g", "__v", F.row_number().over(w).alias("__i"),
-        F.count(F.lit(1)).over(Window.partitionBy("__g")).alias("__n"))\
-        .persist()
+        F.count(F.lit(1)).over(Window.partitionBy("__g")).alias("__n")))
     cur = (idx.join(per, "__g")
            .select("__g", "__m", "__n",
                    F.col("__i").alias("__ci"),

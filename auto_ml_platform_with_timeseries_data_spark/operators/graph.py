@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table, release
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iterations: int = 10, damping: float = 0.85) -> DataFrame:
@@ -42,19 +42,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # small graph. Size to the data; a billion-edge graph would instead
     # repartition by key here for join locality.
     n_part = max(4, edges.sparkSession.sparkContext.defaultParallelism // 8)
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .repartition(n_part, "u").persist())
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionAll(e.select(F.col("v").alias("node")))
-             .distinct().repartition(n_part, "node").persist())
+    e = keep(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+             .repartition(n_part, "u"))
+    deg = keep(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")))
+    nodes = keep(e.select(F.col("u").alias("node"))
+                 .unionAll(e.select(F.col("v").alias("node")))
+                 .distinct().repartition(n_part, "node"))
     n_nodes = nodes.count()
     # driver-side integer constants (n_nodes is already collected state)
     base_i = (scale * (100 - d100)) // 100 // n_nodes
     r0 = scale // n_nodes
-    ranks = nodes.select("node", F.lit(r0).alias("r"))
-    ranks = ranks.persist()
-    cached = ranks
+    ranks = keep(nodes.select("node", F.lit(r0).alias("r")))
     # per-round shuffles should match the frame sizing above, not the
     # batch default (same rationale as streaming state partitions)
     sess = edges.sparkSession
@@ -68,21 +66,18 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                 .groupBy(F.col("v").alias("node"))
                 .agg(F.sum(F.expr("r div outdeg")).alias("__in"))
             )
-            ranks = (
+            prev, ranks = ranks, keep(
                 nodes.join(contrib, "node", "left")
                 .select("node",
                         (F.lit(base_i)
                          + F.expr(f"({d100} * coalesce(__in, 0L)) div 100"))
-                        .alias("r"))
-                .persist()
-            )
+                        .alias("r")))
             # materialize this round and release the previous one so the
             # plan stays one round deep (an unpersisted loop builds an
             # iterations-deep join lineage that re-plans and re-runs
             # earlier rounds)
             ranks.count()
-            cached.unpersist()
-            cached = ranks
+            release(prev)
     finally:
         # an exception mid-loop (OOM, cancellation) must not leave the
         # shared session pinned to n_part for every later query
@@ -468,10 +463,10 @@ def triangle_counts(edges: DataFrame, a_col: str = "a",
     duw = dw.select(
         "u", "w", "__dw",
         F.count(F.lit(1)).over(Window.partitionBy("u")).alias("__du"))
-    e = (duw.filter((F.col("__du") < F.col("__dw")) |
-                    ((F.col("__du") == F.col("__dw")) &
-                     (F.col("u") < F.col("w"))))
-         .select("u", "w").persist())
+    e = keep(duw.filter((F.col("__du") < F.col("__dw")) |
+                        ((F.col("__du") == F.col("__dw")) &
+                         (F.col("u") < F.col("w"))))
+             .select("u", "w"))
     e.count()
     wedges = (e.alias("e1").join(e.alias("e2").hint("shuffle_hash"),
                                  F.col("e1.u") == F.col("e2.u"))
@@ -485,9 +480,8 @@ def triangle_counts(edges: DataFrame, a_col: str = "a",
     out = (tris.select(F.explode(F.array("u", "v1", "v2")).alias("vertex"))
            .groupBy("vertex")
            .agg(F.count(F.lit(1)).cast("long").alias("n_triangles")))
-    out = out.persist()
+    out = keep(out)
     out.count()
-    e.unpersist()
     return out
 
 
@@ -578,11 +572,10 @@ def k_core_peel(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     sets stay eagerly checkpointed so the plan is one round deep."""
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    sym = (edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-           .unionAll(edges.select(F.col(b_col).alias("u"),
-                                  F.col(a_col).alias("v")))
-           .repartition(npart, "v")
-           .persist())
+    sym = keep(edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+               .unionAll(edges.select(F.col(b_col).alias("u"),
+                                      F.col(a_col).alias("v")))
+               .repartition(npart, "v"))
     sym.count()
     alive = sym.select("u").distinct()
 
@@ -594,17 +587,13 @@ def k_core_peel(edges: DataFrame, a_col: str = "a", b_col: str = "b",
         deg = av.groupBy("u").agg(F.count(F.lit(1)).alias("__d"))
         return deg.join(surv.hint("shuffle_hash"), "u")
 
-    try:
-        for _ in range(rounds):
-            alive = (_deg(alive)
-                     .filter(F.col("__d") >= k).select("u")
-                     .localCheckpoint(eager=True))
-        return (_deg(alive)
+    for _ in range(rounds):
+        alive = keep(_deg(alive).filter(F.col("__d") >= k).select("u"),
+                     checkpoint=True)
+    return keep(_deg(alive)
                 .select(F.col("u").alias("vertex"),
-                        F.col("__d").cast("long").alias("degree"))
-                .localCheckpoint(eager=True))
-    finally:
-        sym.unpersist()
+                        F.col("__d").cast("long").alias("degree")),
+                checkpoint=True)
 
 
 def _kcore_oracle() -> str:
@@ -690,33 +679,29 @@ def coreness(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     value changes, which is the exact core decomposition."""
     spark = edges.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    sym = (edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-           .unionAll(edges.select(F.col(b_col).alias("u"),
-                                  F.col(a_col).alias("v")))
-           .repartition(npart, "v")
-           .persist())
+    sym = keep(edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+               .unionAll(edges.select(F.col(b_col).alias("u"),
+                                      F.col(a_col).alias("v")))
+               .repartition(npart, "v"))
     sym.count()
-    c = (sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("c"))
-         .localCheckpoint(eager=True))
+    c = keep(sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("c")),
+             checkpoint=True)
     w = Window.partitionBy("u").orderBy(F.desc("__cv"), F.asc("v"))
-    try:
-        for _ in range(rounds):
-            nb = (sym.join(c.select(F.col("u").alias("v"),
-                                    F.col("c").alias("__cv"))
-                           .hint("shuffle_hash"), "v"))
-            # H-index of the neighbor multiset: max over the
-            # value-sorted prefix of min(position, value)
-            h = (nb.withColumn("__rk", F.row_number().over(w))
-                 .groupBy("u")
-                 .agg(F.max(F.least(F.col("__rk"), F.col("__cv")))
-                      .cast("long").alias("__h")))
-            c = (c.join(h, "u", "left")
+    for _ in range(rounds):
+        nb = (sym.join(c.select(F.col("u").alias("v"),
+                                F.col("c").alias("__cv"))
+                       .hint("shuffle_hash"), "v"))
+        # H-index of the neighbor multiset: max over the
+        # value-sorted prefix of min(position, value)
+        h = (nb.withColumn("__rk", F.row_number().over(w))
+             .groupBy("u")
+             .agg(F.max(F.least(F.col("__rk"), F.col("__cv")))
+                  .cast("long").alias("__h")))
+        c = keep(c.join(h, "u", "left")
                  .select("u", F.least(F.col("c"),
                                       F.coalesce("__h", F.lit(0)))
-                         .cast("long").alias("c"))
-                 .localCheckpoint(eager=True))
-    finally:
-        sym.unpersist()
+                         .cast("long").alias("c")),
+                 checkpoint=True)
     return c.select(F.col("u").alias("vertex"),
                     F.col("c").alias("coreness"))
 

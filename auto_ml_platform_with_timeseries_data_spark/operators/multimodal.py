@@ -320,8 +320,9 @@ def sample_frames(df: DataFrame, content_col: str = "content",
 # Registered queries + oracles
 # ---------------------------------------------------------------------------
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.registry import query  # noqa: E402
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table  # noqa: E402
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table  # noqa: E402
 
 
 def documents_as_media(df: DataFrame) -> DataFrame:
@@ -1379,10 +1380,9 @@ def q193_clip_pair_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("dot").alias("img_txt_dot"),
         F.when(F.col("nt") * F.col("nm") == 0, F.lit(0.0)).otherwise(
-            F.floor(F.col("dot").cast("double")
-                    / F.sqrt(F.col("nt").cast("double")
-                             * F.col("nm").cast("double"))
-                    * 1e6 + F.lit(0.5)) / 1e6).alias("cos_sim"),
+            pin(F.col("dot").cast("double")
+                / F.sqrt(F.col("nt").cast("double")
+                         * F.col("nm").cast("double")))).alias("cos_sim"),
         (F.lit(_CP_TAU_DEN) * F.col("dot") * F.col("dot")
          >= F.lit(_CP_TAU_NUM) * F.col("nt") * F.col("nm")).alias("keep"),
     )
@@ -1960,7 +1960,7 @@ def q230_image_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _NP_DOCS).select("doc_id")
     media = synth_bmp_media_mixed(docs)
-    fp = image_dhash(media).localCheckpoint(eager=True)
+    fp = keep(image_dhash(media), checkpoint=True)
     delta = fp.filter(F.col("media_id") >= _NI_DELTA_LO)
     corpus = fp.filter(F.col("media_id") < _NI_DELTA_LO)
     return hamming_band_pairs_delta(
@@ -2036,8 +2036,8 @@ def q237_audio_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _AN_DOCS).select("doc_id")
     media = synth_wav_media_perturbed(docs)
-    fp = audio_fingerprint(media, frame_samples=_AN_FRAME) \
-        .localCheckpoint(eager=True)
+    fp = keep(audio_fingerprint(media, frame_samples=_AN_FRAME),
+              checkpoint=True)
     delta = fp.filter(F.col("media_id") >= _ANI_DELTA_LO)
     corpus = fp.filter(F.col("media_id") < _ANI_DELTA_LO)
     return hamming_band_pairs_delta(
@@ -2076,8 +2076,8 @@ def q330_audio_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _AN_DOCS).select("doc_id")
     media = synth_wav_media_perturbed(docs)
-    fp = audio_fingerprint(media, frame_samples=_AN_FRAME) \
-        .localCheckpoint(eager=True)
+    fp = keep(audio_fingerprint(media, frame_samples=_AN_FRAME),
+              checkpoint=True)
     delta = fp.filter(F.col("media_id") >= _ANI_DELTA_LO)
     corpus = fp.filter(F.col("media_id") < _ANI_DELTA_LO)
     return hamming_band_pairs_delta(
@@ -2162,7 +2162,7 @@ def q238_video_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         hamming_band_pairs_delta,
     )
 
-    wide = _video_wide_dhash(spark, sf_dir).localCheckpoint(eager=True)
+    wide = keep(_video_wide_dhash(spark, sf_dir), checkpoint=True)
     delta = wide.filter(F.col("doc_id") >= _VNI_DELTA_LO)
     corpus = wide.filter(F.col("doc_id") < _VNI_DELTA_LO)
     return hamming_band_pairs_delta(
@@ -2211,7 +2211,7 @@ def q341_image_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _NP_DOCS).select("doc_id")
     media = synth_bmp_media_mixed(docs)
-    fp = image_dhash(media).localCheckpoint(eager=True)
+    fp = keep(image_dhash(media), checkpoint=True)
     delta = fp.filter(F.col("media_id") >= _NI_DELTA_LO)
     corpus = fp.filter(F.col("media_id") < _NI_DELTA_LO)
     return hamming_band_pairs_delta(
@@ -2243,7 +2243,7 @@ def q342_video_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         hamming_band_pairs_delta,
     )
 
-    wide = _video_wide_dhash(spark, sf_dir).localCheckpoint(eager=True)
+    wide = keep(_video_wide_dhash(spark, sf_dir), checkpoint=True)
     delta = wide.filter(F.col("doc_id") >= _VNI_DELTA_LO)
     corpus = wide.filter(F.col("doc_id") < _VNI_DELTA_LO)
     return hamming_band_pairs_delta(

@@ -26,11 +26,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
     LINEITEM_LABEL,
+    keep,
     load_table,
+    release,
 )
 
 # ---------------------------------------------------------------------------
@@ -364,16 +367,15 @@ def key_skew_stats(df: DataFrame, key_col: str, label: str) -> DataFrame:
     second input is |keys| rows, negligible at any scale."""
     counts = df.groupBy(F.col(key_col).alias("k")).agg(
         F.count(F.lit(1)).alias("n"))
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return counts.agg(
         F.lit(label).alias("key"),
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("n").alias("n_rows"),
         F.max("n").alias("max_per_key"),
-        r6(F.sum("n").cast("double") / F.count(F.lit(1))).alias("avg_per_key"),
-        r6(F.max("n").cast("double") * F.count(F.lit(1)) / F.sum("n"))
+        pin(F.sum("n").cast("double") / F.count(F.lit(1))).alias("avg_per_key"),
+        pin(F.max("n").cast("double") * F.count(F.lit(1)) / F.sum("n"))
         .alias("skew_factor"),
-        r6(F.max("n").cast("double") / F.sum("n")).alias("top_key_share"),
+        pin(F.max("n").cast("double") / F.sum("n")).alias("top_key_share"),
     )
 
 
@@ -630,9 +632,8 @@ def _ordinal_spans(lv: DataFrame) -> DataFrame:
     spark = lv.sparkSession
     dv = lv.groupBy("__ci", "__v").agg(F.count(F.lit(1)).alias("__c"))
     nparts = spark.sparkContext.defaultParallelism
-    ranged = (dv.repartitionByRange(nparts, F.asc("__ci"), F.asc("__v"))
-              .withColumn("__pid", F.spark_partition_id())
-              .persist())
+    ranged = keep(dv.repartitionByRange(nparts, F.asc("__ci"), F.asc("__v"))
+                  .withColumn("__pid", F.spark_partition_id()))
     totals = (ranged.groupBy("__ci", "__pid")
               .agg(F.sum("__c").alias("__t")).collect())
     acc: dict[int, int] = {}
@@ -645,10 +646,10 @@ def _ordinal_spans(lv: DataFrame) -> DataFrame:
     wcum = (Window.partitionBy("__ci", "__pid").orderBy("__v")
             .rowsBetween(Window.unboundedPreceding, -1))
     smaller = F.coalesce(F.sum("__c").over(wcum), F.lit(0)) + F.col("__off")
-    spans = (ranged.join(F.broadcast(off), ["__ci", "__pid"])
-             .select("__ci", "__v", F.col("__c").cast("long").alias("__c"),
-                     smaller.cast("long").alias("__s"))
-             .persist())
+    spans = keep(ranged.join(F.broadcast(off), ["__ci", "__pid"])
+                 .select("__ci", "__v",
+                         F.col("__c").cast("long").alias("__c"),
+                         smaller.cast("long").alias("__s")))
     # Eagerly materialize, THEN drop the upstream cache (r15, guide
     # §3.2/§5.4): persist-and-count instead of localCheckpoint — a
     # LogicalRDD reports no statistics, so every downstream join of the
@@ -656,10 +657,9 @@ def _ordinal_spans(lv: DataFrame) -> DataFrame:
     # a full corpus exchange PER JOIN (q217 re-shuffled lineitem once
     # per column). InMemoryRelation carries exact in-memory sizes, so
     # the small maps auto-broadcast again. The cache is an intra-query
-    # intermediate (distinct-value-sized); callers run under sessions
-    # that clear caches between queries.
+    # intermediate (distinct-value-sized).
     spans.count()
-    ranged.unpersist()
+    release(ranged)
     return spans
 
 
@@ -822,7 +822,7 @@ def mutual_information(df: DataFrame, features: dict[str, Column],
     return mi.select(
         F.element_at(name_map, F.col("__fi") + 1).alias("feature"),
         "n_cells",
-        (F.floor(F.col("__mi") * 1e6 + F.lit(0.5)) / 1e6)
+        pin(F.col("__mi"))
         .alias("mi_nats"))
 
 
@@ -924,7 +924,7 @@ def gini_coefficient(df: DataFrame, value: Column) -> DataFrame:
     return agg.select(
         "n", "total",
         F.when(F.col("total") > 0,
-               F.floor(g * 1e6 + F.lit(0.5)) / 1e6).alias("gini"))
+               pin(g)).alias("gini"))
 
 
 @query(
@@ -989,7 +989,6 @@ def hhi_concentration(df: DataFrame, dim_col: str) -> DataFrame:
         F.sum("__n").cast("long").alias("n"),
         F.sum(F.col("__n").cast("decimal(38,0)") * F.col("__n"))
         .alias("__s2"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     nn = F.col("n").cast("double") * F.col("n")
     return agg.select(
         "k", "n",
@@ -1059,7 +1058,6 @@ def lorenz_curve(df: DataFrame, value: Column,
                 F.max("__tv").alias("__tv")))
     w = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, 0)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     out = agg.select(
         "decile", "n_rows", "bin_value",
         F.sum("n_rows").over(w).cast("long").alias("cum_rows"),

@@ -24,8 +24,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 
 _SPLIT_M = 1_000_000
@@ -882,11 +883,9 @@ def q128_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition ids: pid 0 holds the top revenues. Persist: the partials
     # pass and the final pass both consume this exchange, and the ids
     # from spark_partition_id must come from ONE materialization.
-    ranged = (
+    ranged = keep(
         r.repartitionByRange(nparts, F.desc("__rev"), F.asc("custkey"))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
-    )
+        .withColumn("__pid", F.spark_partition_id()))
     totals = ranged.groupBy("__pid").agg(F.sum("__rev").alias("__t")).collect()
     by_pid = {row["__pid"]: row["__t"] for row in totals}
     offsets, acc = [], Decimal(0)
@@ -904,7 +903,7 @@ def q128_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranged.join(F.broadcast(off_df), "__pid").select(
         "custkey",
         F.round(F.col("__rev").cast("double"), 2).alias("revenue"),
-        (F.floor(share * 1e6 + F.lit(0.5)) / 1e6).alias("cum_share"),
+        pin(share).alias("cum_share"),
         F.when(share <= 0.8, "A").when(share <= 0.95, "B")
         .otherwise("C").alias("abc_class"),
     )
@@ -938,16 +937,15 @@ def frequent_triples(baskets: DataFrame, basket_col: str, item_col: str,
     and without the cache each branch re-ran the scan → semi-join →
     distinct subtree from the source (measured: 6 source scans and
     three freq-item aggregations for one query; now one of each). The
-    cache is slim — two key columns, post-prune — and intra-query;
-    callers run under sessions that clear caches between queries."""
+    cache is slim — two key columns, post-prune — and intra-query."""
     freq_items = (baskets.groupBy(item_col)
                   .agg(F.count_distinct(basket_col).alias("__bn"))
                   .filter(F.col("__bn") >= min_support)
                   .select(item_col))
-    li = (baskets.join(F.broadcast(freq_items), item_col, "leftsemi")
-          .select(F.col(basket_col).alias("__bk"),
-                  F.col(item_col).alias("__it"))
-          .distinct().persist())
+    li = keep(baskets.join(F.broadcast(freq_items), item_col, "leftsemi")
+              .select(F.col(basket_col).alias("__bk"),
+                      F.col(item_col).alias("__it"))
+              .distinct())
     li.count()
     a, b, c = li.alias("a"), li.alias("b"), li.alias("c")
     return (

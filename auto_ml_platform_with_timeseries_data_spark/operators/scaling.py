@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
@@ -320,9 +321,8 @@ def robust_quantile_params(df: DataFrame, cols: list[str]) -> DataFrame:
                        F.col("__v")).alias("__v2")))
     vv = (hits.groupBy("__ci", "__qi", "__frac")
           .agg(F.max("__v1").alias("__v1"), F.max("__v2").alias("__v2")))
-    val = F.floor(
-        (F.col("__v1") + (F.coalesce("__v2", "__v1") - F.col("__v1"))
-         * F.col("__frac")) * 1e6 + F.lit(0.5)) / 1e6
+    val = pin(F.col("__v1") + (F.coalesce("__v2", "__v1") - F.col("__v1"))
+              * F.col("__frac"))
     qcols = vv.groupBy("__ci").agg(*[
         F.max(F.when(F.col("__qi") == qi, val)).alias(f"__q{qi}")
         for qi in range(len(_RQ_QS))])
@@ -440,7 +440,6 @@ def robust_scale(df: DataFrame, group_col: str, id_col: str,
         .alias("__med"),
         F.max(F.when(F.col("__rn") == at(3, 4), F.col("__v")))
         .alias("__q3"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     iqr = F.col("__q3") - F.col("__q1")
     return (src.join(per, "__g")
             .select(F.col("__g").alias(group_col),

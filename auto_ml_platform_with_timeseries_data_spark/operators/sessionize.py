@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -33,7 +34,7 @@ def tumbling_window_agg(df: DataFrame, ts: str, width: str,
     (Spark rounds the shortest decimal repr, DuckDB the binary value)."""
     sum_dec = F.sum(F.col("value").cast("decimal(18,4)"))
     n = F.count(F.lit(1))
-    avg6 = F.floor((sum_dec.cast("double") / n) * 1e6 + F.lit(0.5)) / 1e6
+    avg6 = pin(sum_dec.cast("double") / n)
     return (
         df.groupBy(F.window(ts, width).alias("w"), *group_cols)
         .agg(
@@ -392,8 +393,7 @@ def q127_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("prev_type").isNotNull())
     c = t.groupBy("prev_type", "next_type").agg(F.count(F.lit(1)).alias("n"))
     tot = Window.partitionBy("prev_type")
-    p = F.floor((F.col("n").cast("double") / F.sum("n").over(tot))
-                * 1e6 + F.lit(0.5)) / 1e6
+    p = pin(F.col("n").cast("double") / F.sum("n").over(tot))
     return c.select("prev_type", "next_type", "n", p.alias("p"))
 
 
@@ -435,7 +435,7 @@ def mad_outliers(df: DataFrame, group_col: str, id_col: str,
         .filter(F.col("__mad") > 0)
         .select(
             F.col(group_col), F.col(id_col), F.col(value_col),
-            (F.floor(z * 1e6 + F.lit(0.5)) / 1e6).alias("robust_z"),
+            pin(z).alias("robust_z"),
         )
         .filter(F.abs(F.col("robust_z")) > z_threshold)
     )

@@ -24,8 +24,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import (
+    keep,
+    load_table,
+    on_caller,
+)
 
 
 def _as_double(arr: Column) -> Column:
@@ -930,21 +935,17 @@ def q134_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes → recall ↑ at more rescore work; the cost half is the
     bucket-join input size, visible in the bench/Spark UI); all
     seeded, so the row is deterministic. Both pair sets are tiny
-    (near-dups are rare by definition) — cache them so the counts and
+    (near-dups are rare by definition) — keep them so the counts and
     the hit-join don't re-run the two most expensive kernels in this
     module."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = q35_embedding_neardup(spark, sf_dir).select("id_a", "id_b").cache()
-    approx = embedding_neardup_pairs_lsh(
+    exact = keep(q35_embedding_neardup(spark, sf_dir).select("id_a", "id_b"))
+    approx = keep(embedding_neardup_pairs_lsh(
         emb, "vec_id", "embedding", _NEARDUP_T, nbits=6, ntables=16,
-        nprobes=2).select("id_a", "id_b").cache()
-    try:
-        n_exact = exact.count()
-        n_found = approx.count()
-        n_hit = exact.join(approx, ["id_a", "id_b"]).count()
-    finally:
-        exact.unpersist()
-        approx.unpersist()
+        nprobes=2).select("id_a", "id_b"))
+    n_exact = exact.count()
+    n_found = approx.count()
+    n_hit = exact.join(approx, ["id_a", "id_b"]).count()
     return spark.createDataFrame(
         [(n_exact, n_found, int(n_hit),
           round(n_hit / n_exact, 4) if n_exact else 1.0)],
@@ -1819,7 +1820,7 @@ def _margin_from_pairs(pairs: DataFrame, k: int,
       29.4 s combined with this groupBy shape) — the huge expression
       falls out of whole-stage codegen, and unlike the fold it is
       re-evaluated per consumer. The dim-generic fold stays."""
-    pairs = pairs.persist()
+    pairs = keep(pairs)
     pairs.count()  # materialize once; stats keep the sa/sb joins sane
     wa = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
     wb = Window.partitionBy("tgt_id").orderBy(F.desc("ci"), F.asc("src_id"))
@@ -1835,10 +1836,7 @@ def _margin_from_pairs(pairs: DataFrame, k: int,
             .filter(F.col("__sa") + F.col("__sb") > 0))
     mg = (F.col("ci") * F.lit(float(2 * k))) \
         / (F.col("__sa") + F.col("__sb"))
-    # floor(x*1e6+0.5)/1e6, not round(): the two engines' round()
-    # implementations disagree at the 6th-decimal boundary even on
-    # bit-identical doubles (the round-2 lesson recorded in BASELINE)
-    pinned = F.floor(mg * 1e6 + F.lit(0.5)) / 1e6
+    pinned = pin(mg)
     return (cand.select("src_id", "tgt_id", pinned.alias("margin"))
             .filter(F.col("margin") >= F.lit(margin)))
 
@@ -2140,17 +2138,16 @@ def q250_margin_mining_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serializing — the certificate's wall is max(sides), not the sum.
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(margin_mine_pairs, src, tgt,
+        f_full = pool.submit(on_caller(margin_mine_pairs), src, tgt,
                              "vec_id", "embedding")
-        f_ann = pool.submit(margin_mine_pairs_banded, src, tgt, cents,
-                            "vec_id", "embedding")
+        f_ann = pool.submit(on_caller(margin_mine_pairs_banded), src, tgt,
+                            cents, "vec_id", "embedding")
         full = f_full.result().withColumnRenamed("margin", "margin_full")
         ann = f_ann.result().withColumnRenamed("margin", "margin_ann")
     out = full.join(ann, ["src_id", "tgt_id"], "full_outer")
     err = F.when(
         F.col("margin_full").isNotNull() & F.col("margin_ann").isNotNull(),
-        F.floor(F.abs(F.col("margin_ann") - F.col("margin_full"))
-                * 1e6 + F.lit(0.5)) / 1e6)
+        pin(F.abs(F.col("margin_ann") - F.col("margin_full"))))
     return out.select("src_id", "tgt_id", "margin_full", "margin_ann",
                       err.alias("err"))
 
@@ -2225,10 +2222,10 @@ def q267_margin_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair materializations overlap (same rationale as q250)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(margin_mine_pairs, src, tgt,
+        f_full = pool.submit(on_caller(margin_mine_pairs), src, tgt,
                              "vec_id", "embedding", margin=0.0)
-        f_ann = pool.submit(margin_mine_pairs_banded, src, tgt, cents,
-                            "vec_id", "embedding", margin=0.0)
+        f_ann = pool.submit(on_caller(margin_mine_pairs_banded), src, tgt,
+                            cents, "vec_id", "embedding", margin=0.0)
         full, ann = f_full.result(), f_ann.result()
     # one pass over each mining run: left-join marks coverage, a single
     # aggregate reads |full| and |full ∩ banded| together (a separate

@@ -17,8 +17,9 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     normalize_text,
     tokens,
 )
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table, release
 
 # Synthetic language profiles over the fixtures' generator vocabulary.
 # Real language-ID swaps in per-language stopword/character-ngram
@@ -821,9 +822,8 @@ def span_duplication(df: DataFrame, id_col: str, text_col: str,
             F.col("__g").alias("group"),
             "n_spans",
             F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
-            (F.floor(F.coalesce("n_dup_spans", F.lit(0))
-                     / F.col("n_spans").cast("double") * 1e6 + F.lit(0.5))
-             / 1e6).alias("dup_rate"),
+            pin(F.coalesce("n_dup_spans", F.lit(0))
+                / F.col("n_spans").cast("double")).alias("dup_rate"),
         )
     )
 
@@ -898,7 +898,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
     return (
         scored.select(
             F.col("__id").alias("doc_id"), "n_tokens",
-            (F.floor(F.col("__lp") * 1e6 + F.lit(0.5)) / 1e6).alias("logprob"),
+            pin(F.col("__lp")).alias("logprob"),
         )
         .orderBy(F.asc("logprob"), F.asc("doc_id"))
         .limit(top_n)
@@ -999,10 +999,9 @@ def bpe_learn(df: DataFrame, text_col: str, num_merges: int = 10,
     documents — so rounds cost seconds; the loop count (vocab size) is
     the training budget, exactly as in single-node BPE."""
     spark = df.sparkSession
-    state = _word_freqs(df, text_col).select(
-        "cnt", F.split("w", "").alias("syms")).persist()
+    state = keep(_word_freqs(df, text_col).select(
+        "cnt", F.split("w", "").alias("syms")))
     merges: list[tuple] = []
-    cached = state
     try:
         for rank in range(1, num_merges + 1):
             best = (
@@ -1017,14 +1016,14 @@ def bpe_learn(df: DataFrame, text_col: str, num_merges: int = 10,
                 break
             merges.append((rank, best["l"], best["r"], int(best["c"]),
                            best["l"] + best["r"]))
-            nxt = state.select(
+            nxt = keep(state.select(
                 "cnt", _apply_merge(F.col("syms"), best["l"], best["r"])
-                .alias("syms")).persist()
+                .alias("syms")))
             nxt.count()  # materialize before releasing the parent
-            cached.unpersist()
-            state, cached = nxt, nxt
+            release(state)
+            state = nxt
     finally:
-        cached.unpersist()
+        release(state)
     return spark.createDataFrame(
         merges,
         "rank int, left string, right string, pair_count long, "
@@ -1313,11 +1312,10 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # re-scanned the source and re-ran the normalize+tokenize regexes
     # (5 source scans in the plan, the tokenizer being the expensive
     # part). Persist the (id, tokens) frame once — the same pattern
-    # the minhash pipeline pins with its single-scan plan test;
-    # callers run under sessions that clear caches between queries.
-    base = df.select(
+    # the minhash pipeline pins with its single-scan plan test.
+    base = keep(df.select(
         F.col(id_col).alias("__id"),
-        tokens(normalize_text(text_col)).alias("__toks")).persist()
+        tokens(normalize_text(text_col)).alias("__toks")))
     bg = base.select(
         "__id",
         F.explode(F.zip_with(
@@ -1347,7 +1345,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.coalesce("n_bigrams", F.lit(0)).cast("long")
             .alias("n_bigrams"),
             F.coalesce(
-                F.floor(F.col("__lp") * 1e6 + F.lit(0.5)) / 1e6,
+                pin(F.col("__lp")),
                 F.lit(0.0)).alias("avg_logprob"),
         )
     )
@@ -1806,7 +1804,6 @@ def zipf_slope(df: DataFrame, group_col: str, text_col: str,
     den = r * sxx - sx * sx
     fitted = agg.withColumn(
         "__slope", F.when(den > 0, (r * sxy - sx * sy) / den))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return fitted.select(
         F.col("__g").alias(group_col), "n_ranks", "total_tokens",
         pin(F.col("__slope")).alias("slope"),

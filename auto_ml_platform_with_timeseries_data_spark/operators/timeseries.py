@@ -55,7 +55,9 @@ def ordered_series(df: DataFrame, group_col: str, order: str,
 
 
 def pin(c: Column) -> Column:
-    """Round half-up at 1e-6 — the cross-engine readout pin."""
+    """Round half-up at 1e-6 — the cross-engine readout pin. Not
+    round(): the two engines' round() implementations disagree at the
+    6th-decimal boundary even on bit-identical doubles."""
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
@@ -392,7 +394,7 @@ def pacf(df: DataFrame, group: str, order: str, value: str,
                          f"stack({max_lag}, {pairs}) as (lag, __p)")
     return out.select(
         group, F.col("lag").cast("int").alias("lag"),
-        (F.floor(F.col("__p") * 1e6 + F.lit(0.5)) / 1e6).alias("pacf"))
+        pin(F.col("__p")).alias("pacf"))
 
 
 def _pacf_oracle(max_lag: int = _PACF_LAGS) -> str:

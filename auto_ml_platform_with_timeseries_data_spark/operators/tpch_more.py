@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 # Exact-decimal forms of the price expressions (see q26_pricing_summary:
 # accumulation must be order-independent for distributed determinism AND
@@ -526,7 +526,7 @@ def q97_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F")
-    lat = (
+    lat = keep(
         li.join(o.select("o_orderkey", "o_orderdate"),
                 li["l_orderkey"] == F.col("o_orderkey"))
         .select(
@@ -535,7 +535,6 @@ def q97_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
              >= F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
             .cast("int").alias("late"),
         )
-        .persist()
     )
     cand = lat.filter(F.col("late") == 1)
     other = lat.select(F.col("l_orderkey").alias("__ok"),

@@ -32,10 +32,7 @@ from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     pin,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import (
-    load_table,
-    persist_if_scan_heavy,
-)
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
 
@@ -171,8 +168,7 @@ def lag_features(df: DataFrame, key: str, order: list[str], value: str,
     # disagree exactly at the .5 ulp boundary (Spark rounds the shortest
     # decimal repr via BigDecimal, DuckDB the binary value — observed at
     # sf0.1 on 1 of 100k rows). floor of the identical product can't.
-    pct = F.when(prev != 0.0, F.floor(
-        ((F.col(value) - prev) / prev) * 1e6 + F.lit(0.5)) / 1e6)
+    pct = F.when(prev != 0.0, pin((F.col(value) - prev) / prev))
     return df.select(
         "event_id", key, F.col(value),
         *lag_cols,
@@ -573,11 +569,10 @@ def group_ols(df: DataFrame, key: str, ts_col: str, value_col: str,
     den = n * sxx - sx * sx
     beta = F.when(den > 0, (n * sxy - sx * sy) / den)
     alpha = (sy - beta * sx) / n
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         key, "n",
-        r6(beta * 86400.0).alias("slope_per_day"),
-        r6(alpha).alias("intercept"),
+        pin(beta * 86400.0).alias("slope_per_day"),
+        pin(alpha).alias("intercept"),
     )
 
 
@@ -773,7 +768,7 @@ def theil_sen_slopes(ev: DataFrame, group_col: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),
                  F.median("__m").alias("__med"))
             .select(F.col("__g"), "n_pairs",
-                    (F.floor(F.col("__med") * 1e6 + F.lit(0.5)) / 1e6)
+                    pin(F.col("__med"))
                     .alias("slope")))
 
 
@@ -877,7 +872,7 @@ def mann_kendall(ev: DataFrame, group_col: str) -> DataFrame:
                (F.col("s_stat") - F.signum("s_stat")) / F.sqrt(var))
     return out.select(
         "__g", "n", "s_stat", "var18",
-        (F.floor(z * 1e6 + F.lit(0.5)) / 1e6).alias("z"))
+        pin(z).alias("z"))
 
 
 def _mk_oracle() -> str:
@@ -1090,7 +1085,7 @@ def theil_sen_capped(ev: DataFrame, group_col: str,
             .select("__g", "n_events",
                     F.coalesce("n_pairs", F.lit(0)).cast("long")
                     .alias("n_pairs"),
-                    (F.floor(F.col("__med") * 1e6 + F.lit(0.5)) / 1e6)
+                    pin(F.col("__med"))
                     .alias("slope")))
 
 
@@ -1182,8 +1177,7 @@ def kaplan_meier(df: DataFrame, cohort_col: str, duration: Column,
         F.max((F.col("d") == F.col("n_risk")).cast("int")).over(wc)
         .alias("__dead"))
     surv = F.when(F.col("__dead") == 1, F.lit(0.0)).otherwise(
-        F.floor(F.exp(F.col("__ls") / F.lit(1e12)) * 1e6 + F.lit(0.5))
-        / 1e6)
+        pin(F.exp(F.col("__ls") / F.lit(1e12))))
     return walked.select(
         F.col("__g").alias(cohort_col), F.col("__t").alias("t"),
         "n_risk", "d", "c", surv.alias("survival"))
@@ -1284,7 +1278,7 @@ def nelson_aalen(df: DataFrame, cohort_col: str, duration: Column,
     return walked.select(
         F.col("__g").alias(cohort_col), F.col("__t").alias("t"),
         "n_risk", "d", "c",
-        (F.floor(F.col("__hs") / F.lit(1e12) * 1e6 + F.lit(0.5)) / 1e6)
+        pin(F.col("__hs") / F.lit(1e12))
         .alias("cum_hazard"))
 
 
@@ -3422,10 +3416,8 @@ def hbos_scores(df: DataFrame, id_col: str,
     # bin counts, per-row scoring). Persist the NARROW frame so the
     # source — typically a JSON-parsing scan, the expensive part — is
     # decoded once, not once per pass (guide §1.2/§5: cache only what
-    # is reused and slim). Intra-query intermediate; callers run under
-    # sessions that clear caches between queries (_ordinal_spans'
-    # documented contract).
-    src = src.persist()
+    # is reused and slim).
+    src = keep(src)
     stats = src.agg(*[a for k in names for a in (
         F.min(f"__f_{k}").alias(f"__lo_{k}"),
         F.max(f"__f_{k}").alias(f"__hi_{k}"))])
@@ -3447,8 +3439,8 @@ def hbos_scores(df: DataFrame, id_col: str,
     if nbins ** len(names) <= joint_cells:
         # ≤ joint_cells rows, read twice per feature (marginal sum +
         # its max) — persist so the joint aggregate runs once
-        joint = out.groupBy(*[f"bin_{k}" for k in names]).agg(
-            F.count(F.lit(1)).cast("long").alias("__jc")).persist()
+        joint = keep(out.groupBy(*[f"bin_{k}" for k in names]).agg(
+            F.count(F.lit(1)).cast("long").alias("__jc")))
         for k in names:
             hist = joint.groupBy(f"bin_{k}").agg(
                 F.sum("__jc").cast("long").alias(f"__c_{k}"))
@@ -4015,17 +4007,15 @@ def q346_fleet_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # windows, MAD, matrix profile) each re-scan events; all of them
     # consume only these four columns, so persist the narrow filtered
     # projection and scan the source once (guide §5: cache only what
-    # is reused, slim). SIZE-GATED (persist_if_scan_heavy): at sf0.1
+    # is reused, slim). SIZE-GATED (keep(source=...)): at sf0.1
     # the 3 saved re-scans of a ~3 MB source are cheaper than the
     # cache barrier (paired A/B 1.95 vs 2.36 s); at production sizes
-    # they are not. Intra-query intermediate — callers run under
-    # sessions that clear caches between queries. The streaming epoch
-    # loop (q350) passes its own per-epoch delta frames to
-    # fleet_evidence directly and manages their lifecycle itself.
+    # they are not. The streaming epoch loop (q350) passes its own
+    # per-epoch delta frames to fleet_evidence directly.
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("value").isNotNull())
           .select("user_id", "ts", "event_id", "value"))
-    ev = persist_if_scan_heavy(ev, ev)
+    ev = keep(ev, source=ev)
     return fleet_triage(
         ev, "user_id", "ts", "event_id", "value",
         F.floor(F.col("value") * 100 + F.lit(0.5)),

@@ -21,11 +21,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import (
-    load_table,
-    persist_if_scan_heavy,
-)
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 
 def _result(name: str, kind: str, checked: Column,
@@ -200,16 +198,16 @@ def gdpr_erase(customer: DataFrame, orders: DataFrame,
     # the source scan + distinct (21 source scans in the plan). Both
     # frames are tiny by the erasure contract (subjects are a small
     # fraction); persist SIZE-GATED on the scanned source
-    # (persist_if_scan_heavy — at sf0.1 the re-scans are cheaper than
+    # (keep(source=...) — at sf0.1 the re-scans are cheaper than
     # the cache barrier, measured 0.93 vs 1.33 s paired) and broadcast
     # everywhere.
-    ekeys = persist_if_scan_heavy(erase_keys.select(F.col(
-        erase_keys.columns[0]).alias("__k")).distinct(), erase_keys)
+    ekeys = keep(erase_keys.select(F.col(
+        erase_keys.columns[0]).alias("__k")).distinct(), source=erase_keys)
     ek = F.broadcast(ekeys)
     dead_orders = orders.join(
         ek, orders["o_custkey"] == F.col("__k"), "leftsemi")
-    dead_okeys = persist_if_scan_heavy(
-        dead_orders.select("o_orderkey").distinct(), orders)
+    dead_okeys = keep(
+        dead_orders.select("o_orderkey").distinct(), source=orders)
     live_cust = customer.join(
         ek, customer["c_custkey"] == F.col("__k"), "leftanti")
     live_orders = orders.join(
@@ -513,7 +511,6 @@ def two_proportion_z(df: DataFrame, group_col: str, a: str, b: str,
         .alias("n_b"),
         F.sum(F.when(F.col("__a"), 0).otherwise(F.col("__y")))
         .cast("long").alias("x_b"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     pa = F.col("x_a").cast("double") / F.col("n_a")
     pb = F.col("x_b").cast("double") / F.col("n_b")
     pp = (F.col("x_a") + F.col("x_b")).cast("double") \
@@ -875,7 +872,6 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
               - F.col("__ties").cast("double")
               / (n.cast("double") * (n - 1))))
     z = (two_u - na.cast("double") * nb) / 2 / F.sqrt(var)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (na > 0) & (nb > 0) & (n > 1)
     return agg.select(
         "n_a", "n_b",
@@ -931,7 +927,6 @@ def kruskal_wallis(df: DataFrame, value_col: str,
     n = F.col("n").cast("double")
     h = 12 / (n * (F.col("n") + 1)) * F.col("__rr") - 3 * (n + 1)
     corr = 1 - F.col("__ties").cast("double") / (n * n * n - n)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") > 1) & (F.col("n") > 1)
     return agg.select(
         "k", "n",
@@ -972,7 +967,6 @@ def anova_f(df: DataFrame, value: Column,
     ssw = F.col("__ss").cast("double") - F.col("__sgn")
     kk = F.col("k").cast("double")
     f = (ssb / (kk - 1)) / (ssw / (n - kk))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0)
     return agg.select(
         "k", "n",
@@ -1017,7 +1011,6 @@ def cohens_d(df: DataFrame, value: Column, group_col: str,
     ssb = F.col("__ssb").cast("double") \
         - F.col("__sb").cast("double") * F.col("__sb") / nb
     sp = F.sqrt((ssa + ssb) / (na + nb - 2).cast("double"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (na > 1) & (nb > 1)
     return agg.select(
         "n_a", "n_b",
@@ -1576,7 +1569,6 @@ def cochran_armitage(df: DataFrame, score: Column,
     var = (pbar * (1 - pbar)
            * (F.col("__nww").cast("double")
               - F.col("__nw").cast("double") * F.col("__nw") / n))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") > 1) & (F.col("x") > 0) & (F.col("x") < F.col("n"))
     return agg.select(
         "k", "n", "x",
@@ -1621,7 +1613,6 @@ def diff_in_diff(df: DataFrame, value: Column, is_treat: Column,
           for t, g in ((1, "t"), (0, "c")) for p in (0, 1)],
         *[cell(t, p, "q").alias(f"__q_{g}{p}")
           for t, g in ((1, "t"), (0, "c")) for p in (0, 1)])
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
 
     def mean(g):
         return F.col(f"__s_{g}").cast("double") / F.col(f"n_{g}")
@@ -1696,7 +1687,6 @@ def covariate_balance(df: DataFrame, is_a: Column,
     vb = ((F.col("__qb").cast("double")
            - F.col("__sb").cast("double") * F.col("__sb") / nb)
           / (nb - 1).cast("double"))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (na > 1) & (nb > 1)
     pooled = (va + vb) / 2
     return agg.select(
@@ -1952,7 +1942,6 @@ def mcnemar_test(df: DataFrame, flag_a: Column,
     agg = src.agg(cell(0, 0).alias("n00"), cell(0, 1).alias("n01"),
                   cell(1, 0).alias("n10"), cell(1, 1).alias("n11"))
     b, c = F.col("n01").cast("double"), F.col("n10").cast("double")
-    pin = lambda x: F.floor(x * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         "n00", "n01", "n10", "n11",
         F.when(F.col("n01") + F.col("n10") > 0,
@@ -2003,7 +1992,6 @@ def mantel_haenszel(df: DataFrame, stratum: Column, exposed: Column,
         F.sum(q12(e_t)).alias("__se"),
         F.sum(q12(v_t)).alias("__sv"))
     diff = F.col("__sa").cast("double") - F.col("__se") / F.lit(1e12)
-    pin = lambda x: F.floor(x * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return agg.select(
         "k_strata", "n",
         F.when(F.col("__rd") > 0,
@@ -2065,7 +2053,6 @@ def partial_correlation(df: DataFrame, x: Column, y: Column,
     rxy, rxz, ryz = r("x", "y"), r("x", "z"), r("y", "z")
     pden = F.sqrt((1 - rxz * rxz) * (1 - ryz * ryz))
     part = (rxy - rxz * ryz) / F.when(pden != 0, pden)
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     vd = lambda k: (F.col(f"__s{k}{k}").cast("double")  # noqa: E731
                     - F.col(f"__s{k}").cast("double")
                     * F.col(f"__s{k}") / n)
@@ -2110,7 +2097,6 @@ def grubbs_test(df: DataFrame, value: Column) -> DataFrame:
             - F.col("__s").cast("double") * F.col("__s") / n)
            / F.when(n > 1, n - 1))
     g = (F.col("__maxdev").cast("double") / n) / F.sqrt(var)
-    pin = lambda x: F.floor(x * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n") >= 3) & (var > 0)
     return agg.select(
         "n",
@@ -2183,7 +2169,6 @@ def chow_test(df: DataFrame, x: Column, y: Column,
     ssep, sxxp = sse("p")
     n = (F.col("n1") + F.col("n2")).cast("double")
     fstat = ((ssep - sse1 - sse2) / 2) / ((sse1 + sse2) / (n - 4))
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = ((F.col("n1") > 2) & (F.col("n2") > 2)
           & (sxx1 > 0) & (sxx2 > 0) & (sxxp > 0))
     okf = ok & (sse1 + sse2 > 0)
@@ -2246,7 +2231,6 @@ def levene_bf(df: DataFrame, value: Column,
         * F.col("__tw") / n
     ssw = F.col("__tww").cast("double") - F.col("__sgn")
     fstat = (ssb / (k - 1)) / (ssw / (n - k))
-    pin = lambda x_: F.floor(x_ * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") > 1) & (n > k) & (ssw > 0)
     return agg.select("k", "n", F.when(ok, pin(fstat)).alias("f"))
 
@@ -2738,7 +2722,6 @@ def welch_anova(df: DataFrame, value: Column,
     kd = F.col("k").cast("double")
     a = F.col("__a") / (kd - 1)
     b = F.lit(2.0) * (kd - 2) / (kd * kd - 1) * F.col("__lam")
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") >= 2) & (F.col("__lam") > 0)
     return agg.select(
         "k", "n",
@@ -2854,7 +2837,6 @@ def bartlett_test(df: DataFrame, value: Column,
     c_corr = (F.lit(1.0)
               + (F.col("__sinv") - F.lit(1.0) / (nd - kd))
               / (F.lit(3.0) * (kd - 1)))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("k") >= 2) & (F.col("n") > F.col("k")) \
         & (F.col("__pool") > 0)
     return agg.select(
@@ -2947,15 +2929,13 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
     # construction) feeds FIVE downstream subtrees (k, block sizes,
     # kept→ranked→rank sums, kept→ties, complete→nblocks); unpersisted,
     # each re-ran the source scan + cell groupBy — 9 source scans in
-    # the plan. Persist SIZE-GATED (persist_if_scan_heavy): the
+    # the plan. Persist SIZE-GATED (keep(source=...)): the
     # unconditional persist measured ~2x SLOWER at sf0.1 (paired A/B,
     # 0.98 vs 1.92 s — cache barrier beats re-reading a 3 MB source),
     # while at production source sizes the 5 saved scans dominate.
-    # Callers run under sessions that clear caches between queries
-    # (the _ordinal_spans contract).
-    cells = persist_if_scan_heavy(src.groupBy("__b", "__t").agg(
+    cells = keep(src.groupBy("__b", "__t").agg(
         F.floor(F.sum("__v").cast("double") / F.count(F.lit(1))
-                * F.lit(1e4)).cast("long").alias("__score")), src)
+                * F.lit(1e4)).cast("long").alias("__score")), source=src)
     kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
     sized = cells.groupBy("__b").agg(
         F.count(F.lit(1)).cast("long").alias("__nb"))
@@ -2987,7 +2967,6 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
             / (bd * kd * (kd + 1)) - F.lit(3.0) * bd * (kd + 1))
     corr = (F.lit(1.0) - F.col("__tcorr").cast("double")
             / (bd * kd * (kd * kd - 1)))
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("b") >= 2) & (F.col("__k") >= 2)
     return agg.select(
         F.col("__k").alias("k"), "b",
@@ -3112,14 +3091,13 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     # r15 optimization: cells (blocks × treatments rows) feeds kfr,
     # complete and marked — unpersisted, each re-ran the source scan +
     # groupBy (9 source scans in the plan). Persist SIZE-GATED
-    # (persist_if_scan_heavy; the unconditional persist measured ~2x
-    # slower at sf0.1 — 0.79 vs 1.69 s paired — see the helper's
-    # docstring). The block totals come FROM cells either way (sum of
+    # (keep(source=...); the unconditional persist measured ~2x
+    # slower at sf0.1 — 0.79 vs 1.69 s paired — see its docstring). The block totals come FROM cells either way (sum of
     # per-cell exact sums/counts — identical decimal/long values), not
     # a second pass over the source.
-    cells = persist_if_scan_heavy(src.groupBy("__b", "__t").agg(
+    cells = keep(src.groupBy("__b", "__t").agg(
         F.sum("__v").cast("decimal(38,0)").alias("__cs"),
-        F.count(F.lit(1)).cast("long").alias("__cn")), src)
+        F.count(F.lit(1)).cast("long").alias("__cn")), source=src)
     blocks = cells.groupBy("__b").agg(
         F.sum("__cs").cast("decimal(38,0)").alias("__bs"),
         F.sum("__cn").cast("long").alias("__bn"))
@@ -3152,7 +3130,6 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     k, n = F.col("__k"), F.col("n_success")
     den = k * n - F.col("__sr2")
     num = (k - 1) * (k * F.col("__sc2") - n * n)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("b") >= 2) & (k >= 2) & (den > 0)
     return agg.select(
         k.alias("k"), "b", "n_success",
@@ -3279,7 +3256,6 @@ def wilcoxon_signed_rank(df: DataFrame, group_col: str, x_value: Column,
     mu2 = nd * (nd + 1) / 2.0
     var2 = (F.lit(2.0) * nd * (nd + 1) * (2 * nd + 1)
             - F.col("__tcorr").cast("double")) / F.lit(12.0)
-    pin = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     ok = (F.col("n") >= 10) & (var2 > 0)
     return per.select(
         F.col("__g").alias(group_col), "n",

@@ -14,10 +14,14 @@ cannot flip the driver's value hash.
 
 from __future__ import annotations
 
+import functools
 import importlib
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from auto_ml_platform_with_timeseries_data_spark.tables import release_all
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -265,11 +269,30 @@ def _ordered(d: dict) -> dict:
     return out
 
 
+_DEPTH = threading.local()
+
+
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query; ``oracle`` is DuckDB SQL or None (rows-only)."""
+    """Register a named query; ``oracle`` is DuckDB SQL or None (rows-only).
+
+    QUERIES holds a wrapper that, on a thread's outermost registry call,
+    first releases what the thread's previous query kept (tables.keep).
+    The decorated name stays bound to ``fn``, so a query calling another
+    directly never releases its caller's intermediates."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            depth = getattr(_DEPTH, "n", 0)
+            if depth == 0:
+                release_all()
+            _DEPTH.n = depth + 1
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                _DEPTH.n = depth
+
+        QUERIES[name] = run
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

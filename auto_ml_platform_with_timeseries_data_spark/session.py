@@ -10,6 +10,7 @@ byte-comparable with the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -43,18 +44,29 @@ _RUNTIME_CONFS = {
 }
 
 
+_TUNE_WARNED = False
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session.
 
     The correctness driver hands us its own SparkSession; pinning the
     timezone + AQE + Arrow here keeps engine semantics independent of how
-    the session was built.
+    the session was built. A conf the session refuses (static on this
+    build) keeps the session's value, and the first such call warns,
+    naming every conf that did not apply.
     """
+    failed = []
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — leave as-is
+        except Exception as exc:
+            failed.append(f"{k}={v} ({type(exc).__name__})")
+    global _TUNE_WARNED
+    if failed and not _TUNE_WARNED:
+        _TUNE_WARNED = True
+        warnings.warn("session.tune: confs did not apply: "
+                      + ", ".join(failed), RuntimeWarning)
     _ship_package(spark)
     return spark
 

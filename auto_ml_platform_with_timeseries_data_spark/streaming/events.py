@@ -100,7 +100,8 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append",
 # ---------------------------------------------------------------------------
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query  # noqa: E402
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table  # noqa: E402
+from auto_ml_platform_with_timeseries_data_spark.tables import (  # noqa: E402
+    keep, load_table, release)
 
 # Staged stream directories, memoized per variant key — usually
 # (variant, sf_dir), sometimes with extra parameters appended: the
@@ -1193,29 +1194,31 @@ def perceptual_screen_epoch(sp: SparkSession, bdf: DataFrame,
         synth_bmp_media_mixed,
     )
 
-    fp = (image_dhash(synth_bmp_media_mixed(bdf))
-          .localCheckpoint(eager=True))
-    versions = rollup_versions(state_root)
-    prev = [p for e, p in versions.items() if e < epoch_id]
-    delta_idx = (fp.groupBy("dhash_lo", "dhash_hi")
-                 .agg(F.min("media_id").alias("canonical_id")))
-    if prev:
-        known = sp.read.parquet(*prev)
-        pairs = hamming_band_pairs_delta(
-            fp,
-            known.select(F.col("canonical_id").alias("media_id"),
-                         "dhash_lo", "dhash_hi"),
-            "media_id", [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH)
-        delta_idx = delta_idx.join(
-            known.select("dhash_lo", "dhash_hi"),
-            ["dhash_lo", "dhash_hi"], "left_anti")
-    else:
-        pairs = sp.createDataFrame(
-            [], "delta_id long, corpus_id long, hamming int")
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(screen_root, f"epoch={epoch_id}"))
-    delta_idx.write.mode("overwrite").parquet(
-        os.path.join(state_root, f"epoch={epoch_id}"))
+    fp = keep(image_dhash(synth_bmp_media_mixed(bdf)), checkpoint=True)
+    try:
+        versions = rollup_versions(state_root)
+        prev = [p for e, p in versions.items() if e < epoch_id]
+        delta_idx = (fp.groupBy("dhash_lo", "dhash_hi")
+                     .agg(F.min("media_id").alias("canonical_id")))
+        if prev:
+            known = sp.read.parquet(*prev)
+            pairs = hamming_band_pairs_delta(
+                fp,
+                known.select(F.col("canonical_id").alias("media_id"),
+                             "dhash_lo", "dhash_hi"),
+                "media_id", [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH)
+            delta_idx = delta_idx.join(
+                known.select("dhash_lo", "dhash_hi"),
+                ["dhash_lo", "dhash_hi"], "left_anti")
+        else:
+            pairs = sp.createDataFrame(
+                [], "delta_id long, corpus_id long, hamming int")
+        pairs.write.mode("overwrite").parquet(
+            os.path.join(screen_root, f"epoch={epoch_id}"))
+        delta_idx.write.mode("overwrite").parquet(
+            os.path.join(state_root, f"epoch={epoch_id}"))
+    finally:
+        release(fp)
 
 
 def _stream_near_screen_oracle() -> str:
@@ -1366,41 +1369,44 @@ def fleet_triage_epoch(sp: SparkSession, bdf: DataFrame, epoch_id: int,
         fleet_evidence,
     )
 
-    batch = (bdf.filter(F.col("value").isNotNull())
-             .select("user_id", "ts", "event_id", "value")
-             .withColumn("__bkt", F.pmod(F.xxhash64("user_id"),
-                                         F.lit(n_buckets)).cast("int"))
-             .localCheckpoint(eager=True))   # read 3× below; micro-batch-sized
-    bkts = [r["__bkt"] for r in batch.select("__bkt").distinct().collect()]
-    if not bkts:
-        return
-    versions = rollup_versions(events_root)
-    prev = [p for e, p in versions.items() if e < epoch_id]
-    hist = batch
-    for p in prev:
-        # one read per epoch dir, each with its own basePath: the
-        # epoch=N dirs are themselves hive-style names, so a multi-path
-        # read would refuse the "conflicting" layouts; per-path reads
-        # also keep the _SUCCESS-gated listing as the only discovery.
-        # #prev is bounded by epoch retention, not data size.
-        stored = (sp.read.option("basePath", p).parquet(p)
-                  .filter(F.col("__bkt").isin(bkts)))
-        hist = hist.unionByName(stored)
-    touched = batch.select("user_id").distinct()
-    hist = hist.join(touched, "user_id", "left_semi")
-    evid = fleet_evidence(
-        hist.drop("__bkt"), "user_id", "ts", "event_id", "value",
-        F.floor(F.col("value") * 100 + F.lit(0.5)), tie_break="event_id")
-    # Cluster by bucket before the partitioned write: without this,
-    # every write task emits a file into every bucket it saw (tasks x
-    # buckets small files — measured 3.3x slower sliver epochs at 100x
-    # from listing alone); clustered, an epoch carries ~one file per
-    # bucket and the per-epoch listing stays O(touched buckets).
-    (batch.repartition(n_buckets, F.col("__bkt"))
-     .write.mode("overwrite").partitionBy("__bkt").parquet(
-        os.path.join(events_root, f"epoch={epoch_id}")))
-    evid.write.mode("overwrite").parquet(
-        os.path.join(evid_root, f"epoch={epoch_id}"))
+    batch = keep(bdf.filter(F.col("value").isNotNull())
+                 .select("user_id", "ts", "event_id", "value")
+                 .withColumn("__bkt", F.pmod(F.xxhash64("user_id"),
+                                             F.lit(n_buckets)).cast("int")),
+                 checkpoint=True)   # read 3× below; micro-batch-sized
+    try:
+        bkts = [r["__bkt"] for r in batch.select("__bkt").distinct().collect()]
+        if not bkts:
+            return
+        versions = rollup_versions(events_root)
+        prev = [p for e, p in versions.items() if e < epoch_id]
+        hist = batch
+        for p in prev:
+            # one read per epoch dir, each with its own basePath: the
+            # epoch=N dirs are themselves hive-style names, so a multi-path
+            # read would refuse the "conflicting" layouts; per-path reads
+            # also keep the _SUCCESS-gated listing as the only discovery.
+            # #prev is bounded by epoch retention, not data size.
+            stored = (sp.read.option("basePath", p).parquet(p)
+                      .filter(F.col("__bkt").isin(bkts)))
+            hist = hist.unionByName(stored)
+        touched = batch.select("user_id").distinct()
+        hist = hist.join(touched, "user_id", "left_semi")
+        evid = fleet_evidence(
+            hist.drop("__bkt"), "user_id", "ts", "event_id", "value",
+            F.floor(F.col("value") * 100 + F.lit(0.5)), tie_break="event_id")
+        # Cluster by bucket before the partitioned write: without this,
+        # every write task emits a file into every bucket it saw (tasks x
+        # buckets small files — measured 3.3x slower sliver epochs at 100x
+        # from listing alone); clustered, an epoch carries ~one file per
+        # bucket and the per-epoch listing stays O(touched buckets).
+        (batch.repartition(n_buckets, F.col("__bkt"))
+         .write.mode("overwrite").partitionBy("__bkt").parquet(
+            os.path.join(events_root, f"epoch={epoch_id}")))
+        evid.write.mode("overwrite").parquet(
+            os.path.join(evid_root, f"epoch={epoch_id}"))
+    finally:
+        release(batch)
 
 
 def _stream_fleet_triage_oracle() -> str:

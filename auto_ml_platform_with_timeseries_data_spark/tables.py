@@ -1,4 +1,5 @@
-"""Canonical access to the driver-generated parquet tables (TESTDATA.md).
+"""Canonical access to the driver-generated parquet tables (TESTDATA.md),
+and the one owner of query intermediates (``keep``/``release``).
 
 All fixtures are columnar parquet; reading through here guarantees the
 session is tuned (UTC timezone, AQE, Arrow) before any plan is built, so
@@ -8,7 +9,10 @@ oracle comparisons are deterministic regardless of who built the session.
 from __future__ import annotations
 
 import os
+import threading
 import warnings
+from collections.abc import Callable
+from typing import TypeVar
 
 try:  # the stats probe goes through py4j; absent under Spark Connect
     from py4j.protocol import Py4JError as _Py4JError
@@ -21,10 +25,7 @@ from pyspark.sql import functions as F
 
 from auto_ml_platform_with_timeseries_data_spark.session import tune
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+T = TypeVar("T")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -57,39 +58,78 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
+class _Kept(threading.local):
+    def __init__(self) -> None:
+        self.frames: list[tuple[DataFrame, bool]] = []
 
 
-# Persist `frame` only when re-deriving it would re-scan a source big
-# enough for the saved scans to beat the cache's fixed cost.
+# Per-thread record of kept frames; registry.query releases a thread's
+# frames when its next query starts.
+_KEPT = _Kept()
 PERSIST_SRC_MB_ENV = "SPARK_GRAFT_PERSIST_SRC_MB"
 _PERSIST_SRC_MB_DEFAULT = 256.0
 _PROBE_WARNED = False
 
 
-def persist_if_scan_heavy(frame: DataFrame, source: DataFrame) -> DataFrame:
-    """Size-gated persist (guide §5: cache only when recompute costs
-    more than the materialization barrier + memory pressure caching
-    creates).
+def keep(frame: DataFrame, *, source: DataFrame | None = None,
+         checkpoint: bool = False) -> DataFrame:
+    """Persist ``frame`` (or, with ``checkpoint``, localCheckpoint it
+    eagerly) for the rest of the current query and return the handle to
+    read from. The persist adds no action.
 
-    `frame` at every call site is small by construction (grouped cells,
-    key sets, narrow projections); what the persist SAVES is N-1
-    re-scans of `source` by the downstream subtrees that share `frame`.
-    The decision therefore keys on the SOURCE's size, taken from the
-    optimizer's statistics (parquet relations report exact file bytes,
-    scaled by projection; unknown statistics report Long.MaxValue and
-    so persist — the safe default at scale).
+    ``source`` size-gates the persist on the optimizer's size of the
+    source whose N-1 re-scans it saves (``frame`` itself is small by
+    construction; unknown statistics report Long.MaxValue and so
+    persist, the safe default at scale). Below $SPARK_GRAFT_PERSIST_SRC_MB
+    (default 256 MB) re-reading page-cached parquet beats the cache
+    barrier: at sf0.1 (events ≈ 3 MB, paired A/B, r15) the
+    unconditional persist made friedman/cochran_q ~2x slower. Plan
+    tests set it to 0 to assert the at-scale single-scan shape."""
+    if source is not None and not _scan_heavy(source):
+        return frame
+    frame = frame.localCheckpoint(eager=True) if checkpoint \
+        else frame.persist()
+    _KEPT.frames.append((frame, checkpoint))
+    return frame
 
-    Measured both ways at sf0.1 (events ≈ 3 MB, idle box, paired A/B,
-    r15): the unconditional persist made friedman/cochran_q ~2x SLOWER
-    per query — the cache materialization serializes the query into a
-    barrier plus an InMemoryRelation scan that costs more than
-    re-reading page-cached parquet — while at production sizes the N
-    re-scans dominate by the ratio of table size to cache size.
-    Threshold parameterised via $SPARK_GRAFT_PERSIST_SRC_MB (default
-    256 MB, the guide §2.2/§6 band where scan I/O starts to matter;
-    plan tests set it to 0 to assert the at-scale single-scan shape)."""
+
+def release(*frames: DataFrame) -> None:
+    """Free kept frames now: a loop's previous round, or what a caller
+    outside a registry query kept. Frames keep() did not record (a
+    size-gated no-op, or already released) are ignored."""
+    ids = {id(f) for f in frames}
+    kept = _KEPT.frames
+    gone = [h for h in kept if id(h[0]) in ids]
+    kept[:] = [h for h in kept if id(h[0]) not in ids]
+    for frame, checkpoint in gone:
+        if frame.sparkSession.sparkContext._jsc is None:
+            continue  # the stopped context took the blocks with it
+        if checkpoint:
+            # A local checkpoint's blocks belong to the RDD under its
+            # LogicalRDD, not to the cache manager: unpersist() and
+            # catalog.clearCache() never free them.
+            frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            frame.unpersist()
+
+
+def release_all() -> None:
+    """Free every frame this thread kept."""
+    release(*[frame for frame, _ in _KEPT.frames])
+
+
+def on_caller(fn: Callable[..., T]) -> Callable[..., T]:
+    """``fn`` to run on a worker thread: what it keeps is recorded on
+    the calling thread, so the caller's query releases it."""
+    kept = _KEPT.frames
+
+    def run(*args, **kwargs) -> T:
+        _KEPT.frames = kept
+        return fn(*args, **kwargs)
+    return run
+
+
+def _scan_heavy(source: DataFrame) -> bool:
     try:
         mb = float(os.environ.get(PERSIST_SRC_MB_ENV,
                                   _PERSIST_SRC_MB_DEFAULT))
@@ -107,8 +147,8 @@ def persist_if_scan_heavy(frame: DataFrame, source: DataFrame) -> DataFrame:
         if not _PROBE_WARNED:
             _PROBE_WARNED = True
             warnings.warn(
-                "persist_if_scan_heavy: source-size probe unavailable "
+                "tables.keep: source-size probe unavailable "
                 f"({type(exc).__name__}: {exc}); persisting "
                 "unconditionally from now on", RuntimeWarning)
-        return frame.persist()
-    return frame.persist() if size >= mb * 1024 * 1024 else frame
+        return True
+    return size >= mb * 1024 * 1024

@@ -303,15 +303,10 @@ def main() -> int:
             passes.append(time.time() - t0)
         timings[name] = round(min(passes), 3)
         pass_counts[name] = len(passes)
-        # Drop caches a query persisted (grams, signatures, ...): leaked
-        # cached partitions from earlier queries otherwise build memory
-        # pressure that inflates later queries' numbers by GC, not plan
-        # cost (observed 6x on late-suite queries in a 34-query run).
-        spark.catalog.clearCache()
         # Release Python-side references to per-query broadcasts so the
         # JVM ContextCleaner can reap their blocks — accumulated
         # broadcast blocks across a 40+-query suite otherwise inflate
-        # late queries the same way leaked caches did.
+        # late queries by GC, not plan cost.
         import gc
         gc.collect()
     total = round(sum(timings.values()), 3)

@@ -376,7 +376,7 @@ def test_fleet_triage_single_source_scan(spark, sf_dir, monkeypatch):
 
 def test_fleet_triage_size_gate_defaults_off_at_bench_scale(
         spark, sf_dir, monkeypatch):
-    """The persist size-gate (tables.persist_if_scan_heavy) must NOT
+    """The persist size-gate (tables.keep(..., source=...)) must NOT
     fire for the ~MB bench fixtures under the default 256 MB threshold
     — at that size the cache barrier measured ~2x slower than the
     saved re-scans (OPTIMIZATION_r15.md batch 4), so the plan stays

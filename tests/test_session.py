@@ -1,8 +1,11 @@
-"""The driver-memory default, checked without starting a session."""
+"""The session contract: the driver-memory default, every engine conf on
+the get_spark() session, and the warning when a conf does not apply."""
 
 from __future__ import annotations
 
 import os
+import warnings
+from types import SimpleNamespace
 
 import pytest
 
@@ -39,3 +42,36 @@ def test_driver_memory_env_overrides(monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     _fake_phys(monkeypatch, 512 * _GIB)
     assert session._driver_memory() == "2g"
+
+
+def test_get_spark_session_carries_every_engine_conf(spark):
+    """Every conf the engine sets, pinned on the get_spark() test
+    session (conftest)."""
+    want = dict(session._RUNTIME_CONFS)
+    width = want.pop("spark.sql.shuffle.partitions")
+    want["spark.python.sql.dataFrameDebugging.enabled"] = "false"
+    assert {k: spark.conf.get(k) for k in want} == want
+    # get_spark's explicit width (conftest: 8) holds until the next
+    # tune() — every load_table — re-applies the default
+    assert spark.conf.get("spark.sql.shuffle.partitions") in ("8", width)
+
+
+class _StaticConf:
+    def set(self, key, value):
+        if key == "spark.sql.codegen.hugeMethodLimit":
+            raise RuntimeError("static conf")
+
+
+def test_tune_warns_once_naming_confs_that_did_not_apply(monkeypatch):
+    monkeypatch.setattr(session, "_TUNE_WARNED", False)
+    monkeypatch.setattr(session, "_ship_package", lambda spark: None)
+    fake = SimpleNamespace(conf=_StaticConf())
+    with pytest.warns(RuntimeWarning) as got:
+        session.tune(fake)
+    assert len(got) == 1
+    msg = str(got[0].message)
+    assert "spark.sql.codegen.hugeMethodLimit=8000" in msg
+    assert "spark.sql.session.timeZone" not in msg
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        session.tune(fake)
