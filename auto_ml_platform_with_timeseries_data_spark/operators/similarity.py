@@ -1,19 +1,34 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-- Brute-force cosine top-k: the exact baseline. Query set is broadcast;
-  the corpus is scanned ONCE; per-query top-k comes from a window over
-  (query × corpus) scored rows. Dot products are `F.zip_with` +
-  `F.aggregate` — JVM-side, no Python in the loop.
-- LSH-bucketed ANN (random hyperplane / SRP): each vector hashed to a
-  `nbits`-bit sketch by sign of dot with deterministic hyperplanes
-  (seeded, reproducible); candidates = same bucket in ≥1 of `ntables`
-  tables; exact re-score on candidates only. This is the 100 TB path:
-  shuffle is (table, bucket)-keyed, bucket size bounds the rescore cost.
+Every top-k kernel here is one filter-and-refine skeleton; a kernel
+supplies only its CANDIDATE GENERATOR and the shared pieces do the rest:
+
+- ``_exact_cos`` + ``_topk`` — exact rescore and rank:
+  self-exclusion, the ``_safe_ratio`` cosine (zero-norm vectors score
+  NULL and sort last), ``row_number`` over (score DESC, neighbor_id
+  ASC), the rank filter and the rounded output. Brute force crosses
+  the broadcast queries with the corpus; SRP joins on (table, bucket)
+  sketches; IVF joins on cells; the sign-bucket twin joins on
+  axis-aligned sign buckets; PQ and IVF-PQ rank their ADC refine.
+- ``_srp_sketch`` — the one seeded-hyperplane sketch kernel (a fused
+  GEMM per Arrow batch, query-directed multiprobe), shared by the SRP
+  top-k and the SRP near-duplicate pair path.
+- ``_adc_refine`` — the compressed-domain refine of PQ and IVF-PQ: the
+  query LUT, the ADC gather-sum pre-top per batch, the global
+  candidate window and the exact rescore of refine·k rows per query.
+- ``_coarse_route`` — the two-level (super-centroid) IVF routing
+  behind ``ivf_coarse_assign`` and the banded margin miner.
+
+The DuckDB oracles are composed from the matching SQL builders:
+``_topk_sql`` (the QUALIFY top-k tail), ``_cells_sql`` (IVF cell
+assignment against an injected codebook), ``_pq_sql`` (unit vectors,
+codebook and PQ codes), and ``_margin_sql`` (the integer-quantized
+margin pipeline, exact and banded).
 
 At cluster scale the brute-force path is still the right *structure*
 (broadcast queries, one corpus pass, partial top-k per partition via
-the window), just with a larger query batch; the LSH path trades recall
-for a ~|bucket|/|corpus| cut of the rescore work.
+the window), just with a larger query batch; the hash and cell paths
+trade recall for a ~|bucket|/|corpus| cut of the rescore work.
 """
 
 from __future__ import annotations
@@ -64,6 +79,47 @@ def cosine(a: Column, b: Column) -> Column:
     return _safe_ratio(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
+def _exact_cos(cand: DataFrame,
+               vecs: tuple[str, str, str, str] = (
+                   "__cv", "__cnorm", "__qv", "__qnorm")) -> DataFrame:
+    """The refine step of the hash and cell top-k kernels: drop
+    self-matches from a candidate frame and rescore each (query_id,
+    neighbor_id) with the exact JVM-fold cosine over the ``vecs``
+    columns (neighbor vec, neighbor norm, query vec, query norm) into
+    ``__cos``. ``_safe_ratio``: a zero-norm side scores NULL, which
+    sorts last under desc."""
+    nv, nn, qv, qn = vecs
+    return cand.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id",
+        _safe_ratio(dot(F.col(nv), F.col(qv)),
+                    F.col(nn) * F.col(qn)).alias("__cos"),
+    )
+
+
+def _topk(scored: DataFrame, k: int, round_to: int,
+          score: str = "__cos") -> DataFrame:
+    """The rank step of every top-k kernel: (query_id, neighbor_id,
+    rank, cosine) — row_number over (`score` DESC, neighbor_id ASC)
+    per query (the id tie-break makes it deterministic), the rank
+    filter, and the score rounded to `round_to`."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank",
+                F.round(F.col(score), round_to).alias("cosine"))
+    )
+
+
+def _no_neighbors(corpus: DataFrame) -> DataFrame:
+    """The schema-stable empty top-k result (empty corpus or query
+    batch)."""
+    return corpus.sparkSession.createDataFrame(
+        [], "query_id long, neighbor_id long, rank int, cosine double")
+
+
 def cosine_topk_bruteforce(corpus: DataFrame, queries_df: DataFrame,
                            id_col: str, vec_col: str, k: int = 5,
                            round_to: int = 6) -> DataFrame:
@@ -81,24 +137,7 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries_df: DataFrame,
         F.col(id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("__qv"),
     ).withColumn("__qnorm", l2_norm(F.col("__qv")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _safe_ratio(dot(F.col("__cv"), F.col("__qv")),
-                         F.col("__cnorm") * F.col("__qnorm")).alias("__cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round(F.col("__cos"), round_to).alias("cosine"))
-    )
+    return _topk(_exact_cos(c.crossJoin(F.broadcast(q))), k, round_to)
 
 
 def _hyperplanes(dim: int, nbits: int, ntables: int, seed: int) -> list[list[list[float]]]:
@@ -113,6 +152,87 @@ def _hyperplanes(dim: int, nbits: int, ntables: int, seed: int) -> list[list[lis
     ]
 
 
+def _srp_planes(corpus: DataFrame, vec_col: str, nbits: int, ntables: int,
+                seed: int):
+    """The (ntables, nbits, dim) hyperplane tensor for the corpus's
+    dimension, or None for an empty corpus (no neighbors, no pairs).
+
+    Closure-captured by the sketch kernel, not sc.broadcast: the plane
+    tensor is ~24 KB — it rides the task closure for free, and skips a
+    broadcast block the ContextCleaner would have to reap (leaked
+    broadcasts from repeated calls build JVM memory pressure)."""
+    import numpy as np
+
+    sample = corpus.select(vec_col).first()
+    if sample is None or sample[0] is None:
+        return None
+    return np.array(_hyperplanes(len(sample[0]), nbits, ntables, seed),
+                    dtype=np.float64)
+
+
+def _srp_sketch(df: DataFrame, id_col: str, vec_col: str, planes,
+                idc: str, vc: str, nc: str, probes: int = 1) -> DataFrame:
+    """(idc, vc, nc, tbl, bucket): each vector's SRP bucket in every
+    table, one Arrow mapInPandas pass. Each batch multiplies against
+    the (ntables×nbits×dim) hyperplane tensor with BLAS and packs sign
+    bits into a long. The expression alternative (nbits×ntables
+    zip_with/aggregate dot products per row) costs seconds of
+    plan/codegen constant and interprets per element.
+
+    ``probes`` > 1 also emits the buckets reached by flipping each
+    vector's (probes−1) lowest-|projection| sign bits — the bits whose
+    hyperplane it sits closest to (query-directed multiprobe)."""
+    import numpy as np
+
+    T, B = planes.shape[0], planes.shape[1]
+    pows = np.power(2.0, np.arange(B)).astype(np.int64)
+    nprobe = min(probes, B + 1)  # own bucket + ≤B single-bit flips
+
+    def kernel(batches):
+        import pandas as pd
+
+        # ONE matmul against the flattened (T·B, dim) plane tensor
+        # and ONE output frame per batch: per-table Python loops and
+        # per-probe DataFrame constructions cost interpreter time
+        # linear in T×probes per batch — at cluster batch sizes the
+        # single fused GEMM is the shape BLAS optimizes for.
+        P_flat = planes.reshape(T * B, -1)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m = np.array(list(pdf[vc]), dtype=np.float64)  # (n, dim)
+            n = m.shape[0]
+            norms = np.linalg.norm(m, axis=1)
+            proj = (m @ P_flat.T).reshape(n, T, B)
+            buckets = (proj > 0).astype(np.int64) @ pows   # (n, T)
+            all_buckets = [buckets]
+            if nprobe > 1:
+                # flip the (nprobe−1) bits with the smallest
+                # |projection| — the most uncertain signs
+                order = np.argsort(np.abs(proj), axis=2)
+                for j in range(nprobe - 1):
+                    all_buckets.append(buckets ^ pows[order[:, :, j]])
+            # (n, nprobe, T) → row-major flatten keeps each input row
+            # contiguous, so id/vec/norm columns are plain repeats
+            stacked = np.stack(all_buckets, axis=1)
+            reps = nprobe * T
+            yield pd.DataFrame({
+                idc: np.repeat(pdf[idc].to_numpy(), reps),
+                vc: pdf[vc].to_numpy().repeat(reps),
+                nc: np.repeat(norms, reps),
+                "tbl": np.tile(np.arange(T, dtype=np.int32), n * nprobe),
+                "bucket": stacked.reshape(-1),
+            })
+
+    return df.select(
+        F.col(id_col).alias(idc), _as_double(F.col(vec_col)).alias(vc)
+    ).mapInPandas(
+        kernel,
+        f"{idc} long, {vc} array<double>, {nc} double, "
+        "tbl int, bucket long",
+    )
+
+
 def cosine_topk_srp(corpus: DataFrame, queries_df: DataFrame, id_col: str,
                     vec_col: str, k: int = 5, nbits: int = 12,
                     ntables: int = 4, seed: int = 42,
@@ -120,13 +240,8 @@ def cosine_topk_srp(corpus: DataFrame, queries_df: DataFrame, id_col: str,
     """Approximate top-k via SRP-LSH bucketing + exact rescore of
     candidates. Output shape matches cosine_topk_bruteforce.
 
-    The sketch step is one Arrow mapInPandas pass per side: each batch
-    multiplies against the broadcast (ntables×nbits×dim) hyperplane
-    tensor with BLAS and packs sign bits into a long. The expression
-    alternative (nbits×ntables zip_with/aggregate dot products per row)
-    costs seconds of plan/codegen constant and interprets per element —
-    the matmul kernel is the same pattern as embedding_neardup_pairs
-    and scales identically (hyperplanes are tiny and broadcast).
+    The sketch step is ``_srp_sketch``: one Arrow pass per side, the
+    same fused-GEMM kernel as embedding_neardup_pairs_lsh.
 
     nprobes > 1 enables QUERY-DIRECTED MULTIPROBE (Lv et al., VLDB'07):
     each query additionally probes the buckets reached by flipping its
@@ -137,98 +252,27 @@ def cosine_topk_srp(corpus: DataFrame, queries_df: DataFrame, id_col: str,
     is built exactly once either way; recall rises without more tables
     (more tables re-sketch and re-shuffle the corpus, multiprobe only
     fans out the broadcast build side ×nprobes)."""
-    import numpy as np
-
-    sample = corpus.select(vec_col).first()
-    if sample is None or sample[0] is None:
+    planes = _srp_planes(corpus, vec_col, nbits, ntables, seed)
+    if planes is None:
         # empty corpus → no neighbors (schema-stable, matches the
         # bruteforce/exact paths' empty-input contract)
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double")
-    dim = len(sample[0])
-    # Closure-captured, not sc.broadcast: the plane tensor is ~24 KB
-    # (ntables×nbits×dim floats) — it rides the task closure for free,
-    # and skips a broadcast block the ContextCleaner would have to reap
-    # (leaked broadcasts from repeated calls build JVM memory pressure).
-    planes = np.array(_hyperplanes(dim, nbits, ntables, seed),
-                      dtype=np.float64)          # (ntables, nbits, dim)
-    pows = np.power(2.0, np.arange(nbits)).astype(np.int64)
-
-    def sketched(df: DataFrame, prefix: str, probes: int = 1) -> DataFrame:
-        idc, vc, nc = f"{prefix}_id", f"__{prefix}v", f"__{prefix}norm"
-        T, B = planes.shape[0], planes.shape[1]
-        nprobe = min(probes, B + 1)  # own bucket + ≤B single-bit flips
-
-        def kernel(batches):
-            import pandas as pd
-
-            # ONE matmul against the flattened (T·B, dim) plane tensor
-            # and ONE output frame per batch: per-table Python loops and
-            # per-probe DataFrame constructions cost interpreter time
-            # linear in T×probes per batch — at cluster batch sizes the
-            # single fused GEMM is the shape BLAS optimizes for.
-            P_flat = planes.reshape(T * B, -1)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.array(list(pdf[vc]), dtype=np.float64)  # (n, dim)
-                n = m.shape[0]
-                norms = np.linalg.norm(m, axis=1)
-                proj = (m @ P_flat.T).reshape(n, T, B)
-                buckets = (proj > 0).astype(np.int64) @ pows   # (n, T)
-                all_buckets = [buckets]
-                if nprobe > 1:
-                    # flip the (nprobe−1) bits with the smallest
-                    # |projection| — the query's most uncertain signs
-                    order = np.argsort(np.abs(proj), axis=2)
-                    for j in range(nprobe - 1):
-                        all_buckets.append(buckets ^ pows[order[:, :, j]])
-                # (n, nprobe, T) → row-major flatten keeps each input row
-                # contiguous, so id/vec/norm columns are plain repeats
-                stacked = np.stack(all_buckets, axis=1)
-                reps = nprobe * T
-                yield pd.DataFrame({
-                    idc: np.repeat(pdf[idc].to_numpy(), reps),
-                    vc: pdf[vc].to_numpy().repeat(reps),
-                    nc: np.repeat(norms, reps),
-                    "tbl": np.tile(np.arange(T, dtype=np.int32), n * nprobe),
-                    "bucket": stacked.reshape(-1),
-                })
-
-        return df.select(
-            F.col(id_col).alias(idc), _as_double(F.col(vec_col)).alias(vc)
-        ).mapInPandas(
-            kernel,
-            f"{idc} long, {vc} array<double>, {nc} double, "
-            "tbl int, bucket long",
-        )
-
-    c = sketched(corpus, "neighbor")
-    q = sketched(queries_df, "query", probes=nprobes)
+        return _no_neighbors(corpus)
+    c = _srp_sketch(corpus, id_col, vec_col, planes,
+                    "neighbor_id", "__neighborv", "__neighbornorm")
+    q = _srp_sketch(queries_df, id_col, vec_col, planes,
+                    "query_id", "__queryv", "__querynorm", probes=nprobes)
     # Rescore BEFORE deduping multi-table hits: the broadcast-hash join +
     # cosine are map-side, so the only shuffle carries (query, neighbor,
     # cos) triples — deduping first would shuffle both full vectors per
     # candidate pair. Duplicate hits score identically; max() dedups.
     scored = (
-        c.join(F.broadcast(q), ["tbl", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _safe_ratio(
-                dot(F.col("__neighborv"), F.col("__queryv")),
-                F.col("__neighbornorm") * F.col("__querynorm"))
-            .alias("__cos"),
-        )
+        _exact_cos(c.join(F.broadcast(q), ["tbl", "bucket"]),
+                   ("__neighborv", "__neighbornorm",
+                    "__queryv", "__querynorm"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("__cos").alias("__cos"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round(F.col("__cos"), round_to).alias("cosine"))
-    )
+    return _topk(scored, k, round_to)
 
 
 def embedding_neardup_pairs(corpus: DataFrame, id_col: str, vec_col: str,
@@ -261,8 +305,6 @@ def embedding_neardup_pairs(corpus: DataFrame, id_col: str, vec_col: str,
     here — a zip_with/aggregate dot product is interpreted per
     element, while numpy hits vectorized BLAS, ~100× faster at
     fixture scale."""
-    import math
-
     import numpy as np
 
     if nblocks is None:
@@ -410,63 +452,23 @@ def embedding_neardup_pairs_lsh(corpus: DataFrame, id_col: str,
     Candidates = pairs sharing an SRP bucket in ≥1 table (each vector
     also probes its (nprobes−1) lowest-margin flip buckets, which for
     all-pairs raises per-table collision odds quadratically in
-    nprobes); exact BLAS cosine rescores candidates, so precision is 1
-    by construction and only recall is approximate. The corpus is
-    sketched once; the shuffle is (tbl, bucket)-keyed and bucket size
-    bounds the per-task rescore — no block ever sees the whole corpus,
-    which is what the exact path must do. Trade the recall/cost dial
-    with nbits (bucket size) × ntables × nprobes; q134 self-measures
-    recall against the exact pairs at fixture scale."""
-    import numpy as np
-
-    sample = corpus.select(vec_col).first()
-    if sample is None or sample[0] is None:
+    nprobes); the exact JVM-fold cosine rescores candidates, so
+    precision is 1 by construction and only recall is approximate. A
+    zero-norm vector scores NULL (``_safe_ratio``) and never pairs, as
+    on the exact path. The corpus is sketched once (``_srp_sketch``);
+    the shuffle is (tbl, bucket)-keyed and bucket size bounds the
+    per-task rescore — no block ever sees the whole corpus, which is
+    what the exact path must do. Trade the recall/cost dial with nbits
+    (bucket size) × ntables × nprobes; q134 self-measures recall
+    against the exact pairs at fixture scale."""
+    planes = _srp_planes(corpus, vec_col, nbits, ntables, seed)
+    if planes is None:
         # empty corpus → no pairs (schema-stable, same guard as the
         # exact path's nblocks=None branch)
         return corpus.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double")
-    dim = len(sample[0])
-    planes = np.array(_hyperplanes(dim, nbits, ntables, seed),
-                      dtype=np.float64)
-    pows = np.power(2.0, np.arange(nbits)).astype(np.int64)
-
-    T, B = planes.shape[0], planes.shape[1]
-    nprobe = min(nprobes, B + 1)
-
-    def kernel(batches):
-        import pandas as pd
-
-        # fused single-GEMM sketch + one output frame per batch — same
-        # rationale as cosine_topk_srp's kernel
-        P_flat = planes.reshape(T * B, -1)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array(list(pdf["__v"]), dtype=np.float64)
-            n = m.shape[0]
-            norms = np.linalg.norm(m, axis=1)
-            proj = (m @ P_flat.T).reshape(n, T, B)
-            buckets = (proj > 0).astype(np.int64) @ pows
-            all_buckets = [buckets]
-            if nprobe > 1:
-                order = np.argsort(np.abs(proj), axis=2)
-                for j in range(nprobe - 1):
-                    all_buckets.append(buckets ^ pows[order[:, :, j]])
-            stacked = np.stack(all_buckets, axis=1)
-            reps = nprobe * T
-            yield pd.DataFrame({
-                "__id": np.repeat(pdf["__id"].to_numpy(), reps),
-                "__v": pdf["__v"].to_numpy().repeat(reps),
-                "__n": np.repeat(norms, reps),
-                "tbl": np.tile(np.arange(T, dtype=np.int32), n * nprobe),
-                "bucket": stacked.reshape(-1),
-            })
-
-    sk = corpus.select(
-        F.col(id_col).alias("__id"), _as_double(F.col(vec_col)).alias("__v")
-    ).mapInPandas(
-        kernel, "__id long, __v array<double>, __n double, tbl int, bucket long"
-    )
+    sk = _srp_sketch(corpus, id_col, vec_col, planes, "__id", "__v", "__n",
+                     probes=nprobes)
     a = sk.select("tbl", "bucket", F.col("__id").alias("id_a"),
                   F.col("__v").alias("__va"), F.col("__n").alias("__na"))
     b = sk.select("tbl", "bucket", F.col("__id").alias("id_b"),
@@ -476,8 +478,8 @@ def embedding_neardup_pairs_lsh(corpus: DataFrame, id_col: str,
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a", "id_b",
-            F.round(dot(F.col("__va"), F.col("__vb"))
-                    / (F.col("__na") * F.col("__nb")), round_to)
+            F.round(_safe_ratio(dot(F.col("__va"), F.col("__vb")),
+                                F.col("__na") * F.col("__nb")), round_to)
             .alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -510,8 +512,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries_df: DataFrame, id_col: str,
     if head is None or head[0] is None:
         # empty corpus → no neighbors (schema-stable; _ivf_train cannot
         # seed centroids from nothing)
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double")
+        return _no_neighbors(corpus)
     if centroids is not None:
         # pre-built codebook (row-normalized here): a production index
         # trains once and serves many query batches — and the portable
@@ -560,22 +561,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries_df: DataFrame, id_col: str,
 
     c = assigned(corpus, "neighbor_id", "__cv", "__cnorm", 1)
     q = assigned(queries_df, "query_id", "__qv", "__qnorm", nprobe)
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _safe_ratio(dot(F.col("__cv"), F.col("__qv")),
-                         F.col("__cnorm") * F.col("__qnorm")).alias("__cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round(F.col("__cos"), round_to).alias("cosine"))
-    )
+    return _topk(_exact_cos(c.join(F.broadcast(q), "cell")), k, round_to)
 
 
 # ---------------------------------------------------------------------------
@@ -587,6 +573,45 @@ _TOP_K = 5
 # Fixture embeddings are i.i.d. random (max pairwise cosine ≈ 0.51), so
 # "near-dup" here means the far tail of the cosine distribution.
 _NEARDUP_T = 0.4
+
+# The corpus as DOUBLE[] vectors — the base CTE of the vector oracles.
+_E_SQL = """e AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    )"""
+
+
+def _topk_sql(src: str) -> str:
+    """The QUALIFY top-k tail — ``_topk``'s SQL twin: rank the
+    (query_id, neighbor_id, cos) rows of CTE `src` per query by
+    (cos DESC, neighbor_id) and keep the first _TOP_K, rounded."""
+    return f"""
+    SELECT query_id, neighbor_id,
+           CAST(row_number() OVER (PARTITION BY query_id
+                ORDER BY cos DESC, neighbor_id) AS INT) AS rank,
+           ROUND(cos, 6) AS cosine
+    FROM {src}
+    QUALIFY rank <= {_TOP_K}
+    """
+
+
+def _cells_sql(lo: int, ncells: int) -> str:
+    """IVF cell assignment against an injected codebook (needs CTE
+    ``e``): ``cent`` (cid, cv) = vectors vec_id [lo, lo + ncells), and
+    ``cr`` (vec_id, v, cid, cos, rk) = every vector's cells ranked by
+    cosine, ties to the lower cid — rk = 1 is the argmax assignment
+    of ``_assign_cells``/``ivfpq_encode``, rk ≤ nprobe a query's
+    probe set."""
+    return f"""cent AS (
+      SELECT vec_id - {lo} AS cid, v AS cv
+      FROM e WHERE vec_id >= {lo} AND vec_id < {lo + ncells}
+    ),
+    cr AS (
+      SELECT e.vec_id, e.v, c.cid, list_cosine_similarity(e.v, c.cv) AS cos,
+             row_number() OVER (PARTITION BY e.vec_id
+                  ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
+               AS rk
+      FROM e, cent c
+    )"""
 
 
 @query(
@@ -600,12 +625,7 @@ _NEARDUP_T = 0.4
       FROM embeddings e, q
       WHERE e.vec_id != q.vec_id
     )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank,
-           ROUND(cos, 6) AS cosine
-    FROM scored
-    QUALIFY rank <= {_TOP_K}
-    """,
+    {_topk_sql("scored")}""",
 )
 def q19_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1040,22 +1060,8 @@ def cosine_topk_signbucket(corpus: DataFrame, queries_df: DataFrame,
     # probe buckets are pairwise distinct and each corpus vector lives
     # in exactly one bucket → every (query, neighbor) candidate appears
     # at most once, no dedup needed before ranking
-    scored = (
-        c.join(F.broadcast(probes), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id", "neighbor_id",
-            _safe_ratio(dot(F.col("__cv"), F.col("__qv")),
-                         F.col("__cnorm") * F.col("__qnorm")).alias("__cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round(F.col("__cos"), round_to).alias("cosine"))
-    )
+    return _topk(_exact_cos(c.join(F.broadcast(probes), "bucket")), k,
+                 round_to)
 
 
 def _signbucket_oracle() -> str:
@@ -1067,9 +1073,7 @@ def _signbucket_oracle() -> str:
         ["qb"] + [f"xor(qb, {1 << d})" for d in range(_SIGN_BITS)]
     )
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
+    WITH {_E_SQL},
     b AS (
       SELECT vec_id, v, CAST({bucket} AS BIGINT) AS bkt FROM e
     ),
@@ -1086,13 +1090,7 @@ def _signbucket_oracle() -> str:
       FROM probes p JOIN b c ON c.bkt = p.pb
       WHERE c.vec_id != p.query_id
     )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY cos DESC, neighbor_id) AS INT) AS rank,
-           ROUND(cos, 6) AS cosine
-    FROM cand
-    QUALIFY rank <= {_TOP_K}
-    """
+    {_topk_sql("cand")}"""
 
 
 @query("q143_ann_signbucket", oracle=_signbucket_oracle())
@@ -1103,38 +1101,42 @@ def q143_ann_signbucket(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   _TOP_K)
 
 
+def _injected_rows(emb: DataFrame, lo: int, n: int):
+    """Corpus vectors vec_id [lo, lo + n) in id order — the injected
+    codebooks the oracles reproduce (``_cells_sql``/``_pq_sql``); a
+    bounded model-parameter collect."""
+    import numpy as np
+
+    rows = (
+        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + n))
+        .orderBy("vec_id").select("embedding").collect()
+    )
+    return np.array([r[0] for r in rows], dtype=np.float64)
+
+
+def _injected_books(emb: DataFrame, lo: int, ksub: int):
+    """(nsub, ksub, subdim) PQ codebooks split from the UNIT corpus
+    vectors vec_id [lo, lo + ksub)."""
+    import numpy as np
+
+    seeds = _injected_rows(emb, lo, ksub)
+    seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
+    return seeds.reshape(len(seeds), _PQ_NSUB, -1).transpose(1, 0, 2).copy()
+
+
 _IVF_TWIN_CELLS = 8
 _IVF_TWIN_LO = 10  # codebook = vec_id in [10, 18) — disjoint from queries
 _IVF_TWIN_PROBE = 3
 
 
 def _ivf_twin_oracle() -> str:
-    hi = _IVF_TWIN_LO + _IVF_TWIN_CELLS
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-      SELECT vec_id - {_IVF_TWIN_LO} AS cid, v AS cv
-      FROM e WHERE vec_id >= {_IVF_TWIN_LO} AND vec_id < {hi}
-    ),
-    ca AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c
-      ) WHERE rk = 1
-    ),
+    WITH {_E_SQL},
+    {_cells_sql(_IVF_TWIN_LO, _IVF_TWIN_CELLS)},
+    ca AS (SELECT vec_id, v, cid FROM cr WHERE rk = 1),
     qa AS (
-      SELECT query_id, qv, cid FROM (
-        SELECT e.vec_id AS query_id, e.v AS qv, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c WHERE e.vec_id < {_N_QUERIES}
-      ) WHERE rk <= {_IVF_TWIN_PROBE}
+      SELECT vec_id AS query_id, v AS qv, cid FROM cr
+      WHERE vec_id < {_N_QUERIES} AND rk <= {_IVF_TWIN_PROBE}
     ),
     cand AS (
       SELECT q.query_id, a.vec_id AS neighbor_id,
@@ -1142,13 +1144,7 @@ def _ivf_twin_oracle() -> str:
       FROM qa q JOIN ca a ON a.cid = q.cid
       WHERE a.vec_id != q.query_id
     )
-    SELECT query_id, neighbor_id,
-           CAST(row_number() OVER (PARTITION BY query_id
-                ORDER BY cos DESC, neighbor_id) AS INT) AS rank,
-           ROUND(cos, 6) AS cosine
-    FROM cand
-    QUALIFY rank <= {_TOP_K}
-    """
+    {_topk_sql("cand")}"""
 
 
 @query("q144_ivf_fixed_centroids", oracle=_ivf_twin_oracle())
@@ -1160,15 +1156,8 @@ def q144_ivf_fixed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation ulps because cell-cosine gaps are O(1e-2); the output
     cosines come from the sequential JVM fold, bit-identical to the
     oracle."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = _IVF_TWIN_LO + _IVF_TWIN_CELLS
-    rows = (
-        emb.filter((F.col("vec_id") >= _IVF_TWIN_LO) & (F.col("vec_id") < hi))
-        .orderBy("vec_id").select("embedding").collect()
-    )
-    cents = np.array([r[0] for r in rows], dtype=np.float64)
+    cents = _injected_rows(emb, _IVF_TWIN_LO, _IVF_TWIN_CELLS)
     queries_df = emb.filter(F.col("vec_id") < _N_QUERIES)
     return cosine_topk_ivf(emb, queries_df, "vec_id", "embedding", _TOP_K,
                            ncells=_IVF_TWIN_CELLS, nprobe=_IVF_TWIN_PROBE,
@@ -1288,58 +1277,88 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
     )
 
 
-def cosine_topk_pq(corpus: DataFrame, queries_df: DataFrame, id_col: str,
-                   vec_col: str, k: int = _TOP_K, nsub: int = _PQ_NSUB,
-                   ksub: int = _PQ_KSUB, iters: int = 2, refine: int = 8,
-                   codebooks=None, round_to: int = 6) -> DataFrame:
-    """PQ ANN: encode → ADC scan → exact rescore of the top refine·k.
+def _adc_refine(corpus: DataFrame, queries_df: DataFrame, codes: DataFrame,
+                id_col: str, vec_col: str, k: int, refine: int,
+                round_to: int, codebooks, cents=None,
+                nprobe: int = 0) -> DataFrame:
+    """The compressed-domain refine shared by PQ and IVF-PQ: ADC-rank
+    the `codes` frame (id, [cell,] codes) per query, keep the global
+    top refine·k candidates, exact-rescore those against the raw
+    vectors, and rank with ``_topk``.
 
     ADC (asymmetric distance computation): per query, a lookup table
-    LUT[s, j] = q_sub_s · codebook[s][j] (nsub·ksub floats, closure-
-    captured); a corpus row's approximate cosine is Σ_s LUT[s, code_s]
-    — a gather-sum over BYTES, never the raw vectors. The kernel emits
-    only its per-batch top refine·k per query, so the shuffle carries
-    candidates, not the corpus; a global window takes the exact top
-    refine·k (batch-level pre-top is a pure optimization — the global
-    top is partition-independent), and only those candidates touch raw
-    vectors again for the exact JVM-fold rescore. ADC scores are
-    rounded to `round_to` before ranking (with id tie-break) so
-    candidate selection is reproducible across summation orders."""
+    LUT[s, j] = q_sub_s · codebook[s][j] (nsub·ksub floats, nsub read
+    from the codebooks, closure-captured) over the UNIT query (a
+    zero-norm query keeps a zero LUT); a row's approximate cosine is
+    Σ_s LUT[s, code_s] — a gather-sum over BYTES, never the raw
+    vectors. With IVF centroids `cents` (unit rows), each query scores
+    only rows in its `nprobe` nearest cells — the compressed-domain
+    analogue of partition pruning, and literal pruning when the index
+    is stored partitioned by cell. The kernel emits only its per-batch
+    top refine·k per query, so the shuffle carries candidates, not the
+    corpus; a global window takes the exact top refine·k (the batch
+    pre-top is a pure optimization — the global top is
+    partition-independent), and only those candidates touch raw
+    vectors again, the RAW query vectors included, for the exact
+    JVM-fold rescore (a zero-norm query scores NULL there, as on the
+    brute-force path). ADC scores are rounded to `round_to` before
+    ranking (with id tie-break) so candidate selection is reproducible
+    across summation orders. Driver state: queries (a bounded batch by
+    contract), the LUT (nq·nsub·ksub floats) and the probe table
+    (nq·nprobe ints)."""
     import numpy as np
 
-    if codebooks is None:
-        codebooks = _pq_train(corpus, vec_col, nsub, ksub, iters)
     q_rows = (queries_df.select(F.col(id_col).alias("qid"),
                                 _as_double(F.col(vec_col)).alias("qv"))
               .collect())
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double")
+        return _no_neighbors(corpus)
     qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     qm = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    subdim = qm.shape[1] // nsub
+    qn = np.linalg.norm(qm, axis=1, keepdims=True)
+    qn[qn == 0] = 1.0
+    qu = qm / qn
+    B = np.asarray(codebooks, dtype=np.float64)
+    nsub = B.shape[0]
     # LUT[q, s, j] = q_sub · c_sub
     lut = np.einsum("qsd,sjd->qsj",
-                    qm.reshape(len(qm), nsub, subdim), codebooks)
+                    qu.reshape(len(qu), nsub, qu.shape[1] // nsub), B)
     n_keep = refine * k
+    codes = codes.withColumnRenamed(id_col, "__id")
+    probes = None
+    if cents is not None:
+        qs = qu @ cents.T
+        order = np.lexsort(
+            (np.broadcast_to(np.arange(cents.shape[0]), qs.shape), -qs),
+            axis=1)
+        probes = order[:, :nprobe].astype(np.int32)
+        # plan-level probe filter: the kernel masks per query anyway,
+        # but pushing the UNION of probe cells into the scan turns a
+        # stored partitionBy("cell") index into literal partition
+        # pruning — only nprobe-ish directories are ever read
+        cells_needed = sorted({int(c) for c in probes.reshape(-1)})
+        codes = codes.filter(F.col("cell").isin(cells_needed))
 
-    def adc_kernel(batches, L=lut, Q=qids, keep=n_keep, rt=round_to):
+    def adc_kernel(batches, L=lut, Q=qids, P=probes, keep=n_keep,
+                   rt=round_to):
         import pandas as pd
 
         grid = 10.0 ** (-rt)
+        srange = np.arange(L.shape[1])
         for pdf in batches:
             if pdf.empty:
                 continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
+            cm = np.array(list(pdf["codes"]), dtype=np.int64)
             ids = pdf["__id"].to_numpy()
-            # scores[b, q] = Σ_s L[q, s, codes[b, s]]
-            scores = L[:, np.arange(codes.shape[1])[None, :],
-                       codes].sum(axis=2).T
+            cells = None if P is None else pdf["cell"].to_numpy()
             for qi in range(len(Q)):
-                s = scores[:, qi]
                 mask = ids != Q[qi]
-                sm, im = s[mask], ids[mask]
+                if P is not None:
+                    mask &= np.isin(cells, P[qi])
+                if not mask.any():
+                    continue
+                im = ids[mask]
+                sm = L[qi, srange[None, :], cm[mask]].sum(axis=1)
                 # The global candidate window ranks by (round(approx, rt)
                 # DESC, neighbor_id ASC); the batch pre-top must use the
                 # SAME key or a candidate tying at rt decimals at the
@@ -1351,25 +1370,21 @@ def cosine_topk_pq(corpus: DataFrame, queries_df: DataFrame, id_col: str,
                 # the residual float-scale vs BigDecimal one-step
                 # disagreement, so the pre-top stays a pure optimization.
                 r = np.floor(sm * 10.0 ** rt + 0.5) / 10.0 ** rt
-                order = np.lexsort((im, -r))
-                if len(order) > keep:
-                    cutoff = r[order[keep - 1]]
-                    order = order[r[order] >= cutoff - grid]
+                o = np.lexsort((im, -r))
+                if len(o) > keep:
+                    cutoff = r[o[keep - 1]]
+                    o = o[r[o] >= cutoff - grid]
                 yield pd.DataFrame({
-                    "query_id": np.full(len(order), Q[qi],
-                                        dtype=np.int64),
-                    "neighbor_id": im[order],
-                    "approx": sm[order],
-                })
+                    "query_id": np.full(len(o), Q[qi], dtype=np.int64),
+                    "neighbor_id": im[o],
+                    "approx": sm[o]})
 
-    codes_df = pq_encode(corpus, id_col, vec_col, codebooks) \
-        .withColumnRenamed(id_col, "__id")
-    scored = codes_df.mapInPandas(
+    scored = codes.mapInPandas(
         adc_kernel, "query_id long, neighbor_id long, approx double")
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("approx"), round_to).desc(), F.col("neighbor_id"))
-    cand = scored.withColumn("__rk", F.row_number().over(w)) \
-        .filter(F.col("__rk") <= n_keep).drop("approx", "__rk")
+    cand = (scored.withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") <= n_keep).drop("approx", "__rk"))
     vecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                          _as_double(F.col(vec_col)).alias("__nv"))
     qdf = corpus.sparkSession.createDataFrame(
@@ -1379,13 +1394,21 @@ def cosine_topk_pq(corpus: DataFrame, queries_df: DataFrame, id_col: str,
                 .join(vecs, "neighbor_id")
                 .withColumn("cosine", cosine(F.col("__qv"),
                                              F.col("__nv"))))
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"),
-                    F.round("cosine", round_to).alias("cosine")))
+    return _topk(rescored, k, round_to, score="cosine")
+
+
+def cosine_topk_pq(corpus: DataFrame, queries_df: DataFrame, id_col: str,
+                   vec_col: str, k: int = _TOP_K, nsub: int = _PQ_NSUB,
+                   ksub: int = _PQ_KSUB, iters: int = 2, refine: int = 8,
+                   codebooks=None, round_to: int = 6) -> DataFrame:
+    """PQ ANN: encode → ADC scan of every code → exact rescore of the
+    top refine·k (``_adc_refine``). `nsub`/`ksub`/`iters` shape the
+    trained codebooks; injected `codebooks` carry their own nsub."""
+    if codebooks is None:
+        codebooks = _pq_train(corpus, vec_col, nsub, ksub, iters)
+    return _adc_refine(corpus, queries_df,
+                       pq_encode(corpus, id_col, vec_col, codebooks),
+                       id_col, vec_col, k, refine, round_to, codebooks)
 
 
 @query("q159_ann_pq")  # rows-only: trained codebooks not SQL-portable
@@ -1400,69 +1423,93 @@ _PQ_TWIN_KSUB = 16
 _PQ_TWIN_REFINE = 4
 
 
-def _pq_twin_oracle() -> str:
-    hi = _PQ_TWIN_LO + _PQ_TWIN_KSUB
+def _pq_sql(lo: int, ksub: int) -> str:
+    """PQ encoding against an injected codebook (needs CTE ``e``) —
+    ``pq_encode``'s SQL twin: ``un`` (vec_id, uv) zero-guarded unit
+    vectors, ``cb`` (j, cv) = unit vectors vec_id [lo, lo + ksub),
+    ``subs`` the subspace ids, and ``codes`` (vec_id, s, j, d) = each
+    vector's nearest codeword per subspace by L2 (ties to the lower
+    j), d its squared distance."""
     nsub, sd = _PQ_NSUB, 64 // _PQ_NSUB
-    keep = _PQ_TWIN_REFINE * _TOP_K
-    return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    nrm AS (
+
+    def sub(v: str) -> str:
+        return f"{v}[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]"
+
+    return f"""nrm AS (
       SELECT vec_id, v,
              sqrt(list_sum(list_transform(v, y -> y * y))) AS n FROM e
     ),
     un AS (
-      SELECT vec_id, v, list_transform(v, x -> x / n) AS uv FROM nrm
+      SELECT vec_id,
+             list_transform(v, x -> x / CASE WHEN n = 0 THEN 1 ELSE n END)
+               AS uv
+      FROM nrm
     ),
     cb AS (
-      SELECT vec_id - {_PQ_TWIN_LO} AS j, uv AS cv
-      FROM un WHERE vec_id >= {_PQ_TWIN_LO} AND vec_id < {hi}
+      SELECT vec_id - {lo} AS j, uv AS cv
+      FROM un WHERE vec_id >= {lo} AND vec_id < {lo + ksub}
     ),
     subs AS (SELECT unnest(generate_series(0, {nsub - 1})) AS s),
     codes AS (
-      SELECT vec_id, s, j FROM (
+      SELECT vec_id, s, j, d FROM (
         SELECT n.vec_id, subs.s, c.j,
+               list_distance({sub("n.uv")}, {sub("c.cv")}) ** 2 AS d,
                row_number() OVER (PARTITION BY n.vec_id, subs.s
-                 ORDER BY list_distance(
-                    n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                    c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ASC,
+                 ORDER BY list_distance({sub("n.uv")}, {sub("c.cv")}) ASC,
                     c.j) AS rk
         FROM un n, subs, cb c
       ) WHERE rk = 1
-    ),
-    q AS (
+    )"""
+
+
+def _adc_sql() -> str:
+    """The ADC refine — ``_adc_refine``'s SQL twin over CTEs ``cand``
+    (query_id, neighbor_id), ``codes``/``cb``/``un`` (``_pq_sql``) and
+    ``e``: gather-sum ADC rounded to 6, the top refine·k candidates
+    per query, the exact rescore, and the top-k tail."""
+    sd = 64 // _PQ_NSUB
+    keep = _PQ_TWIN_REFINE * _TOP_K
+    return f"""qu AS (
       SELECT vec_id AS query_id, uv AS quv FROM un
       WHERE vec_id < {_N_QUERIES}
     ),
     adc AS (
-      SELECT q.query_id, codes.vec_id AS neighbor_id,
+      SELECT c.query_id, c.neighbor_id,
              ROUND(sum(list_inner_product(
                q.quv[codes.s * {sd} + 1 : codes.s * {sd} + {sd}],
-               c.cv[codes.s * {sd} + 1 : codes.s * {sd} + {sd}])), 6)
+               b.cv[codes.s * {sd} + 1 : codes.s * {sd} + {sd}])), 6)
                AS approx
-      FROM q, codes JOIN cb c ON codes.j = c.j
-      WHERE codes.vec_id != q.query_id
+      FROM cand c
+      JOIN qu q ON q.query_id = c.query_id
+      JOIN codes ON codes.vec_id = c.neighbor_id
+      JOIN cb b ON codes.j = b.j
       GROUP BY 1, 2
     ),
-    cand AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx DESC, neighbor_id) AS rk
-        FROM adc
-      ) WHERE rk <= {keep}
+    topc AS (
+      SELECT query_id, neighbor_id FROM adc
+      QUALIFY row_number() OVER (PARTITION BY query_id
+                ORDER BY approx DESC, neighbor_id) <= {keep}
+    ),
+    rescored AS (
+      SELECT c.query_id, c.neighbor_id,
+             list_cosine_similarity(a.v, b.v) AS cos
+      FROM topc c
+      JOIN e a ON a.vec_id = c.query_id
+      JOIN e b ON b.vec_id = c.neighbor_id
     )
-    SELECT c.query_id, c.neighbor_id,
-           CAST(row_number() OVER (PARTITION BY c.query_id
-             ORDER BY list_cosine_similarity(a.v, b.v) DESC,
-                      c.neighbor_id) AS INT) AS rank,
-           ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-    FROM cand c
-    JOIN e a ON a.vec_id = c.query_id
-    JOIN e b ON b.vec_id = c.neighbor_id
-    QUALIFY rank <= {_TOP_K}
-    """
+    {_topk_sql("rescored")}"""
+
+
+def _pq_twin_oracle() -> str:
+    return f"""
+    WITH {_E_SQL},
+    {_pq_sql(_PQ_TWIN_LO, _PQ_TWIN_KSUB)},
+    cand AS (
+      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
+      FROM e q, e n
+      WHERE q.vec_id < {_N_QUERIES} AND n.vec_id != q.vec_id
+    ),
+    {_adc_sql()}"""
 
 
 @query("q160_pq_fixed_codebook", oracle=_pq_twin_oracle())
@@ -1475,17 +1522,8 @@ def q160_pq_fixed_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     this twin gives every rank and cosine a driver value-hash check.
     ADC scores round to 6 before ranking on BOTH sides, so candidate
     selection tolerates summation-order ulps."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = _PQ_TWIN_LO + _PQ_TWIN_KSUB
-    rows = (
-        emb.filter((F.col("vec_id") >= _PQ_TWIN_LO) & (F.col("vec_id") < hi))
-        .orderBy("vec_id").select("embedding").collect()
-    )
-    seeds = np.array([r[0] for r in rows], dtype=np.float64)
-    seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
-    books = seeds.reshape(len(seeds), _PQ_NSUB, -1).transpose(1, 0, 2).copy()
+    books = _injected_books(emb, _PQ_TWIN_LO, _PQ_TWIN_KSUB)
     queries_df = emb.filter(F.col("vec_id") < _N_QUERIES)
     return cosine_topk_pq(emb, queries_df, "vec_id", "embedding", _TOP_K,
                           refine=_PQ_TWIN_REFINE, codebooks=books)
@@ -1599,24 +1637,10 @@ def q171_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_twin_oracle() -> str:
-    hi = _IVF_TWIN_LO + _IVF_TWIN_CELLS
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-      SELECT vec_id - {_IVF_TWIN_LO} AS cid, v AS cv
-      FROM e WHERE vec_id >= {_IVF_TWIN_LO} AND vec_id < {hi}
-    ),
-    ca AS (
-      SELECT vec_id, v, cid FROM (
-        SELECT e.vec_id, e.v, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c
-      ) WHERE rk = 1
-    ),
+    WITH {_E_SQL},
+    {_cells_sql(_IVF_TWIN_LO, _IVF_TWIN_CELLS)},
+    ca AS (SELECT vec_id, v, cid FROM cr WHERE rk = 1),
     d AS (
       SELECT a.vec_id, min(b.vec_id) AS dup_of
       FROM ca a JOIN ca b
@@ -1639,15 +1663,8 @@ def q172_semdedup_fixed_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every (cell, status, dup_of) row carries a driver value hash.
     Cosines round to 6 on both sides before the threshold compare —
     the same ulp-tolerance contract as q144/q160."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = _IVF_TWIN_LO + _IVF_TWIN_CELLS
-    rows = (
-        emb.filter((F.col("vec_id") >= _IVF_TWIN_LO) & (F.col("vec_id") < hi))
-        .orderBy("vec_id").select("embedding").collect()
-    )
-    cents = np.array([r[0] for r in rows], dtype=np.float64)
+    cents = _injected_rows(emb, _IVF_TWIN_LO, _IVF_TWIN_CELLS)
     return semdedup(emb, "vec_id", "embedding", threshold=_SEM_T,
                     centroids=cents)
 
@@ -1906,15 +1923,18 @@ def margin_mine_pairs_banded(src: DataFrame, tgt: DataFrame,
     a clone-suspect corpus earns that knowledge."""
     a = _margin_quant(src, id_col, vec_col, "src_id", "__qa", "__da")
     b = _margin_quant(tgt, id_col, vec_col, "tgt_id", "__qb", "__db")
-    c = _margin_quant(centroids, id_col, vec_col, "__cid", "__qb", "__db")
-    c = c.withColumn(
-        "__cid", F.row_number().over(
-            Window.orderBy("__cid")) - 1)  # dense 0-based cell ids
+    c = _dense_cells(centroids, id_col, vec_col)
+    # tgt side renamed off the centroid frame's __qb/__db for the
+    # assignment joins
+    t = b.withColumnRenamed("__qb", "__qt").withColumnRenamed("__db", "__dt")
     if coarse_stride is not None:
         probes = _coarse_route(a, c, "src_id", "__qa", "__da",
-                               coarse_stride, nprobe_super, nprobe)
-        cells = _coarse_route(b, c, "tgt_id", "__qb", "__db",
-                              coarse_stride, nprobe_super, 1)
+                               coarse_stride, nprobe_super, nprobe) \
+            .select("src_id", "__qa", "__da", "__cid")
+        cells = _coarse_route(t, c, "tgt_id", "__qt", "__dt",
+                              coarse_stride, nprobe_super, 1) \
+            .select("tgt_id", F.col("__qt").alias("__qb"),
+                    F.col("__dt").alias("__db"), "__cid")
         pairs = (probes.join(cells, "__cid")
                  .select("src_id", "tgt_id", _margin_ci().alias("ci")))
         return _margin_from_pairs(pairs, k, margin)
@@ -1926,12 +1946,10 @@ def margin_mine_pairs_banded(src: DataFrame, tgt: DataFrame,
     probes = (asg.withColumn("__rk", F.row_number().over(wc))
               .filter(F.col("__rk") <= nprobe)
               .select("src_id", "__qa", "__da", "__cid"))
-    tasg = (b.withColumnRenamed("__qb", "__qt")
-            .withColumnRenamed("__db", "__dt")
-            .crossJoin(F.broadcast(
-                c.select(F.col("__cid"),
-                         F.col("__qb").alias("__qc"),
-                         F.col("__db").alias("__dc")))))
+    tasg = t.crossJoin(F.broadcast(
+        c.select(F.col("__cid"),
+                 F.col("__qb").alias("__qc"),
+                 F.col("__db").alias("__dc"))))
     tci = _ci_expr("__qt", "__dt", "__qc", "__dc")
     wt = Window.partitionBy("tgt_id").orderBy(F.desc(tci), F.asc("__cid"))
     cells = (tasg.withColumn("__rk", F.row_number().over(wt))
@@ -1945,54 +1963,131 @@ def margin_mine_pairs_banded(src: DataFrame, tgt: DataFrame,
     return _margin_from_pairs(pairs, k, margin)
 
 
-def _margin_oracle() -> str:
-    k, t = _MARGIN_K, _MARGIN_T
-    return f"""
-    WITH q AS (
+def _ci_sql(a: str, b: str, qa: str = "qv", da: str = "d",
+            qb: str = "qv", db: str = "d") -> str:
+    """floor(1e6 · integer cosine) of rows `a` and `b` — ``_ci_expr``'s
+    SQL twin."""
+    return f"""CAST(floor(
+               CAST(list_sum(list_transform(range(1, len({a}.{qa}) + 1),
+                    i -> {a}.{qa}[i] * {b}.{qb}[i])) AS BIGINT)
+               / sqrt(CAST({a}.{da} * {b}.{db} AS DOUBLE)) * 1e6) AS BIGINT)"""
+
+
+def _quant_sql(base: str = "embeddings") -> str:
+    """``_margin_quant``'s SQL twin: ``q`` (vec_id, qv) floor(x·2¹⁰)
+    integer vectors of `base`, ``n`` (vec_id, qv, d) with the exact
+    squared norm."""
+    return f"""q AS (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
                             x -> CAST(floor(x * 1024.0) AS BIGINT)) AS qv
-      FROM embeddings
+      FROM {base}
     ),
     n AS (
       SELECT vec_id, qv,
              CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS d
       FROM q
-    ),
-    p AS (
-      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-             CAST(floor(
-               CAST(list_sum(list_transform(range(1, len(a.qv) + 1),
-                    i -> a.qv[i] * b.qv[i])) AS BIGINT)
-               / sqrt(CAST(a.d * b.d AS DOUBLE)) * 1e6) AS BIGINT) AS ci
-      FROM n a JOIN n b
-        ON a.vec_id % 2 = 0 AND b.vec_id % 2 = 1
-       AND a.d > 0 AND b.d > 0
-    ),
-    r AS (
+    )"""
+
+
+def _dense_cent_sql(lo: int, ncells: int) -> str:
+    """``_dense_cells``'s SQL twin: ``cent`` (cid, cqv, cd), dense
+    0-based ids over the nonzero quantized vectors [lo, lo + ncells)."""
+    return f"""cent AS (
+      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
+             qv AS cqv, d AS cd
+      FROM n WHERE vec_id >= {lo} AND vec_id < {lo + ncells} AND d > 0
+    )"""
+
+
+def _mined_sql(p: str, pairs: str) -> str:
+    """``_margin_from_pairs``'s SQL twin over the pair CTE `pairs`
+    (src_id, tgt_id, ci): ``{p}r`` ranks each pair on both sides,
+    ``{p}sa``/``{p}sb`` sum each side's top-k, and ``{p}m`` holds the
+    pinned margins at or above the threshold."""
+    k, tk = _MARGIN_K, float(2 * _MARGIN_K)
+    mg = f"floor((r.ci * {tk}) / (sa.s + sb.s) * 1e6 + 0.5) / 1e6"
+    return f"""{p}r AS MATERIALIZED (
       SELECT src_id, tgt_id, ci,
              row_number() OVER (PARTITION BY src_id
                                 ORDER BY ci DESC, tgt_id) AS ra,
              row_number() OVER (PARTITION BY tgt_id
                                 ORDER BY ci DESC, src_id) AS rb
-      FROM p
+      FROM {pairs}
     ),
-    sa AS (SELECT src_id, CAST(sum(ci) AS BIGINT) AS s FROM r
-           WHERE ra <= {k} GROUP BY src_id),
-    sb AS (SELECT tgt_id, CAST(sum(ci) AS BIGINT) AS s FROM r
-           WHERE rb <= {k} GROUP BY tgt_id)
-    SELECT r.src_id, r.tgt_id,
-           floor((r.ci * {float(2 * k)}) / (sa.s + sb.s) * 1e6 + 0.5)
-             / 1e6 AS margin
-    FROM r JOIN sa ON r.src_id = sa.src_id
-           JOIN sb ON r.tgt_id = sb.tgt_id
-    WHERE r.ra <= {k} AND sa.s + sb.s > 0
-      AND floor((r.ci * {float(2 * k)}) / (sa.s + sb.s) * 1e6 + 0.5)
-            / 1e6 >= {t}
+    {p}sa AS (SELECT src_id, CAST(sum(ci) AS BIGINT) AS s FROM {p}r
+              WHERE ra <= {k} GROUP BY src_id),
+    {p}sb AS (SELECT tgt_id, CAST(sum(ci) AS BIGINT) AS s FROM {p}r
+              WHERE rb <= {k} GROUP BY tgt_id),
+    {p}m AS (
+      SELECT r.src_id, r.tgt_id, {mg} AS margin
+      FROM {p}r r JOIN {p}sa sa ON r.src_id = sa.src_id
+                  JOIN {p}sb sb ON r.tgt_id = sb.tgt_id
+      WHERE r.ra <= {k} AND sa.s + sb.s > 0 AND {mg} >= {_MARGIN_T}
+    )"""
+
+
+def _margin_sql(exact: bool = False, banded: bool = False,
+                dedup: bool = False) -> str:
+    """The margin-mining oracles over the even (src) and odd (tgt)
+    embedding halves: `exact` all-pairs mining (q177), `banded`
+    IVF-cell mining over the injected codebook (q268), both = q250's
+    per-pair full-outer certificate; `dedup` mines the
+    exact-vector-deduplicated set (q329)."""
+    ctes = []
+    base = "embeddings"
+    if dedup:
+        ctes.append("""dd AS (
+      SELECT min(vec_id) AS vec_id, embedding
+      FROM embeddings GROUP BY embedding
+    )""")
+        base = "dd"
+    ctes += [_quant_sql(base),
+             "s AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 0 AND d > 0)",
+             "tt AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 1 AND d > 0)"]
+    pair = _ci_sql("a", "b")
+    if exact:
+        ctes += [f"""fp AS MATERIALIZED (
+      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id, {pair} AS ci
+      FROM s a JOIN tt b ON TRUE
+    )""", _mined_sql("f", "fp")]
+    if banded:
+        def cells(side: str, keep: str) -> str:
+            # each side row's cells by integer cosine, ties to lower cid
+            return f"""SELECT vec_id, qv, d, cid FROM (
+        SELECT v.vec_id, v.qv, v.d, c.cid,
+               row_number() OVER (PARTITION BY v.vec_id
+                 ORDER BY {_ci_sql("v", "c", qb="cqv", db="cd")} DESC,
+                          c.cid) AS rk
+        FROM {side} v, cent c
+      ) WHERE rk {keep}"""
+
+        ctes += [_dense_cent_sql(_MARGIN_IVF_LO, _MARGIN_IVF_CELLS),
+                 f"sprobes AS ({cells('s', f'<= {_MARGIN_IVF_PROBE}')})",
+                 f"tcells AS ({cells('tt', '= 1')})",
+                 f"""ap AS MATERIALIZED (
+      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id, {pair} AS ci
+      FROM sprobes a JOIN tcells b ON a.cid = b.cid
+    )""", _mined_sql("a", "ap")]
+    if exact and banded:
+        out = """
+    SELECT coalesce(f.src_id, a.src_id) AS src_id,
+           coalesce(f.tgt_id, a.tgt_id) AS tgt_id,
+           f.margin AS margin_full, a.margin AS margin_ann,
+           CASE WHEN f.margin IS NOT NULL AND a.margin IS NOT NULL THEN
+             floor(abs(a.margin - f.margin) * 1e6 + 0.5) / 1e6
+           END AS err
+    FROM fm f FULL JOIN am a
+      ON f.src_id = a.src_id AND f.tgt_id = a.tgt_id
     """
+    else:
+        out = f"""
+    SELECT src_id, tgt_id, margin FROM {"f" if exact else "a"}m
+    """
+    return "\n    WITH " + ",\n    ".join(ctes) + out
 
 
-@query("q177_margin_mining", oracle=_margin_oracle())
+@query("q177_margin_mining", oracle=_margin_sql(exact=True))
 def q177_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mine aligned pairs between the even-id and odd-id halves of the
     embedding table (a stand-in for two languages' encoder outputs):
@@ -2005,115 +2100,7 @@ def q177_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return margin_mine_pairs(src, tgt, "vec_id", "embedding")
 
 
-def _margin_scaled_oracle() -> str:
-    k, t = _MARGIN_K, _MARGIN_T
-    lo, hi = _MARGIN_IVF_LO, _MARGIN_IVF_LO + _MARGIN_IVF_CELLS
-    nprobe = _MARGIN_IVF_PROBE
-    cci = """CAST(floor(
-               CAST(list_sum(list_transform(range(1, len({v}.qv) + 1),
-                    i -> {v}.qv[i] * c.cqv[i])) AS BIGINT)
-               / sqrt(CAST({v}.d * c.cd AS DOUBLE)) * 1e6) AS BIGINT)"""
-    mined = """
-      SELECT r.src_id, r.tgt_id,
-             floor((r.ci * {tk}) / (sa.s + sb.s) * 1e6 + 0.5)
-               / 1e6 AS margin
-      FROM {r} r JOIN {sa} sa ON r.src_id = sa.src_id
-                 JOIN {sb} sb ON r.tgt_id = sb.tgt_id
-      WHERE r.ra <= {k} AND sa.s + sb.s > 0
-        AND floor((r.ci * {tk}) / (sa.s + sb.s) * 1e6 + 0.5)
-              / 1e6 >= {t}
-    """
-    return f"""
-    WITH q AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(floor(x * 1024.0) AS BIGINT)) AS qv
-      FROM embeddings
-    ),
-    n AS (
-      SELECT vec_id, qv,
-             CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS d
-      FROM q
-    ),
-    s AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 0 AND d > 0),
-    tt AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 1 AND d > 0),
-    cent AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-             qv AS cqv, d AS cd
-      FROM n WHERE vec_id >= {lo} AND vec_id < {hi} AND d > 0
-    ),
-    pf AS MATERIALIZED (
-      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-             CAST(floor(
-               CAST(list_sum(list_transform(range(1, len(a.qv) + 1),
-                    i -> a.qv[i] * b.qv[i])) AS BIGINT)
-               / sqrt(CAST(a.d * b.d AS DOUBLE)) * 1e6) AS BIGINT) AS ci
-      FROM s a JOIN tt b ON TRUE
-    ),
-    rf AS MATERIALIZED (
-      SELECT src_id, tgt_id, ci,
-             row_number() OVER (PARTITION BY src_id
-                                ORDER BY ci DESC, tgt_id) AS ra,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS rb
-      FROM pf
-    ),
-    saf AS (SELECT src_id, CAST(sum(ci) AS BIGINT) AS s FROM rf
-            WHERE ra <= {k} GROUP BY src_id),
-    sbf AS (SELECT tgt_id, CAST(sum(ci) AS BIGINT) AS s FROM rf
-            WHERE rb <= {k} GROUP BY tgt_id),
-    mf AS ({mined.format(tk=float(2 * k), r="rf", sa="saf", sb="sbf",
-                         k=k, t=t)}),
-    sasg AS (
-      SELECT a.vec_id, a.qv, a.d, c.cid,
-             row_number() OVER (PARTITION BY a.vec_id
-                                ORDER BY {cci.format(v="a")} DESC,
-                                         c.cid) AS rk
-      FROM s a, cent c
-    ),
-    sprobes AS (SELECT vec_id, qv, d, cid FROM sasg WHERE rk <= {nprobe}),
-    tasg AS (
-      SELECT b.vec_id, b.qv, b.d, c.cid,
-             row_number() OVER (PARTITION BY b.vec_id
-                                ORDER BY {cci.format(v="b")} DESC,
-                                         c.cid) AS rk
-      FROM tt b, cent c
-    ),
-    tcells AS (SELECT vec_id, qv, d, cid FROM tasg WHERE rk = 1),
-    pa AS MATERIALIZED (
-      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-             CAST(floor(
-               CAST(list_sum(list_transform(range(1, len(a.qv) + 1),
-                    i -> a.qv[i] * b.qv[i])) AS BIGINT)
-               / sqrt(CAST(a.d * b.d AS DOUBLE)) * 1e6) AS BIGINT) AS ci
-      FROM sprobes a JOIN tcells b ON a.cid = b.cid
-    ),
-    ra AS MATERIALIZED (
-      SELECT src_id, tgt_id, ci,
-             row_number() OVER (PARTITION BY src_id
-                                ORDER BY ci DESC, tgt_id) AS ra,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS rb
-      FROM pa
-    ),
-    saa AS (SELECT src_id, CAST(sum(ci) AS BIGINT) AS s FROM ra
-            WHERE ra.ra <= {k} GROUP BY src_id),
-    sba AS (SELECT tgt_id, CAST(sum(ci) AS BIGINT) AS s FROM ra
-            WHERE ra.rb <= {k} GROUP BY tgt_id),
-    ma AS ({mined.format(tk=float(2 * k), r="ra", sa="saa", sb="sba",
-                         k=k, t=t)})
-    SELECT coalesce(f.src_id, a.src_id) AS src_id,
-           coalesce(f.tgt_id, a.tgt_id) AS tgt_id,
-           f.margin AS margin_full, a.margin AS margin_ann,
-           CASE WHEN f.margin IS NOT NULL AND a.margin IS NOT NULL THEN
-             floor(abs(a.margin - f.margin) * 1e6 + 0.5) / 1e6
-           END AS err
-    FROM mf f FULL JOIN ma a
-      ON f.src_id = a.src_id AND f.tgt_id = a.tgt_id
-    """
-
-
-@query("q250_margin_mining_scaled", oracle=_margin_scaled_oracle())
+@query("q250_margin_mining_scaled", oracle=_margin_sql(exact=True, banded=True))
 def q250_margin_mining_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF-banded margin-mining scale path WITH its accuracy
     certificate (the q231 pattern): mine the even/odd embedding halves
@@ -2243,85 +2230,7 @@ def q267_margin_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "floor_agreement double, floor_ok boolean")
 
 
-def _margin_banded_oracle(base: str = "embeddings") -> str:
-    """The banded branch of ``_margin_scaled_oracle`` alone — the
-    production plan, without the certificate's exact side.  ``base``
-    lets the fused dedup-first pipeline (q329) point the same oracle
-    at a deduplicated CTE."""
-    k, t = _MARGIN_K, _MARGIN_T
-    lo, hi = _MARGIN_IVF_LO, _MARGIN_IVF_LO + _MARGIN_IVF_CELLS
-    nprobe = _MARGIN_IVF_PROBE
-    cci = """CAST(floor(
-               CAST(list_sum(list_transform(range(1, len({v}.qv) + 1),
-                    i -> {v}.qv[i] * c.cqv[i])) AS BIGINT)
-               / sqrt(CAST({v}.d * c.cd AS DOUBLE)) * 1e6) AS BIGINT)"""
-    return f"""
-    WITH q AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(floor(x * 1024.0) AS BIGINT)) AS qv
-      FROM {base}
-    ),
-    n AS (
-      SELECT vec_id, qv,
-             CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS d
-      FROM q
-    ),
-    s AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 0 AND d > 0),
-    tt AS (SELECT vec_id, qv, d FROM n WHERE vec_id % 2 = 1 AND d > 0),
-    cent AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-             qv AS cqv, d AS cd
-      FROM n WHERE vec_id >= {lo} AND vec_id < {hi} AND d > 0
-    ),
-    sasg AS (
-      SELECT a.vec_id, a.qv, a.d, c.cid,
-             row_number() OVER (PARTITION BY a.vec_id
-                                ORDER BY {cci.format(v="a")} DESC,
-                                         c.cid) AS rk
-      FROM s a, cent c
-    ),
-    sprobes AS (SELECT vec_id, qv, d, cid FROM sasg WHERE rk <= {nprobe}),
-    tasg AS (
-      SELECT b.vec_id, b.qv, b.d, c.cid,
-             row_number() OVER (PARTITION BY b.vec_id
-                                ORDER BY {cci.format(v="b")} DESC,
-                                         c.cid) AS rk
-      FROM tt b, cent c
-    ),
-    tcells AS (SELECT vec_id, qv, d, cid FROM tasg WHERE rk = 1),
-    pa AS MATERIALIZED (
-      SELECT a.vec_id AS src_id, b.vec_id AS tgt_id,
-             CAST(floor(
-               CAST(list_sum(list_transform(range(1, len(a.qv) + 1),
-                    i -> a.qv[i] * b.qv[i])) AS BIGINT)
-               / sqrt(CAST(a.d * b.d AS DOUBLE)) * 1e6) AS BIGINT) AS ci
-      FROM sprobes a JOIN tcells b ON a.cid = b.cid
-    ),
-    ra AS MATERIALIZED (
-      SELECT src_id, tgt_id, ci,
-             row_number() OVER (PARTITION BY src_id
-                                ORDER BY ci DESC, tgt_id) AS ra,
-             row_number() OVER (PARTITION BY tgt_id
-                                ORDER BY ci DESC, src_id) AS rb
-      FROM pa
-    ),
-    saa AS (SELECT src_id, CAST(sum(ci) AS BIGINT) AS s FROM ra
-            WHERE ra.ra <= {k} GROUP BY src_id),
-    sba AS (SELECT tgt_id, CAST(sum(ci) AS BIGINT) AS s FROM ra
-            WHERE ra.rb <= {k} GROUP BY tgt_id)
-    SELECT r.src_id, r.tgt_id,
-           floor((r.ci * {float(2 * k)}) / (sa.s + sb.s) * 1e6 + 0.5)
-             / 1e6 AS margin
-    FROM ra r JOIN saa sa ON r.src_id = sa.src_id
-              JOIN sba sb ON r.tgt_id = sb.tgt_id
-    WHERE r.ra <= {k} AND sa.s + sb.s > 0
-      AND floor((r.ci * {float(2 * k)}) / (sa.s + sb.s) * 1e6 + 0.5)
-            / 1e6 >= {t}
-    """
-
-
-@query("q268_margin_banded", oracle=_margin_banded_oracle())
+@query("q268_margin_banded", oracle=_margin_sql(banded=True))
 def q268_margin_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded margin miner ALONE — the plan a 100 TB mining job
     actually runs (q250 keeps the full-vs-banded certificate; its
@@ -2363,17 +2272,7 @@ def exact_vector_dedup(emb: DataFrame, id_col: str,
             .select(id_col, vec_col))
 
 
-def _margin_dedup_oracle() -> str:
-    inner = _margin_banded_oracle(base="dd")
-    return inner.replace(
-        "WITH q AS (",
-        "WITH dd AS (\n"
-        "      SELECT min(vec_id) AS vec_id, embedding\n"
-        "      FROM embeddings GROUP BY embedding\n"
-        "    ),\n    q AS (", 1)
-
-
-@query("q329_dedup_then_margin", oracle=_margin_dedup_oracle())
+@query("q329_dedup_then_margin", oracle=_margin_sql(banded=True, dedup=True))
 def q329_dedup_then_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact vector dedup fused in front of the banded margin miner —
     q268 with the clone-collapse stage the 100x ladder proved
@@ -2510,30 +2409,13 @@ def ivf_append(base: DataFrame, delta: DataFrame, id_col: str, vec_col: str,
 
 
 def _ivf_append_oracle() -> str:
-    hi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-      SELECT vec_id - {_APPEND_IVF_LO} AS cid, v AS cv
-      FROM e WHERE vec_id >= {_APPEND_IVF_LO} AND vec_id < {hi}
-    ),
-    asg AS (
-      SELECT vec_id, cid, cos, vec_id < {_APPEND_DELTA_HI} AS is_delta
-      FROM (
-        SELECT e.vec_id, c.cid,
-               list_cosine_similarity(e.v, c.cv) AS cos,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c
-      ) WHERE rk = 1
-    ),
+    WITH {_E_SQL},
+    {_cells_sql(_APPEND_IVF_LO, _IVF_TWIN_CELLS)},
     r AS (
-      SELECT cid, is_delta,
+      SELECT cid, vec_id < {_APPEND_DELTA_HI} AS is_delta,
              1000000 - CAST(floor(cos * 1e6 + 0.5) AS BIGINT) AS res_ppm
-      FROM asg
+      FROM cr WHERE rk = 1
     ),
     agg AS (
       SELECT cid,
@@ -2579,16 +2461,8 @@ def q215_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces them (the q144 twin contract). Every certificate
     value — occupancy, ppm residual means, share shift, retrain flag —
     is integer-exact and value-hash-checked."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
-    rows = (
-        emb.filter((F.col("vec_id") >= _APPEND_IVF_LO) &
-                   (F.col("vec_id") < hi))
-        .orderBy("vec_id").select("embedding").collect()
-    )
-    cents = np.array([r[0] for r in rows], dtype=np.float64)
+    cents = _injected_rows(emb, _APPEND_IVF_LO, _IVF_TWIN_CELLS)
     base = emb.filter(F.col("vec_id") >= _APPEND_DELTA_HI)
     delta = emb.filter(F.col("vec_id") < _APPEND_DELTA_HI)
     _, cert = ivf_append(base, delta, "vec_id", "embedding", cents)
@@ -2691,46 +2565,13 @@ def pq_append(base: DataFrame, delta: DataFrame, id_col: str, vec_col: str,
 
 
 def _pq_append_oracle() -> str:
-    hi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    nsub, sd = _PQ_NSUB, 64 // _PQ_NSUB
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    nrm AS (
-      SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, y -> y * y))) AS n FROM e
-    ),
-    un AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / CASE WHEN n = 0 THEN 1 ELSE n END)
-               AS uv
-      FROM nrm
-    ),
-    cb AS (
-      SELECT vec_id - {_APPEND_PQ_LO} AS j, uv AS cv
-      FROM un WHERE vec_id >= {_APPEND_PQ_LO} AND vec_id < {hi}
-    ),
-    subs AS (SELECT unnest(generate_series(0, {nsub - 1})) AS s),
-    asg AS (
-      SELECT vec_id, s, j, d, vec_id < {_APPEND_DELTA_HI} AS is_delta
-      FROM (
-        SELECT n.vec_id, subs.s, c.j,
-               list_distance(
-                  n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                  c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ** 2 AS d,
-               row_number() OVER (PARTITION BY n.vec_id, subs.s
-                 ORDER BY list_distance(
-                    n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                    c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ASC,
-                    c.j) AS rk
-        FROM un n, subs, cb c
-      ) WHERE rk = 1
-    ),
+    WITH {_E_SQL},
+    {_pq_sql(_APPEND_PQ_LO, _APPEND_PQ_KSUB)},
     r AS (
-      SELECT s, j, is_delta,
+      SELECT s, j, vec_id < {_APPEND_DELTA_HI} AS is_delta,
              CAST(floor(d * 1e6 + 0.5) AS BIGINT) AS err_ppm
-      FROM asg
+      FROM codes
     ),
     agg AS (
       SELECT s, j,
@@ -2780,18 +2621,8 @@ def q216_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift certificate is emitted. Occupancies, ppm quantization-error
     means, share shifts, and retrain flags all integer-exact and
     value-hash-checked."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    hi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    rows = (
-        emb.filter((F.col("vec_id") >= _APPEND_PQ_LO) &
-                   (F.col("vec_id") < hi))
-        .orderBy("vec_id").select("embedding").collect()
-    )
-    seeds = np.array([r[0] for r in rows], dtype=np.float64)
-    seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
-    books = seeds.reshape(len(seeds), _PQ_NSUB, -1).transpose(1, 0, 2).copy()
+    books = _injected_books(emb, _APPEND_PQ_LO, _APPEND_PQ_KSUB)
     base = emb.filter(F.col("vec_id") >= _APPEND_DELTA_HI)
     delta = emb.filter(F.col("vec_id") < _APPEND_DELTA_HI)
     _, cert = pq_append(base, delta, "vec_id", "embedding", books)
@@ -2869,15 +2700,10 @@ def ivfpq_store(index: DataFrame, path: str) -> None:
     pruning: a query batch probing nprobe of ncells reads nprobe
     directories of code bytes and nothing else (the q221 data-skipping
     claim, realized for ANN; tests/test_similarity.py measures it on
-    the physical plan)."""
+    the physical plan). Read it back with ``spark.read.parquet``:
+    `cell` is the partition column, so downstream isin filters prune
+    directories at plan time."""
     index.write.partitionBy("cell").mode("overwrite").parquet(path)
-
-
-def ivfpq_load(spark: SparkSession, path: str) -> DataFrame:
-    """Read a stored composed index back; `cell` is the partition
-    column, so downstream isin filters prune directories at plan
-    time."""
-    return spark.read.parquet(path)
 
 
 def cosine_topk_ivfpq(corpus: DataFrame, queries_df: DataFrame,
@@ -2888,121 +2714,28 @@ def cosine_topk_ivfpq(corpus: DataFrame, queries_df: DataFrame,
                       centroids=None, codebooks=None, index=None,
                       round_to: int = 6) -> DataFrame:
     """IVF-PQ ANN: probe nprobe cells, ADC-rank the probed cells'
-    CODES, exact-rescore only the top refine·k candidates.
-
-    Per query the kernel scores ONLY rows whose cell is in that
-    query's probe set — the cell mask is the compressed-domain
-    analogue of partition pruning (and becomes literal partition
-    pruning when the index is stored partitioned by cell). Scores are
-    the same gather-sum ADC as ``cosine_topk_pq`` (LUT[s, code_s]
-    sums, never raw vectors), candidates pre-top per batch within one
-    10^-round_to grid step of the cutoff so the batch cut is a pure
-    optimization under the global (round(approx) DESC, id) ranking,
-    and the exact rescore touches raw vectors for refine·k rows per
-    query only. Driver state: queries (a bounded batch by contract),
-    the LUT (nq·nsub·ksub floats), and the probe table (nq·nprobe
-    ints)."""
+    CODES, exact-rescore only the top refine·k candidates
+    (``_adc_refine`` with the unit centroids: each query scores only
+    rows whose cell is in its probe set). `index` is a stored
+    (id, cell, codes) frame from ``ivfpq_encode``/``ivfpq_store``."""
     import numpy as np
 
     if centroids is None or codebooks is None:
         head = corpus.select(vec_col).first()
         if head is None or head[0] is None:
-            return corpus.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, rank int, "
-                    "cosine double")
+            return _no_neighbors(corpus)
     if centroids is None:
         centroids = _ivf_train(corpus, vec_col, ncells, iters)
     C = np.asarray(centroids, dtype=np.float64)
     cn = np.linalg.norm(C, axis=1, keepdims=True)
     cn[cn == 0] = 1.0
-    Cn = C / cn
     if codebooks is None:
         codebooks = _pq_train(corpus, vec_col, nsub, ksub, iters)
     B = np.asarray(codebooks, dtype=np.float64)
-    nsub = B.shape[0]
-
-    q_rows = (queries_df.select(F.col(id_col).alias("qid"),
-                                _as_double(F.col(vec_col)).alias("qv"))
-              .collect())
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double")
-    qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qu = qm / qn
-    qs = qu @ Cn.T
-    order = np.lexsort(
-        (np.broadcast_to(np.arange(Cn.shape[0]), qs.shape), -qs), axis=1)
-    probes = order[:, :nprobe].astype(np.int32)
-    subdim = qu.shape[1] // nsub
-    lut = np.einsum("qsd,sjd->qsj", qu.reshape(len(qu), nsub, subdim), B)
-    n_keep = refine * k
-
-    def adc_kernel(batches, L=lut, Q=qids, P=probes, keep=n_keep,
-                   rt=round_to):
-        import pandas as pd
-
-        grid = 10.0 ** (-rt)
-        srange = np.arange(L.shape[1])
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells = pdf["cell"].to_numpy()
-            ids = pdf["__id"].to_numpy()
-            for qi in range(len(Q)):
-                mask = np.isin(cells, P[qi]) & (ids != Q[qi])
-                if not mask.any():
-                    continue
-                im = ids[mask]
-                sm = L[qi, srange[None, :], codes[mask]].sum(axis=1)
-                # same rounded pre-top contract as cosine_topk_pq:
-                # half-up like F.round, plus one grid step of slack so
-                # the batch cut can never disagree with the global
-                # ranking
-                r = np.floor(sm * 10.0 ** rt + 0.5) / 10.0 ** rt
-                o = np.lexsort((im, -r))
-                if len(o) > keep:
-                    cutoff = r[o[keep - 1]]
-                    o = o[r[o] >= cutoff - grid]
-                yield pd.DataFrame({
-                    "query_id": np.full(len(o), Q[qi], dtype=np.int64),
-                    "neighbor_id": im[o],
-                    "approx": sm[o]})
-
     if index is None:
         index = ivfpq_encode(corpus, id_col, vec_col, C, B)
-    index = index.withColumnRenamed(id_col, "__id")
-    # plan-level probe filter: the kernel masks per query anyway, but
-    # pushing the UNION of probe cells into the scan turns a stored
-    # partitionBy("cell") index into literal partition pruning — only
-    # nprobe-ish directories are ever read
-    cells_needed = sorted({int(c) for c in probes.reshape(-1)})
-    index = index.filter(F.col("cell").isin(cells_needed))
-    scored = index.mapInPandas(
-        adc_kernel, "query_id long, neighbor_id long, approx double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("approx"), round_to).desc(), F.col("neighbor_id"))
-    cand = (scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= n_keep).drop("approx", "__rk"))
-    vecs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                         _as_double(F.col(vec_col)).alias("__nv"))
-    qdf = corpus.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in zip(qids, qm)],
-        "query_id long, __qv array<double>")
-    rescored = (cand.join(F.broadcast(qdf), "query_id")
-                .join(vecs, "neighbor_id")
-                .withColumn("cosine", cosine(F.col("__qv"),
-                                             F.col("__nv"))))
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id"))
-    return (rescored.withColumn("rank", F.row_number().over(wf))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id",
-                    F.col("rank").cast("int").alias("rank"),
-                    F.round("cosine", round_to).alias("cosine")))
+    return _adc_refine(corpus, queries_df, index, id_col, vec_col, k,
+                       refine, round_to, B, cents=C / cn, nprobe=nprobe)
 
 
 def ivfpq_append(base: DataFrame, delta: DataFrame, id_col: str,
@@ -3140,101 +2873,17 @@ def ivfpq_append(base: DataFrame, delta: DataFrame, id_col: str,
 
 
 def _ivfpq_search_oracle() -> str:
-    chi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
-    bhi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    nsub, sd = _PQ_NSUB, 64 // _PQ_NSUB
-    keep = _PQ_TWIN_REFINE * _TOP_K
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-      SELECT vec_id - {_APPEND_IVF_LO} AS cid, v AS cv
-      FROM e WHERE vec_id >= {_APPEND_IVF_LO} AND vec_id < {chi}
-    ),
-    ca AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c
-      ) WHERE rk = 1
-    ),
-    nrm AS (
-      SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, y -> y * y))) AS n FROM e
-    ),
-    un AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / CASE WHEN n = 0 THEN 1 ELSE n END)
-               AS uv
-      FROM nrm
-    ),
-    cb AS (
-      SELECT vec_id - {_APPEND_PQ_LO} AS j, uv AS cv
-      FROM un WHERE vec_id >= {_APPEND_PQ_LO} AND vec_id < {bhi}
-    ),
-    subs AS (SELECT unnest(generate_series(0, {nsub - 1})) AS s),
-    codes AS (
-      SELECT vec_id, s, j FROM (
-        SELECT n.vec_id, subs.s, c.j,
-               row_number() OVER (PARTITION BY n.vec_id, subs.s
-                 ORDER BY list_distance(
-                    n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                    c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ASC,
-                    c.j) AS rk
-        FROM un n, subs, cb c
-      ) WHERE rk = 1
-    ),
-    qa AS (
-      SELECT query_id, cid FROM (
-        SELECT e.vec_id AS query_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c WHERE e.vec_id < {_N_QUERIES}
-      ) WHERE rk <= {_IVF_TWIN_PROBE}
-    ),
-    qu AS (
-      SELECT vec_id AS query_id, uv AS quv FROM un
-      WHERE vec_id < {_N_QUERIES}
-    ),
+    WITH {_E_SQL},
+    {_cells_sql(_APPEND_IVF_LO, _IVF_TWIN_CELLS)},
+    {_pq_sql(_APPEND_PQ_LO, _APPEND_PQ_KSUB)},
     cand AS (
-      SELECT qa.query_id, ca.vec_id AS neighbor_id
-      FROM qa JOIN ca ON ca.cid = qa.cid
-      WHERE ca.vec_id != qa.query_id
+      SELECT qa.vec_id AS query_id, ca.vec_id AS neighbor_id
+      FROM cr qa JOIN cr ca ON ca.cid = qa.cid
+      WHERE qa.vec_id < {_N_QUERIES} AND qa.rk <= {_IVF_TWIN_PROBE}
+        AND ca.rk = 1 AND ca.vec_id != qa.vec_id
     ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             ROUND(sum(list_inner_product(
-               q.quv[codes.s * {sd} + 1 : codes.s * {sd} + {sd}],
-               b.cv[codes.s * {sd} + 1 : codes.s * {sd} + {sd}])), 6)
-               AS approx
-      FROM cand c
-      JOIN qu q ON q.query_id = c.query_id
-      JOIN codes ON codes.vec_id = c.neighbor_id
-      JOIN cb b ON codes.j = b.j
-      GROUP BY 1, 2
-    ),
-    topc AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx DESC, neighbor_id) AS rk
-        FROM adc
-      ) WHERE rk <= {keep}
-    )
-    SELECT c.query_id, c.neighbor_id,
-           CAST(row_number() OVER (PARTITION BY c.query_id
-             ORDER BY list_cosine_similarity(a.v, b.v) DESC,
-                      c.neighbor_id) AS INT) AS rank,
-           ROUND(list_cosine_similarity(a.v, b.v), 6) AS cosine
-    FROM topc c
-    JOIN e a ON a.vec_id = c.query_id
-    JOIN e b ON b.vec_id = c.neighbor_id
-    QUALIFY rank <= {_TOP_K}
-    """
+    {_adc_sql()}"""
 
 
 @query("q233_ivfpq_search", oracle=_ivfpq_search_oracle())
@@ -3247,21 +2896,9 @@ def q233_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors [120, 136) (the q160/q216 contract). Every rank and cosine
     value-hash-checked; ADC scores round to 6 before ranking on both
     sides, so candidate selection tolerates summation-order ulps."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    chi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
-    crows = (emb.filter((F.col("vec_id") >= _APPEND_IVF_LO) &
-                        (F.col("vec_id") < chi))
-             .orderBy("vec_id").select("embedding").collect())
-    cents = np.array([r[0] for r in crows], dtype=np.float64)
-    bhi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    brows = (emb.filter((F.col("vec_id") >= _APPEND_PQ_LO) &
-                        (F.col("vec_id") < bhi))
-             .orderBy("vec_id").select("embedding").collect())
-    seeds = np.array([r[0] for r in brows], dtype=np.float64)
-    seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
-    books = seeds.reshape(len(seeds), _PQ_NSUB, -1).transpose(1, 0, 2).copy()
+    cents = _injected_rows(emb, _APPEND_IVF_LO, _IVF_TWIN_CELLS)
+    books = _injected_books(emb, _APPEND_PQ_LO, _APPEND_PQ_KSUB)
     queries_df = emb.filter(F.col("vec_id") < _N_QUERIES)
     return cosine_topk_ivfpq(
         emb, queries_df, "vec_id", "embedding", _TOP_K,
@@ -3270,62 +2907,19 @@ def q233_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_append_oracle() -> str:
-    chi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
-    bhi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    nsub, sd = _PQ_NSUB, 64 // _PQ_NSUB
     return f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    cent AS (
-      SELECT vec_id - {_APPEND_IVF_LO} AS cid, v AS cv
-      FROM e WHERE vec_id >= {_APPEND_IVF_LO} AND vec_id < {chi}
-    ),
+    WITH {_E_SQL},
+    {_cells_sql(_APPEND_IVF_LO, _IVF_TWIN_CELLS)},
     ca AS (
       SELECT vec_id, cid, cos, vec_id < {_APPEND_DELTA_HI} AS is_delta
-      FROM (
-        SELECT e.vec_id, c.cid,
-               list_cosine_similarity(e.v, c.cv) AS cos,
-               row_number() OVER (PARTITION BY e.vec_id
-                    ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid)
-                 AS rk
-        FROM e, cent c
-      ) WHERE rk = 1
+      FROM cr WHERE rk = 1
     ),
-    nrm AS (
-      SELECT vec_id, v,
-             sqrt(list_sum(list_transform(v, y -> y * y))) AS n FROM e
-    ),
-    un AS (
-      SELECT vec_id,
-             list_transform(v, x -> x / CASE WHEN n = 0 THEN 1 ELSE n END)
-               AS uv
-      FROM nrm
-    ),
-    cb AS (
-      SELECT vec_id - {_APPEND_PQ_LO} AS j, uv AS cv
-      FROM un WHERE vec_id >= {_APPEND_PQ_LO} AND vec_id < {bhi}
-    ),
-    subs AS (SELECT unnest(generate_series(0, {nsub - 1})) AS s),
-    pqa AS (
-      SELECT vec_id, s, d FROM (
-        SELECT n.vec_id, subs.s,
-               list_distance(
-                  n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                  c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ** 2 AS d,
-               row_number() OVER (PARTITION BY n.vec_id, subs.s
-                 ORDER BY list_distance(
-                    n.uv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}],
-                    c.cv[subs.s * {sd} + 1 : subs.s * {sd} + {sd}]) ASC,
-                    c.j) AS rk
-        FROM un n, subs, cb c
-      ) WHERE rk = 1
-    ),
+    {_pq_sql(_APPEND_PQ_LO, _APPEND_PQ_KSUB)},
     errv AS (
       SELECT vec_id,
              CAST(sum(CAST(floor(d * 1e6 + 0.5) AS BIGINT)) AS BIGINT)
                AS err_ppm
-      FROM pqa GROUP BY vec_id
+      FROM codes GROUP BY vec_id
     ),
     r AS (
       SELECT ca.cid, ca.is_delta,
@@ -3388,21 +2982,9 @@ def q234_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual (coarse quantizer) and total PQ quantization error (fine
     quantizer) — plus occupancy share shift and the retrain gate.
     Every value integer-exact and value-hash-checked."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    chi = _APPEND_IVF_LO + _IVF_TWIN_CELLS
-    crows = (emb.filter((F.col("vec_id") >= _APPEND_IVF_LO) &
-                        (F.col("vec_id") < chi))
-             .orderBy("vec_id").select("embedding").collect())
-    cents = np.array([r[0] for r in crows], dtype=np.float64)
-    bhi = _APPEND_PQ_LO + _APPEND_PQ_KSUB
-    brows = (emb.filter((F.col("vec_id") >= _APPEND_PQ_LO) &
-                        (F.col("vec_id") < bhi))
-             .orderBy("vec_id").select("embedding").collect())
-    seeds = np.array([r[0] for r in brows], dtype=np.float64)
-    seeds /= np.linalg.norm(seeds, axis=1, keepdims=True)
-    books = seeds.reshape(len(seeds), _PQ_NSUB, -1).transpose(1, 0, 2).copy()
+    cents = _injected_rows(emb, _APPEND_IVF_LO, _IVF_TWIN_CELLS)
+    books = _injected_books(emb, _APPEND_PQ_LO, _APPEND_PQ_KSUB)
     base = emb.filter(F.col("vec_id") >= _APPEND_DELTA_HI)
     delta = emb.filter(F.col("vec_id") < _APPEND_DELTA_HI)
     _, cert = ivfpq_append(base, delta, "vec_id", "embedding",
@@ -3437,24 +3019,25 @@ def _ci_expr(q1: str, d1: str, q2: str, d2: str) -> Column:
         * F.lit(1e6)).cast("long")
 
 
-def ivf_coarse_assign(vectors: DataFrame, centroids: DataFrame,
-                      id_col: str, vec_col: str, stride: int = 8,
-                      nprobe_super: int = 2,
-                      nprobe: int = _MARGIN_IVF_PROBE) -> DataFrame:
-    """(vec id, cid, ci, rank): each vector's top-`nprobe` cells among
-    the centroids reachable through its `nprobe_super` nearest
-    super-centroids (every stride-th centroid by dense cid).  The
-    routing can miss a true nearest cell when quantization disagrees
-    across levels — the documented recall trade every coarse
-    quantizer makes; tests/probes measure the agreement.  Zero-norm
-    vectors and centroids are dropped (the _margin_quant contract)."""
-    if stride < 1:
-        raise ValueError("stride must be >= 1")
-    a = _margin_quant(vectors, id_col, vec_col, "__vid", "__qa", "__da")
-    c = _margin_quant(centroids, id_col, vec_col, "__cid",
-                      "__qb", "__db")
-    c = c.withColumn(
+def _dense_cells(centroids: DataFrame, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """(__cid, __qb, __db): the quantized centroid frame with dense
+    0-based cell ids in centroid-id order (zero norms dropped)."""
+    c = _margin_quant(centroids, id_col, vec_col, "__cid", "__qb", "__db")
+    return c.withColumn(
         "__cid", F.row_number().over(Window.orderBy("__cid")) - 1)
+
+
+def _coarse_route(v: DataFrame, c: DataFrame, out_id: str, qname: str,
+                  dname: str, stride: int, nprobe_super: int,
+                  nprobe: int) -> DataFrame:
+    """Two-level routing of a quantized frame `v` (out_id, qname,
+    dname) through the dense-cid centroid frame `c` (__cid, __qb,
+    __db): (out_id, qname, dname, __cid, __ci, rank) for each vector's
+    top-`nprobe` cells among the centroids reachable through its
+    `nprobe_super` nearest super-centroids (every stride-th centroid).
+    `qname`/`dname` must not be __qb/__db, which name the centroid
+    side."""
     supers = (c.filter(F.col("__cid") % stride == 0)
               .select(F.col("__cid").alias("__sid"),
                       F.col("__qb").alias("__qs"),
@@ -3469,22 +3052,40 @@ def ivf_coarse_assign(vectors: DataFrame, centroids: DataFrame,
             .filter(F.col("__rk") == 1)
             .select("__cid", "__qb", "__db", "__sid"))
     # vector -> top nprobe_super supers (N x C/stride)
-    wv = Window.partitionBy("__vid").orderBy(
+    wv = Window.partitionBy(out_id).orderBy(
         F.desc("__vci"), F.asc("__sid"))
-    vsup = (a.crossJoin(F.broadcast(supers))
-            .withColumn("__vci", _ci_expr("__qa", "__da",
-                                          "__qs", "__ds"))
+    vsup = (v.crossJoin(F.broadcast(supers))
+            .withColumn("__vci", _ci_expr(qname, dname, "__qs", "__ds"))
             .withColumn("__rk", F.row_number().over(wv))
             .filter(F.col("__rk") <= nprobe_super)
-            .select("__vid", "__qa", "__da", "__sid"))
+            .select(out_id, qname, dname, "__sid"))
     # vector -> cells within its routed groups -> top nprobe
-    wc = Window.partitionBy("__vid").orderBy(
+    wc = Window.partitionBy(out_id).orderBy(
         F.desc("__ci"), F.asc("__cid"))
     return (vsup.join(F.broadcast(cmap), "__sid")
-            .withColumn("__ci", _ci_expr("__qa", "__da",
-                                         "__qb", "__db"))
+            .withColumn("__ci", _ci_expr(qname, dname, "__qb", "__db"))
             .withColumn("rank", F.row_number().over(wc))
-            .filter(F.col("rank") <= nprobe)
+            .filter(F.col("rank") <= nprobe))
+
+
+def ivf_coarse_assign(vectors: DataFrame, centroids: DataFrame,
+                      id_col: str, vec_col: str, stride: int = 8,
+                      nprobe_super: int = 2,
+                      nprobe: int = _MARGIN_IVF_PROBE) -> DataFrame:
+    """(vec id, cid, ci, rank): each vector's top-`nprobe` cells among
+    the centroids reachable through its `nprobe_super` nearest
+    super-centroids (every stride-th centroid by dense cid) — the
+    ``_coarse_route`` rows, projected.  The routing can miss a true
+    nearest cell when quantization disagrees across levels — the
+    documented recall trade every coarse quantizer makes; tests/probes
+    measure the agreement.  Zero-norm vectors and centroids are
+    dropped (the _margin_quant contract)."""
+    if stride < 1:
+        raise ValueError("stride must be >= 1")
+    a = _margin_quant(vectors, id_col, vec_col, "__vid", "__qa", "__da")
+    c = _dense_cells(centroids, id_col, vec_col)
+    return (_coarse_route(a, c, "__vid", "__qa", "__da", stride,
+                          nprobe_super, nprobe)
             .select(F.col("__vid").alias(id_col),
                     F.col("__cid").alias("cid"),
                     F.col("__ci").alias("ci"),
@@ -3499,34 +3100,13 @@ _COARSE_PROBE = 2
 
 
 def _coarse_oracle() -> str:
-    lo, hi = _COARSE_LO, _COARSE_LO + _COARSE_CELLS
-    ci = """CAST(floor(
-               CAST(list_sum(list_transform(range(1, len({a}.{qa}) + 1),
-                    i -> {a}.{qa}[i] * {b}.{qb}[i])) AS BIGINT)
-               / sqrt(CAST({a}.{da} * {b}.{db} AS DOUBLE)) * 1e6)
-             AS BIGINT)"""
-    vc = ci.format(a="v", qa="qv", da="d", b="s", qb="sqv", db="sd")
-    cc = ci.format(a="c", qa="cqv", da="cd", b="s", qb="sqv", db="sd")
-    xc = ci.format(a="v", qa="qv", da="d", b="m", qb="cqv", db="cd")
+    vc = _ci_sql("v", "s", qb="sqv", db="sd")
+    cc = _ci_sql("c", "s", qa="cqv", da="cd", qb="sqv", db="sd")
+    xc = _ci_sql("v", "m", qb="cqv", db="cd")
     return f"""
-    WITH q AS (
-      SELECT vec_id,
-             list_transform(CAST(embedding AS DOUBLE[]),
-                            x -> CAST(floor(x * 1024.0) AS BIGINT)) AS qv
-      FROM embeddings
-    ),
-    n AS (
-      SELECT vec_id, qv,
-             CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT)
-               AS d
-      FROM q
-    ),
+    WITH {_quant_sql()},
     v AS (SELECT vec_id, qv, d FROM n WHERE d > 0),
-    cent AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-             qv AS cqv, d AS cd
-      FROM n WHERE vec_id >= {lo} AND vec_id < {hi} AND d > 0
-    ),
+    {_dense_cent_sql(_COARSE_LO, _COARSE_CELLS)},
     sup AS (
       SELECT cid AS sid, cqv AS sqv, cd AS sd FROM cent
       WHERE cid % {_COARSE_STRIDE} = 0
@@ -3579,39 +3159,3 @@ def q327_ivf_coarse_assign(spark: SparkSession,
         nprobe_super=_COARSE_PSUPER, nprobe=_COARSE_PROBE)
     return out.select("vec_id", F.col("cid").cast("long").alias("cid"),
                       "ci", "rank")
-
-
-def _coarse_route(v: DataFrame, c: DataFrame, out_id: str, qname: str,
-                  dname: str, stride: int, nprobe_super: int,
-                  nprobe: int) -> DataFrame:
-    """Internal: two-level routing of a quantized frame `v`
-    (out_id, qname, dname) through dense-cid centroid frame `c`
-    (__cid, __qb, __db); returns (out_id, qname, dname, __cid) rows,
-    the shape margin_mine_pairs_banded's pair join expects."""
-    supers = (c.filter(F.col("__cid") % stride == 0)
-              .select(F.col("__cid").alias("__sid"),
-                      F.col("__qb").alias("__qs"),
-                      F.col("__db").alias("__ds")))
-    ws = Window.partitionBy("__cid").orderBy(
-        F.desc("__sci"), F.asc("__sid"))
-    cmap = (c.crossJoin(F.broadcast(supers))
-            .withColumn("__sci", _ci_expr("__qb", "__db",
-                                          "__qs", "__ds"))
-            .withColumn("__rk", F.row_number().over(ws))
-            .filter(F.col("__rk") == 1)
-            .select("__cid", F.col("__qb").alias("__qc"),
-                    F.col("__db").alias("__dc"), "__sid"))
-    wv = Window.partitionBy(out_id).orderBy(
-        F.desc("__vci"), F.asc("__sid"))
-    vsup = (v.crossJoin(F.broadcast(supers))
-            .withColumn("__vci", _ci_expr(qname, dname, "__qs", "__ds"))
-            .withColumn("__rk", F.row_number().over(wv))
-            .filter(F.col("__rk") <= nprobe_super)
-            .select(out_id, qname, dname, "__sid"))
-    wc = Window.partitionBy(out_id).orderBy(
-        F.desc("__ci"), F.asc("__cid"))
-    return (vsup.join(F.broadcast(cmap), "__sid")
-            .withColumn("__ci", _ci_expr(qname, dname, "__qc", "__dc"))
-            .withColumn("__rk", F.row_number().over(wc))
-            .filter(F.col("__rk") <= nprobe)
-            .select(out_id, qname, dname, "__cid"))

@@ -45,6 +45,7 @@ _RUNTIME_CONFS = {
 
 
 _TUNE_WARNED = False
+_SHIP_WARNED = False
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -81,7 +82,9 @@ def _ship_package(spark: SparkSession) -> None:
     notebook), the repo dir is only on the driver's sys.path — workers
     fail with ModuleNotFoundError. Shipping a zip via addPyFile puts the
     package on every executor's python path, exactly how the engine
-    would be deployed to a real cluster (--py-files).
+    would be deployed to a real cluster (--py-files). If shipping
+    fails, the first failure warns, naming the exception: driver-side
+    imports still work and only remote workers are affected.
     """
     sc = spark.sparkContext
     if getattr(sc, "_sparkgraft_pkg_shipped", False):
@@ -101,8 +104,15 @@ def _ship_package(spark: SparkSession) -> None:
             base_dir=os.path.basename(pkg_dir),
         )
         sc.addPyFile(zip_path)
-    except Exception:
-        pass  # driver-side import still works; only remote workers affected
+    except Exception as exc:
+        global _SHIP_WARNED
+        if not _SHIP_WARNED:
+            _SHIP_WARNED = True
+            warnings.warn(
+                "session._ship_package: package not shipped to the Python "
+                f"workers ({type(exc).__name__}: {exc}); kernels that run "
+                "on remote workers may fail with ModuleNotFoundError",
+                RuntimeWarning)
     sc._sparkgraft_pkg_shipped = True
 
 

@@ -29,6 +29,7 @@ from auto_ml_platform_with_timeseries_data_spark import registry  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.operators import (  # noqa: E402
     evaluation,
     forecast,
+    similarity,
     ts_features,
     validation,
 )
@@ -40,15 +41,17 @@ _NEW = (
     "q309_ses_forecast", "q310_holt_forecast",
 )
 # every oracle-backed query of the per-series forecast and
-# time-series-feature kernels, selected by module
-_SERIES_MODULES = (forecast.__name__, ts_features.__name__)
-_SERIES = tuple(
+# time-series-feature kernels and of the similarity family, selected by
+# module
+_GATED_MODULES = (forecast.__name__, ts_features.__name__,
+                  similarity.__name__)
+_GATED = tuple(
     name for name, fn in registry.queries().items()
-    if fn.__module__ in _SERIES_MODULES and name in registry.oracles()
+    if fn.__module__ in _GATED_MODULES and name in registry.oracles()
     and name not in _NEW)
 
 
-@pytest.mark.parametrize("name", _NEW + _SERIES)
+@pytest.mark.parametrize("name", _NEW + _GATED)
 def test_registered_oracle_gate(spark, sf_dir, name):
     """Driver-style compare: registered Spark query vs its registered
     DuckDB oracle on the same parquet tables."""

@@ -414,79 +414,3 @@ def test_croston_exact_on_regular_intermittent(spark):
     r2 = forecast.croston_forecast(
         short, "g", "t", F.col("v")).collect()[0]
     assert r2["m_demands"] == 8 and r2["rate"] is None
-
-
-# ---------------------------------------------------------------------------
-# Coarse (two-level) IVF routing — the assignment-quadratic fix
-# ---------------------------------------------------------------------------
-
-
-def test_coarse_route_agrees_with_flat_banded_margin(spark, sf_dir):
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        similarity,
-    )
-    from auto_ml_platform_with_timeseries_data_spark.tables import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 18))
-    src = emb.filter(F.col("vec_id") % 2 == 0)
-    tgt = emb.filter(F.col("vec_id") % 2 == 1)
-    flat = {(r["src_id"], r["tgt_id"]): r["margin"]
-            for r in similarity.margin_mine_pairs_banded(
-                src, tgt, cents, "vec_id", "embedding").collect()}
-    coarse = {(r["src_id"], r["tgt_id"]): r["margin"]
-              for r in similarity.margin_mine_pairs_banded(
-                  src, tgt, cents, "vec_id", "embedding",
-                  coarse_stride=4, nprobe_super=2).collect()}
-    # routing changes candidate COVERAGE, never the margin math:
-    # every pair both paths mine carries the identical pinned margin
-    shared = set(flat) & set(coarse)
-    assert shared, "coarse path mined nothing the flat path mined"
-    for p in shared:
-        assert flat[p] == pytest.approx(coarse[p], abs=1e-9)
-    # with 8 cells / stride 4 / 2 probed supers the route covers most
-    # of the flat candidates — recall floor documented by this gate
-    assert len(shared) >= 0.8 * len(flat)
-
-
-def test_ivf_coarse_assign_top1_matches_flat_argmax(spark, sf_dir):
-    import numpy as np
-
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        similarity,
-    )
-    from auto_ml_platform_with_timeseries_data_spark.tables import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 18))
-    routed = {r["vec_id"]: r["cid"]
-              for r in similarity.ivf_coarse_assign(
-                  emb, cents, "vec_id", "embedding", stride=2,
-                  nprobe_super=4, nprobe=1).collect()}
-    # stride=2 with ALL supers probed (4 of 4) covers every group ->
-    # the two-level route degenerates to flat: top-1 must equal the
-    # exact argmax for every vector
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-            for r in emb.collect()}
-    cvs = [(r["vec_id"], np.array(r["embedding"], dtype=np.float64))
-           for r in sorted(cents.collect(), key=lambda r: r["vec_id"])]
-    for vid, v in vecs.items():
-        qv = np.floor(v * 1024.0)
-        dv = float((qv * qv).sum())
-        if dv == 0:
-            continue
-        best, best_ci = None, None
-        for cid, (_, cv) in enumerate(cvs):
-            qc = np.floor(cv * 1024.0)
-            dc = float((qc * qc).sum())
-            if dc == 0:
-                continue
-            ci = math.floor(float((qv * qc).sum())
-                            / math.sqrt(dv * dc) * 1e6)
-            if best_ci is None or ci > best_ci:
-                best, best_ci = cid, ci
-        assert routed[vid] == best, f"vec {vid}: {routed[vid]} != {best}"

@@ -106,67 +106,6 @@ def test_hw_short_series_contract(spark):
 
 
 # ---------------------------------------------------------------------------
-# q329 — dedup-before-ANN fused pipeline
-
-
-def _clone_embeddings(spark, n_distinct: int = 40, copies: int = 5,
-                      dim: int = 8):
-    """n_distinct base vectors, each cloned `copies` times with clone
-    ids offset by 1000*c — the clone-degenerate staging shape the
-    round-12 100x ladder used."""
-    rows = []
-    for i in range(n_distinct):
-        # (31i + 7d) mod 97: the d=0 component alone is injective for
-        # i < 97, so the 40 base vectors are pairwise distinct
-        vec = [(float((i * 31 + d * 7) % 97) - 48.0) / 48.0
-               for d in range(dim)]
-        for c in range(copies):
-            rows.append((i + 1000 * c, vec))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_exact_vector_dedup_collapses_clone_families(spark):
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        similarity,
-    )
-
-    emb = _clone_embeddings(spark)
-    dd = similarity.exact_vector_dedup(emb, "vec_id", "embedding")
-    got = dd.collect()
-    assert len(got) == 40
-    # min-id canonical: every survivor is from copy 0 (ids < 1000)
-    assert all(r["vec_id"] < 1000 for r in got)
-
-
-def test_dedup_then_margin_equals_mining_the_distinct_set(spark):
-    """The fused pipeline on a clone-degenerate corpus must mine
-    exactly what the banded miner mines on the distinct set — the
-    executable form of 'exact dedup before ANN'."""
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        similarity,
-    )
-
-    emb = _clone_embeddings(spark)
-    dd = similarity.exact_vector_dedup(emb, "vec_id", "embedding")
-    distinct = emb.filter(F.col("vec_id") < 1000)
-
-    def mine(base):
-        src = base.filter(F.col("vec_id") % 2 == 0)
-        tgt = base.filter(F.col("vec_id") % 2 == 1)
-        cents = base.filter((F.col("vec_id") >= similarity._MARGIN_IVF_LO)
-                            & (F.col("vec_id") < similarity._MARGIN_IVF_LO
-                               + similarity._MARGIN_IVF_CELLS))
-        return similarity.margin_mine_pairs_banded(
-            src, tgt, cents, "vec_id", "embedding")
-
-    fused = {(r["src_id"], r["tgt_id"], r["margin"])
-             for r in mine(dd).collect()}
-    direct = {(r["src_id"], r["tgt_id"], r["margin"])
-              for r in mine(distinct).collect()}
-    assert fused == direct
-
-
-# ---------------------------------------------------------------------------
 # top-m cap on the perceptual delta screens
 
 

@@ -1,5 +1,6 @@
 """The session contract: the driver-memory default, every engine conf on
-the get_spark() session, and the warning when a conf does not apply."""
+the get_spark() session, and the warnings when a conf does not apply or
+the package cannot be shipped to the Python workers."""
 
 from __future__ import annotations
 
@@ -75,3 +76,24 @@ def test_tune_warns_once_naming_confs_that_did_not_apply(monkeypatch):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         session.tune(fake)
+
+
+class _NoShipContext:
+    def addPyFile(self, path):
+        raise OSError("disk full")
+
+
+def test_ship_package_warns_once_naming_the_exception(monkeypatch):
+    monkeypatch.setattr(session, "_SHIP_WARNED", False)
+    monkeypatch.delenv("SPARK_GRAFT_NO_SHIP", raising=False)
+    fake = SimpleNamespace(sparkContext=_NoShipContext())
+    with pytest.warns(RuntimeWarning) as got:
+        session._ship_package(fake)
+    assert len(got) == 1
+    assert "OSError: disk full" in str(got[0].message)
+    # marked as handled, so the same context is not retried
+    assert fake.sparkContext._sparkgraft_pkg_shipped
+    other = SimpleNamespace(sparkContext=_NoShipContext())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        session._ship_package(other)

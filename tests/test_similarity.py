@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from auto_ml_platform_with_timeseries_data_spark.operators import similarity as sim
+from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
 
 def _emb_df(spark, n=60, dim=8, seed=3):
@@ -302,6 +306,48 @@ def test_zero_norm_vectors_drop_from_rankings(spark):
     assert q1[1]["neighbor_id"] == 3 and q1[1]["cosine"] is None
 
 
+# two zero-norm vectors next to a near-duplicate pair (cosine 0.995037)
+_ZERO_NORM_ROWS = [(1, [0.0] * 8), (2, [0.0] * 8),
+                   (3, [1.0] + [0.0] * 7), (4, [1.0, 0.1] + [0.0] * 6)]
+
+
+def _zero_norm_corpus(spark):
+    return spark.createDataFrame(_ZERO_NORM_ROWS,
+                                 "vec_id long, embedding array<double>")
+
+
+def test_lsh_neardup_skips_zero_norm_vectors_like_exact(spark):
+    """Zero-norm vectors share every SRP bucket; their candidate pair
+    scores NULL and drops out (no ANSI divide error), exactly as the
+    exact block-matrix path skips them."""
+    emb = _zero_norm_corpus(spark)
+    exact = [tuple(r) for r in sim.embedding_neardup_pairs(
+        emb, "vec_id", "embedding", threshold=0.9).collect()]
+    lsh = [tuple(r) for r in sim.embedding_neardup_pairs_lsh(
+        emb, "vec_id", "embedding", threshold=0.9).collect()]
+    assert exact == [(3, 4, 0.995037)]
+    assert lsh == exact
+
+
+def test_pq_zero_norm_query_and_injected_nsub_match_bruteforce(spark):
+    """With refine·k covering the corpus, PQ's exact rescore sees every
+    candidate, so its rows equal brute force's — zero-norm queries
+    included (NULL cosines ranked by id, never NaN ranked first). The
+    injected codebooks have 2 subspaces, not the default nsub of 8:
+    nsub comes from the codebooks."""
+    emb = _zero_norm_corpus(spark)
+    books = np.array([[[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]] * 2)
+    pq = sim.cosine_topk_pq(emb, emb, "vec_id", "embedding", k=3,
+                            refine=2, codebooks=books).collect()
+    bf = sim.cosine_topk_bruteforce(emb, emb, "vec_id", "embedding",
+                                    k=3).collect()
+    assert sorted(map(tuple, pq)) == sorted(map(tuple, bf))
+    q1 = sorted((r for r in pq if r["query_id"] == 1),
+                key=lambda r: r["rank"])
+    assert [(r["neighbor_id"], r["cosine"]) for r in q1] == [
+        (2, None), (3, None), (4, None)]
+
+
 def test_ivf_append_certificate_planted_drift(spark):
     """ivf_append: index covers base+delta, certificate occupancies
     reconcile, and a delta batch concentrated FAR from the trained
@@ -512,7 +558,7 @@ def test_ivfpq_stored_index_partition_pruning(spark, tmp_path):
     index = sim.ivfpq_encode(corpus, "vec_id", "embedding", cents, books)
     path = str(tmp_path / "ivfpq_index")
     sim.ivfpq_store(index, path)
-    loaded = sim.ivfpq_load(spark, path)
+    loaded = spark.read.parquet(path)
 
     kwargs = dict(k=3, nprobe=2, refine=8,
                   centroids=cents, codebooks=books)
@@ -719,3 +765,116 @@ def test_margin_banded_plan_contract(spark, sf_dir):
     # rank windows prune to top-k BEFORE the final window (Spark 4's
     # WindowGroupLimit) — the reason recompute beats persist here
     assert "WindowGroupLimit" in plan
+
+
+# ---------------------------------------------------------------------------
+# Coarse (two-level) IVF routing — the assignment-quadratic fix
+# ---------------------------------------------------------------------------
+
+
+def test_coarse_route_agrees_with_flat_banded_margin(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 18))
+    src = emb.filter(F.col("vec_id") % 2 == 0)
+    tgt = emb.filter(F.col("vec_id") % 2 == 1)
+    flat = {(r["src_id"], r["tgt_id"]): r["margin"]
+            for r in sim.margin_mine_pairs_banded(
+                src, tgt, cents, "vec_id", "embedding").collect()}
+    coarse = {(r["src_id"], r["tgt_id"]): r["margin"]
+              for r in sim.margin_mine_pairs_banded(
+                  src, tgt, cents, "vec_id", "embedding",
+                  coarse_stride=4, nprobe_super=2).collect()}
+    # routing changes candidate COVERAGE, never the margin math:
+    # every pair both paths mine carries the identical pinned margin
+    shared = set(flat) & set(coarse)
+    assert shared, "coarse path mined nothing the flat path mined"
+    for p in shared:
+        assert flat[p] == pytest.approx(coarse[p], abs=1e-9)
+    # with 8 cells / stride 4 / 2 probed supers the route covers most
+    # of the flat candidates — recall floor documented by this gate
+    assert len(shared) >= 0.8 * len(flat)
+
+
+def test_ivf_coarse_assign_top1_matches_flat_argmax(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 18))
+    routed = {r["vec_id"]: r["cid"]
+              for r in sim.ivf_coarse_assign(
+                  emb, cents, "vec_id", "embedding", stride=2,
+                  nprobe_super=4, nprobe=1).collect()}
+    # stride=2 with ALL supers probed (4 of 4) covers every group ->
+    # the two-level route degenerates to flat: top-1 must equal the
+    # exact argmax for every vector
+    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
+            for r in emb.collect()}
+    cvs = [(r["vec_id"], np.array(r["embedding"], dtype=np.float64))
+           for r in sorted(cents.collect(), key=lambda r: r["vec_id"])]
+    for vid, v in vecs.items():
+        qv = np.floor(v * 1024.0)
+        dv = float((qv * qv).sum())
+        if dv == 0:
+            continue
+        best, best_ci = None, None
+        for cid, (_, cv) in enumerate(cvs):
+            qc = np.floor(cv * 1024.0)
+            dc = float((qc * qc).sum())
+            if dc == 0:
+                continue
+            ci = math.floor(float((qv * qc).sum())
+                            / math.sqrt(dv * dc) * 1e6)
+            if best_ci is None or ci > best_ci:
+                best, best_ci = cid, ci
+        assert routed[vid] == best, f"vec {vid}: {routed[vid]} != {best}"
+
+
+# ---------------------------------------------------------------------------
+# q329 — dedup-before-ANN fused pipeline
+
+
+def _clone_embeddings(spark, n_distinct: int = 40, copies: int = 5,
+                      dim: int = 8):
+    """n_distinct base vectors, each cloned `copies` times with clone
+    ids offset by 1000*c — the clone-degenerate staging shape the
+    round-12 100x ladder used."""
+    rows = []
+    for i in range(n_distinct):
+        # (31i + 7d) mod 97: the d=0 component alone is injective for
+        # i < 97, so the 40 base vectors are pairwise distinct
+        vec = [(float((i * 31 + d * 7) % 97) - 48.0) / 48.0
+               for d in range(dim)]
+        for c in range(copies):
+            rows.append((i + 1000 * c, vec))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_exact_vector_dedup_collapses_clone_families(spark):
+    emb = _clone_embeddings(spark)
+    dd = sim.exact_vector_dedup(emb, "vec_id", "embedding")
+    got = dd.collect()
+    assert len(got) == 40
+    # min-id canonical: every survivor is from copy 0 (ids < 1000)
+    assert all(r["vec_id"] < 1000 for r in got)
+
+
+def test_dedup_then_margin_equals_mining_the_distinct_set(spark):
+    """The fused pipeline on a clone-degenerate corpus must mine
+    exactly what the banded miner mines on the distinct set — the
+    executable form of 'exact dedup before ANN'."""
+    emb = _clone_embeddings(spark)
+    dd = sim.exact_vector_dedup(emb, "vec_id", "embedding")
+    distinct = emb.filter(F.col("vec_id") < 1000)
+
+    def mine(base):
+        src = base.filter(F.col("vec_id") % 2 == 0)
+        tgt = base.filter(F.col("vec_id") % 2 == 1)
+        cents = base.filter((F.col("vec_id") >= sim._MARGIN_IVF_LO)
+                            & (F.col("vec_id") < sim._MARGIN_IVF_LO
+                               + sim._MARGIN_IVF_CELLS))
+        return sim.margin_mine_pairs_banded(
+            src, tgt, cents, "vec_id", "embedding")
+
+    fused = {(r["src_id"], r["tgt_id"], r["margin"])
+             for r in mine(dd).collect()}
+    direct = {(r["src_id"], r["tgt_id"], r["margin"])
+              for r in mine(distinct).collect()}
+    assert fused == direct
