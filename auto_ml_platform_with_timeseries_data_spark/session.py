@@ -22,6 +22,10 @@ _RUNTIME_CONFS = {
     # and matches DuckDB's epoch() of naive timestamps under the UTC
     # session timezone above. load_table() also normalizes defensively.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # events.parquet stores TIMESTAMP(NANOS), which the vectorized parquet
+    # reader rejects; read nanos as long, and load_table() truncates them
+    # to microseconds so both engines see identical values.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -49,14 +53,19 @@ _SHIP_WARNED = False
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally created session.
+    """Apply runtime-settable confs to an externally created session,
+    once per SparkSession.
 
     The correctness driver hands us its own SparkSession; pinning the
     timezone + AQE + Arrow here keeps engine semantics independent of how
-    the session was built. A conf the session refuses (static on this
-    build) keeps the session's value, and the first such call warns,
-    naming every conf that did not apply.
+    the session was built. Later calls leave the session as they find
+    it, so a conf set after the first call (get_spark's
+    ``shuffle_partitions``, a caller's override) holds. A conf the
+    session refuses (static on this build) keeps the session's value,
+    and the first such call warns, naming every conf that did not apply.
     """
+    if getattr(spark, "_sparkgraft_tuned", False):
+        return spark
     failed = []
     for k, v in _RUNTIME_CONFS.items():
         try:
@@ -69,6 +78,7 @@ def tune(spark: SparkSession) -> SparkSession:
         warnings.warn("session.tune: confs did not apply: "
                       + ", ".join(failed), RuntimeWarning)
     _ship_package(spark)
+    spark._sparkgraft_tuned = True
     return spark
 
 

@@ -4,6 +4,19 @@ and the one owner of query intermediates (``keep``/``release``).
 All fixtures are columnar parquet; reading through here guarantees the
 session is tuned (UTC timezone, AQE, Arrow) before any plan is built, so
 oracle comparisons are deterministic regardless of who built the session.
+
+``load_table`` remembers each file's inferred schema. A plain
+``spark.read.parquet`` runs one Spark job per call only to infer a
+schema that does not change between reads; a later read of the same
+file passes the remembered schema and starts no job (Spark still lists
+the path, so a deleted file fails as before). The cache key is the
+path, one Hadoop ``FileSystem.getFileStatus`` of it (length and
+modification time; any scheme) and the two confs that shape inference,
+so a rewritten file or a conf change infers afresh. Limit: a directory's
+status changes when entries are added or removed, which is what a Spark
+overwrite does on a local or HDFS path, but an object store without
+directory modification times (S3, GCS) reports the same status after
+an overwrite, and the old schema is used.
 """
 
 from __future__ import annotations
@@ -14,7 +27,7 @@ import warnings
 from collections.abc import Callable
 from typing import TypeVar
 
-try:  # the stats probe goes through py4j; absent under Spark Connect
+try:  # py4j carries the stats probe and file stat; absent under Spark Connect
     from py4j.protocol import Py4JError as _Py4JError
 except ImportError:  # pragma: no cover
     class _Py4JError(Exception):
@@ -22,6 +35,7 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from auto_ml_platform_with_timeseries_data_spark.session import tune
 
@@ -36,14 +50,39 @@ LINEITEM_FEATURES = ("l_quantity", "l_discount", "l_tax",
                      "l_partkey", "l_suppkey", "l_linenumber")
 
 
+# Inferred schemas by _schema_key. No lock: a race between threads at
+# worst infers the same schema twice.
+_SCHEMAS: dict[tuple, StructType] = {}
+_INFERENCE_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",
+                    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """What the schema Spark infers for ``path`` depends on, or None when
+    the path cannot be stat'ed (the read then raises Spark's own error)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        status = hpath.getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()
+        ).getFileStatus(hpath)
+    except _Py4JError:
+        return None
+    return (path, status.getLen(), status.getModificationTime(),
+            *(spark.conf.get(k) for k in _INFERENCE_CONFS))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
-    # events.parquet stores TIMESTAMP(NANOS), which the vectorized parquet
-    # reader rejects; read nanos as long and truncate to microseconds —
-    # exactly what DuckDB's TIMESTAMP_NS→TIMESTAMP cast does, so both
-    # engines see identical values.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    df = (spark.read if schema is None
+          else spark.read.schema(schema)).parquet(path)
+    if schema is None and key is not None:
+        _SCHEMAS[key] = df.schema
+    # events.parquet stores TIMESTAMP(NANOS), read as long under the
+    # nanosAsLong conf tune() sets; truncate to microseconds, exactly what
+    # DuckDB's TIMESTAMP_NS→TIMESTAMP cast does.
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             # integer `div`, NOT `/` — nanos (~1.7e18) overflow a double's

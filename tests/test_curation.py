@@ -4,6 +4,7 @@ balancing, sequence packing, decontamination."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -13,6 +14,7 @@ from auto_ml_platform_with_timeseries_data_spark.operators.curation import (
     decontaminate,
     hash_split,
     hash_u32,
+    mixture_conformance,
     pack_sequences,
     stratified_sample,
 )
@@ -619,3 +621,10 @@ def test_negative_samples_deterministic_excludes_positives(spark):
         spark.createDataFrame([(0,)], "qid long"), tiny, allpos,
         "qid", "item", k=2, nbuckets=2).collect()
     assert len(one) == 2 and all(r["neg_id"] is None for r in one)
+
+
+def test_mixture_conformance_rejects_reserved_key(spark):
+    df = spark.createDataFrame([("a",), ("b",)], "src string")
+    with pytest.raises(ValueError, match="__other__"):
+        mixture_conformance(
+            df, "src", {"a": 500000, "__other__": 500000})

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from auto_ml_platform_with_timeseries_data_spark.operators import evaluation as ev
@@ -193,3 +194,11 @@ def test_roc_auc_by_group_matches_global_per_group(spark):
             (want["n"], want["n_pos"], want["auc"]), g
     assert got[1]["auc"] == 1.0 and got[2]["auc"] == 0.5
     assert got[3]["auc"] is None
+
+
+def test_cronbach_alpha_k1_returns_null_contract(spark):
+    df = spark.createDataFrame([(1,), (2,), (3,)], "a long")
+    row = ev.cronbach_alpha(df, {"a": F.col("a")}).collect()[0]
+    assert row["k"] == 1 and row["alpha"] is None
+    with pytest.raises(ValueError):
+        ev.cronbach_alpha(df, {})

@@ -285,3 +285,19 @@ def test_bucketed_join_plan_has_zero_exchanges(spark, sf_dir):
         assert bucketed.count() == plain.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_hilbert_keys_preserves_caller_dunder_columns(spark):
+    from auto_ml_platform_with_timeseries_data_spark.operators.layout import (
+        hilbert_keys,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 10, 20, 7), (2, 30, 40, 8), (3, 50, 60, 9)],
+        "id long, x long, y long, __epoch long")
+    out = hilbert_keys(df, "x", "y")
+    # caller columns (including the "__"-prefixed one) survive; only
+    # hkey is added and no scratch column leaks
+    assert set(out.columns) == {"id", "x", "y", "__epoch", "hkey"}
+    got = {r["id"]: r["__epoch"] for r in out.collect()}
+    assert got == {1: 7, 2: 8, 3: 9}

@@ -10,7 +10,7 @@ from types import SimpleNamespace
 
 import pytest
 
-from auto_ml_platform_with_timeseries_data_spark import session
+from auto_ml_platform_with_timeseries_data_spark import session, tables
 
 _GIB = 2 ** 30
 
@@ -45,16 +45,17 @@ def test_driver_memory_env_overrides(monkeypatch):
     assert session._driver_memory() == "2g"
 
 
-def test_get_spark_session_carries_every_engine_conf(spark):
+def test_get_spark_session_carries_every_engine_conf(spark, sf_dir):
     """Every conf the engine sets, pinned on the get_spark() test
     session (conftest)."""
     want = dict(session._RUNTIME_CONFS)
-    width = want.pop("spark.sql.shuffle.partitions")
+    del want["spark.sql.shuffle.partitions"]
     want["spark.python.sql.dataFrameDebugging.enabled"] = "false"
     assert {k: spark.conf.get(k) for k in want} == want
-    # get_spark's explicit width (conftest: 8) holds until the next
-    # tune() — every load_table — re-applies the default
-    assert spark.conf.get("spark.sql.shuffle.partitions") in ("8", width)
+    # get_spark's explicit width (conftest: 8) holds: tune() applies the
+    # defaults once per session, not on every load_table
+    tables.load_table(spark, sf_dir, "events")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
 
 class _StaticConf:

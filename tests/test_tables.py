@@ -1,4 +1,5 @@
-"""Query intermediates have one owner: ``tables.keep`` persists or
+"""Table handles start no Spark job once a file's schema is known, and
+query intermediates have one owner: ``tables.keep`` persists or
 checkpoints them, the registry releases them when the thread's next
 query starts, and nothing else in the package persists."""
 
@@ -7,13 +8,92 @@ from __future__ import annotations
 import ast
 import os
 import sys
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
 
 import auto_ml_platform_with_timeseries_data_spark as pkg
 from auto_ml_platform_with_timeseries_data_spark import registry, tables
+
+
+def _jobs(spark, group: str, fn: Callable[[], object]) -> int:
+    """Spark jobs ``fn`` starts, counted under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def no_schemas(monkeypatch):
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+
+
+def test_second_load_starts_no_job(spark, sf_dir, no_schemas):
+    def load():
+        return tables.load_table(spark, sf_dir, "orders")
+
+    assert _jobs(spark, "tables-cold-load", load) >= 1
+    assert _jobs(spark, "tables-warm-load", load) == 0
+
+
+def test_rewritten_file_is_read_afresh(spark, tmp_path, no_schemas):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert tables.load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    df = tables.load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_overwritten_directory_is_read_afresh(spark, tmp_path, no_schemas):
+    path = str(tmp_path / "d.parquet")
+    spark.range(3).write.parquet(path)
+    assert tables.load_table(spark, str(tmp_path), "d").columns == ["id"]
+    (spark.range(3).withColumn("twice", F.col("id") * 2)
+     .write.mode("overwrite").parquet(path))
+    df = tables.load_table(spark, str(tmp_path), "d")
+    assert df.columns == ["id", "twice"]
+    assert sorted(df.collect()) == [(0, 0), (1, 2), (2, 4)]
+
+
+def test_cached_schema_keeps_events_ts_normalization(spark, sf_dir,
+                                                     no_schemas):
+    cold = tables.load_table(spark, sf_dir, "events")
+    warm = tables.load_table(spark, sf_dir, "events")
+    assert len(tables._SCHEMAS) == 1
+    assert dict(cold.dtypes)["ts"] == dict(warm.dtypes)["ts"] == "timestamp"
+    assert cold.count() == warm.count() > 0
+    assert cold.exceptAll(warm).count() == 0
+    assert warm.exceptAll(cold).count() == 0
+
+
+def test_concurrent_loads_get_the_right_schema(spark, sf_dir, no_schemas):
+    names = ("events", "orders", "lineitem", "customer")
+    want = {n: tables.load_table(spark, sf_dir, n).schema for n in names}
+    tables._SCHEMAS.clear()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futures = [pool.submit(tables.load_table, spark, sf_dir, n)
+                       for _ in range(4) for n in names]
+            got = [f.result(timeout=120).schema for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert got == [want[n] for _ in range(4) for n in names]
+    assert len(tables._SCHEMAS) == len(names)
 
 
 def _persistent(spark) -> int:

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from auto_ml_platform_with_timeseries_data_spark.operators import validation
 from auto_ml_platform_with_timeseries_data_spark.operators.validation import (
     not_null_check,
     range_check,
@@ -86,3 +89,42 @@ def test_table_digest_order_independent_and_sensitive(spark):
     assert changed["p1"]["xor_digest"] != base["p1"]["xor_digest"]
     assert changed["p1"]["sum_digest"] != base["p1"]["sum_digest"]
     assert changed["p0"]["xor_digest"] == base["p0"]["xor_digest"]
+
+
+def test_bh_fdr_p_value_clamped(spark):
+    """The clamped two-sided p can never leave [0, 1]: least(1.0, ·)
+    caps it even if a polynomial variant puts sf(0) above 0.5 (this
+    build's A&S form gives 2·sf(0) = 0.999999999, so the clamp is
+    inactive there — pin both that value and the cap)."""
+    rows = spark.createDataFrame(
+        [(0.0,), (1e-9,), (0.5,), (6.0,)], "z double").select(
+        "z",
+        (F.floor(F.least(F.lit(1.0),
+                         2 * validation._normal_sf(F.col("z")))
+                 * 1e9 + F.lit(0.5)) / 1e9).alias("p")).collect()
+    by_z = {r["z"]: r["p"] for r in rows}
+    assert by_z[0.0] == 0.999999999
+    assert all(0.0 <= p <= 1.0 for p in by_z.values())
+
+
+def test_relabel_hash_structurally_distinct(spark):
+    """The old scheme's collision — boot salt b+64 for id i equals
+    boot salt b for the neighboring residue — must NOT relate the
+    relabeling draws to the bootstrap's: for a sample of (id, salt)
+    pairs the relabel u32 differs from the bootstrap u32 of EVERY
+    salt in the 64-wide band for that id and its ±1 residue
+    neighbors."""
+    P, K, K2, M = (validation._BOOT_PREMOD, validation._BOOT_KNUTH,
+                   validation._RELABEL_KNUTH, validation._BOOT_M32)
+
+    def boot(i, b):
+        return ((i % P) * 64 + b) % P * K % M
+
+    def rel(i, b):
+        return ((i % P) * 64 + b) % P * K2 % M
+
+    for i in (1, 7, 123456, 999999999):
+        for b in range(8):
+            boots = {boot(j, bb)
+                     for j in (i - 1, i, i + 1) for bb in range(64)}
+            assert rel(i, b) not in boots
