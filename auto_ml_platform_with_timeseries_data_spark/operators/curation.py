@@ -40,7 +40,7 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     tokens,
     word_ngrams,
 )
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -2659,8 +2659,8 @@ def cramer_von_mises(df: DataFrame, value_col: str, group_col: str,
     )
     gap = (F.col("__cuma").cast("double") / F.col("__na")
            - F.col("__cumb").cast("double") / F.col("__nb"))
-    term = (F.col("__c").cast("decimal(38,0)")
-            * F.floor(gap * gap * F.lit(1e12)).cast("decimal(38,0)"))
+    term = (dec(F.col("__c"))
+            * dec(F.floor(gap * gap * F.lit(1e12))))
     agg = m.filter((F.col("__na") > 0) & (F.col("__nb") > 0)).agg(
         F.sum(term).alias("__ts"),
         F.max("__na").alias("n_a"),
@@ -2826,7 +2826,6 @@ def anderson_darling_2s(df: DataFrame, value_col: str, group_col: str,
         F.sum("__ca").over(wt).alias("__na"),
         F.sum("__cb").over(wt).alias("__nb"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     nn = F.col("__na") + F.col("__nb")
     bb = F.col("__ma") + F.col("__mb")
     da = dec(nn * F.col("__ma") - F.col("__na") * bb)

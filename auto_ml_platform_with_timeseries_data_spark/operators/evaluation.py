@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -1104,7 +1104,6 @@ def fleiss_kappa(df: DataFrame, item_col: str, rating: Column,
                     .select("__i"), "__i")
     cells = full.groupBy("__i", "__r").agg(
         F.count(F.lit(1)).cast("long").alias("__c"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     marg = cells.groupBy("__r").agg(
         F.sum("__c").cast("long").alias("__m"))
     magg = marg.agg(
@@ -1144,7 +1143,6 @@ def weighted_kappa(df: DataFrame, rater_a: Column,
     src = df.select(rater_a.cast("long").alias("__a"),
                     rater_b.cast("long").alias("__b")).filter(
         F.col("__a").isNotNull() & F.col("__b").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     cells = src.groupBy("__a", "__b").agg(
         F.count(F.lit(1)).cast("long").alias("__o"))
     d = F.col("__a") - F.col("__b")
@@ -1308,7 +1306,6 @@ def cronbach_alpha(df: DataFrame,
     for j in range(k):
         tot = F.col(f"__i{j}") if tot is None else tot + F.col(f"__i{j}")
     src = src.withColumn("__t", tot)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     aggs = [F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(dec(F.col("__t"))).alias("__st"),
             F.sum(dec(F.col("__t")) * dec(F.col("__t"))).alias("__qt")]
@@ -1361,7 +1358,6 @@ def kendall_tau_b(df: DataFrame, x: Column, y: Column) -> DataFrame:
         F.col("__x").isNotNull() & F.col("__y").isNotNull())
     cells = src.groupBy("__x", "__y").agg(
         F.count(F.lit(1)).cast("long").alias("__c"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     a = cells.select(F.col("__x").alias("__x1"),
                      F.col("__y").alias("__y1"),
                      F.col("__c").alias("__c1"))

@@ -61,6 +61,7 @@ from pyspark.sql.window import Window
 from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     EVENT_CENTS_SRC_SQL,
     _dominant_lag_oracle,
+    dec,
     dominant_acf_lag,
     event_cents_query,
     ordered_series,
@@ -586,8 +587,7 @@ def ar2_forecast(df: DataFrame, group_col: str, order: str,
     # long accumulator overflows at ~9.2e18 (≈1e14-magnitude terms ×
     # ~1e5 rows/series), which larger SFs can reach; decimal(38,0)
     # cannot.
-    q = lambda c: (F.floor(c * F.lit(_AR2_Q))  # noqa: E731
-                   .cast("decimal(38,0)"))
+    q = lambda c: dec(F.floor(c * F.lit(_AR2_Q)))  # noqa: E731
     reg = F.col("__z").isNotNull()
     s = lambda c: F.sum(F.when(reg, c))  # noqa: E731
     per = j.groupBy("__g").agg(
@@ -595,11 +595,11 @@ def ar2_forecast(df: DataFrame, group_col: str, order: str,
         F.max("__m").alias("__m"),
         F.sum(F.when(reg, F.lit(1)).otherwise(F.lit(0)))
         .cast("long").alias("nobs"),
-        s(q(cx * cx)).cast("decimal(38,0)").alias("__sxx"),
-        s(q(cz * cz)).cast("decimal(38,0)").alias("__szz"),
-        s(q(cx * cz)).cast("decimal(38,0)").alias("__sxz"),
-        s(q(cx * cy)).cast("decimal(38,0)").alias("__sxy"),
-        s(q(cz * cy)).cast("decimal(38,0)").alias("__szy"),
+        dec(s(q(cx * cx))).alias("__sxx"),
+        dec(s(q(cz * cz))).alias("__szz"),
+        dec(s(q(cx * cz))).alias("__sxz"),
+        dec(s(q(cx * cy))).alias("__sxy"),
+        dec(s(q(cz * cy))).alias("__szy"),
         F.max(F.when(F.col("__last"), F.col("__v"))).alias("__vn"),
         F.max(F.when(F.col("__last"), F.col("__x"))).alias("__vn1"))
     det = (F.col("__sxx") * F.col("__szz")
@@ -743,8 +743,8 @@ def mase_backtest(df: DataFrame, group_col: str, order: str,
     per = lagged.groupBy("__g").agg(
         F.count(e_model).cast("long").alias("n_model"),
         F.count(e_naive).cast("long").alias("n_naive"),
-        F.sum(e_model.cast("decimal(38,0)")).alias("__sm"),
-        F.sum(e_naive.cast("decimal(38,0)")).alias("__sn"))
+        F.sum(dec(e_model)).alias("__sm"),
+        F.sum(dec(e_naive)).alias("__sn"))
     mae_m = F.col("__sm").cast("double") / F.lit(1e2) \
         / F.col("n_model") / F.lit(100.0)
     mae_n = F.col("__sn").cast("double") / F.col("n_naive") \
@@ -1237,8 +1237,7 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
         F.max("__m").alias("period"),
         F.max("__n").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_scored"),
-        F.sum(F.abs(F.col("__cv") - F.col("__bv"))
-              .cast("decimal(38,0)")).alias("__sae"))
+        F.sum(dec(F.abs(F.col("__cv") - F.col("__bv")))).alias("__sae"))
     fc = (cur.filter(F.col("__ci") == F.col("__n") + 1 - F.col("__m"))
           .select("__g", F.col("__cv").alias("__fc")))
     return (err.join(fc, "__g")

@@ -13,6 +13,19 @@ as fixed-size frames with ffmpeg as the documented swap-in. The
 Spark-side plumbing — schema, batch iteration, partition sizing — is
 identical to what the full-codec deployment runs.
 
+The fingerprint dedup family (q186-q342: exact families, near pairs,
+index update, near screen and capped screen over image, audio and
+video) is one skeleton. Kernels: `_media_ids` → a `synth_*` generation
+rule on the one `_synth_media` scaffold → a fingerprint (`image_dhash`,
+`audio_fingerprint`, `video_fingerprint` / `_video_wide_dhash` over
+`_frame_dhash`) → one tail: `_families`, `hamming_band_pairs`,
+`_index_update` (the `fingerprint_index` append-back step, shared with
+the streaming index loops) or `_screen`. Oracles recompute every
+fingerprint from the generation rule in SQL with `_dhash_half` over a
+px(row, col) rule, `_energy_fp_sql` over a sample rule and
+`_video_fold_sql`, and end in the matching tail: `_families_sql`,
+`_pairs_sql`, `_index_update_sql` or `_capped_sql`.
+
 Scale notes: media bytes never pass through a shuffle here; kernels are
 per-partition streaming (mapInPandas iterator), so memory is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch` × avg blob size. For
@@ -439,6 +452,50 @@ def q117_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Synthetic media corpora: one mapInPandas scaffold; each `synth_*` is
+# only its generation rule (doc_id → one REAL BMP / WAV / AVI file)
+# ---------------------------------------------------------------------------
+
+
+def _media_ids(spark: SparkSession, sf_dir: str, hi: int,
+               lo: int = 0) -> DataFrame:
+    """The id frame every synthetic corpus grows from: doc_id ∈ [lo, hi)
+    of `documents`."""
+    ids = F.col("doc_id") < hi
+    if lo:
+        ids = (F.col("doc_id") >= lo) & ids
+    return load_table(spark, sf_dir, "documents").filter(ids).select("doc_id")
+
+
+def _synth_media(ids: DataFrame, id_col: str, rule) -> DataFrame:
+    """The one synthesizer: rule(int id) → media bytes, built map-side
+    in an Arrow kernel, so nothing media-sized ever shuffles."""
+
+    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({"media_id": pdf[id_col],
+                                "content": [rule(int(d))
+                                            for d in pdf[id_col]]})
+
+    return ids.mapInPandas(make, "media_id long, content binary")
+
+
+def _grid(h: int, w: int):
+    """(h, w) int64 array of row-major pixel offsets r·w + c."""
+    import numpy as np
+
+    return np.arange(h)[:, None] * w + np.arange(w)[None, :]
+
+
+def _gray_bmp(px) -> bytes:
+    """(h, w) gray levels in [0, 256) → 24-bit BMP with R = G = B."""
+    import numpy as np
+
+    px = px.astype(np.uint8)
+    return _encode_bmp(np.broadcast_to(px[..., None], px.shape + (3,)))
+
+
+# ---------------------------------------------------------------------------
 # q145 — REAL raster decode end-to-end (BMP bytes → parse → resize)
 # ---------------------------------------------------------------------------
 
@@ -466,37 +523,20 @@ _Q145_DOCS = 200
     """,
 )
 def q145_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL image-decode path end-to-end: a kernel synthesizes a
-    genuine 24-bit BMP per document (deterministic gray gradient
-    src[r,c] = (doc_id*31 + r*13 + c) % 256, 13×8 so rows pad to 40
-    bytes), `decode_image` parses the actual file bytes (header,
-    bottom-up rows, padding, BGR) and nearest-neighbor-resizes to 4×4,
-    and the output pixels fold into an order-weighted checksum the
-    oracle reproduces from the generation rule alone. The blobs are
+    """The REAL image-decode path end-to-end: `synth_bmp_media` with one
+    family per document synthesizes a genuine 24-bit BMP (deterministic
+    gray gradient src[r,c] = (doc_id*31 + r*13 + c) % 256, 13×8 so rows
+    pad to 40 bytes), `decode_image` parses the actual file bytes
+    (header, bottom-up rows, padding, BGR) and nearest-neighbor-resizes
+    to 4×4, and the output pixels fold into an order-weighted checksum
+    the oracle reproduces from the generation rule alone. The blobs are
     built and consumed inside map-only Arrow kernels — nothing but
     (id, checksum) ever shuffles, the identical shape a 100 TB
     image-curation scan uses."""
     import numpy as np
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _Q145_DOCS).select("doc_id")
-
-    def make_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        r = np.arange(_Q145_H)[:, None]
-        c = np.arange(_Q145_W)[None, :]
-        base = (r * _Q145_W + c)[..., None]  # (h, w, 1)
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["doc_id"],
-                "content": [
-                    _encode_bmp(np.broadcast_to(
-                        ((int(did) * 31 + base) % 256).astype(np.uint8),
-                        (_Q145_H, _Q145_W, 3)))
-                    for did in pdf["doc_id"]
-                ],
-            })
-
-    media = docs.mapInPandas(make_bmp, "media_id long, content binary")
+    media = synth_bmp_media(_media_ids(spark, sf_dir, _Q145_DOCS),
+                            families=_Q145_DOCS)
     decoded = decode_image(media, size=(_Q145_OUT, _Q145_OUT))
 
     def checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -654,31 +694,16 @@ _Q150_DOCS = 100
     """,
 )
 def q150_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode end-to-end: a kernel synthesizes a genuine
-    RIFF/WAVE PCM16 file per document (deterministic sawtooth
-    s[n] = ((doc_id*7 + n*13) % 2048) - 1024, 600 samples — the last
-    frame is partial, exercising the tail path), `audio_frame_energy`
-    parses the actual chunk structure and emits exact per-frame energy
-    and zero-crossing counts, which the oracle recomputes from the
-    generation rule alone. Same map-only blob discipline as q145."""
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _Q150_DOCS).select("doc_id")
-
-    def make_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = np.arange(_Q150_SAMPLES, dtype=np.int64)
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["doc_id"],
-                "content": [
-                    _encode_wav_pcm16(((int(d) * 7 + n * 13) % 2048 - 1024)
-                                      .astype(np.int16))
-                    for d in pdf["doc_id"]
-                ],
-            })
-
-    media = docs.mapInPandas(make_wav, "media_id long, content binary")
+    """REAL audio decode end-to-end: `synth_wav_media` with one family
+    per document synthesizes a genuine RIFF/WAVE PCM16 file
+    (deterministic sawtooth s[n] = ((doc_id*7 + n*13) % 2048) - 1024,
+    600 samples — the last frame is partial, exercising the tail path),
+    `audio_frame_energy` parses the actual chunk structure and emits
+    exact per-frame energy and zero-crossing counts, which the oracle
+    recomputes from the generation rule alone. Same map-only blob
+    discipline as q145."""
+    media = synth_wav_media(_media_ids(spark, sf_dir, _Q150_DOCS),
+                            families=_Q150_DOCS)
     return audio_frame_energy(media, frame_samples=_Q150_FRAME)
 
 
@@ -787,36 +812,19 @@ _Q152_DOCS = 100
     """,
 )
 def q152_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL video path end-to-end: a kernel synthesizes a genuine
-    AVI per document (5 BMP-encoded 6×4 gray frames, deterministic
-    gradient), `demux_video_frames` parses the actual container (movi
-    LIST walk, chunk padding) sampling every 2nd frame, each sampled
-    frame decodes through the real BMP parser, and the pixels fold into
-    order-weighted checksums the oracle recomputes from the generation
-    rule alone. Container demux AND codec decode both real — ffmpeg
-    swaps in for real codecs with the identical kernel shape."""
+    """The REAL video path end-to-end: `synth_avi_media` with one family
+    per document synthesizes a genuine AVI (5 BMP-encoded 6×4 gray
+    frames, deterministic gradient), `demux_video_frames` parses the
+    actual container (movi LIST walk, chunk padding) sampling every 2nd
+    frame, each sampled frame decodes through the real BMP parser, and
+    the pixels fold into order-weighted checksums the oracle recomputes
+    from the generation rule alone. Container demux AND codec decode
+    both real — ffmpeg swaps in for real codecs with the identical
+    kernel shape."""
     import numpy as np
 
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _Q152_DOCS).select("doc_id")
-    base = (np.arange(_Q152_H)[:, None] * _Q152_W
-            + np.arange(_Q152_W)[None, :])[..., None]
-
-    def make_avi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                frames = [
-                    _encode_bmp(np.broadcast_to(
-                        ((int(d) * 31 + f * 97 + base) % 256)
-                        .astype(np.uint8), (_Q152_H, _Q152_W, 3)))
-                    for f in range(_Q152_FRAMES)
-                ]
-                blobs.append(_encode_avi(frames))
-            yield pd.DataFrame({"media_id": pdf["doc_id"],
-                                "content": blobs})
-
-    media = docs.mapInPandas(make_avi, "media_id long, content binary")
+    media = synth_avi_media(_media_ids(spark, sf_dir, _Q152_DOCS),
+                            families=_Q152_DOCS)
     sampled = demux_video_frames(media, every=2)
 
     def checksum(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -839,13 +847,30 @@ def q152_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q186 — image NEAR-DUP via dHash over the real decode path (the
-# multimodal tier's dedup op: decode → 9×8 grayscale → gradient bits)
+# The fingerprint dedup family, written once. Five stages over three
+# modalities (image dHash, audio energy gradient, video frame dHash):
+#
+#   stage              image  audio  video   Spark tail / oracle tail
+#   exact families     q186   q187   q188    _families / _families_sql
+#   near pairs         q189   q195   q194    hamming_band_pairs / _pairs_sql
+#   index update       q224   q225   q226    _index_update / _index_update_sql
+#   near screen        q230   q237   q238    _screen / _pairs_sql(delta_lo)
+#   capped screen      q341   q330   q342    _screen(top_m) / _capped_sql
 # ---------------------------------------------------------------------------
 
 _DH_W, _DH_H = 9, 8          # dHash canonical grid: 9 wide → 8 bit cols
 _DH_DOCS = 200
 _DH_FAMILIES = 50            # seed = doc_id % 50 → ~4 planted dups each
+
+_DHASH_KEYS = ["dhash_lo", "dhash_hi"]
+_FP_KEYS = ["fingerprint"]
+# the q194 frame-sequence signature: one column per (frame, dHash half)
+_VIDEO_COLS = [f"f{f}_{p}" for f in range(_Q152_FRAMES)
+               for p in ("lo", "hi")]
+
+
+def _bands(keys: list[str], bits: int = 32) -> list[tuple[str, int]]:
+    return [(k, bits) for k in keys]
 
 
 def synth_bmp_media(ids: DataFrame, families: int = _DH_FAMILIES,
@@ -855,25 +880,9 @@ def synth_bmp_media(ids: DataFrame, families: int = _DH_FAMILIES,
     ~|ids|/families times — planted visual duplicates). Shared by q186
     and the scale probe, which passes families ∝ corpus size to hold
     family size constant."""
-    import numpy as np
-
-    base = (np.arange(_Q145_H)[:, None] * _Q145_W
-            + np.arange(_Q145_W)[None, :])[..., None]
-
-    def make_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "content": [
-                    _encode_bmp(np.broadcast_to(
-                        (((int(did) % families) * 31 + base) % 256)
-                        .astype(np.uint8),
-                        (_Q145_H, _Q145_W, 3)))
-                    for did in pdf[id_col]
-                ],
-            })
-
-    return ids.mapInPandas(make_bmp, "media_id long, content binary")
+    base = _grid(_Q145_H, _Q145_W)
+    return _synth_media(
+        ids, id_col, lambda d: _gray_bmp(((d % families) * 31 + base) % 256))
 
 
 def image_dhash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -909,32 +918,220 @@ def image_dhash(media: DataFrame, id_col: str = "media_id") -> DataFrame:
         kernel, f"{id_col} long, dhash_lo long, dhash_hi long")
 
 
-def _dhash_oracle() -> str:
-    # bit(k): i = k//8 source row, j = k%8; resized px(i, j') =
-    # src[i, (13*j')//9] with src[r, c] = (seed*31 + 13*r + c) % 256
-    def px(jexpr: str) -> str:
-        return (f"(((doc_id % {_DH_FAMILIES}) * 31 + 13 * (k // 8)"
-                f" + (13 * ({jexpr})) // 9) % 256)")
+def _families(fp: DataFrame, keys: list[str], n_col: str) -> DataFrame:
+    """Exact-dedup tail: identical fingerprints group into one family
+    with its size and min-id canonical."""
+    return fp.groupBy(*keys).agg(F.count(F.lit(1)).alias(n_col),
+                                 F.min("media_id").alias("canonical_id"))
 
-    bit = f"CASE WHEN {px('k % 8')} < {px('(k % 8) + 1')} THEN 1 ELSE 0 END"
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, 32),
-                 k -> {bit} * (CAST(1 AS BIGINT) << k))) AS BIGINT)
-               AS dhash_lo,
-             CAST(list_sum(list_transform(range(32, 64),
-                 k -> {bit} * (CAST(1 AS BIGINT) << (k - 32)))) AS BIGINT)
-               AS dhash_hi
-      FROM documents WHERE doc_id < {_DH_DOCS}
+
+def fingerprint_index(fp: DataFrame, keys: list[str],
+                      known: DataFrame | None = None) -> DataFrame:
+    """The one append-back step: reduce fingerprints to one (keys →
+    min media_id as canonical_id) row per distinct value — work linear
+    in `fp` — and, given the `known` index, left-anti-join its keys
+    away so only NOVEL fingerprints remain. Known fingerprints keep
+    their canonical forever; the corpus media are never re-decoded."""
+    idx = fp.groupBy(*keys).agg(F.min("media_id").alias("canonical_id"))
+    if known is None:
+        return idx
+    return idx.join(known.select(*keys), keys, "left_anti")
+
+
+def _index_update(corpus_fp: DataFrame, delta_fp: DataFrame,
+                  keys: list[str]) -> DataFrame:
+    """Index-maintenance tail: the corpus index plus the delta's novel
+    fingerprints (dedup-on-merge, the q165 contract)."""
+    index = fingerprint_index(corpus_fp, keys)
+    return index.unionByName(fingerprint_index(delta_fp, keys, index))
+
+
+def image_index_update(index: DataFrame, delta_media: DataFrame) -> DataFrame:
+    """Merge a delta batch's NOVEL dHash fingerprints into the corpus
+    index, keeping existing canonicals (dedup-on-merge). Work is
+    linear in the DELTA: one map-only decode+fingerprint pass, one
+    delta-sized groupBy, one anti-join against the index on the
+    16-byte fingerprint pair — the corpus images are never re-decoded.
+    Canonicals never change once assigned, so downstream dup labels
+    stay stable across batches (the q165 contract, one modality up)."""
+    return index.unionByName(
+        fingerprint_index(image_dhash(delta_media), _DHASH_KEYS, index))
+
+
+def _screen(fp: DataFrame, id_col: str, delta_lo: int,
+            sig_cols: list[tuple[str, int]], max_hamming: int,
+            top_m: int | None = None) -> DataFrame:
+    """Near-screen tail: keep the fingerprints once, split them at
+    `delta_lo` into the crawl batch and the corpus, and band-join the
+    batch against the corpus index (`hamming_band_pairs_delta`,
+    optionally capped at the `top_m` closest matches per delta row)."""
+    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
+        hamming_band_pairs_delta,
     )
-    SELECT dhash_lo, dhash_hi, count(*) AS n_images,
+
+    fp = keep(fp, checkpoint=True)
+    return hamming_band_pairs_delta(
+        fp.filter(F.col(id_col) >= delta_lo),
+        fp.filter(F.col(id_col) < delta_lo),
+        id_col, sig_cols, max_hamming, top_m=top_m)
+
+
+def _band_pairs(fp: DataFrame, id_col: str,
+                sig_cols: list[tuple[str, int]],
+                max_hamming: int) -> DataFrame:
+    """`hamming_band_pairs`, imported on call like `_screen`'s import:
+    Python workers import this module for its codec helpers, and a
+    module-level import would make them load `dedup` too."""
+    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
+        hamming_band_pairs,
+    )
+
+    return hamming_band_pairs(fp, id_col, sig_cols, max_hamming)
+
+
+# -- oracle builders: fingerprints recomputed from generation rules ----------
+
+
+def _dhash_half(px, k0: int, k1: int) -> str:
+    """DuckDB expression for one 32-bit dHash half (bits k0..k1-1):
+    bit k = px(k // 8, k % 8) < px(k // 8, k % 8 + 1), where
+    px(jexpr) is the SQL of the resized red-channel pixel at row k // 8
+    and dHash column `jexpr`, derived from a generation rule."""
+    bit = f"CASE WHEN {px('k % 8')} < {px('(k % 8) + 1')} THEN 1 ELSE 0 END"
+    return (f"CAST(list_sum(list_transform(range({k0}, {k1}),"
+            f" k -> {bit} * (CAST(1 AS BIGINT) << (k - {k0}))))"
+            f" AS BIGINT)")
+
+
+def _dhash_cols(px, prefix: str = "dhash") -> str:
+    return (f"{_dhash_half(px, 0, 32)} AS {prefix}_lo,"
+            f" {_dhash_half(px, 32, 64)} AS {prefix}_hi")
+
+
+def _bmp_px(fam: int):
+    # src[r, c] = (seed*31 + 13*r + c) % 256 resized 13×8 → 9×8:
+    # px(i, j') = src[i, (13*j')//9]
+    return lambda j: (f"(((doc_id % {fam}) * 31 + 13 * (k // 8)"
+                      f" + (13 * ({j})) // 9) % 256)")
+
+
+def dhash_half_sql(fam: int, k0: int, k1: int) -> str:
+    """DuckDB expression recomputing one 32-bit half of the synthetic
+    corpus's dHash ARITHMETICALLY from the BMP generation rule (never
+    parsing bytes) — the q186 certification contract, shared by every
+    oracle that checks a dHash-derived index."""
+    return _dhash_half(_bmp_px(fam), k0, k1)
+
+
+def _energy_fp_sql(sample: str, frame: int) -> str:
+    """DuckDB expression for the energy-gradient fingerprint of a
+    600-sample clip: bit f = e(f) < e(f + 1), e(f) = Σ sample(n)² over
+    frame f, with `sample` the SQL of sample n of the generation rule."""
+    def energy(f: str) -> str:
+        return (f"list_sum(list_transform(range({f} * {frame},"
+                f" {f} * {frame} + {frame}), n -> pow({sample}, 2)))")
+
+    return (f"CAST(list_sum(list_transform("
+            f"range(0, {_Q150_SAMPLES // frame - 1}), f ->"
+            f" CASE WHEN {energy('f')} < {energy('(f + 1)')}"
+            f" THEN (CAST(1 AS BIGINT) << f) ELSE 0 END)) AS BIGINT)")
+
+
+def _video_fold_sql(fam: int) -> str:
+    """DuckDB expression for `video_fingerprint` over `synth_avi_media`:
+    Σ_f lo_f·(2f+1) + hi_f·(2f+2) over per-frame dHash halves. Frame f
+    of seed s is src[r, c] = (s*31 + f*97 + r*6 + c) % 256, resized
+    6×4 → 9×8: px(i, j) = src[i // 2, (6*j) // 9]."""
+    def px(j: str) -> str:
+        return (f"(((doc_id % {fam}) * 31 + f * 97"
+                f" + ((k // 8) // 2) * 6 + (6 * ({j})) // 9) % 256)")
+
+    return (f"CAST(list_sum(list_transform(range(0, {_Q152_FRAMES}),"
+            f" f -> ({_dhash_half(px, 0, 32)}) * (f * 2 + 1)"
+            f" + ({_dhash_half(px, 32, 64)}) * (f * 2 + 2))) AS BIGINT)")
+
+
+def _fp_cte(cols: str, hi: int, lo: int = 0) -> str:
+    where = f"doc_id >= {lo} AND doc_id < {hi}" if lo else f"doc_id < {hi}"
+    return f"SELECT doc_id, {cols} FROM documents WHERE {where}"
+
+
+def _families_sql(cols: str, hi: int, keys: list[str], n_col: str) -> str:
+    k = ", ".join(keys)
+    return f"""
+    WITH h AS ({_fp_cte(cols, hi)})
+    SELECT {k}, count(*) AS {n_col},
            CAST(min(doc_id) AS BIGINT) AS canonical_id
-    FROM h GROUP BY dhash_lo, dhash_hi
+    FROM h GROUP BY {k}
     """
 
 
-@query("q186_image_dhash_dedup", oracle=_dhash_oracle())
+def _pairs_sql(cols: str, hi: int, keys: list[str], max_h: int,
+               delta_lo: int | None = None) -> str:
+    """Brute-force Hamming pairs over recomputed fingerprints: every
+    a < b pair as (id_a, id_b, hamming), or — given `delta_lo` — every
+    (delta_id ≥ delta_lo, corpus_id < delta_lo) pair."""
+    if delta_lo is None:
+        a, b, ids = "a", "b", ("id_a", "id_b")
+        on = "a.doc_id < b.doc_id"
+    else:
+        a, b, ids = "d", "c", ("delta_id", "corpus_id")
+        on = f"d.doc_id >= {delta_lo} AND c.doc_id < {delta_lo}"
+    # bit_count yields INT8 in DuckDB — widen each term or a 10-way sum
+    # overflows at 127
+    ham = " + ".join(f"CAST(bit_count(xor({a}.{c}, {b}.{c})) AS INT)"
+                     for c in keys)
+    return f"""
+    WITH h AS ({_fp_cte(cols, hi)})
+    SELECT {a}.doc_id AS {ids[0]}, {b}.doc_id AS {ids[1]},
+           CAST({ham} AS INT) AS hamming
+    FROM h {a} JOIN h {b} ON {on}
+    WHERE {ham} <= {max_h}
+    """
+
+
+def _index_update_sql(corpus_cols: str, delta_cols: str, corpus_hi: int,
+                      delta_hi: int, keys: list[str]) -> str:
+    k = ", ".join(keys)
+    match = " AND ".join(f"i.{c} = d.{c}" for c in keys)
+
+    def idx(cols: str, hi: int, lo: int = 0) -> str:
+        return (f"SELECT {k}, CAST(min(doc_id) AS BIGINT) AS canonical_id"
+                f" FROM ({_fp_cte(cols, hi, lo)}) GROUP BY {k}")
+
+    return f"""
+    WITH idx AS ({idx(corpus_cols, corpus_hi)}),
+    didx AS ({idx(delta_cols, delta_hi, corpus_hi)})
+    SELECT * FROM idx
+    UNION ALL
+    SELECT d.* FROM didx d
+    WHERE NOT EXISTS (SELECT 1 FROM idx i WHERE {match})
+    """
+
+
+_SCREEN_TOP_M = 3
+
+
+def _capped_sql(pairs: str) -> str:
+    return f"""
+    SELECT delta_id, corpus_id, hamming FROM (
+      SELECT delta_id, corpus_id, hamming,
+             row_number() OVER (PARTITION BY delta_id
+                                ORDER BY hamming, corpus_id) AS rk
+      FROM ({pairs})
+    ) WHERE rk <= {_SCREEN_TOP_M}
+    """
+
+
+# ---------------------------------------------------------------------------
+# q186 — image NEAR-dup via dHash over the real decode path (the
+# multimodal tier's dedup op: decode → 9×8 grayscale → gradient bits)
+# ---------------------------------------------------------------------------
+
+
+@query("q186_image_dhash_dedup",
+       oracle=_families_sql(_dhash_cols(_bmp_px(_DH_FAMILIES)), _DH_DOCS,
+                            _DHASH_KEYS, "n_images"))
 def q186_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image dedup end to end through genuine bytes: per document a
     REAL 24-bit BMP is synthesized from seed = doc_id % 50 (so every
@@ -946,15 +1143,8 @@ def q186_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bug anywhere in the pipeline breaks the value hash — the q145
     certification pattern extended from checksums to a working
     dedup operator."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _DH_DOCS).select("doc_id")
-    media = synth_bmp_media(docs)
-    return (
-        image_dhash(media)
-        .groupBy("dhash_lo", "dhash_hi")
-        .agg(F.count(F.lit(1)).alias("n_images"),
-             F.min("media_id").alias("canonical_id"))
-    )
+    media = synth_bmp_media(_media_ids(spark, sf_dir, _DH_DOCS))
+    return _families(image_dhash(media), _DHASH_KEYS, "n_images")
 
 
 # ---------------------------------------------------------------------------
@@ -976,20 +1166,8 @@ def synth_wav_media(ids: DataFrame, families: int = _AF_FAMILIES,
     import numpy as np
 
     n = np.arange(_Q150_SAMPLES, dtype=np.int64)
-
-    def make_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "content": [
-                    _encode_wav_pcm16(
-                        (((int(d) % families) * 7 + n * 13) % 2048
-                         - 1024).astype(np.int16))
-                    for d in pdf[id_col]
-                ],
-            })
-
-    return ids.mapInPandas(make_wav, "media_id long, content binary")
+    return _synth_media(ids, id_col, lambda d: _encode_wav_pcm16(
+        ((d % families) * 7 + n * 13) % 2048 - 1024))
 
 
 def audio_fingerprint(media: DataFrame, id_col: str = "media_id",
@@ -1015,33 +1193,11 @@ def audio_fingerprint(media: DataFrame, id_col: str = "media_id",
     return bits.groupBy(id_col).agg(F.sum("__bit").alias("fingerprint"))
 
 
-def _audio_fp_oracle() -> str:
-    sample = f"((doc_id % {_AF_FAMILIES}) * 7 + n * 13) % 2048 - 1024"
-
-    def energy(lo: str, hi: str) -> str:
-        return (f"list_sum(list_transform(range({lo}, {hi}),"
-                f" n -> pow({sample}, 2)))")
-
-    nbits = 600 // _AF_FRAME - 1
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, {nbits}), f ->
-               CASE WHEN {energy(f'f * {_AF_FRAME}',
-                                 f'f * {_AF_FRAME} + {_AF_FRAME}')}
-                         < {energy(f'(f + 1) * {_AF_FRAME}',
-                                   f'(f + 1) * {_AF_FRAME} + {_AF_FRAME}')}
-                    THEN (CAST(1 AS BIGINT) << f) ELSE 0 END))
-               AS BIGINT) AS fingerprint
-      FROM documents WHERE doc_id < {_AF_DOCS}
-    )
-    SELECT fingerprint, count(*) AS n_clips,
-           CAST(min(doc_id) AS BIGINT) AS canonical_id
-    FROM h GROUP BY fingerprint
-    """
-
-
-@query("q187_audio_fingerprint_dedup", oracle=_audio_fp_oracle())
+@query("q187_audio_fingerprint_dedup",
+       oracle=_families_sql(
+           _energy_fp_sql(f"((doc_id % {_AF_FAMILIES}) * 7 + n * 13)"
+                          f" % 2048 - 1024", _AF_FRAME) + " AS fingerprint",
+           _AF_DOCS, _FP_KEYS, "n_clips"))
 def q187_audio_fingerprint_dedup(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Audio dedup end to end through genuine RIFF/WAVE bytes: clips
@@ -1050,15 +1206,8 @@ def q187_audio_fingerprint_dedup(spark: SparkSession,
     dup families with min-id canonicals — every 14-bit fingerprint
     recomputed arithmetically by the oracle from the generation rule,
     never parsing WAV (the q150/q186 certification pattern)."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _AF_DOCS).select("doc_id")
-    media = synth_wav_media(docs)
-    return (
-        audio_fingerprint(media)
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_clips"),
-             F.min("media_id").alias("canonical_id"))
-    )
+    media = synth_wav_media(_media_ids(spark, sf_dir, _AF_DOCS))
+    return _families(audio_fingerprint(media), _FP_KEYS, "n_clips")
 
 
 # ---------------------------------------------------------------------------
@@ -1075,85 +1224,49 @@ def synth_avi_media(ids: DataFrame, families: int = _VD_FAMILIES,
     """Deterministic AVI corpus from an id frame: one REAL container of
     `_Q152_FRAMES` BMP frames per row, seeded by id % families (planted
     duplicate clips). Shared by q188 and the scale probe."""
-    import numpy as np
-
-    base = (np.arange(_Q152_H)[:, None] * _Q152_W
-            + np.arange(_Q152_W)[None, :])[..., None]
-
-    def make_avi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for d in pdf[id_col]:
-                seed = int(d) % families
-                frames = [
-                    _encode_bmp(np.broadcast_to(
-                        ((seed * 31 + f * 97 + base) % 256)
-                        .astype(np.uint8), (_Q152_H, _Q152_W, 3)))
-                    for f in range(_Q152_FRAMES)
-                ]
-                blobs.append(_encode_avi(frames))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": blobs})
-
-    return ids.mapInPandas(make_avi, "media_id long, content binary")
+    base = _grid(_Q152_H, _Q152_W)
+    return _synth_media(ids, id_col, lambda d: _encode_avi([
+        _gray_bmp(((d % families) * 31 + f * 97 + base) % 256)
+        for f in range(_Q152_FRAMES)]))
 
 
-def video_fingerprint(media: DataFrame,
-                      id_col: str = "media_id") -> DataFrame:
-    """Clip-level perceptual fingerprint from REAL AVI bytes: demux the
-    container (certified movi-walk), dHash every frame through the real
-    BMP decode path, and fold the per-frame 64-bit hashes into one
-    clip integer with frame-position weights — identical frame
-    SEQUENCES collide, reordered or re-cut clips do not. All kernels
-    map-only; container bytes never shuffle, only (id, frame, lo, hi)
-    rows. Frame keys pack as id·2³² + frame_idx — 32 bits of frame
-    space per clip (no realistic clip demuxes 4B frames), so no two
-    clips can alias no matter the frame count; the earlier ·16 packing
-    silently merged clips at 16+ frames."""
+def _frame_dhash(media: DataFrame, id_col: str = "media_id",
+                 out_col: str | None = None) -> DataFrame:
+    """Demux every AVI (certified movi-walk) and dHash every frame
+    through the real BMP decode path: (out_col, __f, dhash_lo,
+    dhash_hi) per frame. Frame keys pack as id·2³² + frame_idx — 32
+    bits of frame space per clip (no realistic clip demuxes 4B frames),
+    so no two clips can alias no matter the frame count; the earlier
+    ·16 packing silently merged clips at 16+ frames."""
     frames = demux_video_frames(media, id_col=id_col, every=1)
     keyed = frames.select(
         (F.shiftleft(F.col(id_col), 32) + F.col("frame_idx"))
         .alias("media_id"),
         F.col("frame").alias("content"))
-    h = image_dhash(keyed)
+    return image_dhash(keyed).select(
+        F.shiftright(F.col("media_id"), 32).alias(out_col or id_col),
+        F.col("media_id").bitwiseAND(F.lit(0xFFFFFFFF)).alias("__f"),
+        "dhash_lo", "dhash_hi")
+
+
+def video_fingerprint(media: DataFrame,
+                      id_col: str = "media_id") -> DataFrame:
+    """Clip-level perceptual fingerprint from REAL AVI bytes: per-frame
+    dHashes (`_frame_dhash`) fold into one clip integer with
+    frame-position weights — identical frame SEQUENCES collide,
+    reordered or re-cut clips do not. All kernels map-only; container
+    bytes never shuffle, only (id, frame, lo, hi) rows."""
     return (
-        h.select(F.shiftright(F.col("media_id"), 32).alias(id_col),
-                 F.col("media_id").bitwiseAND(F.lit(0xFFFFFFFF))
-                 .alias("__f"),
-                 "dhash_lo", "dhash_hi")
-        .groupBy(id_col)
+        _frame_dhash(media, id_col).groupBy(id_col)
         .agg(F.sum(F.col("dhash_lo") * (F.col("__f") * 2 + 1)
                    + F.col("dhash_hi") * (F.col("__f") * 2 + 2))
              .alias("fingerprint"))
     )
 
 
-def _video_fp_oracle() -> str:
-    # frame f of seed s: src[r, c] = (s*31 + f*97 + r*6 + c) % 256;
-    # dHash grid resize 6x4 → 9x8: px(i, j) = src[i // 2, (6*j) // 9]
-    def px(jexpr: str) -> str:
-        return (f"(((doc_id % {_VD_FAMILIES}) * 31 + f * 97"
-                f" + ((k // 8) // 2) * 6 + (6 * ({jexpr})) // 9) % 256)")
-
-    bit = f"CASE WHEN {px('k % 8')} < {px('(k % 8) + 1')} THEN 1 ELSE 0 END"
-    lo = (f"list_sum(list_transform(range(0, 32), k -> {bit}"
-          f" * (CAST(1 AS BIGINT) << k)))")
-    hi = (f"list_sum(list_transform(range(32, 64), k -> {bit}"
-          f" * (CAST(1 AS BIGINT) << (k - 32))))")
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, {_Q152_FRAMES}), f ->
-                 ({lo}) * (f * 2 + 1) + ({hi}) * (f * 2 + 2)))
-               AS BIGINT) AS fingerprint
-      FROM documents WHERE doc_id < {_VD_DOCS}
-    )
-    SELECT fingerprint, count(*) AS n_clips,
-           CAST(min(doc_id) AS BIGINT) AS canonical_id
-    FROM h GROUP BY fingerprint
-    """
-
-
-@query("q188_video_fingerprint_dedup", oracle=_video_fp_oracle())
+@query("q188_video_fingerprint_dedup",
+       oracle=_families_sql(_video_fold_sql(_VD_FAMILIES) + " AS fingerprint",
+                            _VD_DOCS, _FP_KEYS, "n_clips"))
 def q188_video_fingerprint_dedup(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Video dedup end to end through genuine container bytes: AVIs
@@ -1162,15 +1275,8 @@ def q188_video_fingerprint_dedup(spark: SparkSession,
     parsers, folded into clip fingerprints, grouped into dup families
     — every fingerprint recomputed arithmetically by the oracle from
     the generation rule, never parsing RIFF or BMP."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _VD_DOCS).select("doc_id")
-    media = synth_avi_media(docs)
-    return (
-        video_fingerprint(media)
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_clips"),
-             F.min("media_id").alias("canonical_id"))
-    )
+    media = synth_avi_media(_media_ids(spark, sf_dir, _VD_DOCS))
+    return _families(video_fingerprint(media), _FP_KEYS, "n_clips")
 
 
 # ---------------------------------------------------------------------------
@@ -1189,73 +1295,24 @@ _NP_MAXH = 2                 # ≤ 2 flipped bits counts as a near-dup
 _NP_PERT_R, _NP_PERT_C = 0, 4
 
 
-def _mixed_dhash_cte() -> str:
-    """CTE body computing (doc_id, dhash_lo, dhash_hi) arithmetically
-    from `synth_bmp_media_mixed`'s generation rule — shared by the q189
-    and q193 oracles."""
+def _mixed_px(j: str) -> str:
     # px(i, j') = ((seed*31 + 13*i + (13*j')//9) * 97 + pert) % 256 with
     # pert = 128 iff the doc is a perturbed copy and (i, srccol) = (0, 4).
     # The ×97 mixing makes fingerprints of DIFFERENT families
     # pseudo-random (pairwise Hamming ≈ 32), so only planted pairs match.
-    def px(jexpr: str) -> str:
-        return (
-            f"((((doc_id % {_NP_FAMILIES}) * 31 + 13 * (k // 8)"
-            f" + (13 * ({jexpr})) // 9) * 97"
+    return (f"((((doc_id % {_NP_FAMILIES}) * 31 + 13 * (k // 8)"
+            f" + (13 * ({j})) // 9) * 97"
             f" + CASE WHEN (doc_id // {_NP_FAMILIES}) % 2 = 1"
             f" AND k // 8 = {_NP_PERT_R}"
-            f" AND (13 * ({jexpr})) // 9 = {_NP_PERT_C}"
-            f" THEN 128 ELSE 0 END) % 256)"
-        )
-
-    bit = f"CASE WHEN {px('k % 8')} < {px('(k % 8) + 1')} THEN 1 ELSE 0 END"
-    return f"""
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, 32),
-                 k -> {bit} * (CAST(1 AS BIGINT) << k))) AS BIGINT)
-               AS dhash_lo,
-             CAST(list_sum(list_transform(range(32, 64),
-                 k -> {bit} * (CAST(1 AS BIGINT) << (k - 32)))) AS BIGINT)
-               AS dhash_hi
-      FROM documents WHERE doc_id < {_NP_DOCS}
-    """
+            f" AND (13 * ({j})) // 9 = {_NP_PERT_C}"
+            f" THEN 128 ELSE 0 END) % 256)")
 
 
-def _image_neardup_oracle() -> str:
-    return f"""
-    WITH h AS ({_mixed_dhash_cte()})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.dhash_lo, b.dhash_lo))
-                + bit_count(xor(a.dhash_hi, b.dhash_hi)) AS INT) AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.dhash_lo, b.dhash_lo))
-          + bit_count(xor(a.dhash_hi, b.dhash_hi)) <= {_NP_MAXH}
-    """
-
-
-@query("q189_image_neardup_banded", oracle=_image_neardup_oracle())
-def q189_image_neardup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image NEAR-dup through genuine bytes: per document a REAL BMP is
-    synthesized from seed = doc_id % 50, and every second family member
-    carries a single-pixel perturbation at a resize-sampled position —
-    a planted 1–2-bit Hamming neighbor that EXACT fingerprint equality
-    (q186's groupBy) cannot see. The dHash kernel decodes and
-    fingerprints the actual file bytes; `hamming_band_pairs` (the
-    SimHash band machinery, operators/dedup.py) blocks candidates on
-    16-bit bands — pigeonhole-exact recall for distance ≤ 3 with 4
-    bands — and verifies the popcount JVM-side. The oracle recomputes
-    every fingerprint arithmetically from the synthesis rule and
-    brute-forces all pairs, so the band join is held to EXACT recall,
-    not just plausible candidates."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _NP_DOCS).select("doc_id")
-    media = synth_bmp_media_mixed(docs)
-    fp = image_dhash(media)
-    return hamming_band_pairs(
-        fp, "media_id", [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH)
+def _mixed_dhash_cte() -> str:
+    """CTE body computing (doc_id, dhash_lo, dhash_hi) arithmetically
+    from `synth_bmp_media_mixed`'s generation rule — shared by the
+    image near-dup oracles and q193."""
+    return _fp_cte(_dhash_cols(_mixed_px), _NP_DOCS)
 
 
 def synth_bmp_media_mixed(ids: DataFrame, families: int = _NP_FAMILIES,
@@ -1272,28 +1329,42 @@ def synth_bmp_media_mixed(ids: DataFrame, families: int = _NP_FAMILIES,
     would silently merge families — growing family SIZE instead of
     family count at 10×); it vanishes for seed < 256, so q189's
     50-family oracle arithmetic is unchanged."""
-    import numpy as np
+    base = _grid(_Q145_H, _Q145_W)
 
-    base = (np.arange(_Q145_H)[:, None] * _Q145_W
-            + np.arange(_Q145_W)[None, :])
+    def rule(d: int) -> bytes:
+        seed = d % families
+        px = ((seed * 31 + base) * 97 + (seed // 256) * (base * 53 + 7)) % 256
+        if (d // families) % 2 == 1:
+            px[_NP_PERT_R, _NP_PERT_C] = (px[_NP_PERT_R, _NP_PERT_C]
+                                          + 128) % 256
+        return _gray_bmp(px)
 
-    def make_bmp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = []
-            for did in pdf[id_col]:
-                seed = int(did) % families
-                px = ((seed * 31 + base) * 97
-                      + (seed // 256) * (base * 53 + 7)) % 256
-                if (int(did) // families) % 2 == 1:
-                    px = px.copy()
-                    px[_NP_PERT_R, _NP_PERT_C] = (
-                        px[_NP_PERT_R, _NP_PERT_C] + 128) % 256
-                imgs.append(_encode_bmp(np.broadcast_to(
-                    px.astype(np.uint8)[..., None],
-                    (_Q145_H, _Q145_W, 3))))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": imgs})
+    return _synth_media(ids, id_col, rule)
 
-    return ids.mapInPandas(make_bmp, "media_id long, content binary")
+
+def _image_near_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return image_dhash(synth_bmp_media_mixed(_media_ids(spark, sf_dir,
+                                                        _NP_DOCS)))
+
+
+@query("q189_image_neardup_banded",
+       oracle=_pairs_sql(_dhash_cols(_mixed_px), _NP_DOCS, _DHASH_KEYS,
+                         _NP_MAXH))
+def q189_image_neardup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image NEAR-dup through genuine bytes: per document a REAL BMP is
+    synthesized from seed = doc_id % 50, and every second family member
+    carries a single-pixel perturbation at a resize-sampled position —
+    a planted 1–2-bit Hamming neighbor that EXACT fingerprint equality
+    (q186's groupBy) cannot see. The dHash kernel decodes and
+    fingerprints the actual file bytes; `hamming_band_pairs` (the
+    SimHash band machinery, operators/dedup.py) blocks candidates on
+    16-bit bands — pigeonhole-exact recall for distance ≤ 3 with 4
+    bands — and verifies the popcount JVM-side. The oracle recomputes
+    every fingerprint arithmetically from the synthesis rule and
+    brute-forces all pairs, so the band join is held to EXACT recall,
+    not just plausible candidates."""
+    return _band_pairs(_image_near_fp(spark, sf_dir), "media_id",
+                       _bands(_DHASH_KEYS), _NP_MAXH)
 
 
 # ---------------------------------------------------------------------------
@@ -1419,53 +1490,30 @@ def synth_wav_media_perturbed(ids: DataFrame,
     n = np.arange(_Q150_SAMPLES, dtype=np.int64)
     bump = ((n >= _AN_PERT_LO) & (n < _AN_PERT_HI)) * _AN_PERT_AMP
 
-    def make_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for d in pdf[id_col]:
-                seed = int(d) % families
-                s = ((seed * 7 + n * 13) * (2 * seed + 31)) % 2048 - 1024
-                if (int(d) // families) % 2 == 1:
-                    s = s + bump
-                blobs.append(_encode_wav_pcm16(s.astype(np.int16)))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": blobs})
+    def rule(d: int) -> bytes:
+        seed = d % families
+        return _encode_wav_pcm16(
+            ((seed * 7 + n * 13) * (2 * seed + 31)) % 2048 - 1024
+            + bump * ((d // families) % 2))
 
-    return ids.mapInPandas(make_wav, "media_id long, content binary")
+    return _synth_media(ids, id_col, rule)
 
 
-def _audio_neardup_oracle() -> str:
-    sample = (f"((((doc_id % {_AN_FAMILIES}) * 7 + n * 13)"
-              f" * (2 * (doc_id % {_AN_FAMILIES}) + 31)) % 2048 - 1024"
-              f" + CASE WHEN (doc_id // {_AN_FAMILIES}) % 2 = 1"
-              f" AND n >= {_AN_PERT_LO} AND n < {_AN_PERT_HI}"
-              f" THEN {_AN_PERT_AMP} ELSE 0 END)")
-
-    def energy(lo: str, hi: str) -> str:
-        return (f"list_sum(list_transform(range({lo}, {hi}),"
-                f" n -> pow({sample}, 2)))")
-
-    nbits = _Q150_SAMPLES // _AN_FRAME - 1
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, {nbits}), f ->
-               CASE WHEN {energy(f'f * {_AN_FRAME}',
-                                 f'f * {_AN_FRAME} + {_AN_FRAME}')}
-                         < {energy(f'(f + 1) * {_AN_FRAME}',
-                                   f'(f + 1) * {_AN_FRAME} + {_AN_FRAME}')}
-                    THEN (CAST(1 AS BIGINT) << f) ELSE 0 END))
-               AS BIGINT) AS fingerprint
-      FROM documents WHERE doc_id < {_AN_DOCS}
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.fingerprint, b.fingerprint)) AS INT)
-             AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.fingerprint, b.fingerprint)) <= {_AN_MAXH}
-    """
+_AN_SAMPLE_SQL = (f"((((doc_id % {_AN_FAMILIES}) * 7 + n * 13)"
+                  f" * (2 * (doc_id % {_AN_FAMILIES}) + 31)) % 2048 - 1024"
+                  f" + CASE WHEN (doc_id // {_AN_FAMILIES}) % 2 = 1"
+                  f" AND n >= {_AN_PERT_LO} AND n < {_AN_PERT_HI}"
+                  f" THEN {_AN_PERT_AMP} ELSE 0 END)")
+_AN_FP_COLS = _energy_fp_sql(_AN_SAMPLE_SQL, _AN_FRAME) + " AS fingerprint"
 
 
-@query("q195_audio_neardup_banded", oracle=_audio_neardup_oracle())
+def _audio_near_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    media = synth_wav_media_perturbed(_media_ids(spark, sf_dir, _AN_DOCS))
+    return audio_fingerprint(media, frame_samples=_AN_FRAME)
+
+
+@query("q195_audio_neardup_banded",
+       oracle=_pairs_sql(_AN_FP_COLS, _AN_DOCS, _FP_KEYS, _AN_MAXH))
 def q195_audio_neardup_banded(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Audio NEAR-dup through genuine RIFF/WAVE bytes: 59-bit
@@ -1477,16 +1525,8 @@ def q195_audio_neardup_banded(spark: SparkSession,
     (q187) cannot see. The oracle recomputes every fingerprint from
     the synthesis arithmetic and brute-forces all pairs, holding the
     band join to exact recall."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _AN_DOCS).select("doc_id")
-    media = synth_wav_media_perturbed(docs)
-    fp = audio_fingerprint(media, frame_samples=_AN_FRAME)
-    return hamming_band_pairs(
-        fp, "media_id", [("fingerprint", 64)], _AN_MAXH)
+    return _band_pairs(_audio_near_fp(spark, sf_dir), "media_id",
+                       _bands(_FP_KEYS, 64), _AN_MAXH)
 
 
 # ---------------------------------------------------------------------------
@@ -1512,78 +1552,56 @@ def synth_avi_media_mixed(ids: DataFrame, families: int = _VN_FAMILIES,
     with every second family member perturbed at one resize-sampled
     pixel of frame 2 — a planted ≤4-bit neighbor of its family's
     frame sequence."""
-    import numpy as np
+    base = _grid(_Q152_H, _Q152_W)
 
-    base = (np.arange(_Q152_H)[:, None] * _Q152_W
-            + np.arange(_Q152_W)[None, :])
+    def rule(d: int) -> bytes:
+        seed = d % families
+        frames = []
+        for f in range(_Q152_FRAMES):
+            px = ((seed * 31 + f * 41 + base) * 97) % 256
+            if f == _VN_PERT_F and (d // families) % 2 == 1:
+                px[_VN_PERT_R, _VN_PERT_C] = (px[_VN_PERT_R, _VN_PERT_C]
+                                              + 128) % 256
+            frames.append(_gray_bmp(px))
+        return _encode_avi(frames)
 
-    def make_avi(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for d in pdf[id_col]:
-                seed = int(d) % families
-                pert = (int(d) // families) % 2 == 1
-                frames = []
-                for f in range(_Q152_FRAMES):
-                    px = ((seed * 31 + f * 41 + base) * 97) % 256
-                    if pert and f == _VN_PERT_F:
-                        px = px.copy()
-                        px[_VN_PERT_R, _VN_PERT_C] = (
-                            px[_VN_PERT_R, _VN_PERT_C] + 128) % 256
-                    frames.append(_encode_bmp(np.broadcast_to(
-                        px.astype(np.uint8)[..., None],
-                        (_Q152_H, _Q152_W, 3))))
-                blobs.append(_encode_avi(frames))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": blobs})
-
-    return ids.mapInPandas(make_avi, "media_id long, content binary")
+    return _synth_media(ids, id_col, rule)
 
 
-def _video_neardup_oracle() -> str:
+def _video_mixed_px(f: int):
     # px(f; i, j) = ((seed*31 + f*41 + (i//2)*6 + (6*j)//9) * 97
     #               + pert(f, i, j)) % 256 — the resize map of the
     # 6×4 source onto the 9×8 dHash grid, q188's convention.
-    def px(f: int, jexpr: str) -> str:
-        return (
-            f"((((doc_id % {_VN_FAMILIES}) * 31 + {f} * 41"
-            f" + ((k // 8) // 2) * 6 + (6 * ({jexpr})) // 9) * 97"
-            f" + CASE WHEN (doc_id // {_VN_FAMILIES}) % 2 = 1"
-            f" AND {f} = {_VN_PERT_F}"
-            f" AND ((k // 8) // 2) = {_VN_PERT_R}"
-            f" AND (6 * ({jexpr})) // 9 = {_VN_PERT_C}"
-            f" THEN 128 ELSE 0 END) % 256)"
-        )
-
-    cols = []
-    for f in range(_Q152_FRAMES):
-        bit = (f"CASE WHEN {px(f, 'k % 8')} < {px(f, '(k % 8) + 1')}"
-               f" THEN 1 ELSE 0 END")
-        cols.append(
-            f"CAST(list_sum(list_transform(range(0, 32), k -> {bit}"
-            f" * (CAST(1 AS BIGINT) << k))) AS BIGINT) AS f{f}_lo")
-        cols.append(
-            f"CAST(list_sum(list_transform(range(32, 64), k -> {bit}"
-            f" * (CAST(1 AS BIGINT) << (k - 32)))) AS BIGINT) AS f{f}_hi")
-    colsql = ",\n             ".join(cols)
-    # bit_count yields INT8 in DuckDB — widen each term or the 10-way
-    # sum overflows at 127
-    ham = " + ".join(
-        f"CAST(bit_count(xor(a.f{f}_{p}, b.f{f}_{p})) AS INT)"
-        for f in range(_Q152_FRAMES) for p in ("lo", "hi"))
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             {colsql}
-      FROM documents WHERE doc_id < {_VN_DOCS}
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST({ham} AS INT) AS hamming
-    FROM h a JOIN h b ON a.doc_id < b.doc_id
-    WHERE {ham} <= {_VN_MAXH}
-    """
+    return lambda j: (
+        f"((((doc_id % {_VN_FAMILIES}) * 31 + {f} * 41"
+        f" + ((k // 8) // 2) * 6 + (6 * ({j})) // 9) * 97"
+        f" + CASE WHEN (doc_id // {_VN_FAMILIES}) % 2 = 1"
+        f" AND {f} = {_VN_PERT_F}"
+        f" AND ((k // 8) // 2) = {_VN_PERT_R}"
+        f" AND (6 * ({j})) // 9 = {_VN_PERT_C}"
+        f" THEN 128 ELSE 0 END) % 256)")
 
 
-@query("q194_video_neardup_banded", oracle=_video_neardup_oracle())
+# the oracle twin of `_video_wide_dhash`
+_VIDEO_WIDE_COLS = ", ".join(_dhash_cols(_video_mixed_px(f), f"f{f}")
+                             for f in range(_Q152_FRAMES))
+
+
+def _video_wide_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-clip 10-column (frame × half) dHash signature frame over the
+    q194 mixed corpus — the persisted state the banded video index
+    serves from."""
+    media = synth_avi_media_mixed(_media_ids(spark, sf_dir, _VN_DOCS))
+    return _frame_dhash(media, out_col="doc_id").groupBy("doc_id").agg(*[
+        F.max(F.when(F.col("__f") == f, F.col(f"dhash_{p}")))
+        .alias(f"f{f}_{p}")
+        for f in range(_Q152_FRAMES) for p in ("lo", "hi")
+    ])
+
+
+@query("q194_video_neardup_banded",
+       oracle=_pairs_sql(_VIDEO_WIDE_COLS, _VN_DOCS, _VIDEO_COLS,
+                         _VN_MAXH))
 def q194_video_neardup_banded(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Video NEAR-dup through genuine container bytes: demux every AVI
@@ -1597,32 +1615,8 @@ def q194_video_neardup_banded(spark: SparkSession,
     clips do not pair (frame position lives in the column identity).
     The oracle recomputes every per-frame fingerprint arithmetically
     and brute-forces clip pairs."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _VN_DOCS).select("doc_id")
-    media = synth_avi_media_mixed(docs)
-    frames = demux_video_frames(media, every=1)
-    keyed = frames.select(
-        (F.shiftleft(F.col("media_id"), 32) + F.col("frame_idx"))
-        .alias("media_id"),
-        F.col("frame").alias("content"))
-    fps = image_dhash(keyed).select(
-        F.shiftright(F.col("media_id"), 32).alias("doc_id"),
-        F.col("media_id").bitwiseAND(F.lit(0xFFFFFFFF)).alias("__f"),
-        "dhash_lo", "dhash_hi")
-    wide = fps.groupBy("doc_id").agg(*[
-        F.max(F.when(F.col("__f") == f, F.col(f"dhash_{p}")))
-        .alias(f"f{f}_{p}")
-        for f in range(_Q152_FRAMES) for p in ("lo", "hi")
-    ])
-    return hamming_band_pairs(
-        wide, "doc_id",
-        [(f"f{f}_{p}", 32)
-         for f in range(_Q152_FRAMES) for p in ("lo", "hi")],
-        _VN_MAXH)
+    return _band_pairs(_video_wide_dhash(spark, sf_dir), "doc_id",
+                       _bands(_VIDEO_COLS), _VN_MAXH)
 
 
 # ---------------------------------------------------------------------------
@@ -1653,75 +1647,10 @@ _SPIDX_HI = 200
 _SPIDX_FAM = 120
 
 
-def image_index_update(index: DataFrame, delta_media: DataFrame) -> DataFrame:
-    """Merge a delta batch's NOVEL dHash fingerprints into the corpus
-    index, keeping existing canonicals (dedup-on-merge). Work is
-    linear in the DELTA: one map-only decode+fingerprint pass, one
-    delta-sized groupBy, one anti-join against the index on the
-    16-byte fingerprint pair — the corpus images are never re-decoded.
-    Canonicals never change once assigned, so downstream dup labels
-    stay stable across batches (the q165 contract, one modality up)."""
-    delta_idx = (image_dhash(delta_media)
-                 .groupBy("dhash_lo", "dhash_hi")
-                 .agg(F.min("media_id").alias("canonical_id")))
-    novel = delta_idx.join(index.select("dhash_lo", "dhash_hi"),
-                           ["dhash_lo", "dhash_hi"], "left_anti")
-    return index.unionByName(novel)
-
-
-def _dhash_px_sql(fam: int, jexpr: str) -> str:
-    return (f"(((doc_id % {fam}) * 31 + 13 * (k // 8)"
-            f" + (13 * ({jexpr})) // 9) % 256)")
-
-
-def dhash_half_sql(fam: int, k0: int, k1: int) -> str:
-    """DuckDB expression recomputing one 32-bit half of the synthetic
-    corpus's dHash ARITHMETICALLY from the BMP generation rule (never
-    parsing bytes) — the q186 certification contract, shared by every
-    oracle that checks a dHash-derived index."""
-    px = _dhash_px_sql
-    bit = (f"CASE WHEN {px(fam, 'k % 8')} < {px(fam, '(k % 8) + 1')}"
-           f" THEN 1 ELSE 0 END")
-    return (f"CAST(list_sum(list_transform(range({k0}, {k1}),"
-            f" k -> {bit} * (CAST(1 AS BIGINT) << (k - {k0}))))"
-            f" AS BIGINT)")
-
-
-def _image_index_oracle() -> str:
-    half = dhash_half_sql
-
-    return f"""
-    WITH hc AS (
-      SELECT doc_id, {half(_II_FAM_OLD, 0, 32)} AS dhash_lo,
-             {half(_II_FAM_OLD, 32, 64)} AS dhash_hi
-      FROM documents WHERE doc_id < {_II_CORPUS_HI}
-    ),
-    idx AS (
-      SELECT dhash_lo, dhash_hi, CAST(min(doc_id) AS BIGINT)
-               AS canonical_id
-      FROM hc GROUP BY 1, 2
-    ),
-    hd AS (
-      SELECT doc_id, {half(_II_FAM_NEW, 0, 32)} AS dhash_lo,
-             {half(_II_FAM_NEW, 32, 64)} AS dhash_hi
-      FROM documents
-      WHERE doc_id >= {_II_CORPUS_HI} AND doc_id < {_II_DELTA_HI}
-    ),
-    didx AS (
-      SELECT dhash_lo, dhash_hi, CAST(min(doc_id) AS BIGINT)
-               AS canonical_id
-      FROM hd GROUP BY 1, 2
-    )
-    SELECT * FROM idx
-    UNION ALL
-    SELECT d.* FROM didx d
-    WHERE NOT EXISTS (SELECT 1 FROM idx i
-                      WHERE i.dhash_lo = d.dhash_lo
-                        AND i.dhash_hi = d.dhash_hi)
-    """
-
-
-@query("q224_image_index_update", oracle=_image_index_oracle())
+@query("q224_image_index_update",
+       oracle=_index_update_sql(_dhash_cols(_bmp_px(_II_FAM_OLD)),
+                                _dhash_cols(_bmp_px(_II_FAM_NEW)),
+                                _II_CORPUS_HI, _II_DELTA_HI, _DHASH_KEYS))
 def q224_image_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roll the image dHash index forward by one crawl batch: the
     corpus (doc_id < 160, 40 pattern families) owns its canonicals;
@@ -1731,16 +1660,13 @@ def q224_image_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-checked; the oracle recomputes every fingerprint
     ARITHMETICALLY from the generation rule, never parsing BMP — the
     q186 certification contract."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    corpus_ids = docs.filter(F.col("doc_id") < _II_CORPUS_HI)
-    delta_ids = docs.filter((F.col("doc_id") >= _II_CORPUS_HI) &
-                            (F.col("doc_id") < _II_DELTA_HI))
-    index = (image_dhash(synth_bmp_media(corpus_ids,
-                                         families=_II_FAM_OLD))
-             .groupBy("dhash_lo", "dhash_hi")
-             .agg(F.min("media_id").alias("canonical_id")))
-    return image_index_update(
-        index, synth_bmp_media(delta_ids, families=_II_FAM_NEW))
+    corpus = synth_bmp_media(_media_ids(spark, sf_dir, _II_CORPUS_HI),
+                             families=_II_FAM_OLD)
+    delta = synth_bmp_media(
+        _media_ids(spark, sf_dir, _II_DELTA_HI, lo=_II_CORPUS_HI),
+        families=_II_FAM_NEW)
+    return _index_update(image_dhash(corpus), image_dhash(delta),
+                         _DHASH_KEYS)
 
 
 # ---------------------------------------------------------------------------
@@ -1762,19 +1688,6 @@ _VI_FAM_OLD = 16          # corpus seeds 0..15
 _VI_FAM_NEW = 20          # delta seeds 0..19 → 4 genuinely novel
 
 
-def fingerprint_index_update(index: DataFrame,
-                             delta_fp: DataFrame) -> DataFrame:
-    """Shared append-back step: reduce the delta's fingerprints to one
-    row per distinct value (delta-sized), anti-join the index, union.
-    Known fingerprints keep their corpus canonical forever; work is
-    linear in the delta — the corpus media are never re-decoded."""
-    delta_idx = (delta_fp.groupBy("fingerprint")
-                 .agg(F.min("media_id").alias("canonical_id")))
-    novel = delta_idx.join(index.select("fingerprint"),
-                           ["fingerprint"], "left_anti")
-    return index.unionByName(novel)
-
-
 def synth_wav_media_mod(ids: DataFrame, families: int,
                         id_col: str = "doc_id") -> DataFrame:
     """q225's seed-MODULATED WAV corpus: the q187 generator's frame
@@ -1788,57 +1701,25 @@ def synth_wav_media_mod(ids: DataFrame, families: int,
 
     n = np.arange(_Q150_SAMPLES, dtype=np.int64)
 
-    def make_wav(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf[id_col]:
-                seed = int(d) % families
-                base = (seed * 7 + n * 13) % 2048 - 1024
-                amp = 1 + 3 * ((seed >> (n // _AF_FRAME)) & 1)
-                out.append(_encode_wav_pcm16(
-                    (base * amp).astype(np.int16)))
-            yield pd.DataFrame({"media_id": pdf[id_col], "content": out})
+    def rule(d: int) -> bytes:
+        seed = d % families
+        amp = 1 + 3 * ((seed >> (n // _AF_FRAME)) & 1)
+        return _encode_wav_pcm16(((seed * 7 + n * 13) % 2048 - 1024) * amp)
 
-    return ids.mapInPandas(make_wav, "media_id long, content binary")
+    return _synth_media(ids, id_col, rule)
 
 
-def _audio_index_oracle() -> str:
-    def fp(fam: int) -> str:
-        sample = (f"(((doc_id % {fam}) * 7 + n * 13) % 2048 - 1024)"
-                  f" * (1 + 3 * (((doc_id % {fam}) >> (n // {_AF_FRAME}))"
-                  f" & 1))")
-        energy = (lambda lo, hi:
-                  f"list_sum(list_transform(range({lo}, {hi}),"
-                  f" n -> pow({sample}, 2)))")
-        nbits = 600 // _AF_FRAME - 1
-        return (f"CAST(list_sum(list_transform(range(0, {nbits}), f ->"
-                f" CASE WHEN {energy(f'f * {_AF_FRAME}', f'f * {_AF_FRAME} + {_AF_FRAME}')}"
-                f" < {energy(f'(f + 1) * {_AF_FRAME}', f'(f + 1) * {_AF_FRAME} + {_AF_FRAME}')}"
-                f" THEN (CAST(1 AS BIGINT) << f) ELSE 0 END))"
-                f" AS BIGINT)")
-
-    return f"""
-    WITH idx AS (
-      SELECT {fp(_AI_FAM_OLD)} AS fingerprint,
-             CAST(min(doc_id) AS BIGINT) AS canonical_id
-      FROM documents WHERE doc_id < {_AI_CORPUS_HI} GROUP BY 1
-    ),
-    didx AS (
-      SELECT {fp(_AI_FAM_NEW)} AS fingerprint,
-             CAST(min(doc_id) AS BIGINT) AS canonical_id
-      FROM documents
-      WHERE doc_id >= {_AI_CORPUS_HI} AND doc_id < {_AI_DELTA_HI}
-      GROUP BY 1
-    )
-    SELECT * FROM idx
-    UNION ALL
-    SELECT d.* FROM didx d
-    WHERE NOT EXISTS (SELECT 1 FROM idx i
-                      WHERE i.fingerprint = d.fingerprint)
-    """
+def _audio_mod_fp_cols(fam: int) -> str:
+    sample = (f"(((doc_id % {fam}) * 7 + n * 13) % 2048 - 1024)"
+              f" * (1 + 3 * (((doc_id % {fam}) >> (n // {_AF_FRAME}))"
+              f" & 1))")
+    return _energy_fp_sql(sample, _AF_FRAME) + " AS fingerprint"
 
 
-@query("q225_audio_index_update", oracle=_audio_index_oracle())
+@query("q225_audio_index_update",
+       oracle=_index_update_sql(_audio_mod_fp_cols(_AI_FAM_OLD),
+                                _audio_mod_fp_cols(_AI_FAM_NEW),
+                                _AI_CORPUS_HI, _AI_DELTA_HI, _FP_KEYS))
 def q225_audio_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roll the audio fingerprint index forward by one crawl batch:
     corpus clips (doc_id < 160, 20 acoustic families) own their
@@ -1846,57 +1727,20 @@ def q225_audio_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     families) re-encounters most fingerprints and appends the novel
     ones. Delta-only decode; both branches value-hash-checked against
     the arithmetic energy-gradient oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    corpus_ids = docs.filter(F.col("doc_id") < _AI_CORPUS_HI)
-    delta_ids = docs.filter((F.col("doc_id") >= _AI_CORPUS_HI) &
-                            (F.col("doc_id") < _AI_DELTA_HI))
-    index = (audio_fingerprint(synth_wav_media_mod(corpus_ids,
-                                                   families=_AI_FAM_OLD))
-             .groupBy("fingerprint")
-             .agg(F.min("media_id").alias("canonical_id")))
-    delta_fp = audio_fingerprint(synth_wav_media_mod(delta_ids,
-                                                     families=_AI_FAM_NEW))
-    return fingerprint_index_update(index, delta_fp)
+    corpus = synth_wav_media_mod(_media_ids(spark, sf_dir, _AI_CORPUS_HI),
+                                 families=_AI_FAM_OLD)
+    delta = synth_wav_media_mod(
+        _media_ids(spark, sf_dir, _AI_DELTA_HI, lo=_AI_CORPUS_HI),
+        families=_AI_FAM_NEW)
+    return _index_update(audio_fingerprint(corpus), audio_fingerprint(delta),
+                         _FP_KEYS)
 
 
-def _video_index_oracle() -> str:
-    def fp(fam: int) -> str:
-        def px(jexpr: str) -> str:
-            return (f"(((doc_id % {fam}) * 31 + f * 97"
-                    f" + ((k // 8) // 2) * 6 + (6 * ({jexpr})) // 9)"
-                    f" % 256)")
-        bit = (f"CASE WHEN {px('k % 8')} < {px('(k % 8) + 1')}"
-               f" THEN 1 ELSE 0 END")
-        lo = (f"list_sum(list_transform(range(0, 32), k -> {bit}"
-              f" * (CAST(1 AS BIGINT) << k)))")
-        hi = (f"list_sum(list_transform(range(32, 64), k -> {bit}"
-              f" * (CAST(1 AS BIGINT) << (k - 32))))")
-        return (f"CAST(list_sum(list_transform(range(0, {_Q152_FRAMES}),"
-                f" f -> ({lo}) * (f * 2 + 1) + ({hi}) * (f * 2 + 2)))"
-                f" AS BIGINT)")
-
-    return f"""
-    WITH idx AS (
-      SELECT {fp(_VI_FAM_OLD)} AS fingerprint,
-             CAST(min(doc_id) AS BIGINT) AS canonical_id
-      FROM documents WHERE doc_id < {_VI_CORPUS_HI} GROUP BY 1
-    ),
-    didx AS (
-      SELECT {fp(_VI_FAM_NEW)} AS fingerprint,
-             CAST(min(doc_id) AS BIGINT) AS canonical_id
-      FROM documents
-      WHERE doc_id >= {_VI_CORPUS_HI} AND doc_id < {_VI_DELTA_HI}
-      GROUP BY 1
-    )
-    SELECT * FROM idx
-    UNION ALL
-    SELECT d.* FROM didx d
-    WHERE NOT EXISTS (SELECT 1 FROM idx i
-                      WHERE i.fingerprint = d.fingerprint)
-    """
-
-
-@query("q226_video_index_update", oracle=_video_index_oracle())
+@query("q226_video_index_update",
+       oracle=_index_update_sql(
+           _video_fold_sql(_VI_FAM_OLD) + " AS fingerprint",
+           _video_fold_sql(_VI_FAM_NEW) + " AS fingerprint",
+           _VI_CORPUS_HI, _VI_DELTA_HI, _FP_KEYS))
 def q226_video_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roll the video fingerprint index forward by one crawl batch:
     corpus clips (doc_id < 80, 16 clip families) own their canonicals;
@@ -1904,79 +1748,28 @@ def q226_video_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences and appends the novel ones. Delta-only demux+decode;
     both branches value-hash-checked against the arithmetic
     frame-sequence oracle."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    corpus_ids = docs.filter(F.col("doc_id") < _VI_CORPUS_HI)
-    delta_ids = docs.filter((F.col("doc_id") >= _VI_CORPUS_HI) &
-                            (F.col("doc_id") < _VI_DELTA_HI))
-    index = (video_fingerprint(synth_avi_media(corpus_ids,
-                                               families=_VI_FAM_OLD))
-             .groupBy("fingerprint")
-             .agg(F.min("media_id").alias("canonical_id")))
-    delta_fp = video_fingerprint(synth_avi_media(delta_ids,
-                                                 families=_VI_FAM_NEW))
-    return fingerprint_index_update(index, delta_fp)
+    corpus = synth_avi_media(_media_ids(spark, sf_dir, _VI_CORPUS_HI),
+                             families=_VI_FAM_OLD)
+    delta = synth_avi_media(
+        _media_ids(spark, sf_dir, _VI_DELTA_HI, lo=_VI_CORPUS_HI),
+        families=_VI_FAM_NEW)
+    return _index_update(video_fingerprint(corpus), video_fingerprint(delta),
+                         _FP_KEYS)
 
 
 # ---------------------------------------------------------------------------
-# q230 — image NEAR-dup screening of a crawl batch against the corpus
-# band index: the q162 incremental-near-dup contract applied to
-# perceptual fingerprints (q224 maintains the EXACT index; re-encodes
-# that flip a gradient bit need the banded Hamming match)
+# q230/q237/q238 — NEAR-dup screening of a crawl batch against the
+# corpus band index: the q162 incremental-near-dup contract applied to
+# perceptual fingerprints (q224-q226 maintain the EXACT index;
+# re-encodes that flip a gradient bit need the banded Hamming match).
+# The banded index is the state a rolling crawl persists; a delta batch
+# joins it instead of self-pairing the corpus.
 # ---------------------------------------------------------------------------
 
 _NI_DELTA_LO = 160           # delta = doc_id in [160, 200); corpus below
 # family {s, s+50, s+100, s+150}: the s+150 member lands in the delta,
 # so every family with seed ≥ 10 plants 3 delta↔corpus near-pairs
 # (pert↔pert at distance 0, pert↔unpert at 1-2 bits)
-
-
-def _image_near_index_oracle() -> str:
-    return f"""
-    WITH h AS ({_mixed_dhash_cte()})
-    SELECT d.doc_id AS delta_id, c.doc_id AS corpus_id,
-           CAST(bit_count(xor(d.dhash_lo, c.dhash_lo))
-                + bit_count(xor(d.dhash_hi, c.dhash_hi)) AS INT)
-             AS hamming
-    FROM h d JOIN h c
-      ON d.doc_id >= {_NI_DELTA_LO} AND c.doc_id < {_NI_DELTA_LO}
-    WHERE bit_count(xor(d.dhash_lo, c.dhash_lo))
-          + bit_count(xor(d.dhash_hi, c.dhash_hi)) <= {_NP_MAXH}
-    """
-
-
-@query("q230_image_near_index", oracle=_image_near_index_oracle())
-def q230_image_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Screen the crawl batch (doc_id ∈ [160, 200)) against the corpus
-    dHash band index: delta bands join the stored index, survivors
-    verify the exact popcount — every (delta, corpus, hamming) pair
-    value-hash-checked against the oracle's brute-force over the
-    arithmetic fingerprints. The pigeonhole bound holds per pair (4
-    bands, d ≤ 3), so recall is EXACT; work is delta band rows + true
-    candidates, never corpus²."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _NP_DOCS).select("doc_id")
-    media = synth_bmp_media_mixed(docs)
-    fp = keep(image_dhash(media), checkpoint=True)
-    delta = fp.filter(F.col("media_id") >= _NI_DELTA_LO)
-    corpus = fp.filter(F.col("media_id") < _NI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "media_id",
-        [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH)
-
-
-# ---------------------------------------------------------------------------
-# q237/q238 — audio and video NEAR-dup screening of a crawl batch
-# against the corpus band index: q230's delta-vs-corpus contract for
-# the remaining modalities, completing the near-INDEX matrix
-# (image/audio/video exact maintenance = q224/q225/q226; near
-# screening = q230/q237/q238). The banded index is the state a rolling
-# crawl persists; a delta batch joins it instead of self-pairing the
-# corpus.
-# ---------------------------------------------------------------------------
 
 _ANI_DELTA_LO = 150          # audio delta = doc_id in [150, 200)
 # ids 150..199 have doc_id // 50 == 3 (odd) → every delta clip is a
@@ -1985,41 +1778,45 @@ _ANI_DELTA_LO = 150          # audio delta = doc_id in [150, 200)
 
 _VNI_DELTA_LO = 75           # video delta = doc_id in [75, 100)
 
-
-def _audio_near_index_oracle() -> str:
-    sample = (f"((((doc_id % {_AN_FAMILIES}) * 7 + n * 13)"
-              f" * (2 * (doc_id % {_AN_FAMILIES}) + 31)) % 2048 - 1024"
-              f" + CASE WHEN (doc_id // {_AN_FAMILIES}) % 2 = 1"
-              f" AND n >= {_AN_PERT_LO} AND n < {_AN_PERT_HI}"
-              f" THEN {_AN_PERT_AMP} ELSE 0 END)")
-
-    def energy(lo: str, hi: str) -> str:
-        return (f"list_sum(list_transform(range({lo}, {hi}),"
-                f" n -> pow({sample}, 2)))")
-
-    nbits = _Q150_SAMPLES // _AN_FRAME - 1
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, {nbits}), f ->
-               CASE WHEN {energy(f'f * {_AN_FRAME}',
-                                 f'f * {_AN_FRAME} + {_AN_FRAME}')}
-                         < {energy(f'(f + 1) * {_AN_FRAME}',
-                                   f'(f + 1) * {_AN_FRAME} + {_AN_FRAME}')}
-                    THEN (CAST(1 AS BIGINT) << f) ELSE 0 END))
-               AS BIGINT) AS fingerprint
-      FROM documents WHERE doc_id < {_AN_DOCS}
-    )
-    SELECT d.doc_id AS delta_id, c.doc_id AS corpus_id,
-           CAST(bit_count(xor(d.fingerprint, c.fingerprint)) AS INT)
-             AS hamming
-    FROM h d JOIN h c
-      ON d.doc_id >= {_ANI_DELTA_LO} AND c.doc_id < {_ANI_DELTA_LO}
-    WHERE bit_count(xor(d.fingerprint, c.fingerprint)) <= {_AN_MAXH}
-    """
+_IMAGE_SCREEN_SQL = _pairs_sql(_dhash_cols(_mixed_px), _NP_DOCS,
+                               _DHASH_KEYS, _NP_MAXH, _NI_DELTA_LO)
+_AUDIO_SCREEN_SQL = _pairs_sql(_AN_FP_COLS, _AN_DOCS, _FP_KEYS, _AN_MAXH,
+                               _ANI_DELTA_LO)
+_VIDEO_SCREEN_SQL = _pairs_sql(_VIDEO_WIDE_COLS, _VN_DOCS, _VIDEO_COLS,
+                               _VN_MAXH, _VNI_DELTA_LO)
 
 
-@query("q237_audio_near_index", oracle=_audio_near_index_oracle())
+def _image_screen(spark: SparkSession, sf_dir: str,
+                  top_m: int | None = None) -> DataFrame:
+    return _screen(_image_near_fp(spark, sf_dir), "media_id", _NI_DELTA_LO,
+                   _bands(_DHASH_KEYS), _NP_MAXH, top_m)
+
+
+def _audio_screen(spark: SparkSession, sf_dir: str,
+                  top_m: int | None = None) -> DataFrame:
+    return _screen(_audio_near_fp(spark, sf_dir), "media_id", _ANI_DELTA_LO,
+                   _bands(_FP_KEYS, 64), _AN_MAXH, top_m)
+
+
+def _video_screen(spark: SparkSession, sf_dir: str,
+                  top_m: int | None = None) -> DataFrame:
+    return _screen(_video_wide_dhash(spark, sf_dir), "doc_id", _VNI_DELTA_LO,
+                   _bands(_VIDEO_COLS), _VN_MAXH, top_m)
+
+
+@query("q230_image_near_index", oracle=_IMAGE_SCREEN_SQL)
+def q230_image_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Screen the crawl batch (doc_id ∈ [160, 200)) against the corpus
+    dHash band index: delta bands join the stored index, survivors
+    verify the exact popcount — every (delta, corpus, hamming) pair
+    value-hash-checked against the oracle's brute-force over the
+    arithmetic fingerprints. The pigeonhole bound holds per pair (4
+    bands, d ≤ 3), so recall is EXACT; work is delta band rows + true
+    candidates, never corpus²."""
+    return _image_screen(spark, sf_dir)
+
+
+@query("q237_audio_near_index", oracle=_AUDIO_SCREEN_SQL)
 def q237_audio_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Screen the audio crawl batch (doc_id ∈ [150, 200) — all
     perturbed family members) against the corpus energy-gradient band
@@ -2029,36 +1826,34 @@ def q237_audio_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis-arithmetic fingerprints. Pigeonhole recall is exact (4
     bands, d ≤ 3 ≥ the ≤2 threshold); work is delta band rows + true
     candidates, never corpus²."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _AN_DOCS).select("doc_id")
-    media = synth_wav_media_perturbed(docs)
-    fp = keep(audio_fingerprint(media, frame_samples=_AN_FRAME),
-              checkpoint=True)
-    delta = fp.filter(F.col("media_id") >= _ANI_DELTA_LO)
-    corpus = fp.filter(F.col("media_id") < _ANI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "media_id", [("fingerprint", 64)], _AN_MAXH)
+    return _audio_screen(spark, sf_dir)
 
 
-_SCREEN_TOP_M = 3
+@query("q238_video_near_index", oracle=_VIDEO_SCREEN_SQL)
+def q238_video_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Screen the video crawl batch (doc_id ∈ [75, 100) — all perturbed
+    family members) against the corpus frame-sequence band index: the
+    q194 ten-column 320-bit signature, delta bands joining the stored
+    40-band index, survivors popcount-verified — every (delta, corpus,
+    hamming) pair value-hash-checked against the oracle's arithmetic
+    brute force. Frame position lives in the column identity, so
+    re-cut clips stay apart; work is delta band rows + true
+    candidates."""
+    return _video_screen(spark, sf_dir)
 
 
-def _audio_screen_capped_oracle() -> str:
-    return f"""
-    SELECT delta_id, corpus_id, hamming FROM (
-      SELECT delta_id, corpus_id, hamming,
-             row_number() OVER (PARTITION BY delta_id
-                                ORDER BY hamming, corpus_id) AS rk
-      FROM ({_audio_near_index_oracle()})
-    ) WHERE rk <= {_SCREEN_TOP_M}
-    """
+# ---------------------------------------------------------------------------
+# q330/q341/q342 — the top-m OUTPUT CAP over the audio, image and video
+# near screens: on clone-heavy corpora the round-12 100x ladder measured
+# the uncapped screens materializing 468M (image) / 831M (video) pair
+# rows.  The cap is generic in hamming_band_pairs_delta (rank on
+# hamming asc, ties to the smallest corpus id); output is ≤ m·|delta|
+# BY CONSTRUCTION while set-level screening decisions are unchanged
+# (any delta item with a ≤ max_hamming match still reports one).
+# ---------------------------------------------------------------------------
 
 
-@query("q330_audio_screen_capped", oracle=_audio_screen_capped_oracle())
+@query("q330_audio_screen_capped", oracle=_capped_sql(_AUDIO_SCREEN_SQL))
 def q330_audio_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q237's audio near screen with the top-m OUTPUT CAP (m = 3
     closest corpus matches per delta clip, ties to the smallest id) —
@@ -2069,134 +1864,10 @@ def q330_audio_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     decisions unchanged (any delta clip with a ≤ max_hamming match
     still reports one).  Every kept (delta, corpus, hamming) row
     value-hash-checked against the rank-windowed oracle."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _AN_DOCS).select("doc_id")
-    media = synth_wav_media_perturbed(docs)
-    fp = keep(audio_fingerprint(media, frame_samples=_AN_FRAME),
-              checkpoint=True)
-    delta = fp.filter(F.col("media_id") >= _ANI_DELTA_LO)
-    corpus = fp.filter(F.col("media_id") < _ANI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "media_id", [("fingerprint", 64)], _AN_MAXH,
-        top_m=_SCREEN_TOP_M)
+    return _audio_screen(spark, sf_dir, _SCREEN_TOP_M)
 
 
-def _video_near_index_oracle() -> str:
-    def px(f: int, jexpr: str) -> str:
-        return (
-            f"((((doc_id % {_VN_FAMILIES}) * 31 + {f} * 41"
-            f" + ((k // 8) // 2) * 6 + (6 * ({jexpr})) // 9) * 97"
-            f" + CASE WHEN (doc_id // {_VN_FAMILIES}) % 2 = 1"
-            f" AND {f} = {_VN_PERT_F}"
-            f" AND ((k // 8) // 2) = {_VN_PERT_R}"
-            f" AND (6 * ({jexpr})) // 9 = {_VN_PERT_C}"
-            f" THEN 128 ELSE 0 END) % 256)"
-        )
-
-    cols = []
-    for f in range(_Q152_FRAMES):
-        bit = (f"CASE WHEN {px(f, 'k % 8')} < {px(f, '(k % 8) + 1')}"
-               f" THEN 1 ELSE 0 END")
-        cols.append(
-            f"CAST(list_sum(list_transform(range(0, 32), k -> {bit}"
-            f" * (CAST(1 AS BIGINT) << k))) AS BIGINT) AS f{f}_lo")
-        cols.append(
-            f"CAST(list_sum(list_transform(range(32, 64), k -> {bit}"
-            f" * (CAST(1 AS BIGINT) << (k - 32)))) AS BIGINT) AS f{f}_hi")
-    colsql = ",\n             ".join(cols)
-    ham = " + ".join(
-        f"CAST(bit_count(xor(d.f{f}_{p}, c.f{f}_{p})) AS INT)"
-        for f in range(_Q152_FRAMES) for p in ("lo", "hi"))
-    return f"""
-    WITH h AS (
-      SELECT doc_id,
-             {colsql}
-      FROM documents WHERE doc_id < {_VN_DOCS}
-    )
-    SELECT d.doc_id AS delta_id, c.doc_id AS corpus_id,
-           CAST({ham} AS INT) AS hamming
-    FROM h d JOIN h c
-      ON d.doc_id >= {_VNI_DELTA_LO} AND c.doc_id < {_VNI_DELTA_LO}
-    WHERE {ham} <= {_VN_MAXH}
-    """
-
-
-def _video_wide_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-clip 10-column (frame × half) dHash signature frame over the
-    q194 mixed corpus — the persisted state the banded video index
-    serves from."""
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _VN_DOCS).select("doc_id")
-    media = synth_avi_media_mixed(docs)
-    frames = demux_video_frames(media, every=1)
-    keyed = frames.select(
-        (F.shiftleft(F.col("media_id"), 32) + F.col("frame_idx"))
-        .alias("media_id"),
-        F.col("frame").alias("content"))
-    fps = image_dhash(keyed).select(
-        F.shiftright(F.col("media_id"), 32).alias("doc_id"),
-        F.col("media_id").bitwiseAND(F.lit(0xFFFFFFFF)).alias("__f"),
-        "dhash_lo", "dhash_hi")
-    return fps.groupBy("doc_id").agg(*[
-        F.max(F.when(F.col("__f") == f, F.col(f"dhash_{p}")))
-        .alias(f"f{f}_{p}")
-        for f in range(_Q152_FRAMES) for p in ("lo", "hi")
-    ])
-
-
-@query("q238_video_near_index", oracle=_video_near_index_oracle())
-def q238_video_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Screen the video crawl batch (doc_id ∈ [75, 100) — all perturbed
-    family members) against the corpus frame-sequence band index: the
-    q194 ten-column 320-bit signature, delta bands joining the stored
-    40-band index, survivors popcount-verified — every (delta, corpus,
-    hamming) pair value-hash-checked against the oracle's arithmetic
-    brute force. Frame position lives in the column identity, so
-    re-cut clips stay apart; work is delta band rows + true
-    candidates."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    wide = keep(_video_wide_dhash(spark, sf_dir), checkpoint=True)
-    delta = wide.filter(F.col("doc_id") >= _VNI_DELTA_LO)
-    corpus = wide.filter(F.col("doc_id") < _VNI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "doc_id",
-        [(f"f{f}_{p}", 32)
-         for f in range(_Q152_FRAMES) for p in ("lo", "hi")],
-        _VN_MAXH)
-
-
-# ---------------------------------------------------------------------------
-# q341/q342 — the top-m OUTPUT CAP over the image and video near
-# screens: q330 priced the cap for audio; these register the same
-# contract for the two modalities whose uncapped screens the round-12
-# 100x ladder measured materializing 468M (image) / 831M (video) pair
-# rows on clone-heavy corpora.  The cap is generic in
-# hamming_band_pairs_delta (rank on hamming asc, ties to the smallest
-# corpus id); output is ≤ m·|delta| BY CONSTRUCTION while set-level
-# screening decisions are unchanged (any delta item with a
-# ≤ max_hamming match still reports one).
-# ---------------------------------------------------------------------------
-
-
-def _image_screen_capped_oracle() -> str:
-    return f"""
-    SELECT delta_id, corpus_id, hamming FROM (
-      SELECT delta_id, corpus_id, hamming,
-             row_number() OVER (PARTITION BY delta_id
-                                ORDER BY hamming, corpus_id) AS rk
-      FROM ({_image_near_index_oracle()})
-    ) WHERE rk <= {_SCREEN_TOP_M}
-    """
-
-
-@query("q341_image_screen_capped", oracle=_image_screen_capped_oracle())
+@query("q341_image_screen_capped", oracle=_capped_sql(_IMAGE_SCREEN_SQL))
 def q341_image_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q230's image near screen with the top-m output cap (m = 3
     closest corpus matches per delta image, ties to the smallest id):
@@ -2204,34 +1875,10 @@ def q341_image_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     a rank window keeps m per delta row — every kept (delta, corpus,
     hamming) row value-hash-checked against the rank-windowed oracle
     over the arithmetic fingerprints."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _NP_DOCS).select("doc_id")
-    media = synth_bmp_media_mixed(docs)
-    fp = keep(image_dhash(media), checkpoint=True)
-    delta = fp.filter(F.col("media_id") >= _NI_DELTA_LO)
-    corpus = fp.filter(F.col("media_id") < _NI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "media_id",
-        [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH,
-        top_m=_SCREEN_TOP_M)
+    return _image_screen(spark, sf_dir, _SCREEN_TOP_M)
 
 
-def _video_screen_capped_oracle() -> str:
-    return f"""
-    SELECT delta_id, corpus_id, hamming FROM (
-      SELECT delta_id, corpus_id, hamming,
-             row_number() OVER (PARTITION BY delta_id
-                                ORDER BY hamming, corpus_id) AS rk
-      FROM ({_video_near_index_oracle()})
-    ) WHERE rk <= {_SCREEN_TOP_M}
-    """
-
-
-@query("q342_video_screen_capped", oracle=_video_screen_capped_oracle())
+@query("q342_video_screen_capped", oracle=_capped_sql(_VIDEO_SCREEN_SQL))
 def q342_video_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q238's video near screen with the top-m output cap (m = 3
     closest corpus matches per delta clip, ties to the smallest id):
@@ -2239,15 +1886,4 @@ def q342_video_screen_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored 40-band index, survivors popcount-verified, a rank window
     keeping m per delta row — every kept (delta, corpus, hamming) row
     value-hash-checked against the rank-windowed arithmetic oracle."""
-    from auto_ml_platform_with_timeseries_data_spark.operators.dedup import (
-        hamming_band_pairs_delta,
-    )
-
-    wide = keep(_video_wide_dhash(spark, sf_dir), checkpoint=True)
-    delta = wide.filter(F.col("doc_id") >= _VNI_DELTA_LO)
-    corpus = wide.filter(F.col("doc_id") < _VNI_DELTA_LO)
-    return hamming_band_pairs_delta(
-        delta, corpus, "doc_id",
-        [(f"f{f}_{p}", 32)
-         for f in range(_Q152_FRAMES) for p in ("lo", "hi")],
-        _VN_MAXH, top_m=_SCREEN_TOP_M)
+    return _video_screen(spark, sf_dir, _SCREEN_TOP_M)

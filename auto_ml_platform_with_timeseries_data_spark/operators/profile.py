@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
@@ -533,12 +533,12 @@ def corr_matrix(df: DataFrame, cols: list[str],
         q = {c: F.col(c).cast("long") for c in cols}
     aggs = [F.count(F.lit(1)).alias("n")]
     for c in cols:
-        aggs.append(F.sum(q[c].cast("decimal(38,0)")).alias(f"s_{c}"))
-        aggs.append(F.sum((q[c] * q[c]).cast("decimal(38,0)"))
+        aggs.append(F.sum(dec(q[c])).alias(f"s_{c}"))
+        aggs.append(F.sum(dec(q[c] * q[c]))
                     .alias(f"ss_{c}"))
     pairs = [(a, b) for i, a in enumerate(cols) for b in cols[i + 1:]]
     for a, b in pairs:
-        aggs.append(F.sum((q[a] * q[b]).cast("decimal(38,0)"))
+        aggs.append(F.sum(dec(q[a] * q[b]))
                     .alias(f"sp_{a}_{b}"))
     stats = df.agg(*aggs)
 
@@ -909,7 +909,6 @@ def gini_coefficient(df: DataFrame, value: Column) -> DataFrame:
                                      .alias("__v")))
     # pure integer arithmetic: c·(c+1) is even so the div is exact, and
     # nothing ever passes through a double before the final ratio
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     contrib = (dec(F.col("__v"))
                * (dec(F.col("__c")) * dec(F.col("__s"))
                   + dec(F.expr("(__c * (__c + 1)) div 2"))))
@@ -987,7 +986,7 @@ def hhi_concentration(df: DataFrame, dim_col: str) -> DataFrame:
     agg = cells.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("__n").cast("long").alias("n"),
-        F.sum(F.col("__n").cast("decimal(38,0)") * F.col("__n"))
+        F.sum(dec(F.col("__n")) * F.col("__n"))
         .alias("__s2"))
     nn = F.col("n").cast("double") * F.col("n")
     return agg.select(

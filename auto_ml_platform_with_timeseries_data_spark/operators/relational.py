@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -51,7 +51,7 @@ def _split_money(name: str, unit_scale: int) -> Column:
     """Recombine a split sum (post-aggregation, rows = #groups) in
     DECIMAL — exact at any magnitude — and round to money: the value
     is (hi·M + lo) · 10^-unit_scale."""
-    total = (F.col(f"__{name}_hi").cast("decimal(38,0)")
+    total = (dec(F.col(f"__{name}_hi"))
              * F.lit(_SPLIT_M) + F.col(f"__{name}_lo"))
     return (F.round(total / F.lit(10 ** unit_scale).cast("decimal(7,0)"), 2)
             .cast("double"))
@@ -774,10 +774,10 @@ def q91_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql.window import Window as _W
 
-    dec = F.ntile(10).over(
+    decile = F.ntile(10).over(
         _W.partitionBy("lang").orderBy("n_chars", "doc_id"))
     return (
-        docs.select("lang", "n_chars", dec.alias("decile"))
+        docs.select("lang", "n_chars", decile.alias("decile"))
         .groupBy("lang", "decile")
         .agg(F.count(F.lit(1)).alias("n"),
              F.min("n_chars").alias("lo"),

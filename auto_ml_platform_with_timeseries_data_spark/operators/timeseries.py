@@ -61,6 +61,13 @@ def pin(c: Column) -> Column:
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
+def dec(c: Column) -> Column:
+    """The exact integer accumulator: decimal(38,0), Spark's match for
+    DuckDB's HUGEINT sum of BIGINT terms, so a wide sum neither
+    overflows nor rounds on either engine."""
+    return c.cast("decimal(38,0)")
+
+
 def event_cents_query(spark: SparkSession, sf_dir: str,
                       kernel: Callable[..., DataFrame],
                       **kwargs) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     EVENT_CENTS_SRC_SQL,
+    dec,
     event_cents_query,
     ordered_series,
     pin,
@@ -553,10 +554,10 @@ def group_ols(df: DataFrame, key: str, ts_col: str, value_col: str,
     base = df.select(F.col(key), x.alias("__x"), y.alias("__y"))
     agg = base.groupBy(key).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum("__x").cast("decimal(38,0)").alias("sx"),
+        dec(F.sum("__x")).alias("sx"),
         F.sum("__y").cast("decimal(38,4)").alias("sy"),
         F.sum(F.col("__x") * F.col("__y")).cast("decimal(38,4)").alias("sxy"),
-        F.sum(F.col("__x") * F.col("__x")).cast("decimal(38,0)").alias("sxx"),
+        dec(F.sum(F.col("__x") * F.col("__x"))).alias("sxx"),
     )
     n = F.col("n").cast("double")
     sx = F.col("sx").cast("double")
@@ -646,8 +647,8 @@ def moment_features(df: DataFrame, group_col: str,
         F.count(F.lit(1)).alias("n"),
         F.sum(v).alias("s1"),
         F.sum(v * v).alias("s2"),
-        F.sum((vd * vd * vd).cast("decimal(38,0)")).alias("s3"),
-        F.sum((vd * vd * vd * vd).cast("decimal(38,0)")).alias("s4"),
+        F.sum(dec(vd * vd * vd)).alias("s3"),
+        F.sum(dec(vd * vd * vd * vd)).alias("s4"),
     )
     n = F.col("n").cast("double")
     s1 = F.col("s1").cast("double")
@@ -1731,7 +1732,6 @@ def von_neumann_ratio(df: DataFrame, group_col: str, order: str,
     squares and Σv² go through DECIMAL(38,0) (cents² × n tops int64
     at scale); the ratio and z pin once over exact integers."""
     src, w = ordered_series(df, group_col, order, value, tie_break)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     d = F.col("__v") - F.lag("__v", 1).over(w)
     per = (src.select("__g", "__v", d.alias("__d"))
            .groupBy("__g")
@@ -2100,7 +2100,6 @@ def runs_test(df: DataFrame, group_col: str, order: str,
     tot = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__v").cast("long").alias("__s"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     kept = (src.join(tot, "__g")
             .withColumn("__sgn",
                         F.when(dec(F.col("__v")) * dec(F.col("__n"))
@@ -2293,7 +2292,6 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
     lagged = src.select(
         "__g", F.col("__v").alias("__l0"),
         F.lag("__v", 1).over(w).alias("__x"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x = F.col("__x")
     y = F.col("__l0") - F.col("__x")
     per = (lagged.filter(x.isNotNull())
@@ -2304,7 +2302,7 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
                 F.sum(dec(x) * dec(x)).alias("__sxx"),
                 F.sum(dec(x) * dec(y)).alias("__sxy"),
                 F.sum(dec(y) * dec(y)).alias("__syy")))
-    m = F.col("m").cast("decimal(38,0)")
+    m = dec(F.col("m"))
     den = m * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     num = m * F.col("__sxy") - F.col("__sx") * F.col("__sy")
     # NULL-guard the denominator: `ok` references ssr (hence beta), so
@@ -2425,7 +2423,6 @@ def hurst_aggvar(df: DataFrame, group_col: str, order: str,
         "__g", "__v", "__i", F.explode(ms).alias("__s")).select(
         "__g", "__v", "__i",
         F.col("__s.m").alias("__m"), F.col("__s.x").alias("__x"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     blocks = (fanned.groupBy(
         "__g", "__m", "__x",
         F.floor((F.col("__i") - 1) / F.col("__m")).alias("__b"))
@@ -2587,8 +2584,7 @@ def ccf_lags(df: DataFrame, group_col: str, order: str,
     # HUGEINT, so the oracle never overflows; a long accumulator here
     # would cap at ~9.2e18 (≈1e14 terms × ~1e5 rows/series).  Match
     # the oracle's headroom instead of documenting a row ceiling.
-    qt = lambda c: (F.floor(c * F.lit(1e6))  # noqa: E731
-                    .cast("decimal(38,0)"))
+    qt = lambda c: dec(F.floor(c * F.lit(1e6)))  # noqa: E731
     aggs = [F.max("n").alias("n"),
             F.sum(qt(cx * cx)).alias("__sxx"),
             F.sum(qt((F.col("__y") - F.col("__my"))
@@ -2987,8 +2983,7 @@ def ljung_box(df: DataFrame, group_col: str, order: str,
     cent = F.col("__v") - F.col("__m")
     # decimal(38,0) per term (oracle sums BIGINT into HUGEINT) — see
     # the ccf_lags note on the long-accumulator ceiling.
-    qt = lambda c: (F.floor(c * F.lit(1e6))  # noqa: E731
-                    .cast("decimal(38,0)"))
+    qt = lambda c: dec(F.floor(c * F.lit(1e6)))  # noqa: E731
     aggs = [F.max("n").alias("n"),
             F.sum(qt(cent * cent)).alias("__c0")]
     for l in range(1, max_lag + 1):
@@ -3098,9 +3093,7 @@ def kpss_level(df: DataFrame, group_col: str, order: str,
     cent = F.col("__v") - F.col("__m")
     # decimal(38,0) per term (oracle sums BIGINT into HUGEINT) — see
     # the ccf_lags note on the long-accumulator ceiling.
-    qt = lambda c: (F.floor(c * F.lit(1e6))  # noqa: E731
-                    .cast("decimal(38,0)"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    qt = lambda c: dec(F.floor(c * F.lit(1e6)))  # noqa: E731
     aggs = [F.max("n").alias("n"),
             F.sum(dec(F.floor(st * st * F.lit(1e2)))).alias("__ss2"),
             F.sum(qt(cent * cent)).alias("__c0")]
@@ -3233,16 +3226,15 @@ def granger_lag1(df: DataFrame, group_col: str, order: str,
     # accumulator matches the oracle's HUGEINT headroom — a long
     # accumulator caps at ~9.2e18, reachable by ~1e14 terms × ~1e5
     # rows/series at larger SFs.
-    q = lambda c: (F.floor(c * F.lit(1e4))  # noqa: E731
-                   .cast("decimal(38,0)"))
+    q = lambda c: dec(F.floor(c * F.lit(1e4)))  # noqa: E731
     per = j.groupBy("__g").agg(
         F.max("m").alias("m"),
-        F.sum(q(ca * ca)).cast("decimal(38,0)").alias("__saa"),
-        F.sum(q(cb * cb)).cast("decimal(38,0)").alias("__sbb"),
-        F.sum(q(ca * cb)).cast("decimal(38,0)").alias("__sab"),
-        F.sum(q(ca * cy)).cast("decimal(38,0)").alias("__say"),
-        F.sum(q(cb * cy)).cast("decimal(38,0)").alias("__sby"),
-        F.sum(q(cy * cy)).cast("decimal(38,0)").alias("__syy"))
+        dec(F.sum(q(ca * ca))).alias("__saa"),
+        dec(F.sum(q(cb * cb))).alias("__sbb"),
+        dec(F.sum(q(ca * cb))).alias("__sab"),
+        dec(F.sum(q(ca * cy))).alias("__say"),
+        dec(F.sum(q(cb * cy))).alias("__sby"),
+        dec(F.sum(q(cy * cy))).alias("__syy"))
     det = (F.col("__saa") * F.col("__sbb")
            - F.col("__sab") * F.col("__sab"))
     num1 = (F.col("__sbb") * F.col("__say")
@@ -3683,9 +3675,9 @@ def residual_anomaly_windows(df: DataFrame, group_col: str, order: str,
     satisfies S * n > k * width * T.  A series whose remainder is
     identically zero flags nothing; series with fewer than `width`
     interior rows emit nothing."""
-    dec = seasonal_decompose_ma(df, group_col, order, value,
-                                tie_break=tie_break)
-    rem = (dec.filter(F.col("remainder").isNotNull())
+    decomp = seasonal_decompose_ma(df, group_col, order, value,
+                                   tie_break=tie_break)
+    rem = (decomp.filter(F.col("remainder").isNotNull())
            .select(F.col(group_col).alias("__g"), "i",
                    F.abs(F.floor(F.col("remainder") * 1e6 + F.lit(0.5))
                          .cast("long")).alias("__ra")))
@@ -3705,11 +3697,10 @@ def residual_anomaly_windows(df: DataFrame, group_col: str, order: str,
         F.sum("__ra").over(ws).alias("__s"),
         F.count(F.lit(1)).over(wall).cast("long").alias("n_interior"),
         F.sum("__ra").over(wall).alias("__t"))
-    dec38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return (ord_
             .filter((F.col("__j") >= width)
-                    & (dec38(F.col("__s")) * F.col("n_interior")
-                       > F.lit(k * width) * dec38(F.col("__t"))))
+                    & (dec(F.col("__s")) * F.col("n_interior")
+                       > F.lit(k * width) * dec(F.col("__t"))))
             .select(F.col("__g").alias(group_col),
                     F.col("i").alias("i_end"),
                     F.col("__s").alias("win_abs_micro"),

@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -852,7 +852,6 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
     t = F.col("__ca") + F.col("__cb")
     st = F.coalesce(F.sum(F.col("__ca") + F.col("__cb")).over(wp),
                     F.lit(0))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = (cells.select("__ca", "__cb", t.alias("__t"),
                         st.alias("__s"))
            .agg(F.sum("__ca").cast("long").alias("n_a"),
@@ -908,7 +907,6 @@ def kruskal_wallis(df: DataFrame, value_col: str,
     spans = vt.select(
         "__v", "__t",
         F.coalesce(F.sum("__t").over(wp), F.lit(0)).alias("__s"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per_g = (cells.join(spans, "__v")
              .groupBy("__g")
              .agg(F.sum("__c").cast("long").alias("__ng"),
@@ -949,7 +947,6 @@ def anova_f(df: DataFrame, value: Column,
     src = df.select(F.col(group_col).alias("__g"),
                     value.cast("long").alias("__v")).filter(
         F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per_g = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__ng"),
         F.sum(dec(F.col("__v"))).alias("__sg"),
@@ -988,7 +985,6 @@ def cohens_d(df: DataFrame, value: Column, group_col: str,
         (F.col(group_col) == a).alias("__isa"),
         value.cast("long").alias("__v")).filter(
         F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = F.col("__v")
     agg = src.agg(
         F.sum(F.when(F.col("__isa"), 1).otherwise(0)).cast("long")
@@ -1551,7 +1547,6 @@ def cochran_armitage(df: DataFrame, score: Column,
     src = df.select(score.cast("long").alias("__w"),
                     success.cast("long").alias("__y")).filter(
         F.col("__w").isNotNull() & F.col("__y").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     cells = src.groupBy("__w").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__y").cast("long").alias("__x"))
@@ -1595,7 +1590,6 @@ def diff_in_diff(df: DataFrame, value: Column, is_treat: Column,
                     is_post.cast("int").alias("__p")).filter(
         F.col("__v").isNotNull() & F.col("__t").isNotNull()
         & F.col("__p").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = F.col("__v")
 
     def cell(t: int, p: int, what: str):
@@ -1665,7 +1659,6 @@ def covariate_balance(df: DataFrame, is_a: Column,
                     F.explode(F.array(*pairs)).alias("__fv")).select(
         "__a", F.col("__fv.f").alias("__f"), F.col("__fv.v").alias("__v")
     ).filter(F.col("__a").isNotNull() & F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     v = F.col("__v")
     agg = src.groupBy("__f").agg(
         F.sum("__a").cast("long").alias("n_a"),
@@ -2019,7 +2012,6 @@ def partial_correlation(df: DataFrame, x: Column, y: Column,
                     z.cast("long").alias("__z")).filter(
         F.col("__x").isNotNull() & F.col("__y").isNotNull()
         & F.col("__z").isNotNull())
-    dec = lambda cc: cc.cast("decimal(38,0)")  # noqa: E731
     cols = {"x": F.col("__x"), "y": F.col("__y"), "z": F.col("__z")}
     aggs = [F.count(F.lit(1)).cast("long").alias("n")]
     for k, cc in cols.items():
@@ -2078,7 +2070,6 @@ def grubbs_test(df: DataFrame, value: Column) -> DataFrame:
     reports NULL-by-contract."""
     src = df.select(value.cast("long").alias("__v")).filter(
         F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = src.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(dec(F.col("__v"))).alias("__s"),
@@ -2128,7 +2119,6 @@ def chow_test(df: DataFrame, x: Column, y: Column,
                     is_second.cast("int").alias("__g2")).filter(
         F.col("__x").isNotNull() & F.col("__y").isNotNull()
         & F.col("__g2").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
 
     def sums(pred, tag):
         w = lambda c: F.sum(F.when(pred, c).otherwise(F.lit(0)))  # noqa: E731
@@ -2211,7 +2201,6 @@ def levene_bf(df: DataFrame, value: Column,
     dev = (cells.join(med, "__g")
            .select("__g", F.abs(F.col("__v") - F.col("__med"))
                    .alias("__w"), "__c"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per = dev.groupBy("__g").agg(
         F.sum("__c").cast("long").alias("__ng"),
         F.sum(dec(F.col("__w")) * dec(F.col("__c"))).alias("__sw"),
@@ -2687,7 +2676,6 @@ def welch_anova(df: DataFrame, value: Column,
     src = df.select(F.col(group_col).alias("__g"),
                     value.cast("long").alias("__v")).filter(
         F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     perg = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__ng"),
         F.sum(dec(F.col("__v"))).alias("__sg"),
@@ -2813,7 +2801,6 @@ def bartlett_test(df: DataFrame, value: Column,
     src = df.select(F.col(group_col).alias("__g"),
                     value.cast("long").alias("__v")).filter(
         F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     perg = src.groupBy("__g").agg(
         F.count(F.lit(1)).cast("long").alias("__ng"),
         F.sum(dec(F.col("__v"))).alias("__sg"),
@@ -2956,8 +2943,7 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
             .agg(F.sum(F.col("__c") * F.col("__c") * F.col("__c")
                        - F.col("__c")).cast("long").alias("__tcorr")))
     nblocks = complete.agg(F.count(F.lit(1)).cast("long").alias("b"))
-    agg = (pert.agg(F.sum(F.col("__r2j") * F.col("__r2j"))
-                    .cast("decimal(38,0)").alias("__sr2"))
+    agg = (pert.agg(dec(F.sum(F.col("__r2j") * F.col("__r2j"))).alias("__sr2"))
            .join(F.broadcast(kfr))
            .join(F.broadcast(nblocks))
            .join(F.broadcast(ties)))
@@ -3096,10 +3082,10 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     # per-cell exact sums/counts — identical decimal/long values), not
     # a second pass over the source.
     cells = keep(src.groupBy("__b", "__t").agg(
-        F.sum("__v").cast("decimal(38,0)").alias("__cs"),
+        dec(F.sum("__v")).alias("__cs"),
         F.count(F.lit(1)).cast("long").alias("__cn")), source=src)
     blocks = cells.groupBy("__b").agg(
-        F.sum("__cs").cast("decimal(38,0)").alias("__bs"),
+        dec(F.sum("__cs")).alias("__bs"),
         F.sum("__cn").cast("long").alias("__bn"))
     kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
     complete = (cells.groupBy("__b")
@@ -3250,8 +3236,7 @@ def wilcoxon_signed_rank(df: DataFrame, group_col: str, x_value: Column,
         F.coalesce(
             F.sum(F.when(F.col("__d") > 0, F.col("__r2"))),
             F.lit(0)).cast("long").alias("__w2p"),
-        F.sum((F.col("__c") * F.col("__c") - F.lit(1))
-              .cast("decimal(38,0)")).alias("__tcorr"))
+        F.sum(dec(F.col("__c") * F.col("__c") - F.lit(1))).alias("__tcorr"))
     nd = F.col("n").cast("double")
     mu2 = nd * (nd + 1) / 2.0
     var2 = (F.lit(2.0) * nd * (nd + 1) * (2 * nd + 1)

@@ -1040,19 +1040,16 @@ def perceptual_index_epoch(sp: SparkSession, bdf: DataFrame,
     import os
 
     from auto_ml_platform_with_timeseries_data_spark.operators.multimodal import (
+        _DHASH_KEYS,
+        fingerprint_index,
         image_dhash,
         synth_bmp_media,
     )
 
-    delta_idx = (image_dhash(synth_bmp_media(bdf, families=families))
-                 .groupBy("dhash_lo", "dhash_hi")
-                 .agg(F.min("media_id").alias("canonical_id")))
-    versions = rollup_versions(state_root)
-    prev = [p for e, p in versions.items() if e < epoch_id]
-    if prev:
-        known = sp.read.parquet(*prev).select("dhash_lo", "dhash_hi")
-        delta_idx = delta_idx.join(known, ["dhash_lo", "dhash_hi"],
-                                   "left_anti")
+    prev = [p for e, p in rollup_versions(state_root).items() if e < epoch_id]
+    delta_idx = fingerprint_index(
+        image_dhash(synth_bmp_media(bdf, families=families)), _DHASH_KEYS,
+        sp.read.parquet(*prev) if prev else None)
     out = os.path.join(state_root, f"epoch={epoch_id}")
     delta_idx.write.mode("overwrite").parquet(out)
     return out
@@ -1189,27 +1186,25 @@ def perceptual_screen_epoch(sp: SparkSession, bdf: DataFrame,
         hamming_band_pairs_delta,
     )
     from auto_ml_platform_with_timeseries_data_spark.operators.multimodal import (
+        _DHASH_KEYS,
         _NP_MAXH,
+        fingerprint_index,
         image_dhash,
         synth_bmp_media_mixed,
     )
 
     fp = keep(image_dhash(synth_bmp_media_mixed(bdf)), checkpoint=True)
     try:
-        versions = rollup_versions(state_root)
-        prev = [p for e, p in versions.items() if e < epoch_id]
-        delta_idx = (fp.groupBy("dhash_lo", "dhash_hi")
-                     .agg(F.min("media_id").alias("canonical_id")))
-        if prev:
-            known = sp.read.parquet(*prev)
+        prev = [p for e, p in rollup_versions(state_root).items()
+                if e < epoch_id]
+        known = sp.read.parquet(*prev) if prev else None
+        delta_idx = fingerprint_index(fp, _DHASH_KEYS, known)
+        if known is not None:
             pairs = hamming_band_pairs_delta(
                 fp,
                 known.select(F.col("canonical_id").alias("media_id"),
                              "dhash_lo", "dhash_hi"),
                 "media_id", [("dhash_lo", 32), ("dhash_hi", 32)], _NP_MAXH)
-            delta_idx = delta_idx.join(
-                known.select("dhash_lo", "dhash_hi"),
-                ["dhash_lo", "dhash_hi"], "left_anti")
         else:
             pairs = sp.createDataFrame(
                 [], "delta_id long, corpus_id long, hamming int")

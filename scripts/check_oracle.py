@@ -117,6 +117,9 @@ def main() -> int:
             .appName("check-oracle-hostile")
             .config("spark.sql.session.timeZone", "America/New_York")
             .config("spark.ui.enabled", "false")
+            # not a correctness conf: progress bars would overwrite the
+            # PASS/FAIL lines this script prints
+            .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")

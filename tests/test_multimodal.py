@@ -309,3 +309,35 @@ def test_image_index_update_keeps_corpus_canonicals(spark):
     for fp, canon in rows.items():
         if fp not in base:
             assert canon >= 30
+
+
+# ---------------------------------------------------------------------------
+# q341/q342 — capped image/video near screens
+
+
+def _cap_invariants(uncapped, capped, m):
+    """Per-delta output ≤ m, capped ⊆ uncapped, and the set of delta
+    ids with ≥1 match is unchanged (set-level screening decisions
+    survive the cap)."""
+    unc = {(r["delta_id"], r["corpus_id"], r["hamming"])
+           for r in uncapped.collect()}
+    cap = [(r["delta_id"], r["corpus_id"], r["hamming"])
+           for r in capped.collect()]
+    assert set(cap) <= unc
+    per = {}
+    for d, _, _ in cap:
+        per[d] = per.get(d, 0) + 1
+    assert all(n <= m for n in per.values())
+    assert set(per) == {d for d, _, _ in unc}
+
+
+def test_image_screen_cap_invariants(spark):
+    sf = "/root/testdata/sf0.001"
+    _cap_invariants(mm.q230_image_near_index(spark, sf),
+                    mm.q341_image_screen_capped(spark, sf), mm._SCREEN_TOP_M)
+
+
+def test_video_screen_cap_invariants(spark):
+    sf = "/root/testdata/sf0.001"
+    _cap_invariants(mm.q238_video_near_index(spark, sf),
+                    mm.q342_video_screen_capped(spark, sf), mm._SCREEN_TOP_M)

@@ -1,9 +1,9 @@
 """Planted-property tests for the round-14 additions: the HBOS
 joint-vs-fallback branch equality (the VERDICT r13 watch item), the
-capped image/video near screens (q341/q342), the SES/Holt/HW
-best-family argmax (q343, the A12/q166 planted-optimum pattern), and
-the residual collective-anomaly detector (q344).  Cross-engine value
-checks live in scripts/check_oracle.py; these pin SEMANTICS.
+SES/Holt/HW best-family argmax (q343, the A12/q166 planted-optimum
+pattern), and the residual collective-anomaly detector (q344).
+Cross-engine value checks live in scripts/check_oracle.py; these pin
+SEMANTICS.
 """
 
 from __future__ import annotations
@@ -51,50 +51,6 @@ def test_hbos_joint_and_fallback_branches_agree(spark):
     top = max(ts_features.hbos_scores(df, "id", feats).collect(),
               key=lambda r: r["hbos"])
     assert top["id"] == 999
-
-
-# ---------------------------------------------------------------------------
-# q341/q342 — capped image/video near screens
-
-
-def _cap_invariants(uncapped, capped, m):
-    """Per-delta output ≤ m, capped ⊆ uncapped, and the set of delta
-    ids with ≥1 match is unchanged (set-level screening decisions
-    survive the cap)."""
-    unc = {(r["delta_id"], r["corpus_id"], r["hamming"])
-           for r in uncapped.collect()}
-    cap = [(r["delta_id"], r["corpus_id"], r["hamming"])
-           for r in capped.collect()]
-    assert set(cap) <= unc
-    per = {}
-    for d, _, _ in cap:
-        per[d] = per.get(d, 0) + 1
-    assert all(n <= m for n in per.values())
-    assert set(per) == {d for d, _, _ in unc}
-
-
-def test_image_screen_cap_invariants(spark):
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        multimodal,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    _cap_invariants(
-        multimodal.q230_image_near_index(spark, sf),
-        multimodal.q341_image_screen_capped(spark, sf),
-        multimodal._SCREEN_TOP_M)
-
-
-def test_video_screen_cap_invariants(spark):
-    from auto_ml_platform_with_timeseries_data_spark.operators import (
-        multimodal,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    _cap_invariants(
-        multimodal.q238_video_near_index(spark, sf),
-        multimodal.q342_video_screen_capped(spark, sf),
-        multimodal._SCREEN_TOP_M)
 
 
 # ---------------------------------------------------------------------------
