@@ -40,7 +40,11 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     tokens,
     word_ngrams,
 )
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    dec,
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -573,7 +577,7 @@ def chi_square_independence(df: DataFrame, a_col: str,
 
 @query(
     "q135_chisq_independence",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       -- complete-case: NULL categories are dropped BEFORE aggregation,
       -- matching chi_square_independence's filter (a NULL cell would
@@ -591,11 +595,11 @@ def chi_square_independence(df: DataFrame, a_col: str,
     )
     -- zero-observed cells contribute (0-E)^2/E = E; since the expected
     -- counts sum to N over ALL cells, that is N - sum(E over observed)
-    SELECT floor((sum((n - CAST(ra AS DOUBLE) * cb / tot)
-                      * (n - CAST(ra AS DOUBLE) * cb / tot)
-                      / (CAST(ra AS DOUBLE) * cb / tot))
-                  + max(tot) - sum(CAST(ra AS DOUBLE) * cb / tot))
-                 * 1e6 + 0.5) / 1e6 AS chi2,
+    SELECT {pin_sql("(sum((n - CAST(ra AS DOUBLE) * cb / tot)"
+                    " * (n - CAST(ra AS DOUBLE) * cb / tot)"
+                    " / (CAST(ra AS DOUBLE) * cb / tot))"
+                    " + max(tot) - sum(CAST(ra AS DOUBLE) * cb / tot))")}
+             AS chi2,
            CAST((count(DISTINCT lang) - 1) * (count(DISTINCT source) - 1)
                 AS BIGINT) AS dof,
            CAST(max(tot) AS BIGINT) AS n
@@ -682,8 +686,8 @@ def ks_two_sample(df: DataFrame, value_col: str, group_col: str,
              sum(cb) OVER () AS nb
       FROM c
     )
-    SELECT floor(max(abs(CAST(cuma AS DOUBLE) / na
-                         - CAST(cumb AS DOUBLE) / nb)) * 1e6 + 0.5) / 1e6
+    SELECT {pin_sql("max(abs(CAST(cuma AS DOUBLE) / na"
+                    " - CAST(cumb AS DOUBLE) / nb))")}
              AS ks,
            CAST(max(na) AS BIGINT) AS n_a,
            CAST(max(nb) AS BIGINT) AS n_b
@@ -761,9 +765,9 @@ def split_leakage(df: DataFrame, text_col: str,
                 AS BIGINT) AS n_leaked_groups,
            CAST(sum(CASE WHEN in_a = 1 AND in_b = 1 THEN n ELSE 0 END)
                 AS BIGINT) AS n_docs_in_leaked,
-           floor(CAST(sum(CASE WHEN in_a = 1 AND in_b = 1
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*) * 1e6 + 0.5) / 1e6 AS leak_rate
+           {pin_sql("CAST(sum(CASE WHEN in_a = 1 AND in_b = 1"
+                    " THEN 1 ELSE 0 END) AS DOUBLE)"
+                    " / count(*)")} AS leak_rate
     FROM g
     """,
 )
@@ -1742,8 +1746,8 @@ def _ftc_oracle() -> str:
     )
     SELECT doc_id, CAST(n_feats AS BIGINT) AS n_feats, raw_score,
            CASE WHEN n_feats = 0 THEN 0.5
-                ELSE floor((1.0 / (1.0 + exp(-(CAST(raw_score AS DOUBLE)
-                     / (n_feats * {_FTC_SCALE}))))) * 1e6 + 0.5) / 1e6
+                ELSE {pin_sql(f"(1.0 / (1.0 + exp(-(CAST(raw_score AS DOUBLE)"
+                              f" / (n_feats * {_FTC_SCALE})))))")}
            END AS score,
            raw_score > 0 AS keep
     FROM s
@@ -1851,7 +1855,7 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-_Q200_SCORE_CTE = """
+_Q200_SCORE_CTE = f"""
     tk AS (SELECT doc_id, source,
                   string_split(trim(regexp_replace(lower(text),
                     '\\s+', ' ', 'g')), ' ') AS toks
@@ -1871,7 +1875,7 @@ _Q200_SCORE_CTE = """
     per_doc AS (
       SELECT t.source AS domain,
              CAST(len(t.toks) AS BIGINT) AS ntok,
-             CAST(floor(-(coalesce(floor(s.lp * 1e6 + 0.5) / 1e6, 0.0))
+             CAST(floor(-(coalesce({pin_sql("s.lp")}, 0.0))
                         * 1e6 + 0.5) AS BIGINT) AS neg_micro
       FROM tk t LEFT JOIN sc s ON t.doc_id = s.doc_id)
 """
@@ -2094,7 +2098,7 @@ _DSIR_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
       GROUP BY tok.doc_id
     )
     SELECT doc_id, n_tokens,
-           floor(lw * 1e6 + 0.5) / 1e6 AS dsir_weight
+           {pin_sql("lw")} AS dsir_weight
     FROM sc ORDER BY dsir_weight DESC, doc_id ASC LIMIT 100
     """,
 )
@@ -2305,10 +2309,9 @@ def js_divergence_sources(df: DataFrame, text_col: str,
       FROM cnt, tot
     )
     SELECT vocab, n_p_tokens, n_q_tokens,
-           floor(sum(CAST(floor((p * ln(p / ((p + q) / 2))
-                                 + q * ln(q / ((p + q) / 2))) / 2 * 1e12)
-                          AS BIGINT)) / 1e12 * 1e6 + 0.5)
-             / 1e6 AS jsd_nats
+           {pin_sql("sum(CAST(floor((p * ln(p / ((p + q) / 2))"
+                    " + q * ln(q / ((p + q) / 2))) / 2 * 1e12)"
+                    " AS BIGINT)) / 1e12")} AS jsd_nats
     FROM terms GROUP BY vocab, n_p_tokens, n_q_tokens
     """,
 )
@@ -2400,7 +2403,7 @@ def wasserstein1(df: DataFrame, value_col: str, group_col: str,
              END AS term
       FROM m WHERE vn IS NOT NULL
     )
-    SELECT floor(sum(term) / 1e12 * 1e6 + 0.5) / 1e6 AS w1,
+    SELECT {pin_sql("sum(term) / 1e12")} AS w1,
            CAST(max(na) AS BIGINT) AS n_a,
            CAST(max(nb) AS BIGINT) AS n_b
     FROM t
@@ -2476,7 +2479,7 @@ def t_closeness(df: DataFrame, quasi_cols: list[str],
 
 @query(
     "q259_t_closeness",
-    oracle="""
+    oracle=f"""
     WITH src AS (
       SELECT c_nationkey, c_mktsegment,
              CAST(floor(c_acctbal / 1000) AS BIGINT) AS s
@@ -2523,7 +2526,7 @@ def t_closeness(df: DataFrame, quasi_cols: list[str],
     )
     SELECT c_nationkey, c_mktsegment, n,
            CASE WHEN k > 1 THEN
-             floor(t / 1e12 / (k - 1) * 1e6 + 0.5) / 1e6
+             {pin_sql("t / 1e12 / (k - 1)")}
            END AS emd
     FROM agg
     """,
@@ -2579,7 +2582,7 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
 
 @query(
     "q264_cramers_v",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT lang, source, count(*) AS n FROM documents
       WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2
@@ -2592,12 +2595,11 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
       FROM c
     ),
     agg AS (
-      SELECT floor((sum((n - CAST(ra AS DOUBLE) * cb / tot)
-                        * (n - CAST(ra AS DOUBLE) * cb / tot)
-                        / (CAST(ra AS DOUBLE) * cb / tot))
-                    + max(tot)
-                    - sum(CAST(ra AS DOUBLE) * cb / tot))
-                   * 1e6 + 0.5) / 1e6 AS chi2,
+      SELECT {pin_sql("(sum((n - CAST(ra AS DOUBLE) * cb / tot)"
+                      " * (n - CAST(ra AS DOUBLE) * cb / tot)"
+                      " / (CAST(ra AS DOUBLE) * cb / tot))"
+                      " + max(tot)"
+                      " - sum(CAST(ra AS DOUBLE) * cb / tot))")} AS chi2,
              CAST(max(tot) AS BIGINT) AS n
       FROM m
     ),
@@ -2608,8 +2610,8 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     SELECT chi2,
            CAST((ka - 1) * (kb - 1) AS BIGINT) AS dof, n,
            CASE WHEN least(ka, kb) > 1 THEN
-             floor(sqrt(chi2 / (CAST(n AS DOUBLE) * (least(ka, kb) - 1)))
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("sqrt(chi2"
+                      " / (CAST(n AS DOUBLE) * (least(ka, kb) - 1)))")}
            END AS v
     FROM agg, ks
     """,
@@ -2711,10 +2713,10 @@ def _cvm_oracle() -> str:
       FROM m WHERE na > 0 AND nb > 0
     )
     SELECT n_a, n_b,
-           floor(CAST(n_a AS DOUBLE) * n_b
-                 / (CAST(n_a + n_b AS DOUBLE)
-                    * CAST(n_a + n_b AS DOUBLE))
-                 * (CAST(ts AS DOUBLE) / 1e12) * 1e6 + 0.5) / 1e6
+           {pin_sql("CAST(n_a AS DOUBLE) * n_b"
+                    " / (CAST(n_a + n_b AS DOUBLE)"
+                    " * CAST(n_a + n_b AS DOUBLE))"
+                    " * (CAST(ts AS DOUBLE) / 1e12)")}
              AS cvm
     FROM agg
     """
@@ -2879,10 +2881,9 @@ def _mix_oracle() -> str:
            CAST((n * 1000000) // tot - expected_ppm AS BIGINT)
              AS deviation_ppm,
            CASE WHEN expected_ppm > 0 THEN
-             floor((n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   * (n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   / (CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)"
+                      " * (n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)"
+                      " / (CAST(expected_ppm AS DOUBLE) / 1e6 * tot)")}
            END AS chi2_term
     FROM fl
     """
@@ -2945,7 +2946,7 @@ def _ad_oracle() -> str:
     )
     SELECT CAST(max(na) AS BIGINT) AS n_a,
            CAST(max(nb) AS BIGINT) AS n_b,
-           floor(sum(q) / 1e12 * 1e6 + 0.5) / 1e6 AS a2
+           {pin_sql("sum(q) / 1e12")} AS a2
     FROM t
     """
 
@@ -3018,8 +3019,8 @@ def dp_noisy_counts(df: DataFrame, dim: Column, epsilon: float = 1.0,
       FROM cells
     )
     SELECT cohort, n,
-           floor(noise * 1e6 + 0.5) / 1e6 AS noise,
-           floor((n + noise) * 1e6 + 0.5) / 1e6 AS noisy_n,
+           {pin_sql("noise")} AS noise,
+           {pin_sql("(n + noise)")} AS noisy_n,
            1.0 AS epsilon
     FROM nz
     """,

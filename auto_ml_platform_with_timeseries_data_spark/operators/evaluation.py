@@ -24,7 +24,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    cents,
+    cents_sql,
+    dec,
+    dec_sq,
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -207,7 +214,7 @@ def roc_auc(df: DataFrame, score: Column, label: Column) -> DataFrame:
 
 @query(
     "q243_roc_auc",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_discount AS DOUBLE) AS v,
              CAST(l_returnflag = 'R' AS INT) AS y
@@ -228,8 +235,8 @@ def roc_auc(df: DataFrame, score: Column, label: Column) -> DataFrame:
     )
     SELECT n, n_pos, n - n_pos AS n_neg,
            CASE WHEN n_pos > 0 AND n > n_pos THEN
-             floor((CAST(s2p AS DOUBLE) - n_pos * (n_pos + 1))
-                   / (2.0 * n_pos * (n - n_pos)) * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(s2p AS DOUBLE) - n_pos * (n_pos + 1))"
+                      " / (2.0 * n_pos * (n - n_pos))")}
            END AS auc
     FROM agg
     """,
@@ -287,7 +294,7 @@ def cohens_kappa(df: DataFrame, rater_a: Column,
 
 @query(
     "q244_cohens_kappa",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CASE WHEN n_chars < 200 THEN 'short'
                   WHEN n_chars < 1000 THEN 'mid' ELSE 'long' END AS a,
@@ -313,9 +320,8 @@ def cohens_kappa(df: DataFrame, rater_a: Column,
     )
     SELECT n, agree, chance_cross,
            CASE WHEN n * n > chance_cross THEN
-             floor((CAST(agree AS DOUBLE) * n - chance_cross)
-                   / (CAST(n AS DOUBLE) * n - chance_cross)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(agree AS DOUBLE) * n - chance_cross)"
+                      " / (CAST(n AS DOUBLE) * n - chance_cross)")}
            END AS kappa
     FROM tot, cross_t
     """,
@@ -354,7 +360,6 @@ def conformal_quantile(df: DataFrame, score: Column,
     would break coverage). k > n (α too small for the sample) reports
     qhat NULL-by-contract: no finite threshold gives the requested
     coverage."""
-    import math
 
     from auto_ml_platform_with_timeseries_data_spark.operators.profile import (
         _ordinal_spans,
@@ -479,7 +484,7 @@ def q245_conformal_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q246_brier_decomposition",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(l_discount * 10 * 1e6 + 0.5) AS BIGINT) AS p,
              least(CAST(floor(l_discount * 10 * 10) AS INT), 9) AS b,
@@ -510,10 +515,10 @@ def q245_conformal_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cells, tot
     )
     SELECT n,
-           floor(rel / n * 1e6 + 0.5) / 1e6 AS reliability,
-           floor(res / n * 1e6 + 0.5) / 1e6 AS resolution,
-           floor(ob * (1 - ob) * 1e6 + 0.5) / 1e6 AS uncertainty,
-           floor((rel / n - res / n + ob * (1 - ob)) * 1e6 + 0.5) / 1e6
+           {pin_sql("rel / n")} AS reliability,
+           {pin_sql("res / n")} AS resolution,
+           {pin_sql("ob * (1 - ob)")} AS uncertainty,
+           {pin_sql("(rel / n - res / n + ob * (1 - ob))")}
              AS brier
     FROM terms
     """,
@@ -532,7 +537,7 @@ def q246_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q247_group_auc",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id AS g, CAST(value AS DOUBLE) AS v,
              CAST(event_id % 3 = 0 AS INT) AS y
@@ -553,8 +558,8 @@ def q246_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT g AS user_id, n, n_pos, n - n_pos AS n_neg,
            CASE WHEN n_pos > 0 AND n > n_pos THEN
-             floor((CAST(s2p AS DOUBLE) - n_pos * (n_pos + 1))
-                   / (2.0 * n_pos * (n - n_pos)) * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(s2p AS DOUBLE) - n_pos * (n_pos + 1))"
+                      " / (2.0 * n_pos * (n - n_pos))")}
            END AS auc
     FROM agg
     """,
@@ -613,7 +618,7 @@ def calibration_error(df: DataFrame, prob: Column, label: Column,
 
 @query(
     "q252_calibration_error",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(l_discount * 10 * 1e6 + 0.5) AS BIGINT) AS p,
              least(CAST(floor(l_discount * 10 * 10) AS INT), 9) AS b,
@@ -639,8 +644,8 @@ def calibration_error(df: DataFrame, prob: Column, label: Column,
       FROM cells
     )
     SELECT n, n_bins,
-           floor(wce / n * 1e6 + 0.5) / 1e6 AS ece,
-           floor(mce * 1e6 + 0.5) / 1e6 AS max_ce
+           {pin_sql("wce / n")} AS ece,
+           {pin_sql("mce")} AS max_ce
     FROM agg
     """,
 )
@@ -746,8 +751,7 @@ def _ndcg_oracle() -> str:
     )
     SELECT g AS user_id, n, dcg_scaled, idcg_scaled,
            CASE WHEN idcg_scaled > 0 THEN
-             floor(CAST(dcg_scaled AS DOUBLE) / idcg_scaled * 1e6
-                   + 0.5) / 1e6
+             {pin_sql("CAST(dcg_scaled AS DOUBLE) / idcg_scaled")}
            END AS ndcg
     FROM agg
     """
@@ -792,7 +796,7 @@ def mrr(df: DataFrame, group_col: str, score: Column,
 
 @query(
     "q254_mrr",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id AS g, CAST(value AS DOUBLE) AS v,
              CAST(event_id % 3 = 0 AS INT) AS y, event_id AS id
@@ -811,7 +815,7 @@ def mrr(df: DataFrame, group_col: str, score: Column,
     )
     SELECT g AS user_id, n, first_pos_rank,
            CASE WHEN first_pos_rank IS NOT NULL THEN
-             floor(1.0 / first_pos_rank * 1e6 + 0.5) / 1e6
+             {pin_sql("1.0 / first_pos_rank")}
            END AS rr
     FROM agg
     """,
@@ -864,7 +868,7 @@ def average_precision_by_group(df: DataFrame, group_col: str,
 
 @query(
     "q255_average_precision",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id AS g, CAST(value AS DOUBLE) AS v,
              CAST(event_id % 3 = 0 AS BIGINT) AS y, event_id AS id
@@ -889,7 +893,7 @@ def average_precision_by_group(df: DataFrame, group_col: str,
     )
     SELECT g AS user_id, n, n_pos,
            CASE WHEN n_pos > 0 THEN
-             floor(CAST(s AS DOUBLE) / 1e9 / n_pos * 1e6 + 0.5) / 1e6
+             {pin_sql("CAST(s AS DOUBLE) / 1e9 / n_pos")}
            END AS ap
     FROM agg
     """,
@@ -946,7 +950,7 @@ def decile_lift(df: DataFrame, score: Column, label: Column,
 
 @query(
     "q256_decile_lift",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_extendedprice AS DOUBLE) AS v,
              CAST(l_returnflag = 'R' AS BIGINT) AS y
@@ -973,11 +977,11 @@ def decile_lift(df: DataFrame, score: Column, label: Column,
       FROM sp, tot GROUP BY 1
     )
     SELECT decile, n, n_pos,
-           floor(CAST(n_pos AS DOUBLE) / n * 1e6 + 0.5) / 1e6
+           {pin_sql("CAST(n_pos AS DOUBLE) / n")}
              AS pos_rate,
            CASE WHEN tp > 0 THEN
-             floor((CAST(n_pos AS DOUBLE) / n)
-                   / (CAST(tp AS DOUBLE) / tn) * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(n_pos AS DOUBLE) / n)"
+                      " / (CAST(tp AS DOUBLE) / tn)")}
            END AS lift
     FROM agg, tot
     """,
@@ -1031,7 +1035,7 @@ def threshold_sweep(df: DataFrame, score: Column,
 
 @query(
     "q261_threshold_sweep",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_discount AS DOUBLE) AS v,
              CAST(l_returnflag = 'R' AS BIGINT) AS y
@@ -1054,12 +1058,10 @@ def threshold_sweep(df: DataFrame, score: Column,
     SELECT threshold, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
            CAST(p - tp AS BIGINT) AS fn, CAST(nn - fp AS BIGINT) AS tn,
            CASE WHEN 2 * tp + fp + (p - tp) > 0 THEN
-             floor(2 * tp / CAST(2 * tp + fp + (p - tp) AS DOUBLE)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("2 * tp / CAST(2 * tp + fp + (p - tp) AS DOUBLE)")}
            END AS f1,
            CASE WHEN p > 0 AND nn > 0 THEN
-             floor((CAST(tp AS DOUBLE) / p - CAST(fp AS DOUBLE) / nn)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(tp AS DOUBLE) / p - CAST(fp AS DOUBLE) / nn)")}
            END AS youden_j
     FROM m
     """,
@@ -1108,11 +1110,11 @@ def fleiss_kappa(df: DataFrame, item_col: str, rating: Column,
         F.sum("__c").cast("long").alias("__m"))
     magg = marg.agg(
         F.count(F.lit(1)).cast("long").alias("k_categories"),
-        F.sum(dec(F.col("__m")) * dec(F.col("__m"))).alias("__m2"),
+        F.sum(dec_sq(F.col("__m"))).alias("__m2"),
         F.sum("__m").cast("long").alias("__tot"))
     iagg = cells.agg(
         F.countDistinct("__i").cast("long").alias("n_items"),
-        F.sum(dec(F.col("__c")) * dec(F.col("__c"))).alias("__s2"))
+        F.sum(dec_sq(F.col("__c"))).alias("__s2"))
     j = iagg.crossJoin(F.broadcast(magg))
     ni = F.col("n_items").cast("double")
     nn = float(nraters)
@@ -1170,7 +1172,7 @@ def weighted_kappa(df: DataFrame, rater_a: Column,
 
 @query(
     "q285_fleiss_kappa",
-    oracle="""
+    oracle=f"""
     WITH src AS (
       SELECT l_orderkey AS i, l_returnflag AS r
       FROM lineitem WHERE l_linenumber <= 3
@@ -1203,12 +1205,12 @@ def weighted_kappa(df: DataFrame, rater_a: Column,
     )
     SELECT ni AS n_items, CAST(3 AS BIGINT) AS n_raters,
            kc AS k_categories,
-           CASE WHEN ni > 0 THEN floor(p_bar * 1e6 + 0.5) / 1e6 END
+           CASE WHEN ni > 0 THEN {pin_sql("p_bar")} END
              AS p_bar,
-           CASE WHEN ni > 0 THEN floor(p_e * 1e6 + 0.5) / 1e6 END
+           CASE WHEN ni > 0 THEN {pin_sql("p_e")} END
              AS p_e,
            CASE WHEN ni > 0 AND p_e < 1 THEN
-             floor((p_bar - p_e) / (1 - p_e) * 1e6 + 0.5) / 1e6
+             {pin_sql("(p_bar - p_e) / (1 - p_e)")}
            END AS kappa
     FROM ex
     """,
@@ -1227,7 +1229,7 @@ def q285_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q286_weighted_kappa",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(l_quantity / 10) AS BIGINT) AS a,
              CAST(least(floor(l_extendedprice / 20000), 5) AS BIGINT)
@@ -1253,8 +1255,7 @@ def q285_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT n, ka AS k_a, kb AS k_b,
            CASE WHEN n > 0 AND we > 0 THEN
-             floor((1 - CAST(wo AS DOUBLE) * n / CAST(we AS DOUBLE))
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(1 - CAST(wo AS DOUBLE) * n / CAST(we AS DOUBLE))")}
            END AS kappa_w
     FROM obs, we
     """,
@@ -1308,11 +1309,11 @@ def cronbach_alpha(df: DataFrame,
     src = src.withColumn("__t", tot)
     aggs = [F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(dec(F.col("__t"))).alias("__st"),
-            F.sum(dec(F.col("__t")) * dec(F.col("__t"))).alias("__qt")]
+            F.sum(dec_sq(F.col("__t"))).alias("__qt")]
     for j in range(k):
         c = F.col(f"__i{j}")
         aggs.append(F.sum(dec(c)).alias(f"__s{j}"))
-        aggs.append(F.sum(dec(c) * dec(c)).alias(f"__q{j}"))
+        aggs.append(F.sum(dec_sq(c)).alias(f"__q{j}"))
     agg = src.agg(*aggs)
     n = F.col("n").cast("double")
     # ANSI null-safe divisors (Spark 4 raises on double x/0, and the
@@ -1398,9 +1399,9 @@ def kendall_tau_b(df: DataFrame, x: Column, y: Column) -> DataFrame:
 
 @query(
     "q299_cronbach_alpha",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS i0,
+      SELECT {cents_sql("l_discount")} AS i0,
              CAST(floor(l_extendedprice / 1000) AS BIGINT) AS i1,
              CAST(floor(l_quantity) AS BIGINT) AS i2
       FROM lineitem
@@ -1433,7 +1434,7 @@ def kendall_tau_b(df: DataFrame, x: Column, y: Column) -> DataFrame:
     )
     SELECT n, CAST(3 AS BIGINT) AS k,
       CASE WHEN n > 1 AND vt > 0 THEN
-        floor(1.5 * (1 - (v0 + v1 + v2) / vt) * 1e6 + 0.5) / 1e6
+        {pin_sql("1.5 * (1 - (v0 + v1 + v2) / vt)")}
       END AS alpha
     FROM ex
     """,
@@ -1444,7 +1445,7 @@ def q299_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer items — one hash-checked (n, k, alpha) row."""
     li = load_table(spark, sf_dir, "lineitem")
     return cronbach_alpha(li, {
-        "disc": F.floor(F.col("l_discount") * 100 + F.lit(0.5)),
+        "disc": cents("l_discount"),
         "price": F.floor(F.col("l_extendedprice") / 1000),
         "qty": F.floor(F.col("l_quantity")),
     })
@@ -1452,7 +1453,7 @@ def q299_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q300_kendall_tau_b",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(l_quantity / 10) AS BIGINT) AS x,
              CAST(least(floor(l_extendedprice / 20000), 5) AS BIGINT)
@@ -1491,8 +1492,7 @@ def q299_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n1 AS n, CAST(cc AS BIGINT) AS concordant,
            CAST(dd AS BIGINT) AS discordant,
            CASE WHEN n0_2 > n1_2 AND n0_2 > n2_2 THEN
-             floor(diff / (sqrt((n0_2 - n1_2) * (n0_2 - n2_2)) / 2)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("diff / (sqrt((n0_2 - n1_2) * (n0_2 - n2_2)) / 2)")}
            END AS tau_b
     FROM ex
     """,

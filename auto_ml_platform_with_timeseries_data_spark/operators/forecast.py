@@ -61,11 +61,13 @@ from pyspark.sql.window import Window
 from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     EVENT_CENTS_SRC_SQL,
     _dominant_lag_oracle,
+    cents,
     dec,
     dominant_acf_lag,
     event_cents_query,
     ordered_series,
     pin,
+    pin_sql,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
@@ -665,10 +667,8 @@ _AR2_ORACLE = f"""
     ),
     pinned AS (
       SELECT g, n, nobs, m, vn, vn1, det,
-             floor(CAST(num1 AS DOUBLE) / CAST(det AS DOUBLE)
-                   * 1e6 + 0.5) / 1e6 AS b1,
-             floor(CAST(num2 AS DOUBLE) / CAST(det AS DOUBLE)
-                   * 1e6 + 0.5) / 1e6 AS b2
+             {pin_sql("CAST(num1 AS DOUBLE) / CAST(det AS DOUBLE)")} AS b1,
+             {pin_sql("CAST(num2 AS DOUBLE) / CAST(det AS DOUBLE)")} AS b2
       FROM solved
     )
     SELECT g AS user_id, n, nobs,
@@ -678,8 +678,7 @@ _AR2_ORACLE = f"""
                 AND vn1 IS NOT NULL THEN b2 END AS b2,
            CASE WHEN nobs >= 5 AND CAST(det AS DOUBLE) > 0
                 AND vn1 IS NOT NULL THEN
-             floor((m + b1 * (vn - m) + b2 * (vn1 - m)) / 100.0
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(m + b1 * (vn - m) + b2 * (vn1 - m)) / 100.0")}
            END AS forecast_next
     FROM pinned
     """
@@ -781,14 +780,12 @@ def _mase_oracle(cs: list[float], naive_lag: int) -> str:
     )
     SELECT g AS user_id, n_model, n_naive,
            CASE WHEN n_model > 0 THEN
-             floor(CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0
-                   * 1e6 + 0.5) / 1e6 END AS mae_model,
-           floor(CAST(sn AS DOUBLE) / n_naive / 100.0
-                 * 1e6 + 0.5) / 1e6 AS mae_naive,
+             {pin_sql("CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0")}
+           END AS mae_model,
+           {pin_sql("CAST(sn AS DOUBLE) / n_naive / 100.0")} AS mae_naive,
            CASE WHEN n_model > 0 AND CAST(sn AS DOUBLE) > 0 THEN
-             floor((CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0)
-                   / (CAST(sn AS DOUBLE) / n_naive / 100.0)
-                   * 1e6 + 0.5) / 1e6 END AS mase
+             {pin_sql("(CAST(sm AS DOUBLE) / 1e2 / n_model / 100.0)"
+                      " / (CAST(sn AS DOUBLE) / n_naive / 100.0)")} END AS mase
     FROM per WHERE n_naive > 0
     """
 
@@ -1022,15 +1019,12 @@ def _croston_oracle(alpha: float = _CR_ALPHA,
     )
     SELECT l.g AS user_id, n, CAST(m AS BIGINT) AS m_demands,
            CASE WHEN m >= {window + 1} THEN
-             floor(CAST({dz} AS DOUBLE) / 1e6 / 100.0
-                   * 1e6 + 0.5) / 1e6 END AS z_hat,
+             {pin_sql(f"CAST({dz} AS DOUBLE) / 1e6 / 100.0")} END AS z_hat,
            CASE WHEN m >= {window + 1} THEN
-             floor(CAST({qz} AS DOUBLE) / 1e6
-                   * 1e6 + 0.5) / 1e6 END AS q_hat,
+             {pin_sql(f"CAST({qz} AS DOUBLE) / 1e6")} END AS q_hat,
            CASE WHEN m >= {window + 1} AND ({qz}) > 0 THEN
-             floor((CAST({dz} AS DOUBLE) / 1e6 / 100.0)
-                   / (CAST({qz} AS DOUBLE) / 1e6)
-                   * 1e6 + 0.5) / 1e6 END AS rate
+             {pin_sql(f"(CAST({dz} AS DOUBLE) / 1e6 / 100.0)"
+                      f" / (CAST({qz} AS DOUBLE) / 1e6)")} END AS rate
     FROM lastrow l JOIN counts USING (g)
     """
 
@@ -1043,10 +1037,9 @@ def q326_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, n, m_demands, z_hat, q_hat, rate) row hash-checked."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull())
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    v = cents("value").cast("long")
     return croston_forecast(
-        ev, "user_id", "ts",
-        F.when(cents >= 800, cents).otherwise(F.lit(0)),
+        ev, "user_id", "ts", F.when(v >= 800, v).otherwise(F.lit(0)),
         tie_break="event_id")
 
 
@@ -1150,15 +1143,15 @@ def _conformal_pi_oracle(alpha: float = _PI_ALPHA,
                          + {_PI_RANK_DEN - 1}) / {_PI_RANK_DEN}.0)
     )
     SELECT p.g AS user_id, p.n_scored,
-           floor(CAST(p.fnext AS DOUBLE) / 1e6 * 1e6 + 0.5) / 1e6
+           {pin_sql("CAST(p.fnext AS DOUBLE) / 1e6")}
              AS forecast_next,
-           floor(CAST(k.q90 AS DOUBLE) / 1e4 * 1e6 + 0.5) / 1e6
+           {pin_sql("CAST(k.q90 AS DOUBLE) / 1e4")}
              AS q90_abs_err,
-           floor((CAST(p.fnext AS DOUBLE) / 1e6
-                  - CAST(k.q90 AS DOUBLE) / 1e4) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(p.fnext AS DOUBLE) / 1e6"
+                    " - CAST(k.q90 AS DOUBLE) / 1e4)")}
              AS pi_lo,
-           floor((CAST(p.fnext AS DOUBLE) / 1e6
-                  + CAST(k.q90 AS DOUBLE) / 1e4) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(p.fnext AS DOUBLE) / 1e6"
+                    " + CAST(k.q90 AS DOUBLE) / 1e4)")}
              AS pi_hi
     FROM per p JOIN pick k ON p.g = k.g
     WHERE p.n_scored > 0
@@ -1280,8 +1273,8 @@ def _snaive_detected_oracle(max_lag: int = 10) -> str:
       WHERE idx.i = idx.n + 1 - per.m
     )
     SELECT e.g AS user_id, e.n, e.period, e.n_scored,
-           floor(CAST(e.sae AS DOUBLE) / e.n_scored / 100.0
-                 * 1e6 + 0.5) / 1e6 AS mae_snaive,
+           {pin_sql("CAST(e.sae AS DOUBLE) / e.n_scored / 100.0")}
+             AS mae_snaive,
            CAST(f.fcv AS DOUBLE) / 100.0 AS forecast_next
     FROM err e JOIN fc f ON e.g = f.g
     WHERE e.n_scored > 0
@@ -1299,7 +1292,7 @@ def q335_snaive_detected(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull())
     return seasonal_naive_detected(
         ev, "user_id", "ts", "value",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
+        cents("value"),
         tie_break="event_id")
 
 

@@ -31,6 +31,10 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    cents,
+    cents_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -494,7 +498,7 @@ def continuous_aggregate_refresh(events: DataFrame, ts_col: str,
     version. Streaming sibling: q39/q182."""
     ev = events.select(
         F.date_trunc("hour", F.col(ts_col)).alias("__bucket"),
-        F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long")
+        cents(value_col).cast("long")
         .alias("__cents"),
         delta_pred.alias("__is_delta"),
     )
@@ -521,11 +525,11 @@ def continuous_aggregate_refresh(events: DataFrame, ts_col: str,
 
 @query(
     "q196_continuous_aggregate",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT max(ts) AS m FROM events),
     ev AS (
       SELECT date_trunc('hour', ts) AS b,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents, ts
+             {cents_sql("value")} AS cents, ts
       FROM events
     ),
     touched AS (
@@ -682,11 +686,11 @@ def ivm_join_delta(old_left: DataFrame, old_right: DataFrame,
 
 @query(
     "q218_ivm_join",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT o.o_orderpriority AS priority,
-             CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT) *
-             (100 - CAST(floor(l.l_discount * 100 + 0.5) AS BIGINT))
+             {cents_sql("l.l_extendedprice")} *
+             (100 - {cents_sql("l.l_discount")})
                AS rev
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     )
@@ -709,9 +713,9 @@ def q218_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
-        (F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+        (cents("l_extendedprice").cast("long")
          * (F.lit(100) -
-            F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast("long")))
+            cents("l_discount").cast("long")))
         .alias("rev")).withColumnRenamed("l_orderkey", "o_orderkey")
     old_o = o.filter(F.col("o_orderkey") % 10 != 0)
     new_o = o.filter(F.col("o_orderkey") % 10 == 0)

@@ -333,7 +333,10 @@ def sample_frames(df: DataFrame, content_col: str = "content",
 # Registered queries + oracles
 # ---------------------------------------------------------------------------
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin  # noqa: E402
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (  # noqa: E402
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table  # noqa: E402
 
@@ -1407,9 +1410,10 @@ def q193_clip_pair_oracle() -> str:
     )
     SELECT doc_id, dot AS img_txt_dot,
            CASE WHEN nt * nm = 0 THEN 0.0
-                ELSE floor(CAST(dot AS DOUBLE)
-                     / sqrt(CAST(nt AS DOUBLE) * CAST(nm AS DOUBLE))
-                     * 1e6 + 0.5) / 1e6 END AS cos_sim,
+                ELSE {pin_sql("CAST(dot AS DOUBLE)"
+                              " / sqrt(CAST(nt AS DOUBLE)"
+                              " * CAST(nm AS DOUBLE))")}
+           END AS cos_sim,
            {_CP_TAU_DEN} * dot * dot >= {_CP_TAU_NUM} * nt * nm AS keep
     FROM s
     """

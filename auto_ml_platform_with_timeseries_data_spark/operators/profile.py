@@ -26,7 +26,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    cents,
+    cents_sql,
+    dec,
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
@@ -381,7 +387,7 @@ def key_skew_stats(df: DataFrame, key_col: str, label: str) -> DataFrame:
 
 @query(
     "q125_key_skew",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT 'events.user_id' AS key, count(*) AS n
       FROM events GROUP BY user_id
@@ -396,11 +402,11 @@ def key_skew_stats(df: DataFrame, key_col: str, label: str) -> DataFrame:
            -- (the round-2 red row); pin it back to BIGINT like Spark.
            CAST(sum(n) AS BIGINT) AS n_rows,
            max(n) AS max_per_key,
-           floor((CAST(sum(n) AS DOUBLE) / count(*)) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(sum(n) AS DOUBLE) / count(*))")}
              AS avg_per_key,
-           floor((CAST(max(n) AS DOUBLE) * count(*) / sum(n)) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(max(n) AS DOUBLE) * count(*) / sum(n))")}
              AS skew_factor,
-           floor((CAST(max(n) AS DOUBLE) / sum(n)) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(max(n) AS DOUBLE) / sum(n))")}
              AS top_key_share
     FROM s GROUP BY key
     """,
@@ -527,7 +533,7 @@ def corr_matrix(df: DataFrame, cols: list[str],
     expression are shared verbatim, so both correlations carry the
     same exactness contract."""
     if quantize:
-        q = {c: F.floor(F.col(c) * 100 + F.lit(0.5)).cast("long")
+        q = {c: cents(c).cast("long")
              for c in cols}
     else:
         q = {c: F.col(c).cast("long") for c in cols}
@@ -553,8 +559,7 @@ def corr_matrix(df: DataFrame, cols: list[str],
         r = (n * sab - sa * sb) / F.sqrt(den)
         # a constant column makes den 0 and r NaN; floor(NaN) throws
         # under ANSI, so the undefined correlation is NULL by contract
-        return F.when(den > 0,
-                      F.floor(r * 1_000_000 + F.lit(0.5)) / 1_000_000)
+        return F.when(den > 0, pin(r))
 
     rows = F.array(*[
         F.struct(F.lit(a).alias("col_a"), F.lit(b).alias("col_b"),
@@ -566,7 +571,7 @@ def corr_matrix(df: DataFrame, cols: list[str],
 
 
 def _corr_oracle(cols=_CORR_COLS) -> str:
-    qs = {c: f"CAST(floor({c} * 100 + 0.5) AS BIGINT)" for c in cols}
+    qs = {c: f"{cents_sql(c)}" for c in cols}
     sums = ",\n             ".join(
         f"CAST(sum({qs[c]}) AS HUGEINT) AS s_{c},\n             "
         f"CAST(sum({qs[c]} * {qs[c]}) AS HUGEINT) AS ss_{c}"
@@ -584,10 +589,9 @@ def _corr_oracle(cols=_CORR_COLS) -> str:
     sel = "\n    UNION ALL\n".join(f"""
     SELECT n, '{a}' AS col_a, '{b}' AS col_b,
            CASE WHEN {den(a, b)} > 0 THEN
-             floor((CAST(n AS DOUBLE) * CAST(sp_{a}_{b} AS DOUBLE)
-                    - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))
-                   / sqrt({den(a, b)})
-                   * 1000000 + 0.5) / 1000000
+             {pin_sql(f"(CAST(n AS DOUBLE) * CAST(sp_{a}_{b} AS DOUBLE)"
+                      f" - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
+                      f" / sqrt({den(a, b)})")}
            END AS corr
     FROM stats""" for a, b in pairs)
     return f"""
@@ -741,10 +745,9 @@ def _spearman_oracle(cols=_CORR_COLS) -> str:
     sel = "\n    UNION ALL\n".join(f"""
     SELECT n, '{a}' AS col_a, '{b}' AS col_b,
            CASE WHEN {den(a, b)} > 0 THEN
-             floor((CAST(n AS DOUBLE) * CAST(sp_{a}_{b} AS DOUBLE)
-                    - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))
-                   / sqrt({den(a, b)})
-                   * 1000000 + 0.5) / 1000000
+             {pin_sql(f"(CAST(n AS DOUBLE) * CAST(sp_{a}_{b} AS DOUBLE)"
+                      f" - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
+                      f" / sqrt({den(a, b)})")}
            END AS corr
     FROM stats""" for a, b in pairs)
     return f"""
@@ -828,9 +831,9 @@ def mutual_information(df: DataFrame, features: dict[str, Column],
 
 _MI_FEATURES_SQL = {
     "quantity": "CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)",
-    "discount_pct": "CAST(CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"
+    "discount_pct": f"CAST({cents_sql('l_discount')}"
                     " AS VARCHAR)",
-    "tax_pct": "CAST(CAST(floor(l_tax * 100 + 0.5) AS BIGINT)"
+    "tax_pct": f"CAST({cents_sql('l_tax')}"
                " AS VARCHAR)",
     "linestatus": "l_linestatus",
 }
@@ -851,9 +854,9 @@ def _mi_oracle() -> str:
     fy AS (SELECT feature, y, sum(cxy) AS cy FROM cells GROUP BY 1, 2),
     n AS (SELECT feature, sum(cxy) AS n FROM cells GROUP BY 1)
     SELECT cells.feature, CAST(count(*) AS BIGINT) AS n_cells,
-           floor(sum((cxy / CAST(n AS DOUBLE))
-                     * ln((cxy * CAST(n AS DOUBLE)) / (cx * CAST(cy AS DOUBLE))))
-                 * 1e6 + 0.5) / 1e6 AS mi_nats
+           {pin_sql("sum((cxy / CAST(n AS DOUBLE))"
+                    " * ln((cxy * CAST(n AS DOUBLE))"
+                    " / (cx * CAST(cy AS DOUBLE))))")} AS mi_nats
     FROM cells
     JOIN fx ON cells.feature = fx.feature AND cells.x = fx.x
     JOIN fy ON cells.feature = fy.feature AND cells.y = fy.y
@@ -871,9 +874,9 @@ def q229_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     feats = {
         "quantity": F.col("l_quantity").cast("long"),
-        "discount_pct": F.floor(F.col("l_discount") * 100 + F.lit(0.5))
+        "discount_pct": cents("l_discount")
         .cast("long"),
-        "tax_pct": F.floor(F.col("l_tax") * 100 + F.lit(0.5))
+        "tax_pct": cents("l_tax")
         .cast("long"),
         "linestatus": F.col("l_linestatus"),
     }
@@ -928,9 +931,9 @@ def gini_coefficient(df: DataFrame, value: Column) -> DataFrame:
 
 @query(
     "q263_gini_coefficient",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
+      SELECT {cents_sql("l_extendedprice")} AS v
       FROM lineitem WHERE l_extendedprice IS NOT NULL
     ),
     f AS (SELECT v FROM s WHERE v >= 0),
@@ -952,8 +955,8 @@ def gini_coefficient(df: DataFrame, value: Column) -> DataFrame:
     )
     SELECT n, total,
            CASE WHEN total > 0 THEN
-             floor((2.0 * rs - CAST(n + 1 AS DOUBLE) * total)
-                   / (CAST(n AS DOUBLE) * total) * 1e6 + 0.5) / 1e6
+             {pin_sql("(2.0 * rs - CAST(n + 1 AS DOUBLE) * total)"
+                      " / (CAST(n AS DOUBLE) * total)")}
            END AS gini
     FROM agg
     """,
@@ -965,7 +968,7 @@ def q263_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient one pinned hash-checked double."""
     li = load_table(spark, sf_dir, "lineitem")
     return gini_coefficient(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
+        li, cents("l_extendedprice")
         .cast("long"))
 
 
@@ -998,7 +1001,7 @@ def hhi_concentration(df: DataFrame, dim_col: str) -> DataFrame:
 
 @query(
     "q269_hhi_concentration",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n
       FROM lineitem WHERE l_suppkey IS NOT NULL GROUP BY l_suppkey
@@ -1011,10 +1014,10 @@ def hhi_concentration(df: DataFrame, dim_col: str) -> DataFrame:
     )
     SELECT k, n,
            CASE WHEN n > 0 THEN
-             floor(s2 / (CAST(n AS DOUBLE) * n) * 1e6 + 0.5) / 1e6
+             {pin_sql("s2 / (CAST(n AS DOUBLE) * n)")}
            END AS hhi,
            CASE WHEN n > 0 THEN
-             floor((CAST(n AS DOUBLE) * n) / s2 * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(n AS DOUBLE) * n) / s2")}
            END AS effective_n
     FROM agg
     """,
@@ -1071,9 +1074,9 @@ def lorenz_curve(df: DataFrame, value: Column,
 
 @query(
     "q270_lorenz_curve",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
+      SELECT {cents_sql("l_extendedprice")} AS v
       FROM lineitem WHERE l_extendedprice IS NOT NULL
     ),
     f AS (SELECT v FROM s WHERE v >= 0),
@@ -1101,9 +1104,9 @@ def lorenz_curve(df: DataFrame, value: Column,
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              AS BIGINT) AS cum_value,
            CASE WHEN tv > 0 THEN
-             floor(CAST(sum(bin_value) OVER (ORDER BY decile
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS DOUBLE) / tv * 1e6 + 0.5) / 1e6
+             {pin_sql("CAST(sum(bin_value) OVER (ORDER BY decile"
+                      " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+                      " AS DOUBLE) / tv")}
            END AS cum_share
     FROM agg, tot
     """,
@@ -1115,5 +1118,5 @@ def q270_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     li = load_table(spark, sf_dir, "lineitem")
     return lorenz_curve(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
+        li, cents("l_extendedprice")
         .cast("long"))

@@ -24,7 +24,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    dec,
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -833,7 +837,7 @@ def q126_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q128_pareto_abc",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT o_custkey AS custkey,
              CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(38,4))
@@ -848,7 +852,7 @@ def q126_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM r
     )
     SELECT custkey, ROUND(revenue, 2) AS revenue,
-           floor((cum / total) * 1e6 + 0.5) / 1e6 AS cum_share,
+           {pin_sql("(cum / total)")} AS cum_share,
            CASE WHEN cum / total <= 0.8 THEN 'A'
                 WHEN cum / total <= 0.95 THEN 'B' ELSE 'C' END AS abc_class
     FROM c

@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    cents,
+    cents_sql,
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
@@ -185,7 +190,7 @@ def quantile_normalize_map(df: DataFrame, cols: list[str]) -> DataFrame:
     k = len(cols)
     lv = df.na.drop(subset=list(cols)).select(
         F.posexplode(F.array(
-            *[F.floor(F.col(c) * 100 + F.lit(0.5)).cast("long")
+            *[cents(c).cast("long")
               for c in cols])).alias("__ci", "__v"))
     spans = _ordinal_spans(lv)
     chunks = spans.select(
@@ -223,7 +228,7 @@ def _qn_oracle(cols=_QN_COLS) -> str:
     notnull = " AND ".join(f"{c} IS NOT NULL" for c in cols)
     melt = "\n      UNION ALL\n".join(
         f"      SELECT {i} AS ci,"
-        f" CAST(floor({c} * 100 + 0.5) AS BIGINT) AS vc"
+        f" {cents_sql(c)} AS vc"
         f" FROM lineitem WHERE {notnull}"
         for i, c in enumerate(cols))
     case = " ".join(f"WHEN {i} THEN '{c}'" for i, c in enumerate(cols))
@@ -368,8 +373,7 @@ def _rq_oracle(cols=_QN_COLS) -> str:
     ),
     q AS (
       SELECT ci, qi,
-             floor((v1 + (coalesce(v2, v1) - v1) * frac) * 1e6 + 0.5)
-               / 1e6 AS val
+             {pin_sql("(v1 + (coalesce(v2, v1) - v1) * frac)")} AS val
       FROM vv
     ),
     piv AS (
@@ -451,10 +455,10 @@ def robust_scale(df: DataFrame, group_col: str, id_col: str,
                         / iqr.cast("double"))).alias("scaled")))
 
 
-_ROBUST_SCALE_ORACLE = """
+_ROBUST_SCALE_ORACLE = f"""
     WITH src AS (
       SELECT user_id AS g, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
+             {cents_sql("value")} AS v
       FROM events WHERE value IS NOT NULL
     ),
     ranked AS (
@@ -477,8 +481,8 @@ _ROBUST_SCALE_ORACLE = """
     SELECT s.g AS user_id, s.event_id,
            p.med AS median, p.q3 - p.q1 AS iqr,
            CASE WHEN p.q3 - p.q1 > 0 THEN
-             floor(CAST(s.v - p.med AS DOUBLE) / (p.q3 - p.q1)
-                   * 1e6 + 0.5) / 1e6 END AS scaled
+             {pin_sql("CAST(s.v - p.med AS DOUBLE) / (p.q3 - p.q1)")}
+           END AS scaled
     FROM src s JOIN per p ON s.g = p.g
     """
 
@@ -493,4 +497,4 @@ def q339_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return robust_scale(
         ev, "user_id", "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)))
+        cents("value"))

@@ -14,7 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -80,8 +83,8 @@ def sessionize(df: DataFrame, key: str, ts: str, gap_minutes: int,
            event_type,
            count(*) AS n,
            CAST(ROUND(sum(CAST(value AS DECIMAL(18,4))), 4) AS DOUBLE) AS sum_value,
-           floor((CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / count(*))
-                 * 1e6 + 0.5) / 1e6 AS avg_value
+           {pin_sql("CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)"
+                    " / count(*)")} AS avg_value
     FROM events
     GROUP BY 1, 2
     """,
@@ -360,7 +363,7 @@ def q122_window_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q127_event_transitions",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
@@ -372,8 +375,8 @@ def q122_window_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM t WHERE prev_type IS NOT NULL GROUP BY 1, 2
     )
     SELECT prev_type, next_type, n,
-           floor((CAST(n AS DOUBLE)
-                  / sum(n) OVER (PARTITION BY prev_type)) * 1e6 + 0.5) / 1e6
+           {pin_sql("(CAST(n AS DOUBLE)"
+                    " / sum(n) OVER (PARTITION BY prev_type))")}
              AS p
     FROM c
     """,
@@ -442,7 +445,7 @@ def mad_outliers(df: DataFrame, group_col: str, id_col: str,
 
 
 # shared with q346's fleet-triage composition (ts_features.py)
-_MAD_ORACLE = """
+_MAD_ORACLE = f"""
     WITH m AS (
       SELECT user_id, median(value) AS med FROM events GROUP BY user_id
     ),
@@ -455,12 +458,11 @@ _MAD_ORACLE = """
       SELECT user_id, median(ad) AS mad FROM d GROUP BY user_id
     )
     SELECT d.user_id, d.event_id, d.value,
-           floor(0.6745 * (d.value - d.med) / md.mad * 1e6 + 0.5) / 1e6
+           {pin_sql("0.6745 * (d.value - d.med) / md.mad")}
              AS robust_z
     FROM d JOIN md ON d.user_id = md.user_id
     WHERE md.mad > 0
-      AND abs(floor(0.6745 * (d.value - d.med) / md.mad * 1e6 + 0.5)
-              / 1e6) > 3.5
+      AND abs({pin_sql("0.6745 * (d.value - d.med) / md.mad")}) > 3.5
     """
 
 

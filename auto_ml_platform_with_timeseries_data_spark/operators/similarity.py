@@ -39,7 +39,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     keep,
@@ -2006,7 +2009,7 @@ def _mined_sql(p: str, pairs: str) -> str:
     ``{p}sa``/``{p}sb`` sum each side's top-k, and ``{p}m`` holds the
     pinned margins at or above the threshold."""
     k, tk = _MARGIN_K, float(2 * _MARGIN_K)
-    mg = f"floor((r.ci * {tk}) / (sa.s + sb.s) * 1e6 + 0.5) / 1e6"
+    mg = pin_sql(f"(r.ci * {tk}) / (sa.s + sb.s)")
     return f"""{p}r AS MATERIALIZED (
       SELECT src_id, tgt_id, ci,
              row_number() OVER (PARTITION BY src_id
@@ -2070,12 +2073,12 @@ def _margin_sql(exact: bool = False, banded: bool = False,
       FROM sprobes a JOIN tcells b ON a.cid = b.cid
     )""", _mined_sql("a", "ap")]
     if exact and banded:
-        out = """
+        out = f"""
     SELECT coalesce(f.src_id, a.src_id) AS src_id,
            coalesce(f.tgt_id, a.tgt_id) AS tgt_id,
            f.margin AS margin_full, a.margin AS margin_ann,
            CASE WHEN f.margin IS NOT NULL AND a.margin IS NOT NULL THEN
-             floor(abs(a.margin - f.margin) * 1e6 + 0.5) / 1e6
+             {pin_sql("abs(a.margin - f.margin)")}
            END AS err
     FROM fm f FULL JOIN am a
       ON f.src_id = a.src_id AND f.tgt_id = a.tgt_id

@@ -17,7 +17,10 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     normalize_text,
     tokens,
 )
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    pin,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table, release
 
@@ -847,9 +850,9 @@ def span_duplication(df: DataFrame, id_col: str, text_col: str,
            count(*) AS n_spans,
            CAST(sum(CASE WHEN s.span IN (SELECT span FROM d)
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
-           floor(CAST(sum(CASE WHEN s.span IN (SELECT span FROM d)
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*) * 1e6 + 0.5) / 1e6 AS dup_rate
+           {pin_sql("CAST(sum(CASE WHEN s.span IN (SELECT span FROM d)"
+                    " THEN 1 ELSE 0 END) AS DOUBLE)"
+                    " / count(*)")} AS dup_rate
     FROM s GROUP BY lang
     """,
 )
@@ -915,7 +918,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
     v AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
     n AS (SELECT CAST(sum(c) AS DOUBLE) AS n FROM v)
     SELECT tok.doc_id, count(*) AS n_tokens,
-           floor(avg(ln(CAST(v.c AS DOUBLE) / n.n)) * 1e6 + 0.5) / 1e6
+           {pin_sql("avg(ln(CAST(v.c AS DOUBLE) / n.n))")}
              AS logprob
     FROM tok JOIN v USING (w), n
     GROUP BY tok.doc_id
@@ -1378,7 +1381,7 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     SELECT t.doc_id,
            CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           coalesce(floor(s.lp * 1e6 + 0.5) / 1e6, 0.0) AS avg_logprob
+           coalesce({pin_sql("s.lp")}, 0.0) AS avg_logprob
     FROM tk t LEFT JOIN sc s ON t.doc_id = s.doc_id
     """,
 )
@@ -1453,7 +1456,7 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str,
     ),
     pinned AS (
       SELECT t.doc_id, t.lang,
-             coalesce(floor(s.lp * 1e6 + 0.5) / 1e6, 0.0) AS avg_logprob
+             coalesce({pin_sql("s.lp")}, 0.0) AS avg_logprob
       FROM tk t LEFT JOIN sc s ON t.doc_id = s.doc_id
     ),
     ranked AS (
@@ -1855,9 +1858,9 @@ def zipf_slope(df: DataFrame, group_col: str, text_col: str,
       FROM agg
     )
     SELECT g AS source, n_ranks, total_tokens,
-           floor(slope_raw * 1e6 + 0.5) / 1e6 AS slope,
-           floor((qy / 1e12 - slope_raw * (qx / 1e12))
-                 / CAST(n_ranks AS DOUBLE) * 1e6 + 0.5) / 1e6
+           {pin_sql("slope_raw")} AS slope,
+           {pin_sql("(qy / 1e12 - slope_raw * (qx / 1e12))"
+                    " / CAST(n_ranks AS DOUBLE)")}
              AS intercept
     FROM fitted
     """,

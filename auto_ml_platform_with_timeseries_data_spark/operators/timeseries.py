@@ -24,6 +24,7 @@ table by group key removes the shuffle entirely.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -54,11 +55,28 @@ def ordered_series(df: DataFrame, group_col: str, order: str,
     return src, Window.partitionBy("__g").orderBy(*ob)
 
 
+# ---------------------------------------------------------------------------
+# Exact-statistics vocabulary: the readout pin, exact integer sums and
+# moments, and money in cents — each in Spark and, for the oracles, in
+# DuckDB SQL
+# ---------------------------------------------------------------------------
+
+
 def pin(c: Column) -> Column:
     """Round half-up at 1e-6 — the cross-engine readout pin. Not
     round(): the two engines' round() implementations disagree at the
     6th-decimal boundary even on bit-identical doubles."""
     return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
+
+
+def pin_sql(x: str) -> str:
+    """`pin` in DuckDB SQL: the oracles' side of the same readout."""
+    return f"floor(({x}) * 1e6 + 0.5) / 1e6"
+
+
+def pin_float(x: float) -> float:
+    """`pin` on a driver-side Python float (the same IEEE double)."""
+    return math.floor(x * 1e6 + 0.5) / 1e6
 
 
 def dec(c: Column) -> Column:
@@ -68,6 +86,60 @@ def dec(c: Column) -> Column:
     return c.cast("decimal(38,0)")
 
 
+def dec_sq(c: Column) -> Column:
+    """c² at decimal(38,0): the exact Σv² term of a moment sum."""
+    return dec(c) * dec(c)
+
+
+def cents(c: Column | str) -> Column:
+    """c × 100 rounded half-up: a money column in integer cents (or a
+    rate in integer percent), the exact measure the statistics kernels
+    read."""
+    c = F.col(c) if isinstance(c, str) else c
+    return F.floor(c * 100 + F.lit(0.5))
+
+
+def cents_sql(x: str) -> str:
+    """`cents` in DuckDB SQL, as a BIGINT."""
+    return f"CAST(floor({x} * 100 + 0.5) AS BIGINT)"
+
+
+def group_values(df: DataFrame, group_col: str, value: Column) -> DataFrame:
+    """(__g, __v BIGINT): a grouped integer measure with the rows whose
+    group or value is NULL dropped."""
+    return df.select(F.col(group_col).alias("__g"),
+                     value.cast("long").alias("__v")).filter(
+        F.col("__g").isNotNull() & F.col("__v").isNotNull())
+
+
+def exact_moments(src: DataFrame, value: str = "__v",
+                  weight: str | None = None) -> DataFrame:
+    """(__g, __ng, __sg, __ssg): each group's exact count n, Σv and Σv²
+    at decimal(38,0). A `weight` column makes each row stand for that
+    many copies of its value (a cell count): n = Σw, Σw·v, Σw·v²."""
+    v = F.col(value)
+    if weight is None:
+        n, s, ss = F.count(F.lit(1)), F.sum(dec(v)), F.sum(dec_sq(v))
+    else:
+        w = F.col(weight)
+        n, s, ss = (F.sum(w), F.sum(dec(v) * dec(w)),
+                    F.sum(dec_sq(v) * dec(w)))
+    return src.groupBy("__g").agg(n.cast("long").alias("__ng"),
+                                  s.alias("__sg"), ss.alias("__ssg"))
+
+
+def moments_sql(src: str, value: str = "v",
+                weight: str | None = None) -> str:
+    """`exact_moments` in DuckDB SQL: (g, ng, sg, ssg) per group g of
+    the relation `src`, with HUGEINT sums."""
+    w = f" * {weight}" if weight else ""
+    n = f"sum({weight})" if weight else "count(*)"
+    return (f"SELECT g, CAST({n} AS BIGINT) AS ng,"
+            f" sum(CAST({value} AS HUGEINT){w}) AS sg,"
+            f" sum(CAST({value} AS HUGEINT) * {value}{w}) AS ssg"
+            f" FROM {src} GROUP BY g")
+
+
 def event_cents_query(spark: SparkSession, sf_dir: str,
                       kernel: Callable[..., DataFrame],
                       **kwargs) -> DataFrame:
@@ -75,17 +147,15 @@ def event_cents_query(spark: SparkSession, sf_dir: str,
     series in integer cents, ordered by (ts, event_id)."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull())
-    return kernel(ev, "user_id", "ts",
-                  F.floor(F.col("value") * 100 + F.lit(0.5)),
+    return kernel(ev, "user_id", "ts", cents("value"),
                   tie_break="event_id", **kwargs)
 
 
 # The oracles' counterpart of event_cents_query: the same series as a
 # DuckDB CTE, shared by oracles only (never generated from the Spark
 # side, so each oracle stays an independent reference).
-EVENT_CENTS_SRC_SQL = """src AS (
-      SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
+EVENT_CENTS_SRC_SQL = f"""src AS (
+      SELECT user_id AS g, ts, event_id, {cents_sql("value")} AS v
       FROM events WHERE value IS NOT NULL
     )"""
 
@@ -415,7 +485,7 @@ def _pacf_oracle(max_lag: int = _PACF_LAGS) -> str:
         prev = f"s{i}"
     unions = "\n    UNION ALL ".join(
         f"SELECT user_id, {k} AS lag,"
-        f" floor(phi_{k}_{k} * 1e6 + 0.5) / 1e6 AS pacf FROM {prev}"
+        f" {pin_sql(f'phi_{k}_{k}')} AS pacf FROM {prev}"
         for k in range(1, max_lag + 1))
     return f"""
     WITH acf_rows AS ({_acf_oracle()}),

@@ -27,10 +27,14 @@ from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
     EVENT_CENTS_SRC_SQL,
+    cents,
+    cents_sql,
     dec,
+    dec_sq,
     event_cents_query,
     ordered_series,
     pin,
+    pin_sql,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
@@ -180,15 +184,15 @@ def lag_features(df: DataFrame, key: str, order: list[str], value: str,
 
 @query(
     "q71_lag_features",
-    oracle="""
+    oracle=f"""
     SELECT event_id, user_id, value,
            lag(value, 1) OVER w AS lag_1,
            lag(value, 2) OVER w AS lag_2,
            lag(value, 3) OVER w AS lag_3,
            ROUND(value - lag(value, 1) OVER w, 6) AS delta,
            CASE WHEN lag(value, 1) OVER w <> 0.0
-                THEN floor(((value - lag(value, 1) OVER w)
-                            / lag(value, 1) OVER w) * 1e6 + 0.5) / 1e6
+                THEN {pin_sql("((value - lag(value, 1) OVER w)"
+                              " / lag(value, 1) OVER w)")}
                 END AS pct_change
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -579,7 +583,7 @@ def group_ols(df: DataFrame, key: str, ts_col: str, value_col: str,
 
 @query(
     "q124_group_ols",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT user_id,
              CAST(CAST(epoch(ts) AS DOUBLE)
@@ -599,15 +603,19 @@ def group_ols(df: DataFrame, key: str, ts_col: str, value_col: str,
     SELECT user_id, n,
            CASE WHEN n * CAST(sxx AS DOUBLE)
                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-           floor(((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                  / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                 * 86400.0 * 1e6 + 0.5) / 1e6 END AS slope_per_day,
+           {pin_sql("((n * CAST(sxy AS DOUBLE)"
+                    " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+                    " / (n * CAST(sxx AS DOUBLE)"
+                    " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))"
+                    " * 86400.0")} END AS slope_per_day,
            CASE WHEN n * CAST(sxx AS DOUBLE)
                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0 THEN
-           floor(((CAST(sy AS DOUBLE)
-                   - ((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                      / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-                     * CAST(sx AS DOUBLE)) / n) * 1e6 + 0.5) / 1e6 END AS intercept
+           {pin_sql("((CAST(sy AS DOUBLE)"
+                    " - ((n * CAST(sxy AS DOUBLE)"
+                    " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+                    " / (n * CAST(sxx AS DOUBLE)"
+                    " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))"
+                    " * CAST(sx AS DOUBLE)) / n)")} END AS intercept
     FROM a
     """,
 )
@@ -662,9 +670,6 @@ def moment_features(df: DataFrame, group_col: str,
     kurt = (s4 / n - 4 * m * (s3 / n) + 6 * m * m * (s2 / n)
             - 3 * m * m * m * m) / (var * var) - 3.0
 
-    def pin(c):
-        return F.floor(c * 1_000_000 + F.lit(0.5)) / 1_000_000
-
     return (agg.filter(var > 0).select(
         F.col(group_col),
         F.col("n").cast("long").alias("n"),
@@ -677,7 +682,7 @@ def moment_features(df: DataFrame, group_col: str,
 
 @query(
     "q213_moment_features",
-    oracle="""
+    oracle=f"""
     WITH q AS (
       SELECT user_id,
              CAST(floor(value * 10000.0 + 0.5) AS BIGINT) AS v
@@ -706,15 +711,13 @@ def moment_features(df: DataFrame, group_col: str,
       FROM d
     )
     SELECT user_id, n,
-           floor((m / 10000.0) * 1000000 + 0.5) / 1000000 AS mean,
-           floor((var / 100000000.0) * 1000000 + 0.5) / 1000000
-             AS variance,
-           floor(((s3 / nd - 3 * m * (s2 / nd) + 2 * m * m * m)
-                  / (var * sqrt(var))) * 1000000 + 0.5) / 1000000
-             AS skewness,
-           floor(((s4 / nd - 4 * m * (s3 / nd) + 6 * m * m * (s2 / nd)
-                   - 3 * m * m * m * m) / (var * var) - 3.0)
-                 * 1000000 + 0.5) / 1000000 AS kurtosis
+           {pin_sql("m / 10000.0")} AS mean,
+           {pin_sql("var / 100000000.0")} AS variance,
+           {pin_sql("(s3 / nd - 3 * m * (s2 / nd) + 2 * m * m * m)"
+                    " / (var * sqrt(var))")} AS skewness,
+           {pin_sql("(s4 / nd - 4 * m * (s3 / nd) + 6 * m * m * (s2 / nd)"
+                    " - 3 * m * m * m * m) / (var * var) - 3.0")}
+             AS kurtosis
     FROM mm WHERE var > 0
     """,
 )
@@ -746,7 +749,7 @@ def _event_series(ev: DataFrame, group_col: str) -> DataFrame:
     return ev.select(
         F.col(group_col).alias("__g"), "event_id",
         F.floor(F.col("ts").cast("double")).cast("long").alias("__s"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+        cents("value").cast("long")
         .alias("__c"))
 
 
@@ -773,10 +776,10 @@ def theil_sen_slopes(ev: DataFrame, group_col: str) -> DataFrame:
                     .alias("slope")))
 
 
-_TS_DUCK_SERIES = """
+_TS_DUCK_SERIES = f"""
       SELECT user_id AS g, event_id,
              CAST(floor(epoch(ts)) AS BIGINT) AS s,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+             {cents_sql("value")} AS c
       FROM events WHERE value IS NOT NULL
 """
 
@@ -791,7 +794,7 @@ _TS_DUCK_SERIES = """
         ON a.g = b.g AND a.event_id < b.event_id AND a.s != b.s
     )
     SELECT g AS user_id, CAST(count(*) AS BIGINT) AS n_pairs,
-           floor(median(m) * 1e6 + 0.5) / 1e6 AS slope
+           {pin_sql("median(m)")} AS slope
     FROM p GROUP BY g
     """,
 )
@@ -921,7 +924,7 @@ def _mk_oracle() -> str:
     )
     SELECT g AS user_id, n, s_stat, var18,
            CASE WHEN var > 0 THEN
-             floor((s_stat - sign(s_stat)) / sqrt(var) * 1e6 + 0.5) / 1e6
+             {pin_sql("(s_stat - sign(s_stat)) / sqrt(var)")}
            END AS z
     FROM v
     """
@@ -1014,14 +1017,12 @@ def theil_sen_sampled(ev: DataFrame, group_col: str,
     SELECT g AS user_id, CAST(count(*) AS BIGINT) AS n_pairs,
            CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
              AS n_sampled,
-           floor(median(m) * 1e6 + 0.5) / 1e6 AS slope_full,
-           floor(median(CASE WHEN keep THEN m END) * 1e6 + 0.5) / 1e6
+           {pin_sql("median(m)")} AS slope_full,
+           {pin_sql("median(CASE WHEN keep THEN m END)")}
              AS slope_sampled,
            CASE WHEN sum(CASE WHEN keep THEN 1 ELSE 0 END) > 0 THEN
-             floor(abs(floor(median(CASE WHEN keep THEN m END) * 1e6
-                             + 0.5) / 1e6
-                       - floor(median(m) * 1e6 + 0.5) / 1e6)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql(f"abs({pin_sql('median(CASE WHEN keep THEN m END)')}"
+                      f" - {pin_sql('median(m)')})")}
            END AS err
     FROM p GROUP BY g
     """,
@@ -1113,7 +1114,7 @@ def theil_sen_capped(ev: DataFrame, group_col: str,
           FROM capped GROUP BY g),
     agg AS (
       SELECT g, CAST(count(*) AS BIGINT) AS n_pairs,
-             floor(median(m) * 1e6 + 0.5) / 1e6 AS slope
+             {pin_sql("median(m)")} AS slope
       FROM p GROUP BY g
     )
     SELECT n.g AS user_id, n.n_events,
@@ -1186,7 +1187,7 @@ def kaplan_meier(df: DataFrame, cohort_col: str, duration: Column,
 
 @query(
     "q265_kaplan_meier",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id % 3 AS g,
              CAST(floor(abs(value)) AS BIGINT) AS t,
@@ -1222,7 +1223,7 @@ def kaplan_meier(df: DataFrame, cohort_col: str, duration: Column,
     )
     SELECT g AS cohort, t, CAST(n_risk AS BIGINT) AS n_risk, d, c,
            CASE WHEN dead = 1 THEN 0.0 ELSE
-             floor(exp(ls / 1e12) * 1e6 + 0.5) / 1e6
+             {pin_sql("exp(ls / 1e12)")}
            END AS survival
     FROM walked
     """,
@@ -1285,7 +1286,7 @@ def nelson_aalen(df: DataFrame, cohort_col: str, duration: Column,
 
 @query(
     "q271_nelson_aalen",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id % 3 AS g,
              CAST(floor(abs(value)) AS BIGINT) AS t,
@@ -1306,12 +1307,12 @@ def nelson_aalen(df: DataFrame, cohort_col: str, duration: Column,
       FROM cells
     )
     SELECT g AS cohort, t, CAST(n_risk AS BIGINT) AS n_risk, d, c,
-           floor(sum(CAST(floor(CAST(d AS DOUBLE) / n_risk * 1e12)
-                          AS BIGINT))
-                   OVER (PARTITION BY g ORDER BY t
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND CURRENT ROW)
-                 / 1e12 * 1e6 + 0.5) / 1e6 AS cum_hazard
+           {pin_sql("sum(CAST(floor(CAST(d AS DOUBLE) / n_risk * 1e12)"
+                    " AS BIGINT))"
+                    " OVER (PARTITION BY g ORDER BY t"
+                    " ROWS BETWEEN UNBOUNDED PRECEDING"
+                    " AND CURRENT ROW)"
+                    " / 1e12")} AS cum_hazard
     FROM stepped
     """,
 )
@@ -1394,7 +1395,7 @@ def logrank_test(df: DataFrame, duration: Column, event: Column,
 
 @query(
     "q272_logrank_test",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(abs(value)) AS BIGINT) AS t,
              CAST(event_id % 4 != 0 AS INT) AS e,
@@ -1436,14 +1437,14 @@ def logrank_test(df: DataFrame, duration: Column, event: Column,
     )
     SELECT n_a, n_b, d_a, d_total,
            CASE WHEN vs > 0 THEN
-             floor((CAST(d_a AS DOUBLE) - es / 1e12)
-                   / sqrt(vs / 1e12) * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(d_a AS DOUBLE) - es / 1e12)"
+                      " / sqrt(vs / 1e12)")}
            END AS z,
            CASE WHEN vs > 0 THEN
-             floor(((CAST(d_a AS DOUBLE) - es / 1e12)
-                    / sqrt(vs / 1e12))
-                   * ((CAST(d_a AS DOUBLE) - es / 1e12)
-                      / sqrt(vs / 1e12)) * 1e6 + 0.5) / 1e6
+             {pin_sql("((CAST(d_a AS DOUBLE) - es / 1e12)"
+                      " / sqrt(vs / 1e12))"
+                      " * ((CAST(d_a AS DOUBLE) - es / 1e12)"
+                      " / sqrt(vs / 1e12))")}
            END AS chi2
     FROM agg
     """,
@@ -1564,7 +1565,7 @@ def trend_seasonal_strength(df: DataFrame, group_col: str, order: str,
 
 @query(
     "q289_turning_points",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT user_id AS g, value AS v,
              lag(value) OVER w AS pv, lead(value) OVER w AS nv
@@ -1580,13 +1581,12 @@ def trend_seasonal_strength(df: DataFrame, group_col: str, order: str,
     )
     SELECT g AS user_id, n, n_turns,
            CASE WHEN n >= 3 THEN
-             floor(2 * (CAST(n AS DOUBLE) - 2) / 3 * 1e6 + 0.5) / 1e6
+             {pin_sql("2 * (CAST(n AS DOUBLE) - 2) / 3")}
            END AS expected,
            CASE WHEN n >= 3
                 AND (16 * CAST(n AS DOUBLE) - 29) / 90 > 0 THEN
-             floor((n_turns - 2 * (CAST(n AS DOUBLE) - 2) / 3)
-                   / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(n_turns - 2 * (CAST(n AS DOUBLE) - 2) / 3)"
+                      " / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90)")}
            END AS z
     FROM per
     """,
@@ -1604,7 +1604,7 @@ def q289_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q290_trend_strength",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id AS g, CAST(value AS DOUBLE) AS v, ts, event_id,
              CAST(hour(ts) AS INT) AS s
@@ -1642,10 +1642,10 @@ def q289_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT g AS user_id, n,
            CASE WHEN vu > 0 THEN
-             floor(greatest(0.0, 1 - vr / vu) * 1e6 + 0.5) / 1e6
+             {pin_sql("greatest(0.0, 1 - vr / vu)")}
            END AS trend_strength,
            CASE WHEN vd > 0 THEN
-             floor(greatest(0.0, 1 - vr / vd) * 1e6 + 0.5) / 1e6
+             {pin_sql("greatest(0.0, 1 - vr / vd)")}
            END AS seasonal_strength
     FROM ex
     """,
@@ -1737,9 +1737,9 @@ def von_neumann_ratio(df: DataFrame, group_col: str, order: str,
            .groupBy("__g")
            .agg(F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(dec(F.col("__v"))).alias("__s"),
-                F.sum(dec(F.col("__v")) * dec(F.col("__v")))
+                F.sum(dec_sq(F.col("__v")))
                 .alias("__q"),
-                F.sum(dec(F.col("__d")) * dec(F.col("__d")))
+                F.sum(dec_sq(F.col("__d")))
                 .alias("__sd2")))
     n = F.col("n").cast("double")
     den = F.col("__q").cast("double") - F.col("__s").cast("double") \
@@ -1825,9 +1825,9 @@ def hac_variance(df: DataFrame, group_col: str, order: str,
     ),
     scored AS (
       SELECT g, n, k,
-             floor((CAST(sk AS DOUBLE) * sk / k
-                    + CAST(sn - sk AS DOUBLE) * (sn - sk) / (n - k)
-                    - CAST(sn AS DOUBLE) * sn / n) * 1e6 + 0.5) / 1e6
+             {pin_sql("(CAST(sk AS DOUBLE) * sk / k"
+                      " + CAST(sn - sk AS DOUBLE) * (sn - sk) / (n - k)"
+                      " - CAST(sn AS DOUBLE) * sn / n)")}
                AS gain
       FROM pre WHERE k < n
     ),
@@ -1874,13 +1874,12 @@ def q292_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT g AS user_id, n,
            CASE WHEN n >= 3 AND den > 0 THEN
-             floor(num / den * 1e6 + 0.5) / 1e6
+             {pin_sql("num / den")}
            END AS vn_ratio,
            CASE WHEN n >= 3 AND den > 0 THEN
-             floor((num / den - 2)
-                   / sqrt(4 * (CAST(n AS DOUBLE) - 2)
-                          / (CAST(n AS DOUBLE) * n - 1))
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(num / den - 2)"
+                      " / sqrt(4 * (CAST(n AS DOUBLE) - 2)"
+                      " / (CAST(n AS DOUBLE) * n - 1))")}
            END AS z
     FROM ex
     """,
@@ -1935,11 +1934,11 @@ def _hac_oracle(max_lag: int = _HAC_L) -> str:
     )
     SELECT g AS user_id, n,
            CASE WHEN ok THEN
-             floor(g0 / n * 1e6 + 0.5) / 1e6 END AS var_iid,
+             {pin_sql("g0 / n")} END AS var_iid,
            CASE WHEN ok THEN
-             floor(lrv / n * 1e6 + 0.5) / 1e6 END AS var_hac,
+             {pin_sql("lrv / n")} END AS var_hac,
            CASE WHEN ok AND g0 > 0 THEN
-             floor(lrv / g0 * 1e6 + 0.5) / 1e6 END AS inflation
+             {pin_sql("lrv / g0")} END AS inflation
     FROM ex
     """
 
@@ -2058,11 +2057,11 @@ def _spec_oracle() -> str:
     ),
     scored AS (
       SELECT g, period, n,
-             floor(((CAST(sc AS DOUBLE) / 1e6)
-                    * (CAST(sc AS DOUBLE) / 1e6)
-                    + (CAST(ss AS DOUBLE) / 1e6)
-                    * (CAST(ss AS DOUBLE) / 1e6))
-                   / CAST(n AS DOUBLE) * 1e6 + 0.5) / 1e6 AS power
+             {pin_sql("((CAST(sc AS DOUBLE) / 1e6)"
+                      " * (CAST(sc AS DOUBLE) / 1e6)"
+                      " + (CAST(ss AS DOUBLE) / 1e6)"
+                      " * (CAST(ss AS DOUBLE) / 1e6))"
+                      " / CAST(n AS DOUBLE)")} AS power
       FROM per
     )
     SELECT g AS user_id, CAST(period AS INT) AS period, n, power,
@@ -2212,10 +2211,9 @@ def cox_stuart(df: DataFrame, group_col: str, order: str,
       CASE WHEN n_above > 0 AND n_below > 0
            AND 2 * a * b * (2 * a * b - a - b)
                / ((a + b) * (a + b) * (a + b - 1)) > 0 THEN
-        floor((runs - (1 + 2 * a * b / (a + b)))
-              / sqrt(2 * a * b * (2 * a * b - a - b)
-                     / ((a + b) * (a + b) * (a + b - 1)))
-              * 1e6 + 0.5) / 1e6
+        {pin_sql("(runs - (1 + 2 * a * b / (a + b)))"
+                 " / sqrt(2 * a * b * (2 * a * b - a - b)"
+                 " / ((a + b) * (a + b) * (a + b - 1)))")}
       END AS z
     FROM ex
     """,
@@ -2252,8 +2250,8 @@ def q307_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT g AS user_id, n, m_pairs, n_pos,
       CASE WHEN m_pairs > 0 THEN
-        floor((CAST(n_pos AS DOUBLE) - CAST(m_pairs AS DOUBLE) / 2)
-              / sqrt(CAST(m_pairs AS DOUBLE) / 4) * 1e6 + 0.5) / 1e6
+        {pin_sql("(CAST(n_pos AS DOUBLE) - CAST(m_pairs AS DOUBLE) / 2)"
+                 " / sqrt(CAST(m_pairs AS DOUBLE) / 4)")}
       END AS z
     FROM per
     """,
@@ -2299,9 +2297,9 @@ def dickey_fuller(df: DataFrame, group_col: str, order: str,
            .agg(F.count(F.lit(1)).cast("long").alias("m"),
                 F.sum(dec(x)).alias("__sx"),
                 F.sum(dec(y)).alias("__sy"),
-                F.sum(dec(x) * dec(x)).alias("__sxx"),
+                F.sum(dec_sq(x)).alias("__sxx"),
                 F.sum(dec(x) * dec(y)).alias("__sxy"),
-                F.sum(dec(y) * dec(y)).alias("__syy")))
+                F.sum(dec_sq(y)).alias("__syy")))
     m = dec(F.col("m"))
     den = m * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     num = m * F.col("__sxy") - F.col("__sx") * F.col("__sy")
@@ -2351,8 +2349,7 @@ _DF_ORACLE = f"""
     ),
     pinned AS (
       SELECT g, m, sx, sy, sxy, syy, den,
-             floor(CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-                   * 1e6 + 0.5) / 1e6 AS beta
+             {pin_sql("CAST(num AS DOUBLE) / CAST(den AS DOUBLE)")} AS beta
       FROM solved
     ),
     resid AS (
@@ -2367,10 +2364,9 @@ _DF_ORACLE = f"""
            CASE WHEN m >= 4 AND CAST(den AS DOUBLE) > 0 AND ssr > 0
              THEN beta END AS beta,
            CASE WHEN m >= 4 AND CAST(den AS DOUBLE) > 0 AND ssr > 0
-             THEN floor(beta / sqrt(ssr / (CAST(m AS DOUBLE) - 2)
-                                    * CAST(m AS DOUBLE)
-                                    / CAST(den AS DOUBLE))
-                        * 1e6 + 0.5) / 1e6 END AS df_t
+             THEN {pin_sql("beta / sqrt(ssr / (CAST(m AS DOUBLE) - 2)"
+                           " * CAST(m AS DOUBLE)"
+                           " / CAST(den AS DOUBLE))")} END AS df_t
     FROM resid
     """
 
@@ -2507,15 +2503,15 @@ def _hurst_oracle(grid: tuple[int, ...] = _HURST_GRID) -> str:
     SELECT g AS user_id, p_points,
            CASE WHEN p_points >= 3
                 AND p_points * sxx - sx * sx > 0 THEN
-             floor((p_points * sxy - sx * sy)
-                   / CAST(p_points * sxx - sx * sx AS DOUBLE)
-                   / 1e6 / 0.6931471805599453 * 1e6 + 0.5) / 1e6
+             {pin_sql("(p_points * sxy - sx * sy)"
+                      " / CAST(p_points * sxx - sx * sx AS DOUBLE)"
+                      " / 1e6 / 0.6931471805599453")}
            END AS slope,
            CASE WHEN p_points >= 3
                 AND p_points * sxx - sx * sx > 0 THEN
-             floor((1.0 + (p_points * sxy - sx * sy)
-                    / CAST(p_points * sxx - sx * sx AS DOUBLE)
-                    / 1e6 / 0.6931471805599453 / 2) * 1e6 + 0.5) / 1e6
+             {pin_sql("(1.0 + (p_points * sxy - sx * sy)"
+                      " / CAST(p_points * sxx - sx * sx AS DOUBLE)"
+                      " / 1e6 / 0.6931471805599453 / 2)")}
            END AS hurst
     FROM reg
     """
@@ -2628,13 +2624,13 @@ def _ccf_oracle(max_lag: int = _CCF_L) -> str:
         for lag in range(1, max_lag + 1))
     unions = "\n      UNION ALL ".join(
         f"SELECT g, CAST({lag} AS BIGINT) AS lag, n{lag} AS n_pairs,"
-        f" CASE WHEN ok THEN floor(CAST(c{lag} AS DOUBLE) / den"
-        f" * 1e6 + 0.5) / 1e6 END AS ccf FROM per"
+        f" CASE WHEN ok THEN {pin_sql(f'CAST(c{lag} AS DOUBLE) / den')}"
+        " END AS ccf FROM per"
         for lag in range(0, max_lag + 1))
     return f"""
     WITH src AS (
       SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS x,
+             {cents_sql("value")} AS x,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS y
       FROM events
       WHERE value IS NOT NULL
@@ -2685,7 +2681,7 @@ def q315_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.get_json_object("props", "$.k").isNotNull())
     return ccf_lags(
         ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
+        cents("value"),
         F.get_json_object("props", "$.k").cast("long"),
         tie_break="event_id")
 
@@ -2718,7 +2714,7 @@ def seasonal_mann_kendall(df: DataFrame, group_col: str,
     var18_total <= 0 (every season constant or single-row) reports z
     NULL-by-contract (one row per series either way)."""
     if value is None:
-        value = F.floor(F.col("value") * 100 + F.lit(0.5))
+        value = cents("value")
     if season is None:
         season = F.month(ts_col)
     s = df.select(
@@ -2766,11 +2762,11 @@ def seasonal_mann_kendall(df: DataFrame, group_col: str,
         F.when(F.col("var18_total") > 0, pin(z)).alias("z"))
 
 
-_SMK_ORACLE = """
+_SMK_ORACLE = f"""
     WITH s AS (
       SELECT user_id AS g, CAST(month(ts) AS INTEGER) AS season,
              ts, event_id AS id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+             {cents_sql("value")} AS c
       FROM events WHERE value IS NOT NULL
     ),
     sgn AS (
@@ -2809,8 +2805,8 @@ _SMK_ORACLE = """
     )
     SELECT g AS user_id, n, n_seasons, s_total, var18_total,
            CASE WHEN var18_total > 0 THEN
-             floor((s_total - sign(s_total))
-                   / sqrt(var18_total / 18.0) * 1e6 + 0.5) / 1e6
+             {pin_sql("(s_total - sign(s_total))"
+                      " / sqrt(var18_total / 18.0)")}
            END AS z
     FROM tot
     """
@@ -2927,7 +2923,7 @@ def _ph_oracle(delta: float = 0.05, lam: float = 10.0) -> str:
       FROM ph
     )
     SELECT g AS user_id, CAST(count(*) AS BIGINT) AS n,
-           floor(max(gap) / {_PH_Q!r} / 100.0 * 1e6 + 0.5) / 1e6
+           {pin_sql(f"max(gap) / {_PH_Q!r} / 100.0")}
              AS ph_stat,
            CAST(sum(CASE WHEN gap > {lam_q} THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_alarms,
@@ -3013,8 +3009,8 @@ def _lb_oracle(max_lag: int = _LB_L) -> str:
         f"(v - m) * (v{l} - m) * 1e6) AS BIGINT) END) AS c{l}"
         for l in range(1, max_lag + 1))
     terms = " + ".join(
-        f"(floor(CAST(c{l} AS DOUBLE) / c0 * 1e6 + 0.5) / 1e6)"
-        f" * (floor(CAST(c{l} AS DOUBLE) / c0 * 1e6 + 0.5) / 1e6)"
+        f"({pin_sql(f'CAST(c{l} AS DOUBLE) / c0')})"
+        f" * ({pin_sql(f'CAST(c{l} AS DOUBLE) / c0')})"
         f" / (CAST(n AS DOUBLE) - {l})" for l in range(1, max_lag + 1))
     return f"""
     WITH {EVENT_CENTS_SRC_SQL},
@@ -3038,8 +3034,7 @@ def _lb_oracle(max_lag: int = _LB_L) -> str:
     )
     SELECT g AS user_id, n,
            CASE WHEN n > {max_lag + 1} AND c0 > 0 THEN
-             floor(CAST(n AS DOUBLE) * (n + 2) * ({terms})
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql(f"CAST(n AS DOUBLE) * (n + 2) * ({terms})")}
            END AS q_stat
     FROM per
     """
@@ -3155,9 +3150,8 @@ def _kpss_oracle(max_lag: int = _HAC_L) -> str:
     )
     SELECT g AS user_id, n,
            CASE WHEN n > {max_lag + 1} AND ({lrv}) > 0 THEN
-             floor(CAST(ss2 AS DOUBLE) / 1e2
-                   / (CAST(n AS DOUBLE) * n) / ({lrv})
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql(f"CAST(ss2 AS DOUBLE) / 1e2"
+                      f" / (CAST(n AS DOUBLE) * n) / ({lrv})")}
            END AS eta
     FROM per
     """
@@ -3262,10 +3256,10 @@ def granger_lag1(df: DataFrame, group_col: str, order: str,
         F.when(ok, pin(f_stat)).alias("f_stat"))
 
 
-_GRANGER_ORACLE = """
+_GRANGER_ORACLE = f"""
     WITH src AS (
       SELECT user_id AS g, ts, event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
+             {cents_sql("value")} AS y,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS x
       FROM events
       WHERE value IS NOT NULL
@@ -3308,16 +3302,13 @@ _GRANGER_ORACLE = """
       SELECT g, m, saa, say, sby, syy,
              saa * sbb - sab * sab AS det,
              CASE WHEN CAST(saa * sbb - sab * sab AS DOUBLE) > 0 THEN
-               floor((sbb * say - sab * sby)
-                     / CAST(saa * sbb - sab * sab AS DOUBLE)
-                     * 1e6 + 0.5) / 1e6 END AS b1,
+               {pin_sql("(sbb * say - sab * sby)"
+                        " / CAST(saa * sbb - sab * sab AS DOUBLE)")} END AS b1,
              CASE WHEN CAST(saa * sbb - sab * sab AS DOUBLE) > 0 THEN
-               floor((saa * sby - sab * say)
-                     / CAST(saa * sbb - sab * sab AS DOUBLE)
-                     * 1e6 + 0.5) / 1e6 END AS bx,
+               {pin_sql("(saa * sby - sab * say)"
+                        " / CAST(saa * sbb - sab * sab AS DOUBLE)")} END AS bx,
              CASE WHEN CAST(saa AS DOUBLE) > 0 THEN
-               floor(CAST(say AS DOUBLE) / CAST(saa AS DOUBLE)
-                     * 1e6 + 0.5) / 1e6 END AS br
+               {pin_sql("CAST(say AS DOUBLE) / CAST(saa AS DOUBLE)")} END AS br
       FROM per
     ),
     ssr AS (
@@ -3333,8 +3324,8 @@ _GRANGER_ORACLE = """
              THEN bx END AS bx,
            CASE WHEN m >= 5 AND CAST(det AS DOUBLE) > 0
                 AND CAST(saa AS DOUBLE) > 0 AND ssr_u > 0 THEN
-             floor((ssr_r - ssr_u) / (ssr_u / (CAST(m AS DOUBLE) - 3))
-                   * 1e6 + 0.5) / 1e6 END AS f_stat
+             {pin_sql("(ssr_r - ssr_u) / (ssr_u / (CAST(m AS DOUBLE) - 3))")}
+           END AS f_stat
     FROM ssr
     """
 
@@ -3350,7 +3341,7 @@ def q324_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.get_json_object("props", "$.k").isNotNull())
     return granger_lag1(
         ev, "user_id", "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
+        cents("value"),
         F.get_json_object("props", "$.k").cast("long"),
         tie_break="event_id")
 
@@ -3461,7 +3452,7 @@ def hbos_scores(df: DataFrame, id_col: str,
 _HBOS_ORACLE = f"""
     WITH src AS (
       SELECT event_id,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS fv,
+             {cents_sql("value")} AS fv,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS fk
       FROM events
       WHERE value IS NOT NULL
@@ -3487,8 +3478,8 @@ _HBOS_ORACLE = f"""
     mv AS (SELECT max(cv) AS mvv FROM hv),
     mk AS (SELECT max(ck) AS mkk FROM hk)
     SELECT b.event_id, b.bin_chan, b.bin_cents,
-           floor((ln(CAST(mkk AS DOUBLE) / ck)
-                  + ln(CAST(mvv AS DOUBLE) / cv)) * 1e6 + 0.5) / 1e6
+           {pin_sql("(ln(CAST(mkk AS DOUBLE) / ck)"
+                    " + ln(CAST(mvv AS DOUBLE) / cv))")}
              AS hbos
     FROM binned b
     JOIN hv USING (bin_cents) JOIN hk USING (bin_chan), mv, mk
@@ -3507,7 +3498,7 @@ def q338_hbos_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.get_json_object("props", "$.k").isNotNull())
     return hbos_scores(
         ev, "event_id",
-        {"cents": F.floor(F.col("value") * 100 + F.lit(0.5)),
+        {"cents": cents("value"),
          "chan": F.get_json_object("props", "$.k").cast("long")})
 
 
@@ -3611,12 +3602,11 @@ _STL_ORACLE = f"""
       FROM phm GROUP BY g
     )
     SELECT b.g AS user_id, b.i, b.cents,
-           floor(CAST(b.t2 AS DOUBLE) / 16.0 * 1e6 + 0.5) / 1e6
+           {pin_sql("CAST(b.t2 AS DOUBLE) / 16.0")}
              AS trend,
            (p.pm - k.c) / 1e6 AS seasonal,
-           floor((b.cents
-                  - floor(CAST(b.t2 AS DOUBLE) / 16.0 * 1e6 + 0.5) / 1e6
-                  - (p.pm - k.c) / 1e6) * 1e6 + 0.5) / 1e6
+           {pin_sql(f"b.cents - {pin_sql('CAST(b.t2 AS DOUBLE) / 16.0')}"
+                    " - (p.pm - k.c) / 1e6")}
              AS remainder
     FROM base b JOIN phm p ON b.g = p.g AND b.ph = p.ph
                 JOIN ctr k ON b.g = k.g
@@ -4009,5 +3999,5 @@ def q346_fleet_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = keep(ev, source=ev)
     return fleet_triage(
         ev, "user_id", "ts", "event_id", "value",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
+        cents("value"),
         tie_break="event_id")

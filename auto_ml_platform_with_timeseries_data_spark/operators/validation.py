@@ -1,14 +1,32 @@
-"""Data-quality constraint auditing — the expectations stage (Great-
-Expectations / Deequ shape) a production pipeline runs before data is
-allowed downstream: range, not-null, uniqueness, and referential-
-integrity checks, each reduced to ONE exact violation count so the
-whole audit is a handful of map-side-combined aggregates.
+"""Data validation and the hypothesis-test family.
 
-Scale: every check is a single scan (or one broadcast/shuffle join for
-referential checks) producing one row — the audit over a 100 TB table
-costs the scans, holds no per-row state, and the constraint results
-table is |constraints| rows. Checks compose by unionByName, so a suite
-runs as independent jobs that Spark schedules concurrently.
+Two kinds of query live here:
+
+- Constraint auditing, the expectations stage (Great-Expectations /
+  Deequ shape) a production pipeline runs before data is allowed
+  downstream: range, not-null, uniqueness and referential checks, each
+  reduced to ONE exact violation count; the GDPR erasure cascade; the
+  order-independent table digest; the Benford audit.
+- Hypothesis tests and effect sizes (q262 and q274-q331): proportion,
+  location, rank, variance, paired, stratified, trend and
+  structural-break tests plus bootstrap and relabeling intervals.
+
+Every test statistic is computed the same way in the kernel and in its
+DuckDB oracle, from one vocabulary kept beside ``pin`` in
+``operators.timeseries``:
+
+- ``cents`` / ``cents_sql``: a money column as integer cents;
+- ``group_values``: the (group, BIGINT value) rows with NULLs dropped;
+- ``exact_moments`` / ``moments_sql``: per-group n, Σv and Σv² as exact
+  decimal(38,0) / HUGEINT sums, optionally weighted by a cell count;
+- ``pin`` / ``pin_sql`` / ``pin_float``: the 1e-6 readout of each
+  double that leaves the query.
+
+Oracles recompute from the tables in SQL and call no Spark kernel.
+
+Scale: every check and statistic is a handful of map-side-combined
+aggregates; per-group frames are |groups| rows, and a suite of checks
+composes by unionByName into independent jobs.
 
 Reference analogue: the reference validates uploads only by pandas
 read success (`auto_machine_learning.py` upload path); this is the
@@ -21,7 +39,18 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import dec, pin
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
+    cents,
+    cents_sql,
+    dec,
+    dec_sq,
+    exact_moments,
+    group_values,
+    moments_sql,
+    pin,
+    pin_float,
+    pin_sql,
+)
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
@@ -71,9 +100,22 @@ def referential_check(child: DataFrame, name: str, col: str,
             name, "referential", F.col("__n"), F.col("__bad")))
 
 
-@query(
-    "q209_constraint_audit",
-    oracle="""
+def _audit_oracle() -> str:
+    def check(name: str, kind: str, table: str, bad: str) -> str:
+        """One constraint row: checked rows, violations (rows where
+        `bad` is 1) and the pass flag."""
+        return (f"SELECT '{name}', '{kind}', CAST(count(*) AS BIGINT),"
+                f" CAST(sum({bad}) AS BIGINT),\n"
+                f"           CAST(CASE WHEN sum({bad}) = 0 THEN 1 ELSE 0"
+                f" END AS INT)\n    FROM {table}")
+
+    def in_range(name: str, table: str, col: str, lo: str, hi: str) -> str:
+        return check(name, "range", table,
+                     f"CASE WHEN {col} BETWEEN {lo} AND {hi}"
+                     f" THEN 0 ELSE 1 END")
+
+    return "\n    UNION ALL\n    ".join([
+        """
     SELECT 'orders_custkey_fk' AS constraint_id,
            'referential' AS kind,
            (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_checked,
@@ -82,56 +124,27 @@ def referential_check(child: DataFrame, name: str, col: str,
              AS n_violations,
            CAST(CASE WHEN (SELECT count(*) FROM orders o
              WHERE o.o_custkey NOT IN (SELECT c_custkey FROM customer))
-             = 0 THEN 1 ELSE 0 END AS INT) AS passed
-    UNION ALL
-    SELECT 'lineitem_quantity_range', 'range',
-           CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN l_quantity BETWEEN 1 AND 50
-                    THEN 0 ELSE 1 END) AS BIGINT),
-           CAST(CASE WHEN sum(CASE WHEN l_quantity BETWEEN 1 AND 50
-                    THEN 0 ELSE 1 END) = 0 THEN 1 ELSE 0 END AS INT)
-    FROM lineitem
-    UNION ALL
-    SELECT 'lineitem_discount_range', 'range',
-           CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1
-                    THEN 0 ELSE 1 END) AS BIGINT),
-           CAST(CASE WHEN sum(CASE WHEN l_discount BETWEEN 0.0 AND 0.1
-                    THEN 0 ELSE 1 END) = 0 THEN 1 ELSE 0 END AS INT)
-    FROM lineitem
-    UNION ALL
-    SELECT 'customer_key_unique', 'unique',
+             = 0 THEN 1 ELSE 0 END AS INT) AS passed""",
+        in_range("lineitem_quantity_range", "lineitem", "l_quantity",
+                 "1", "50"),
+        in_range("lineitem_discount_range", "lineitem", "l_discount",
+                 "0.0", "0.1"),
+        """SELECT 'customer_key_unique', 'unique',
            CAST(count(*) AS BIGINT),
            CAST(count(*) - count(DISTINCT c_custkey) AS BIGINT),
            CAST(CASE WHEN count(*) = count(DISTINCT c_custkey)
                 THEN 1 ELSE 0 END AS INT)
-    FROM customer
-    UNION ALL
-    SELECT 'events_value_not_null', 'not_null',
-           CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-           CAST(CASE WHEN sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
-                = 0 THEN 1 ELSE 0 END AS INT)
-    FROM events
-    UNION ALL
-    SELECT 'orders_totalprice_positive', 'range',
-           CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN o_totalprice BETWEEN 0.01 AND 1e12
-                    THEN 0 ELSE 1 END) AS BIGINT),
-           CAST(CASE WHEN sum(CASE WHEN o_totalprice
-                    BETWEEN 0.01 AND 1e12 THEN 0 ELSE 1 END) = 0
-                THEN 1 ELSE 0 END AS INT)
-    FROM orders
-    UNION ALL
-    SELECT 'events_value_tight_range', 'range',
-           CAST(count(*) AS BIGINT),
-           CAST(sum(CASE WHEN value BETWEEN 0.0 AND 5.0
-                    THEN 0 ELSE 1 END) AS BIGINT),
-           CAST(CASE WHEN sum(CASE WHEN value BETWEEN 0.0 AND 5.0
-                    THEN 0 ELSE 1 END) = 0 THEN 1 ELSE 0 END AS INT)
-    FROM events
-    """,
-)
+    FROM customer""",
+        check("events_value_not_null", "not_null", "events",
+              "CASE WHEN value IS NULL THEN 1 ELSE 0 END"),
+        in_range("orders_totalprice_positive", "orders", "o_totalprice",
+                 "0.01", "1e12"),
+        in_range("events_value_tight_range", "events", "value",
+                 "0.0", "5.0"),
+    ])
+
+
+@query("q209_constraint_audit", oracle=_audit_oracle())
 def q209_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the seven-constraint expectation suite over the star schema
     — referential, range, uniqueness, and null contracts (plus one
@@ -242,38 +255,28 @@ def gdpr_erase(customer: DataFrame, orders: DataFrame,
             .unionByName(row("lineitem", lineitem, live_li, resid_li)))
 
 
-@query(
-    "q212_gdpr_erasure",
-    oracle="""
+def _gdpr_oracle() -> str:
+    def row(table: str, col: str, ks: str) -> str:
+        n = f"SELECT CAST(count(*) AS BIGINT) FROM {table}"
+        return (f"SELECT '{table}' AS table_name, ({n}) AS rows_before,\n"
+                f"           ({n} WHERE {col} IN ({ks})) AS rows_deleted,\n"
+                f"           ({n} WHERE {col} NOT IN ({ks})) AS rows_after,\n"
+                f"           CAST(0 AS BIGINT) AS residual_refs")
+
+    rows = "\n    UNION ALL\n    ".join([
+        row("customer", "c_custkey", "SELECT k FROM ek"),
+        row("orders", "o_custkey", "SELECT k FROM ek"),
+        row("lineitem", "l_orderkey", "SELECT o_orderkey FROM dead_o")])
+    return f"""
     WITH ek AS (SELECT c_custkey AS k FROM customer
                 WHERE c_custkey % 97 = 0),
     dead_o AS (SELECT o_orderkey FROM orders
                WHERE o_custkey IN (SELECT k FROM ek))
-    SELECT 'customer' AS table_name,
-           (SELECT CAST(count(*) AS BIGINT) FROM customer) AS rows_before,
-           (SELECT CAST(count(*) AS BIGINT) FROM customer
-             WHERE c_custkey IN (SELECT k FROM ek)) AS rows_deleted,
-           (SELECT CAST(count(*) AS BIGINT) FROM customer
-             WHERE c_custkey NOT IN (SELECT k FROM ek)) AS rows_after,
-           CAST(0 AS BIGINT) AS residual_refs
-    UNION ALL
-    SELECT 'orders',
-           (SELECT CAST(count(*) AS BIGINT) FROM orders),
-           (SELECT CAST(count(*) AS BIGINT) FROM orders
-             WHERE o_custkey IN (SELECT k FROM ek)),
-           (SELECT CAST(count(*) AS BIGINT) FROM orders
-             WHERE o_custkey NOT IN (SELECT k FROM ek)),
-           CAST(0 AS BIGINT)
-    UNION ALL
-    SELECT 'lineitem',
-           (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-           (SELECT CAST(count(*) AS BIGINT) FROM lineitem
-             WHERE l_orderkey IN (SELECT o_orderkey FROM dead_o)),
-           (SELECT CAST(count(*) AS BIGINT) FROM lineitem
-             WHERE l_orderkey NOT IN (SELECT o_orderkey FROM dead_o)),
-           CAST(0 AS BIGINT)
-    """,
-)
+    {rows}
+    """
+
+
+@query("q212_gdpr_erasure", oracle=_gdpr_oracle())
 def q212_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Erase every %97 customer and cascade through orders and
     lineitem: per-table before/deleted/after counts plus the zero-
@@ -335,13 +338,13 @@ def _digest_oracle() -> str:
              " CAST(o_custkey AS VARCHAR), o_orderstatus,"
              " CAST({cents} AS VARCHAR),"
              " strftime(o_orderdate, '%Y-%m-%d'))")
-    cents = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
-    rcents = (f"CASE WHEN o_orderkey % 20000 = 7 THEN {cents} + 1"
-              f" ELSE {cents} END")
+    exact = cents_sql("o_totalprice")
+    rcents = (f"CASE WHEN o_orderkey % 20000 = 7 THEN {exact} + 1"
+              f" ELSE {exact} END")
     return f"""
     WITH c AS (
       SELECT o_orderstatus AS part,
-             {canon.format(cents=cents)} AS cs,
+             {canon.format(cents=exact)} AS cs,
              {canon.format(cents=rcents)} AS cr
       FROM orders
     ),
@@ -381,9 +384,9 @@ def q223_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     — statuses containing a corrupted row must flag false, the rest
     true, every digest value-hash-checked."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    rcents = F.when(F.col("o_orderkey") % 20000 == 7, cents + 1) \
-        .otherwise(cents)
+    exact = cents("o_totalprice").cast("long")
+    rcents = F.when(F.col("o_orderkey") % 20000 == 7, exact + 1) \
+        .otherwise(exact)
 
     def canon(c: Column) -> Column:
         return F.concat_ws(
@@ -392,7 +395,7 @@ def q223_table_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.cast("string"),
             F.date_format("o_orderdate", "yyyy-MM-dd"))
 
-    src = table_digest(o, "o_orderstatus", canon(cents)) \
+    src = table_digest(o, "o_orderstatus", canon(exact)) \
         .withColumnRenamed("xor_digest", "xor_src") \
         .withColumnRenamed("sum_digest", "sum_src")
     rep = table_digest(o, "o_orderstatus", canon(rcents)) \
@@ -431,8 +434,8 @@ def benford_audit(df: DataFrame, col: str) -> DataFrame:
     every monetary column of a 100 TB table for the cost of the
     scans."""
     spark = df.sparkSession
-    cents = F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
-    first = F.substring(F.abs(cents).cast("string"), 1, 1).cast("int")
+    first = F.substring(F.abs(cents(col).cast("long")).cast("string"),
+                        1, 1).cast("int")
     counts = (df.filter(F.col(col).isNotNull())
               .select(first.alias("digit"))
               .filter(F.col("digit") > 0)      # cents == 0 has no digit
@@ -458,8 +461,7 @@ def _benford_oracle() -> str:
     dig = ", ".join(f"({d}, {e})" for d, e in _BENFORD_PPM.items())
     return f"""
     WITH counts AS (
-      SELECT CAST(substr(CAST(abs(CAST(floor(l_extendedprice * 100
-                                             + 0.5) AS BIGINT))
+      SELECT CAST(substr(CAST(abs({cents_sql("l_extendedprice")})
                               AS VARCHAR), 1, 1) AS INT) AS digit,
              CAST(count(*) AS BIGINT) AS n
       FROM lineitem
@@ -502,15 +504,12 @@ def two_proportion_z(df: DataFrame, group_col: str, a: str, b: str,
     src = df.filter(F.col(group_col).isin(a, b)).select(
         (F.col(group_col) == a).alias("__a"),
         success.cast("long").alias("__y"))
+    isa, y = F.col("__a"), F.col("__y")
     agg = src.agg(
-        F.sum(F.when(F.col("__a"), 1).otherwise(0)).cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("__a"), F.col("__y")).otherwise(0))
-        .cast("long").alias("x_a"),
-        F.sum(F.when(F.col("__a"), 0).otherwise(1)).cast("long")
-        .alias("n_b"),
-        F.sum(F.when(F.col("__a"), 0).otherwise(F.col("__y")))
-        .cast("long").alias("x_b"))
+        _masked_sum(isa, F.lit(1)).cast("long").alias("n_a"),
+        _masked_sum(isa, y).cast("long").alias("x_a"),
+        _masked_sum(isa, F.lit(1), other=True).cast("long").alias("n_b"),
+        _masked_sum(isa, y, other=True).cast("long").alias("x_b"))
     pa = F.col("x_a").cast("double") / F.col("n_a")
     pb = F.col("x_b").cast("double") / F.col("n_b")
     pp = (F.col("x_a") + F.col("x_b")).cast("double") \
@@ -529,7 +528,7 @@ def two_proportion_z(df: DataFrame, group_col: str, a: str, b: str,
 
 @query(
     "q262_two_proportion_z",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT l_linestatus = 'O' AS a,
              CAST(l_returnflag = 'R' AS BIGINT) AS y
@@ -541,23 +540,22 @@ def two_proportion_z(df: DataFrame, group_col: str, a: str, b: str,
              CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
              CAST(sum(CASE WHEN a THEN 0 ELSE y END) AS BIGINT) AS x_b
       FROM s
+    ),
+    ex AS (
+      SELECT *, CAST(x_a AS DOUBLE) / n_a AS pa,
+             CAST(x_b AS DOUBLE) / n_b AS pb,
+             CAST(x_a + x_b AS DOUBLE) / (n_a + n_b) AS pp
+      FROM agg
     )
     SELECT n_a, x_a, n_b, x_b,
-           CASE WHEN n_a > 0 THEN
-             floor(CAST(x_a AS DOUBLE) / n_a * 1e6 + 0.5) / 1e6
-           END AS p_a,
-           CASE WHEN n_b > 0 THEN
-             floor(CAST(x_b AS DOUBLE) / n_b * 1e6 + 0.5) / 1e6
-           END AS p_b,
+           CASE WHEN n_a > 0 THEN {pin_sql("pa")} END AS p_a,
+           CASE WHEN n_b > 0 THEN {pin_sql("pb")} END AS p_b,
            CASE WHEN n_a > 0 AND n_b > 0 AND x_a + x_b > 0
                 AND x_a + x_b < n_a + n_b THEN
-             floor((CAST(x_a AS DOUBLE) / n_a - CAST(x_b AS DOUBLE) / n_b)
-                   / sqrt((CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                          * (1 - CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                          * (1.0 / n_a + 1.0 / n_b))
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(pa - pb)"
+                      " / sqrt(pp * (1 - pp) * (1.0 / n_a + 1.0 / n_b))")}
            END AS z
-    FROM agg
+    FROM ex
     """,
 )
 def q262_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,15 +595,29 @@ _BOOT_PREMOD = 1000003
 _BOOT_M32 = 4294967296
 
 
-def _boot_u32(id_col: Column, b) -> Column:
+# Relabeling (q280) uses its OWN multiplier (xxHash32's PRIME32_2 —
+# public constant), not _BOOT_KNUTH: any affine salt shift inside the
+# same multiplier collapses after the % PREMOD step to a neighboring
+# id-residue's bootstrap draw (salt b+64 for id i IS salt b for
+# residue (i%P)+1), so true cross-query independence needs a second
+# multiplier, not a second offset.
+_RELABEL_KNUTH = 2246822519
+
+
+def _boot_u32(id_col: Column, b, knuth: int = _BOOT_KNUTH) -> Column:
     """hash_u32 of the (id, replicate) pair via the q249 affine-salt
     step: x = (id mod P)·64 + b stays far inside BIGINT before the
     Knuth multiply (both engines raise/wrap on overflow otherwise).
     `b` may be an int literal or a Column (the exploded replicate
-    index)."""
+    index); q280 passes knuth=_RELABEL_KNUTH."""
     bb = F.lit(b) if isinstance(b, int) else b
     x = (id_col % _BOOT_PREMOD) * 64 + bb
-    return (x % _BOOT_PREMOD) * _BOOT_KNUTH % _BOOT_M32
+    return (x % _BOOT_PREMOD) * knuth % _BOOT_M32
+
+
+def _boot_u32_sql(id_sql: str, b: int, knuth: int = _BOOT_KNUTH) -> str:
+    return (f"((({id_sql} % {_BOOT_PREMOD}) * 64 + {b}) "
+            f"% {_BOOT_PREMOD}) * {knuth} % {_BOOT_M32}")
 
 
 def _boot_mult(u: Column) -> Column:
@@ -623,40 +635,34 @@ def _boot_mult(u: Column) -> Column:
     return m
 
 
-def _boot_u32_sql(id_sql: str, b: int) -> str:
-    return (f"((({id_sql} % {_BOOT_PREMOD}) * 64 + {b}) "
-            f"% {_BOOT_PREMOD}) * {_BOOT_KNUTH} % {_BOOT_M32}")
-
-
-# Relabeling (q280) uses its OWN multiplier (xxHash32's PRIME32_2 —
-# public constant), not _BOOT_KNUTH: any affine salt shift inside the
-# same multiplier collapses after the % PREMOD step to a neighboring
-# id-residue's bootstrap draw (salt b+64 for id i IS salt b for
-# residue (i%P)+1), so true cross-query independence needs a second
-# multiplier, not a second offset.
-_RELABEL_KNUTH = 2246822519
-
-
-def _relabel_u32(id_col: Column, b) -> Column:
-    """q280's permutation hash: the _boot_u32 affine walk under the
-    distinct _RELABEL_KNUTH multiplier, so relabeling draws share no
-    structure with the bootstrap's for ANY (id, salt) pair."""
-    bb = F.lit(b) if isinstance(b, int) else b
-    x = (id_col % _BOOT_PREMOD) * 64 + bb
-    return (x % _BOOT_PREMOD) * _RELABEL_KNUTH % _BOOT_M32
-
-
-def _relabel_u32_sql(id_sql: str, b: int) -> str:
-    return (f"((({id_sql} % {_BOOT_PREMOD}) * 64 + {b}) "
-            f"% {_BOOT_PREMOD}) * {_RELABEL_KNUTH} % {_BOOT_M32}")
-
-
 def _boot_mult_sql(id_sql: str, b: int) -> str:
     u = _boot_u32_sql(id_sql, b)
     terms = " + ".join(
         f"CASE WHEN ({u}) >= {t} THEN 1 ELSE 0 END"
         for t in _POIS_THRESH)
     return f"({terms})"
+
+
+def _replicate_rows(src: DataFrame, nrep: int, draw: Column,
+                    *aggs: Column) -> dict:
+    """Each replicate's `aggs` row, keyed by replicate index: every
+    (__i, ...) row of `src` is exploded over __b = 0..nrep-1 and gets
+    the replicate's deterministic `draw` (a hash of __i and __b).
+
+    PLAN SHAPE (measured, round 10): anything that inlines nrep copies
+    of the hash chain — 2·nrep aggregate sums, or a posexplode over an
+    nrep-element array of draw expressions — blows Janino's method
+    limits ("Failed to compile" → whole stages fall back to
+    interpreted expression walking: 8-9 s for a 150k-row scan).
+    Exploding the REPLICATE INDEX first leaves ONE hash expression
+    with b as a column: the per-row code is ~20 ops, codegen compiles,
+    and the groupBy map-side-combines into nrep groups."""
+    cols = [c for c in src.columns if c != "__i"]
+    pairs = src.select(
+        "__i", *cols,
+        F.explode(F.sequence(F.lit(0), F.lit(nrep - 1))).alias("__b"))
+    agg = pairs.select(*cols, "__b", draw).groupBy("__b").agg(*aggs)
+    return {int(r["__b"]): r for r in agg.collect()}
 
 
 def poisson_bootstrap_mean(df: DataFrame, id_col: str, value: Column,
@@ -681,25 +687,11 @@ def poisson_bootstrap_mean(df: DataFrame, id_col: str, value: Column,
     src = df.select(F.col(id_col).cast("long").alias("__i"),
                     value.cast("long").alias("__v")).filter(
         F.col("__i").isNotNull() & F.col("__v").isNotNull())
-    # PLAN SHAPE (measured, round 10): anything that inlines nboot
-    # copies of the hash chain — 2·nboot aggregate sums, or a
-    # posexplode over an nboot-element array of multiplicity
-    # expressions — blows Janino's method limits ("Failed to compile"
-    # → whole stages fall back to interpreted expression walking:
-    # 8-9 s for a 150k-row scan). Explode the REPLICATE INDEX first
-    # and compute ONE hash expression with b as a column instead:
-    # the per-row code is ~20 ops, codegen compiles, and the groupBy
-    # map-side-combines into nboot groups (per-group count/sum(v)
-    # reproduce n and Σv, so one pass still yields everything).
-    pairs = src.select(
-        "__i", "__v",
-        F.explode(F.sequence(F.lit(0), F.lit(nboot - 1)))
-        .alias("__b"))
-    pairs = pairs.select(
-        "__v", "__b",
-        _boot_mult(_boot_u32(F.col("__i"), F.col("__b")))
-        .alias("__m"))
-    agg = pairs.groupBy("__b").agg(
+    # per-replicate count/sum(v) reproduce n and Σv, so one pass
+    # still yields everything
+    rows = _replicate_rows(
+        src, nboot,
+        _boot_mult(_boot_u32(F.col("__i"), F.col("__b"))).alias("__m"),
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("__v").cast("long").alias("sv"),
         F.sum(F.col("__m") * F.col("__v")).cast("long").alias("mv"),
@@ -717,7 +709,6 @@ def poisson_bootstrap_mean(df: DataFrame, id_col: str, value: Column,
     # the end.
     import math
 
-    rows = {int(r["__b"]): r for r in agg.collect()}
     spark = df.sparkSession
     schema = ("n long, point_mean double, boot_se double, "
               "ci_lo double, ci_hi double")
@@ -726,17 +717,16 @@ def poisson_bootstrap_mean(df: DataFrame, id_col: str, value: Column,
             [(0, None, None, None, None)], schema)
     n = int(next(iter(rows.values()))["n"])
     sv = int(next(iter(rows.values()))["sv"])
-    pin = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-    point = pin(float(sv) / n)
+    point = pin_float(float(sv) / n)
     bms = []
     for b in range(nboot):
         m = int(rows[b]["m"])
-        bms.append(pin(float(int(rows[b]["mv"])) / m) if m > 0
+        bms.append(pin_float(float(int(rows[b]["mv"])) / m) if m > 0
                    else point)
     qs = [math.floor(bm * 1e6 + 0.5) for bm in bms]
     qsum = sum(qs)
     dev = sum((nboot * q - qsum) ** 2 for q in qs)
-    se = pin(math.sqrt(float(dev) / (nboot - 1)) / (nboot * 1e6))
+    se = pin_float(math.sqrt(float(dev) / (nboot - 1)) / (nboot * 1e6))
     ms = sorted(bms)
     return spark.createDataFrame(
         [(n, point, se, ms[1], ms[nboot - 2])], schema)
@@ -751,7 +741,7 @@ def _bootstrap_oracle() -> str:
         for b in range(nboot))
     bms = ",\n".join(
         f"      CASE WHEN m{b} > 0 THEN"
-        f" floor(CAST(mv{b} AS DOUBLE) / m{b} * 1e6 + 0.5) / 1e6"
+        f" {pin_sql(f'CAST(mv{b} AS DOUBLE) / m{b}')}"
         f" ELSE point_mean END AS bm{b}"
         for b in range(nboot))
     qcols = ",\n".join(
@@ -764,8 +754,7 @@ def _bootstrap_oracle() -> str:
     lst = ", ".join(f"bm{b}" for b in range(nboot))
     return f"""
     WITH s AS (
-      SELECT o_custkey AS i,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+      SELECT o_custkey AS i, {cents_sql("o_totalprice")} AS v
       FROM orders
       WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
     ),
@@ -776,8 +765,7 @@ def _bootstrap_oracle() -> str:
       FROM s
     ),
     pt AS (
-      SELECT *, floor(CAST(sv AS DOUBLE) / n * 1e6 + 0.5) / 1e6
-               AS point_mean
+      SELECT *, {pin_sql("CAST(sv AS DOUBLE) / n")} AS point_mean
       FROM agg
     ),
     bm AS (
@@ -793,9 +781,8 @@ def _bootstrap_oracle() -> str:
     qsum AS (SELECT *, {qs} AS qs FROM qq),
     fin AS (
       SELECT n, point_mean,
-             floor(sqrt(CAST({dev} AS DOUBLE) / {nboot - 1})
-                   / {float(nboot) * 1e6} * 1e6 + 0.5)
-               / 1e6 AS boot_se,
+             {pin_sql(f"sqrt(CAST({dev} AS DOUBLE) / {nboot - 1})"
+                      f" / {float(nboot) * 1e6}")} AS boot_se,
              list_sort(list_value({lst})) AS ms
       FROM qsum
     )
@@ -812,18 +799,39 @@ def q274_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n, point_mean, boot_se, ci_lo, ci_hi) row — every replicate draw
     reproduced by the oracle's identical hash-threshold walk."""
     o = load_table(spark, sf_dir, "orders")
-    return poisson_bootstrap_mean(
-        o, "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)))
+    return poisson_bootstrap_mean(o, "o_custkey", cents("o_totalprice"))
 
 
 # ---------------------------------------------------------------------------
-# Round-11 registration candidates — rank/location tests, implemented
-# and oracle-drafted now (tests/test_round11_candidates.py), kept OUT
-# of the registry because the round-10 head is full and q268-q274
-# already hold the overflow lead. Registering next round is a pure
-# registry edit (the q245/q261 pattern, two rounds running).
+# Rank, location and effect-size tests (q275-q278, q280)
 # ---------------------------------------------------------------------------
+
+
+def _rank_span(t: Column) -> Column:
+    """s: how many rows hold a value below __v, over distinct values
+    __v with t rows each — the rank-span walk (_SPANS_SQL)."""
+    wp = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
+    return F.coalesce(F.sum(t).over(wp), F.lit(0))
+
+
+# ``_rank_span`` in DuckDB SQL over a (v, t) relation.
+_SPANS_SQL = """SELECT *,
+             CAST(coalesce(sum(t) OVER (ORDER BY v
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+               0) AS BIGINT) AS s
+      FROM {}"""
+
+
+def _rank_sum2(c: Column) -> Column:
+    """Twice the rank sum of c rows per value: Σ c·(2s + t + 1), exact
+    at DECIMAL(38,0) (average ranks are half-integers)."""
+    return F.sum(dec(c) * dec(2 * F.col("__s") + F.col("__t") + 1))
+
+
+def _tie_sum() -> Column:
+    """The tie correction Σ(t³ − t) over the values' counts __t."""
+    return F.sum(dec_sq(F.col("__t")) * dec(F.col("__t"))
+                 - dec(F.col("__t")))
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
@@ -847,21 +855,13 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
                   .alias("__ca"),
                   F.sum((F.col(group_col) == b).cast("long"))
                   .alias("__cb")))
-    wp = Window.orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, -1)
     t = F.col("__ca") + F.col("__cb")
-    st = F.coalesce(F.sum(F.col("__ca") + F.col("__cb")).over(wp),
-                    F.lit(0))
     agg = (cells.select("__ca", "__cb", t.alias("__t"),
-                        st.alias("__s"))
+                        _rank_span(t).alias("__s"))
            .agg(F.sum("__ca").cast("long").alias("n_a"),
                 F.sum("__cb").cast("long").alias("n_b"),
-                F.sum(dec(F.col("__ca"))
-                      * dec(2 * F.col("__s") + F.col("__t") + 1))
-                .alias("__tra"),
-                F.sum(dec(F.col("__t")) * dec(F.col("__t"))
-                      * dec(F.col("__t")) - dec(F.col("__t")))
-                .alias("__ties")))
+                _rank_sum2(F.col("__ca")).alias("__tra"),
+                _tie_sum().alias("__ties")))
     na, nb = F.col("n_a"), F.col("n_b")
     n = na + nb
     two_u = F.col("__tra").cast("double") - na.cast("double") * (na + 1)
@@ -902,20 +902,12 @@ def kruskal_wallis(df: DataFrame, value_col: str,
              .agg(F.count(F.lit(1)).cast("long").alias("__c")))
     vt = cells.groupBy("__v").agg(F.sum("__c").cast("long")
                                   .alias("__t"))
-    wp = Window.orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, -1)
-    spans = vt.select(
-        "__v", "__t",
-        F.coalesce(F.sum("__t").over(wp), F.lit(0)).alias("__s"))
+    spans = vt.select("__v", "__t", _rank_span(F.col("__t")).alias("__s"))
     per_g = (cells.join(spans, "__v")
              .groupBy("__g")
              .agg(F.sum("__c").cast("long").alias("__ng"),
-                  F.sum(dec(F.col("__c"))
-                        * dec(2 * F.col("__s") + F.col("__t") + 1))
-                  .alias("__tr")))
-    ties = spans.agg(
-        F.sum(dec(F.col("__t")) * dec(F.col("__t")) * dec(F.col("__t"))
-              - dec(F.col("__t"))).alias("__ties"))
+                  _rank_sum2(F.col("__c")).alias("__tr")))
+    ties = spans.agg(_tie_sum().alias("__ties"))
     term = (F.col("__tr").cast("double") * F.col("__tr")
             / (4 * F.col("__ng")))
     agg = (per_g.agg(F.count(F.lit(1)).cast("long").alias("k"),
@@ -933,27 +925,74 @@ def kruskal_wallis(df: DataFrame, value_col: str,
         .alias("h_tie_corrected"))
 
 
-def anova_f(df: DataFrame, value: Column,
-            group_col: str) -> DataFrame:
-    """One-row (k, n, df_between, df_within, f): one-way ANOVA over an
-    INTEGER-valued measure (pass cents/counts — the parametric
-    companion to ``kruskal_wallis``). Per-group S_g = Σv and
-    SS_g = Σv² are exact integers at DECIMAL(38,0)/HUGEINT width;
-    SSB = Σ S_g²/n_g − S²/n and SSW = ΣSS − Σ S_g²/n_g come from k
-    exact-quotient double terms (same accumulation-order margin
-    analysis as kruskal_wallis — drift orders under the pin);
-    F = (SSB/(k−1))/(SSW/(n−k)) pins once. SSW = 0 (all values equal
-    within groups) reports f NULL-by-contract."""
-    src = df.select(F.col(group_col).alias("__g"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    per_g = src.groupBy("__g").agg(
-        F.count(F.lit(1)).cast("long").alias("__ng"),
-        F.sum(dec(F.col("__v"))).alias("__sg"),
-        F.sum(dec(F.col("__v")) * dec(F.col("__v"))).alias("__ssg"))
+def _masked_sum(mask: Column, x: Column, other: bool = False) -> Column:
+    """Σx over the rows where `mask` holds (where it does not, with
+    `other`)."""
+    return F.sum(F.when(mask, F.lit(0)).otherwise(x) if other
+                 else F.when(mask, x).otherwise(F.lit(0)))
+
+
+def _cov(sab: str, sa: str, sb: str, n: Column) -> Column:
+    """Σ(a − ā)(b − b̄) = Σab − Σa·Σb/n as a double over the exact sums
+    in columns sab, sa and sb."""
+    return (F.col(sab).cast("double")
+            - F.col(sa).cast("double") * F.col(sb) / n)
+
+
+def _css(ss: str, s: str, n: str) -> Column:
+    """Σ(v − v̄)² = Σv² − (Σv)²/n over the exact sums in columns ss, s
+    and the count column n."""
+    return _cov(ss, s, s, F.col(n))
+
+
+def _cov_sql(sab: str, sa: str, sb: str, n: str) -> str:
+    """Σ(a − ā)(b − b̄) = Σab − Σa·Σb/n in DuckDB SQL (``_cov``)."""
+    return f"(CAST({sab} AS DOUBLE) - CAST({sa} AS DOUBLE) * {sb} / {n})"
+
+
+def _css_sql(ss: str, s: str, n: str) -> str:
+    """``_css`` in DuckDB SQL."""
+    return _cov_sql(ss, s, s, n)
+
+
+def _masked_sum_sql(mask: str, a: str, b: str | None = None) -> str:
+    """The exact HUGEINT sum of a (or of a·b) over the rows where
+    `mask` holds."""
+    prod = f"CAST({a} AS HUGEINT)" + (f" * {b}" if b else "")
+    return f"sum(CASE WHEN {mask} THEN {prod} ELSE 0 END)"
+
+
+def _count_sql(mask: str) -> str:
+    """The BIGINT count of the rows where `mask` holds."""
+    return f"CAST(sum(CASE WHEN {mask} THEN 1 ELSE 0 END) AS BIGINT)"
+
+
+def _cells_sql(a: str, b: str, name: str) -> str:
+    """The four 2×2 cell counts of two 0/1 columns, as DuckDB aggregate
+    columns named name.format(value of a, value of b)."""
+    return ", ".join(f"{_count_sql(f'{a} = {i} AND {b} = {j}')}"
+                     f" AS {name.format(i, j)}"
+                     for i in (0, 1) for j in (0, 1))
+
+
+def _masked_moments_sql(mask: str, tag: str, v: str = "v") -> str:
+    """n_tag, s_tag and q_tag: the exact count, Σv and Σv² of the rows
+    where `mask` holds, as DuckDB aggregate columns."""
+    return (f"{_count_sql(mask)} AS n_{tag},\n"
+            f"             {_masked_sum_sql(mask, v)} AS s_{tag},\n"
+            f"             {_masked_sum_sql(mask, v, v)} AS q_{tag}")
+
+
+def _one_way_f(per: DataFrame) -> tuple[DataFrame, Column]:
+    """(agg, f) over per-group exact moments (``exact_moments``): agg
+    holds k and n; SSB = Σ S_g²/n_g − S²/n and SSW = ΣSS − Σ S_g²/n_g
+    come from k exact-quotient double terms (same accumulation-order
+    margin analysis as kruskal_wallis — drift orders under the pin),
+    and f = (SSB/(k−1))/(SSW/(n−k)) pins once. k < 2, n ≤ k or SSW = 0
+    (all values equal within groups) report f NULL-by-contract."""
     term = (F.col("__sg").cast("double") * F.col("__sg")
             / F.col("__ng"))
-    agg = per_g.agg(
+    agg = per.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("__ng").cast("long").alias("n"),
         F.sum("__sg").alias("__s"),
@@ -965,11 +1004,44 @@ def anova_f(df: DataFrame, value: Column,
     kk = F.col("k").cast("double")
     f = (ssb / (kk - 1)) / (ssw / (n - kk))
     ok = (F.col("k") > 1) & (F.col("n") > F.col("k")) & (ssw > 0)
+    return agg, F.when(ok, pin(f)).alias("f")
+
+
+def _one_way_f_sql(per: str) -> str:
+    """``_one_way_f`` in DuckDB SQL over a (g, ng, sg, ssg) relation:
+    the CTEs agg, ex and fx, ending in fx(k, n, f)."""
+    f = pin_sql("(ssb / (CAST(k AS DOUBLE) - 1))"
+                " / (ssw / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))")
+    return f"""agg AS (
+      SELECT CAST(count(*) AS BIGINT) AS k,
+             CAST(sum(ng) AS BIGINT) AS n,
+             sum(sg) AS sx, sum(ssg) AS ss,
+             sum(CAST(sg AS DOUBLE) * sg / ng) AS sgn
+      FROM {per}
+    ),
+    ex AS (
+      SELECT k, n,
+             sgn - CAST(sx AS DOUBLE) * sx / CAST(n AS DOUBLE) AS ssb,
+             CAST(ss AS DOUBLE) - sgn AS ssw
+      FROM agg
+    ),
+    fx AS (
+      SELECT k, n, CASE WHEN k > 1 AND n > k AND ssw > 0 THEN {f} END AS f
+      FROM ex
+    )"""
+
+
+def anova_f(df: DataFrame, value: Column,
+            group_col: str) -> DataFrame:
+    """One-row (k, n, df_between, df_within, f): one-way ANOVA over an
+    INTEGER-valued measure (pass cents/counts — the parametric
+    companion to ``kruskal_wallis``): ``_one_way_f`` over the groups'
+    exact moments."""
+    agg, f = _one_way_f(exact_moments(group_values(df, group_col, value)))
     return agg.select(
         "k", "n",
         (F.col("k") - 1).cast("long").alias("df_between"),
-        (F.col("n") - F.col("k")).cast("long").alias("df_within"),
-        F.when(ok, pin(f)).alias("f"))
+        (F.col("n") - F.col("k")).cast("long").alias("df_within"), f)
 
 
 def cohens_d(df: DataFrame, value: Column, group_col: str,
@@ -985,27 +1057,18 @@ def cohens_d(df: DataFrame, value: Column, group_col: str,
         (F.col(group_col) == a).alias("__isa"),
         value.cast("long").alias("__v")).filter(
         F.col("__v").isNotNull())
-    v = F.col("__v")
+    isa, v = F.col("__isa"), F.col("__v")
     agg = src.agg(
-        F.sum(F.when(F.col("__isa"), 1).otherwise(0)).cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("__isa"), 0).otherwise(1)).cast("long")
-        .alias("n_b"),
-        F.sum(F.when(F.col("__isa"), dec(v)).otherwise(F.lit(0)))
-        .alias("__sa"),
-        F.sum(F.when(F.col("__isa"), F.lit(0)).otherwise(dec(v)))
-        .alias("__sb"),
-        F.sum(F.when(F.col("__isa"), dec(v) * dec(v))
-              .otherwise(F.lit(0))).alias("__ssa"),
-        F.sum(F.when(F.col("__isa"), F.lit(0))
-              .otherwise(dec(v) * dec(v))).alias("__ssb"))
+        _masked_sum(isa, F.lit(1)).cast("long").alias("n_a"),
+        _masked_sum(isa, F.lit(1), other=True).cast("long").alias("n_b"),
+        _masked_sum(isa, dec(v)).alias("__sa"),
+        _masked_sum(isa, dec(v), other=True).alias("__sb"),
+        _masked_sum(isa, dec_sq(v)).alias("__ssa"),
+        _masked_sum(isa, dec_sq(v), other=True).alias("__ssb"))
     na, nb = F.col("n_a"), F.col("n_b")
     ma = F.col("__sa").cast("double") / na
     mb = F.col("__sb").cast("double") / nb
-    ssa = F.col("__ssa").cast("double") \
-        - F.col("__sa").cast("double") * F.col("__sa") / na
-    ssb = F.col("__ssb").cast("double") \
-        - F.col("__sb").cast("double") * F.col("__sb") / nb
+    ssa, ssb = _css("__ssa", "__sa", "n_a"), _css("__ssb", "__sb", "n_b")
     sp = F.sqrt((ssa + ssb) / (na + nb - 2).cast("double"))
     ok = (na > 1) & (nb > 1)
     return agg.select(
@@ -1038,7 +1101,7 @@ def relabeling_test_mean(df: DataFrame, id_col: str, value: Column,
     sum/count is an exact integer behind q274's affine salt walk under
     the DISTINCT _RELABEL_KNUTH multiplier (a mere salt offset inside
     the same multiplier collapses to a neighboring id-residue's
-    bootstrap draw — see _relabel_u32);
+    bootstrap draw — see _RELABEL_KNUTH);
     diffs are identical doubles cross-engine, the extreme-count
     compares PINNED magnitudes, and p_value pins once."""
     src = df.select(F.col(id_col).cast("long").alias("__i"),
@@ -1046,21 +1109,9 @@ def relabeling_test_mean(df: DataFrame, id_col: str, value: Column,
                     is_a.cast("int").alias("__a")).filter(
         F.col("__i").isNotNull() & F.col("__v").isNotNull()
         & F.col("__a").isNotNull())
-    half = 2 ** 31
-    # q274's measured plan shape: explode the PERMUTATION INDEX first,
-    # then one hash expression with the index as a column — any form
-    # that inlines nperm hash chains (2·nperm aggregate sums, an
-    # nperm-element array) fails Janino compilation and runs the scan
-    # interpreted (see poisson_bootstrap_mean)
-    pairs = src.select(
-        "__i", "__v", "__a",
-        F.explode(F.sequence(F.lit(0), F.lit(nperm - 1)))
-        .alias("__b"))
-    pairs = pairs.select(
-        "__v", "__a", "__b",
-        (_relabel_u32(F.col("__i"), F.col("__b")) < half)
-        .cast("long").alias("__bit"))
-    agg = pairs.groupBy("__b").agg(
+    bit = _boot_u32(F.col("__i"), F.col("__b"), _RELABEL_KNUTH) < 2 ** 31
+    rows = _replicate_rows(
+        src, nperm, bit.cast("long").alias("__bit"),
         F.sum("__a").cast("long").alias("na"),
         F.sum(1 - F.col("__a")).cast("long").alias("nb"),
         F.sum(F.col("__a") * F.col("__v")).cast("long").alias("sa"),
@@ -1070,9 +1121,6 @@ def relabeling_test_mean(df: DataFrame, id_col: str, value: Column,
         F.sum("__bit").cast("long").alias("pna"))
     # driver-side scalar tail (the q274 pattern): identical IEEE
     # doubles, pinned magnitudes compared on exact equality
-    import math
-
-    rows = {int(r["__b"]): r for r in agg.collect()}
     spark = df.sparkSession
     schema = ("n_a long, n_b long, diff_obs double, n_extreme long, "
               "p_value double")
@@ -1085,24 +1133,23 @@ def relabeling_test_mean(df: DataFrame, id_col: str, value: Column,
     if n_a == 0 or n_b == 0:
         return spark.createDataFrame(
             [(n_a, n_b, None, None, None)], schema)
-    pin = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
     tot_s, tot_n = sa + sb, n_a + n_b
     diff_obs = float(sa) / n_a - float(sb) / n_b
-    obs_mag = pin(abs(diff_obs))
+    obs_mag = pin_float(abs(diff_obs))
     extreme = 0
     for b in range(nperm):
         pna, pva = int(rows[b]["pna"]), int(rows[b]["pva"])
         if 0 < pna < tot_n:
-            pd = pin(abs(float(pva) / pna
-                         - float(tot_s - pva) / (tot_n - pna)))
+            pd = pin_float(abs(float(pva) / pna
+                               - float(tot_s - pva) / (tot_n - pna)))
             if pd >= obs_mag:
                 extreme += 1
     return spark.createDataFrame(
-        [(n_a, n_b, pin(diff_obs), extreme,
-          pin(float(1 + extreme) / (1 + nperm)))], schema)
+        [(n_a, n_b, pin_float(diff_obs), extreme,
+          pin_float(float(1 + extreme) / (1 + nperm)))], schema)
 
 
-# Round-11 candidate #7: multiple-testing control. A platform that
+# Multiple-testing control (q281). A platform that
 # emits one test statistic PER GROUP (q228's per-series Mann-Kendall z,
 # q247's per-group AUC...) needs the step that keeps 1500 simultaneous
 # tests honest — Benjamini-Hochberg FDR. Normal tail probabilities use
@@ -1174,35 +1221,20 @@ def bh_fdr(df: DataFrame, key_col: str, p_col: str,
         (F.col("rk") <= cutoff).cast("int").alias("rejected"))
 
 
-# ---------------------------------------------------------------------------
-# Round-10 second-wave registrations of the tier above (the q259/q260
-# precedent: registered past the saturated head, locally 3-SF-green,
-# leading the round-11 driver budget). Oracles mirror the gate drafts
-# in tests/test_round11_candidates.py, which stay as an independent
-# second witness.
-# ---------------------------------------------------------------------------
-
 
 @query(
     "q275_mann_whitney_u",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_quantity AS DOUBLE) AS v, l_linestatus = 'O' AS ia
       FROM lineitem WHERE l_linestatus IN ('O', 'F')
     ),
     cells AS (
-      SELECT v,
-             CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN ia THEN 0 ELSE 1 END) AS BIGINT) AS cb
+      SELECT v, {_count_sql("ia")} AS ca, {_count_sql("NOT ia")} AS cb,
+             count(*) AS t
       FROM s GROUP BY v
     ),
-    sp AS (
-      SELECT ca, cb, ca + cb AS t,
-             CAST(coalesce(sum(ca + cb) OVER (ORDER BY v
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS BIGINT) AS s
-      FROM cells
-    ),
+    sp AS ({_SPANS_SQL.format("cells")}),
     agg AS (
       SELECT CAST(sum(ca) AS BIGINT) AS n_a,
              CAST(sum(cb) AS BIGINT) AS n_b,
@@ -1225,8 +1257,7 @@ def bh_fdr(df: DataFrame, key_col: str, p_col: str,
            CASE WHEN n_a > 0 AND n_b > 0 THEN two_u / 2 END AS u_a,
            CASE WHEN n_a > 0 AND n_b > 0 AND n_a + n_b > 1
                 AND var > 0 THEN
-             floor((two_u - CAST(n_a AS DOUBLE) * n_b) / 2 / sqrt(var)
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(two_u - CAST(n_a AS DOUBLE) * n_b) / 2 / sqrt(var)")}
            END AS z
     FROM ex
     """,
@@ -1241,20 +1272,14 @@ def q275_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q276_kruskal_wallis",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
       SELECT l_returnflag AS g, CAST(l_quantity AS DOUBLE) AS v,
              CAST(count(*) AS BIGINT) AS c
       FROM lineitem WHERE l_returnflag IS NOT NULL GROUP BY 1, 2
     ),
     vt AS (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM cells GROUP BY v),
-    sp AS (
-      SELECT v, t,
-             CAST(coalesce(sum(t) OVER (ORDER BY v
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS BIGINT) AS s
-      FROM vt
-    ),
+    sp AS ({_SPANS_SQL.format("vt")}),
     perg AS (
       SELECT g, CAST(sum(c) AS BIGINT) AS ng,
              sum(CAST(c AS HUGEINT) * (2 * sp.s + sp.t + 1)) AS tr
@@ -1278,9 +1303,9 @@ def q275_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT k, n,
            CASE WHEN k > 1 AND n > 1 THEN
-             floor(h_raw * 1e6 + 0.5) / 1e6 END AS h,
+             {pin_sql("h_raw")} END AS h,
            CASE WHEN k > 1 AND n > 1 AND corr > 0 THEN
-             floor(h_raw / corr * 1e6 + 0.5) / 1e6
+             {pin_sql("h_raw / corr")}
            END AS h_tie_corrected
     FROM ex
     """,
@@ -1292,91 +1317,60 @@ def q276_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kruskal_wallis(li, "l_quantity", "l_returnflag")
 
 
+# The (g, v) source of the return-flag revenue tests q277, q306, q318
+# and q319: each line item's return flag and price in integer cents.
+_FLAG_CENTS_SQL = f"""SELECT l_returnflag AS g,
+             {cents_sql("l_extendedprice")} AS v
+      FROM lineitem
+      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL"""
+
+
 @query(
     "q277_anova_f",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
-    perg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS ng,
-             sum(CAST(v AS HUGEINT)) AS sg,
-             sum(CAST(v AS HUGEINT) * v) AS ssg
-      FROM s GROUP BY g
-    ),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(ng) AS BIGINT) AS n,
-             sum(sg) AS sx, sum(ssg) AS ss,
-             sum(CAST(sg AS DOUBLE) * sg / ng) AS sgn
-      FROM perg
-    ),
-    ex AS (
-      SELECT k, n,
-             sgn - CAST(sx AS DOUBLE) * sx / CAST(n AS DOUBLE) AS ssb,
-             CAST(ss AS DOUBLE) - sgn AS ssw
-      FROM agg
-    )
-    SELECT k, n,
-           CAST(k - 1 AS BIGINT) AS df_between,
-           CAST(n - k AS BIGINT) AS df_within,
-           CASE WHEN k > 1 AND n > k AND ssw > 0 THEN
-             floor((ssb / (CAST(k AS DOUBLE) - 1))
-                   / (ssw / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-                   * 1e6 + 0.5) / 1e6
-           END AS f
-    FROM ex
+    oracle=f"""
+    WITH s AS ({_FLAG_CENTS_SQL}),
+    perg AS ({moments_sql("s")}),
+    {_one_way_f_sql("perg")}
+    SELECT k, n, CAST(k - 1 AS BIGINT) AS df_between,
+           CAST(n - k AS BIGINT) AS df_within, f
+    FROM fx
     """,
 )
 def q277_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of revenue cents across return-flag cohorts —
     exact integer sums of squares, one pinned hash-checked F row."""
     li = load_table(spark, sf_dir, "lineitem")
-    return anova_f(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long"), "l_returnflag")
+    return anova_f(li, cents("l_extendedprice").cast("long"),
+                   "l_returnflag")
 
 
 @query(
     "q278_cohens_d",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT l_linestatus = 'O' AS ia,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
+      SELECT l_linestatus = 'O' AS ia, {cents_sql("l_extendedprice")} AS v
       FROM lineitem
       WHERE l_linestatus IN ('O', 'F') AND l_extendedprice IS NOT NULL
     ),
     agg AS (
-      SELECT CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN ia THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-             sum(CASE WHEN ia THEN CAST(v AS HUGEINT) ELSE 0 END) AS sa,
-             sum(CASE WHEN ia THEN 0 ELSE CAST(v AS HUGEINT) END) AS sb,
-             sum(CASE WHEN ia THEN CAST(v AS HUGEINT) * v ELSE 0 END)
-               AS ssa,
-             sum(CASE WHEN ia THEN 0 ELSE CAST(v AS HUGEINT) * v END)
-               AS ssb
+      SELECT {_masked_moments_sql("ia", "a")},
+             {_masked_moments_sql("NOT ia", "b")}
       FROM s
     ),
     ex AS (
       SELECT n_a, n_b,
-             CAST(sa AS DOUBLE) / n_a AS ma,
-             CAST(sb AS DOUBLE) / n_b AS mb,
-             CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n_a AS da,
-             CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n_b AS db
+             CAST(s_a AS DOUBLE) / n_a AS ma,
+             CAST(s_b AS DOUBLE) / n_b AS mb,
+             {_css_sql("q_a", "s_a", "n_a")} AS da,
+             {_css_sql("q_b", "s_b", "n_b")} AS db
       FROM agg
     )
     SELECT n_a, n_b,
-           CASE WHEN n_a > 0 THEN floor(ma * 1e6 + 0.5) / 1e6 END
-             AS mean_a,
-           CASE WHEN n_b > 0 THEN floor(mb * 1e6 + 0.5) / 1e6 END
-             AS mean_b,
+           CASE WHEN n_a > 0 THEN {pin_sql("ma")} END AS mean_a,
+           CASE WHEN n_b > 0 THEN {pin_sql("mb")} END AS mean_b,
            CASE WHEN n_a > 1 AND n_b > 1 AND da + db > 0 THEN
-             floor((ma - mb)
-                   / sqrt((da + db) / CAST(n_a + n_b - 2 AS DOUBLE))
-                   * 1e6 + 0.5) / 1e6
+             {pin_sql("(ma - mb)"
+                      " / sqrt((da + db) / CAST(n_a + n_b - 2 AS DOUBLE))")}
            END AS d
     FROM ex
     """,
@@ -1386,33 +1380,34 @@ def q278_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether it's noise; this says whether it's big) — one hash-checked
     (n_a, n_b, mean_a, mean_b, d) row."""
     li = load_table(spark, sf_dir, "lineitem")
-    return cohens_d(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long"), "l_linestatus", "O", "F")
+    return cohens_d(li, cents("l_extendedprice").cast("long"),
+                    "l_linestatus", "O", "F")
 
 
 def _relabel_oracle() -> str:
     P = _RELABEL_P
     half = 2 ** 31
+
+    def bit(b: int) -> str:
+        return f"({_boot_u32_sql('o_orderkey', b, _RELABEL_KNUTH)}) < {half}"
+
     perms = "\n".join(
-        f"      , CAST(sum(CASE WHEN ({_relabel_u32_sql('o_orderkey', b)})"
-        f" < {half} THEN v ELSE 0 END) AS BIGINT) AS pva{b}\n"
-        f"      , CAST(sum(CASE WHEN ({_relabel_u32_sql('o_orderkey', b)})"
-        f" < {half} THEN 1 ELSE 0 END) AS BIGINT) AS pna{b}"
+        f"      , CAST(sum(CASE WHEN {bit(b)} THEN v ELSE 0 END) AS BIGINT)"
+        f" AS pva{b}\n      , {_count_sql(bit(b))} AS pna{b}"
         for b in range(P))
     pds = ",\n".join(
-        f"      CASE WHEN pna{b} > 0 AND pna{b} < n_a + n_b THEN"
-        f" floor(abs(CAST(pva{b} AS DOUBLE) / pna{b}"
-        f" - CAST(sa + sb - pva{b} AS DOUBLE)"
-        f" / (n_a + n_b - pna{b})) * 1e6 + 0.5) / 1e6 END AS pd{b}"
+        f"      CASE WHEN pna{b} > 0 AND pna{b} < n_a + n_b THEN "
+        + pin_sql(f"abs(CAST(pva{b} AS DOUBLE) / pna{b}"
+                  f" - CAST(sa + sb - pva{b} AS DOUBLE)"
+                  f" / (n_a + n_b - pna{b}))")
+        + f" END AS pd{b}"
         for b in range(P))
     hits = " + ".join(
         f"(CASE WHEN pd{b} >= obs_mag THEN 1 ELSE 0 END)"
         for b in range(P))
     return f"""
     WITH s AS (
-      SELECT o_orderkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+      SELECT o_orderkey, {cents_sql("o_totalprice")} AS v,
              CAST(o_orderstatus = 'O' AS INT) AS a
       FROM orders
       WHERE o_orderstatus IN ('O', 'F') AND o_totalprice IS NOT NULL
@@ -1426,12 +1421,9 @@ def _relabel_oracle() -> str:
       FROM s
     ),
     obs AS (
-      SELECT *,
-             (CAST(sa AS DOUBLE) / n_a - CAST(sb AS DOUBLE) / n_b)
-               AS diff_raw,
-             floor(abs(CAST(sa AS DOUBLE) / n_a
-                       - CAST(sb AS DOUBLE) / n_b) * 1e6 + 0.5) / 1e6
-               AS obs_mag
+      SELECT *, CAST(sa AS DOUBLE) / n_a - CAST(sb AS DOUBLE) / n_b
+                  AS diff_raw,
+             {pin_sql("abs(diff_raw)")} AS obs_mag
       FROM agg
     ),
     pd AS (
@@ -1441,13 +1433,13 @@ def _relabel_oracle() -> str:
     ),
     ex AS (SELECT *, {hits} AS extreme FROM pd)
     SELECT n_a, n_b,
+           CASE WHEN n_a > 0 AND n_b > 0 THEN {pin_sql("diff_raw")}
+           END AS diff_obs,
+           CASE WHEN n_a > 0 AND n_b > 0 THEN CAST(extreme AS BIGINT)
+           END AS n_extreme,
            CASE WHEN n_a > 0 AND n_b > 0 THEN
-             floor(diff_raw * 1e6 + 0.5) / 1e6 END AS diff_obs,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             CAST(extreme AS BIGINT) END AS n_extreme,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             floor(CAST(1 + extreme AS DOUBLE) / {1 + P} * 1e6 + 0.5)
-               / 1e6 END AS p_value
+             {pin_sql(f"CAST(1 + extreme AS DOUBLE) / {1 + P}")}
+           END AS p_value
     FROM ex
     """
 
@@ -1462,8 +1454,7 @@ def q280_relabeling_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isin("O", "F"))
     return relabeling_test_mean(
-        o, "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)),
+        o, "o_orderkey", cents("o_totalprice"),
         (F.col("o_orderstatus") == "O").cast("int"))
 
 
@@ -1524,9 +1515,7 @@ def q281_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-11 registration candidates, fresh batch (the three-round-old
-# de-risking pattern): implemented + oracle-drafted now
-# (tests/test_round11_prebuilt.py), registered next rotation.
+# Trend, quasi-experimental and balance statistics (q282-q284)
 # ---------------------------------------------------------------------------
 
 
@@ -1550,14 +1539,15 @@ def cochran_armitage(df: DataFrame, score: Column,
     cells = src.groupBy("__w").agg(
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__y").cast("long").alias("__x"))
+    w = dec(F.col("__w"))
+    nw = dec(F.col("__n")) * w
     agg = cells.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("__n").cast("long").alias("n"),
         F.sum("__x").cast("long").alias("x"),
-        F.sum(dec(F.col("__x")) * dec(F.col("__w"))).alias("__xw"),
-        F.sum(dec(F.col("__n")) * dec(F.col("__w"))).alias("__nw"),
-        F.sum(dec(F.col("__n")) * dec(F.col("__w")) * dec(F.col("__w")))
-        .alias("__nww"))
+        F.sum(dec(F.col("__x")) * w).alias("__xw"),
+        F.sum(nw).alias("__nw"),
+        F.sum(nw * w).alias("__nww"))
     n = F.col("n").cast("double")
     pbar = F.col("x").cast("double") / n
     t = F.col("__xw").cast("double") - pbar * F.col("__nw")
@@ -1577,8 +1567,7 @@ def diff_in_diff(df: DataFrame, value: Column, is_treat: Column,
     (treated post − pre) minus (control post − pre), the standard
     quasi-experimental read when treatment wasn't randomized but both
     arms share a trend. SE is the unpooled four-cell Welch form
-    √(Σ s²_g/n_g) over (n−1) sample variances. Round-11 registration
-    candidate.
+    √(Σ s²_g/n_g) over (n−1) sample variances.
 
     The corpus reduces to FOUR cells of exact integers (n, Σv, Σv² at
     DECIMAL(38,0)/HUGEINT width — pass cents/counts); every mean, the
@@ -1591,34 +1580,23 @@ def diff_in_diff(df: DataFrame, value: Column, is_treat: Column,
         F.col("__v").isNotNull() & F.col("__t").isNotNull()
         & F.col("__p").isNotNull())
     v = F.col("__v")
-
-    def cell(t: int, p: int, what: str):
-        m = ((F.col("__t") == t) & (F.col("__p") == p))
-        if what == "n":
-            return F.sum(m.cast("long")).cast("long")
-        if what == "s":
-            return F.sum(F.when(m, dec(v)).otherwise(F.lit(0)))
-        return F.sum(F.when(m, dec(v) * dec(v)).otherwise(F.lit(0)))
-
+    masks = {f"{g}{p}": (F.col("__t") == t) & (F.col("__p") == p)
+             for t, g in ((1, "t"), (0, "c")) for p in (0, 1)}
     agg = src.agg(
-        *[cell(t, p, "n").alias(f"n_{g}{p}")
-          for t, g in ((1, "t"), (0, "c")) for p in (0, 1)],
-        *[cell(t, p, "s").alias(f"__s_{g}{p}")
-          for t, g in ((1, "t"), (0, "c")) for p in (0, 1)],
-        *[cell(t, p, "q").alias(f"__q_{g}{p}")
-          for t, g in ((1, "t"), (0, "c")) for p in (0, 1)])
+        *[F.sum(m.cast("long")).cast("long").alias(f"n_{g}")
+          for g, m in masks.items()],
+        *[_masked_sum(m, dec(v)).alias(f"__s_{g}") for g, m in masks.items()],
+        *[_masked_sum(m, dec_sq(v)).alias(f"__q_{g}")
+          for g, m in masks.items()])
 
     def mean(g):
         return F.col(f"__s_{g}").cast("double") / F.col(f"n_{g}")
 
     def var(g):
-        n = F.col(f"n_{g}")
-        return ((F.col(f"__q_{g}").cast("double")
-                 - F.col(f"__s_{g}").cast("double")
-                 * F.col(f"__s_{g}") / n)
-                / (n - 1).cast("double"))
+        return (_css(f"__q_{g}", f"__s_{g}", f"n_{g}")
+                / (F.col(f"n_{g}") - 1).cast("double"))
 
-    cells = ["t0", "t1", "c0", "c1"]
+    cells = list(masks)
     did = (mean("t1") - mean("t0")) - (mean("c1") - mean("c0"))
     se2 = sum((var(g) / F.col(f"n_{g}") for g in cells[1:]),
               var(cells[0]) / F.col(f"n_{cells[0]}"))
@@ -1642,8 +1620,7 @@ def covariate_balance(df: DataFrame, is_a: Column,
     covariate balance table an A/B or observational analysis reads
     BEFORE trusting an effect estimate — standardized mean difference
     (m_a − m_b)/√((s²_a + s²_b)/2) and the variance ratio per feature;
-    |SMD| < 0.1 is the usual 'balanced' rule of thumb. Round-11
-    registration candidate.
+    |SMD| < 0.1 is the usual 'balanced' rule of thumb.
 
     Features melt into (feature, value) rows in ONE projection (pass
     INTEGER-valued expressions — cents, counts, bucket ids), so the
@@ -1659,27 +1636,18 @@ def covariate_balance(df: DataFrame, is_a: Column,
                     F.explode(F.array(*pairs)).alias("__fv")).select(
         "__a", F.col("__fv.f").alias("__f"), F.col("__fv.v").alias("__v")
     ).filter(F.col("__a").isNotNull() & F.col("__v").isNotNull())
-    v = F.col("__v")
+    a, v = F.col("__a"), F.col("__v")
     agg = src.groupBy("__f").agg(
         F.sum("__a").cast("long").alias("n_a"),
-        F.sum(1 - F.col("__a")).cast("long").alias("n_b"),
-        F.sum(F.when(F.col("__a") == 1, dec(v)).otherwise(F.lit(0)))
-        .alias("__sa"),
-        F.sum(F.when(F.col("__a") == 0, dec(v)).otherwise(F.lit(0)))
-        .alias("__sb"),
-        F.sum(F.when(F.col("__a") == 1, dec(v) * dec(v))
-              .otherwise(F.lit(0))).alias("__qa"),
-        F.sum(F.when(F.col("__a") == 0, dec(v) * dec(v))
-              .otherwise(F.lit(0))).alias("__qb"))
+        F.sum(1 - a).cast("long").alias("n_b"),
+        *[_masked_sum(a == i, term(v)).alias(f"__{k}{g}")
+          for k, term in (("s", dec), ("q", dec_sq))
+          for i, g in ((1, "a"), (0, "b"))])
     na, nb = F.col("n_a"), F.col("n_b")
     ma = F.col("__sa").cast("double") / na
     mb = F.col("__sb").cast("double") / nb
-    va = ((F.col("__qa").cast("double")
-           - F.col("__sa").cast("double") * F.col("__sa") / na)
-          / (na - 1).cast("double"))
-    vb = ((F.col("__qb").cast("double")
-           - F.col("__sb").cast("double") * F.col("__sb") / nb)
-          / (nb - 1).cast("double"))
+    va = _css("__qa", "__sa", "n_a") / (na - 1).cast("double")
+    vb = _css("__qb", "__sb", "n_b") / (nb - 1).cast("double")
     ok = (na > 1) & (nb > 1)
     pooled = (va + vb) / 2
     return agg.select(
@@ -1693,7 +1661,7 @@ def covariate_balance(df: DataFrame, is_a: Column,
 
 @query(
     "q282_cochran_armitage",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(floor(l_quantity) AS BIGINT) // 10 AS w,
              CAST(l_returnflag = 'R' AS BIGINT) AS y
@@ -1713,18 +1681,15 @@ def covariate_balance(df: DataFrame, is_a: Column,
       FROM cells
     ),
     ex AS (
-      SELECT k, n, x,
-             CAST(xw AS DOUBLE)
-             - (CAST(x AS DOUBLE) / CAST(n AS DOUBLE)) * nw AS t,
-             (CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-             * (1 - CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-             * (CAST(nww AS DOUBLE)
-                - CAST(nw AS DOUBLE) * nw / CAST(n AS DOUBLE)) AS var
+      SELECT k, n, x, CAST(x AS DOUBLE) / CAST(n AS DOUBLE) AS pbar,
+             CAST(xw AS DOUBLE) - pbar * nw AS t,
+             pbar * (1 - pbar)
+             * {_css_sql("nww", "nw", "CAST(n AS DOUBLE)")} AS var
       FROM agg
     )
     SELECT k, n, x,
            CASE WHEN k > 1 AND x > 0 AND x < n AND var > 0 THEN
-             floor(t / sqrt(var) * 1e6 + 0.5) / 1e6
+             {pin_sql("t / sqrt(var)")}
            END AS z
     FROM ex
     """,
@@ -1740,58 +1705,35 @@ def q282_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_returnflag") == "R").cast("long"))
 
 
-@query(
-    "q283_diff_in_diff",
-    oracle="""
+_DID_CELLS = {"t0": "t = 1 AND p = 0", "t1": "t = 1 AND p = 1",
+              "c0": "t = 0 AND p = 0", "c1": "t = 0 AND p = 1"}
+
+
+def _did_oracle() -> str:
+    sums = ",\n             ".join(
+        _masked_moments_sql(m, g) for g, m in _DID_CELLS.items())
+    stats = ",\n        ".join(
+        f"CAST(s_{g} AS DOUBLE) / n_{g} AS m_{g},\n"
+        f"        {_css_sql(f'q_{g}', f's_{g}', f'n_{g}')}"
+        f" / CAST(n_{g} - 1 AS DOUBLE) AS v_{g}" for g in _DID_CELLS)
+    means = ",\n      ".join(
+        f"CASE WHEN n_{g} > 0 THEN {pin_sql(f'm_{g}')} END AS mean_{g}"
+        for g in _DID_CELLS)
+    return f"""
     WITH s AS (
-      SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
+      SELECT {cents_sql("o_totalprice")} AS v,
              CAST(o_orderpriority IN ('1-URGENT', '2-HIGH') AS INT)
                AS t,
              CAST(o_orderdate >= DATE '1995-01-01' AS INT) AS p
       FROM orders WHERE o_totalprice IS NOT NULL
     ),
     agg AS (
-      SELECT
-        CAST(sum(CASE WHEN t = 1 AND p = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_t0,
-        CAST(sum(CASE WHEN t = 1 AND p = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_t1,
-        CAST(sum(CASE WHEN t = 0 AND p = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_c0,
-        CAST(sum(CASE WHEN t = 0 AND p = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_c1,
-        sum(CASE WHEN t = 1 AND p = 0 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_t0,
-        sum(CASE WHEN t = 1 AND p = 1 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_t1,
-        sum(CASE WHEN t = 0 AND p = 0 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_c0,
-        sum(CASE WHEN t = 0 AND p = 1 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_c1,
-        sum(CASE WHEN t = 1 AND p = 0 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_t0,
-        sum(CASE WHEN t = 1 AND p = 1 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_t1,
-        sum(CASE WHEN t = 0 AND p = 0 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_c0,
-        sum(CASE WHEN t = 0 AND p = 1 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_c1
+      SELECT {sums}
       FROM s
     ),
     ex AS (
       SELECT *,
-        CAST(s_t0 AS DOUBLE) / n_t0 AS m_t0,
-        CAST(s_t1 AS DOUBLE) / n_t1 AS m_t1,
-        CAST(s_c0 AS DOUBLE) / n_c0 AS m_c0,
-        CAST(s_c1 AS DOUBLE) / n_c1 AS m_c1,
-        (CAST(q_t0 AS DOUBLE) - CAST(s_t0 AS DOUBLE) * s_t0 / n_t0)
-          / CAST(n_t0 - 1 AS DOUBLE) AS v_t0,
-        (CAST(q_t1 AS DOUBLE) - CAST(s_t1 AS DOUBLE) * s_t1 / n_t1)
-          / CAST(n_t1 - 1 AS DOUBLE) AS v_t1,
-        (CAST(q_c0 AS DOUBLE) - CAST(s_c0 AS DOUBLE) * s_c0 / n_c0)
-          / CAST(n_c0 - 1 AS DOUBLE) AS v_c0,
-        (CAST(q_c1 AS DOUBLE) - CAST(s_c1 AS DOUBLE) * s_c1 / n_c1)
-          / CAST(n_c1 - 1 AS DOUBLE) AS v_c1
+        {stats}
       FROM agg
     ),
     fin AS (
@@ -1802,22 +1744,16 @@ def q282_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ex
     )
     SELECT n_t0, n_t1, n_c0, n_c1,
-      CASE WHEN n_t0 > 0 THEN floor(m_t0 * 1e6 + 0.5) / 1e6 END
-        AS mean_t0,
-      CASE WHEN n_t1 > 0 THEN floor(m_t1 * 1e6 + 0.5) / 1e6 END
-        AS mean_t1,
-      CASE WHEN n_c0 > 0 THEN floor(m_c0 * 1e6 + 0.5) / 1e6 END
-        AS mean_c0,
-      CASE WHEN n_c1 > 0 THEN floor(m_c1 * 1e6 + 0.5) / 1e6 END
-        AS mean_c1,
-      CASE WHEN ok THEN floor(did_raw * 1e6 + 0.5) / 1e6 END AS did,
-      CASE WHEN ok AND se2 > 0 THEN
-        floor(sqrt(se2) * 1e6 + 0.5) / 1e6 END AS se,
-      CASE WHEN ok AND se2 > 0 THEN
-        floor(did_raw / sqrt(se2) * 1e6 + 0.5) / 1e6 END AS z
+      {means},
+      CASE WHEN ok THEN {pin_sql("did_raw")} END AS did,
+      CASE WHEN ok AND se2 > 0 THEN {pin_sql("sqrt(se2)")} END AS se,
+      CASE WHEN ok AND se2 > 0 THEN {pin_sql("did_raw / sqrt(se2)")}
+      END AS z
     FROM fin
-    """,
-)
+    """
+
+
+@query("q283_diff_in_diff", oracle=_did_oracle())
 def q283_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Did urgent-priority orders' prices move differently across the
     1995 boundary than normal-priority ones? The four-cell DID
@@ -1825,71 +1761,55 @@ def q283_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull())
     return diff_in_diff(
-        o, F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)),
+        o, cents("o_totalprice"),
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
         F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))
 
 
-@query(
-    "q284_covariate_balance",
-    oracle="""
+def _balance_oracle() -> str:
+    feats = {"discount_pct": ("l_discount", cents_sql("l_discount")),
+             "price_cents": ("l_extendedprice",
+                             cents_sql("l_extendedprice")),
+             "quantity": ("l_quantity", "CAST(floor(l_quantity) AS BIGINT)"),
+             "tax_pct": ("l_tax", cents_sql("l_tax"))}
+    src = "\n      UNION ALL\n".join(
+        f"      SELECT '{f}' AS f, {v} AS v,\n"
+        f"             CAST(l_returnflag = 'R' AS INT) AS a\n"
+        f"      FROM lineitem WHERE {c} IS NOT NULL"
+        for f, (c, v) in feats.items())
+    return f"""
     WITH m AS (
-      SELECT 'discount_pct' AS f,
-             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS v,
-             CAST(l_returnflag = 'R' AS INT) AS a
-      FROM lineitem WHERE l_discount IS NOT NULL
-      UNION ALL
-      SELECT 'price_cents',
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_extendedprice IS NOT NULL
-      UNION ALL
-      SELECT 'quantity', CAST(floor(l_quantity) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_quantity IS NOT NULL
-      UNION ALL
-      SELECT 'tax_pct', CAST(floor(l_tax * 100 + 0.5) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_tax IS NOT NULL
+{src}
     ),
     agg AS (
       SELECT f,
-             CAST(sum(a) AS BIGINT) AS n_a,
-             CAST(sum(1 - a) AS BIGINT) AS n_b,
-             sum(CASE WHEN a = 1 THEN CAST(v AS HUGEINT) ELSE 0 END)
-               AS sa,
-             sum(CASE WHEN a = 0 THEN CAST(v AS HUGEINT) ELSE 0 END)
-               AS sb,
-             sum(CASE WHEN a = 1 THEN CAST(v AS HUGEINT) * v
-                 ELSE 0 END) AS qa,
-             sum(CASE WHEN a = 0 THEN CAST(v AS HUGEINT) * v
-                 ELSE 0 END) AS qb
+             {_masked_moments_sql("a = 1", "a")},
+             {_masked_moments_sql("a = 0", "b")}
       FROM m GROUP BY f
     ),
     ex AS (
       SELECT f, n_a, n_b,
-             CAST(sa AS DOUBLE) / n_a AS ma,
-             CAST(sb AS DOUBLE) / n_b AS mb,
-             (CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n_a)
+             CAST(s_a AS DOUBLE) / n_a AS ma,
+             CAST(s_b AS DOUBLE) / n_b AS mb,
+             {_css_sql("q_a", "s_a", "n_a")}
                / CAST(n_a - 1 AS DOUBLE) AS va,
-             (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n_b)
+             {_css_sql("q_b", "s_b", "n_b")}
                / CAST(n_b - 1 AS DOUBLE) AS vb
       FROM agg
     )
     SELECT f AS feature, n_a, n_b,
-      CASE WHEN n_a > 0 THEN floor(ma * 1e6 + 0.5) / 1e6 END
-        AS mean_a,
-      CASE WHEN n_b > 0 THEN floor(mb * 1e6 + 0.5) / 1e6 END
-        AS mean_b,
+      CASE WHEN n_a > 0 THEN {pin_sql("ma")} END AS mean_a,
+      CASE WHEN n_b > 0 THEN {pin_sql("mb")} END AS mean_b,
       CASE WHEN n_a > 1 AND n_b > 1 AND (va + vb) / 2 > 0 THEN
-        floor((ma - mb) / sqrt((va + vb) / 2) * 1e6 + 0.5) / 1e6
+        {pin_sql("(ma - mb) / sqrt((va + vb) / 2)")}
       END AS smd,
-      CASE WHEN n_a > 1 AND n_b > 1 AND vb > 0 THEN
-        floor(va / vb * 1e6 + 0.5) / 1e6
+      CASE WHEN n_a > 1 AND n_b > 1 AND vb > 0 THEN {pin_sql("va / vb")}
       END AS var_ratio
     FROM ex
-    """,
-)
+    """
+
+
+@query("q284_covariate_balance", oracle=_balance_oracle())
 def q284_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Are returned and kept line items balanced on quantity, price,
     discount and tax? The SMD/variance-ratio table read before
@@ -1898,20 +1818,23 @@ def q284_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     feats = {
         "quantity": F.floor(F.col("l_quantity")),
-        "price_cents": F.floor(F.col("l_extendedprice") * 100
-                               + F.lit(0.5)),
-        "discount_pct": F.floor(F.col("l_discount") * 100 + F.lit(0.5)),
-        "tax_pct": F.floor(F.col("l_tax") * 100 + F.lit(0.5)),
+        "price_cents": cents("l_extendedprice"),
+        "discount_pct": cents("l_discount"),
+        "tax_pct": cents("l_tax"),
     }
     return covariate_balance(
         li, (F.col("l_returnflag") == "R").cast("int"), feats)
 
 
 # ---------------------------------------------------------------------------
-# Round-12 additions: paired/stratified/structural statistics tier,
-# registered as q301-q306 below and gate-compared (plus planted-
-# fixture property tests) in tests/test_round12_prebuilt.py.
+# Paired, stratified and structural statistics (q301-q306)
 # ---------------------------------------------------------------------------
+
+
+def _cell_count(a: str, b: str, i: int, j: int) -> Column:
+    """The BIGINT count of the rows with a = i and b = j (``_cells_sql``)."""
+    return F.sum(((F.col(a) == i) & (F.col(b) == j)).cast("long")) \
+        .cast("long")
 
 
 def mcnemar_test(df: DataFrame, flag_a: Column,
@@ -1929,11 +1852,8 @@ def mcnemar_test(df: DataFrame, flag_a: Column,
     src = df.select(flag_a.cast("int").alias("__a"),
                     flag_b.cast("int").alias("__b")).filter(
         F.col("__a").isNotNull() & F.col("__b").isNotNull())
-    cell = lambda a, b: F.sum(  # noqa: E731
-        ((F.col("__a") == a) & (F.col("__b") == b)).cast("long")) \
-        .cast("long")
-    agg = src.agg(cell(0, 0).alias("n00"), cell(0, 1).alias("n01"),
-                  cell(1, 0).alias("n10"), cell(1, 1).alias("n11"))
+    agg = src.agg(*[_cell_count("__a", "__b", i, j).alias(f"n{i}{j}")
+                    for i in (0, 1) for j in (0, 1)])
     b, c = F.col("n01").cast("double"), F.col("n10").cast("double")
     return agg.select(
         "n00", "n01", "n10", "n11",
@@ -1963,9 +1883,7 @@ def mantel_haenszel(df: DataFrame, stratum: Column, exposed: Column,
                     outcome.cast("int").alias("__o")).filter(
         F.col("__s").isNotNull() & F.col("__e").isNotNull()
         & F.col("__o").isNotNull())
-    cell = lambda e, o: F.sum(  # noqa: E731
-        ((F.col("__e") == e) & (F.col("__o") == o)).cast("long")) \
-        .cast("long")
+    cell = lambda e, o: _cell_count("__e", "__o", e, o)  # noqa: E731
     cells = src.groupBy("__s").agg(
         cell(1, 1).alias("__a"), cell(1, 0).alias("__b"),
         cell(0, 1).alias("__c"), cell(0, 0).alias("__d"))
@@ -2013,15 +1931,12 @@ def partial_correlation(df: DataFrame, x: Column, y: Column,
         F.col("__x").isNotNull() & F.col("__y").isNotNull()
         & F.col("__z").isNotNull())
     cols = {"x": F.col("__x"), "y": F.col("__y"), "z": F.col("__z")}
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for k, cc in cols.items():
-        aggs.append(F.sum(dec(cc)).alias(f"__s{k}"))
-    for i, j in (("x", "y"), ("x", "z"), ("y", "z")):
-        aggs.append(F.sum(dec(cols[i]) * dec(cols[j]))
-                    .alias(f"__s{i}{j}"))
-    for k, cc in cols.items():
-        aggs.append(F.sum(dec(cc) * dec(cc)).alias(f"__s{k}{k}"))
-    agg = src.agg(*aggs)
+    terms = {**{k: dec(c) for k, c in cols.items()},
+             **{i + j: dec(cols[i]) * dec(cols[j])
+                for i, j in ("xy", "xz", "yz")},
+             **{k + k: dec_sq(c) for k, c in cols.items()}}
+    agg = src.agg(F.count(F.lit(1)).cast("long").alias("n"),
+                  *[F.sum(t).alias(f"__s{k}") for k, t in terms.items()])
     n = F.col("n").cast("double")
 
     # ANSI null-safe divisors: the `ok`/`okp` CONDITIONS evaluate the
@@ -2029,27 +1944,18 @@ def partial_correlation(df: DataFrame, x: Column, y: Column,
     # zero-variance column must land NULL-by-contract, not crash.
     nsafe = F.when(n > 0, n)
 
+    def cov(i, j, n=nsafe):
+        return _cov(f"__s{i}{j}", f"__s{i}", f"__s{j}", n)
+
     def r(i, j):
-        num = (F.col(f"__s{i}{j}").cast("double")
-               - F.col(f"__s{i}").cast("double")
-               * F.col(f"__s{j}") / nsafe)
-        di = (F.col(f"__s{i}{i}").cast("double")
-              - F.col(f"__s{i}").cast("double") * F.col(f"__s{i}")
-              / nsafe)
-        dj = (F.col(f"__s{j}{j}").cast("double")
-              - F.col(f"__s{j}").cast("double") * F.col(f"__s{j}")
-              / nsafe)
-        den = F.sqrt(di * dj)
-        return num / F.when(den != 0, den)
+        den = F.sqrt(cov(i, i) * cov(j, j))
+        return cov(i, j) / F.when(den != 0, den)
 
     rxy, rxz, ryz = r("x", "y"), r("x", "z"), r("y", "z")
     pden = F.sqrt((1 - rxz * rxz) * (1 - ryz * ryz))
     part = (rxy - rxz * ryz) / F.when(pden != 0, pden)
-    vd = lambda k: (F.col(f"__s{k}{k}").cast("double")  # noqa: E731
-                    - F.col(f"__s{k}").cast("double")
-                    * F.col(f"__s{k}") / n)
-    ok = ((F.col("n") > 2) & (vd("x") > 0) & (vd("y") > 0)
-          & (vd("z") > 0))
+    ok = ((F.col("n") > 2) & (cov("x", "x", n) > 0)
+          & (cov("y", "y", n) > 0) & (cov("z", "z", n) > 0))
     okp = ok & (rxz * rxz < 1) & (ryz * ryz < 1)
     return agg.select(
         "n",
@@ -2073,7 +1979,7 @@ def grubbs_test(df: DataFrame, value: Column) -> DataFrame:
     stats = src.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(dec(F.col("__v"))).alias("__s"),
-        F.sum(dec(F.col("__v")) * dec(F.col("__v"))).alias("__q"))
+        F.sum(dec_sq(F.col("__v"))).alias("__q"))
     j = src.crossJoin(F.broadcast(stats))
     agg = (j.select(
         "n", "__s", "__q",
@@ -2084,9 +1990,7 @@ def grubbs_test(df: DataFrame, value: Column) -> DataFrame:
     n = F.col("n").cast("double")
     # ANSI null-safe n-1 (the `ok` condition evaluates var eagerly;
     # a single-row corpus must land NULL-by-contract, not crash).
-    var = ((F.col("__q").cast("double")
-            - F.col("__s").cast("double") * F.col("__s") / n)
-           / F.when(n > 1, n - 1))
+    var = _cov("__q", "__s", "__s", n) / F.when(n > 1, n - 1)
     g = (F.col("__maxdev").cast("double") / n) / F.sqrt(var)
     ok = (F.col("n") >= 3) & (var > 0)
     return agg.select(
@@ -2120,20 +2024,14 @@ def chow_test(df: DataFrame, x: Column, y: Column,
         F.col("__x").isNotNull() & F.col("__y").isNotNull()
         & F.col("__g2").isNotNull())
 
+    x, y = F.col("__x"), F.col("__y")
+    terms = {"x": dec(x), "y": dec(y), "xx": dec_sq(x),
+             "xy": dec(x) * dec(y), "yy": dec_sq(y)}
+
     def sums(pred, tag):
-        w = lambda c: F.sum(F.when(pred, c).otherwise(F.lit(0)))  # noqa: E731
-        return [
-            F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0)))
-            .cast("long").alias(f"n{tag}"),
-            w(dec(F.col("__x"))).alias(f"__sx{tag}"),
-            w(dec(F.col("__y"))).alias(f"__sy{tag}"),
-            w(dec(F.col("__x")) * dec(F.col("__x")))
-            .alias(f"__sxx{tag}"),
-            w(dec(F.col("__x")) * dec(F.col("__y")))
-            .alias(f"__sxy{tag}"),
-            w(dec(F.col("__y")) * dec(F.col("__y")))
-            .alias(f"__syy{tag}"),
-        ]
+        n = _masked_sum(pred, F.lit(1)).cast("long").alias(f"n{tag}")
+        return [n] + [_masked_sum(pred, c).alias(f"__s{k}{tag}")
+                      for k, c in terms.items()]
 
     agg = src.agg(*(sums(F.col("__g2") == 0, "1")
                     + sums(F.col("__g2") == 1, "2")
@@ -2147,12 +2045,13 @@ def chow_test(df: DataFrame, x: Column, y: Column,
         # docstring's promise), not a crash.  When the guard passes the
         # value is token-identical to the oracle's unguarded division.
         nsafe = F.when(n > 0, n)
-        sx = F.col(f"__sx{tag}").cast("double")
-        sy = F.col(f"__sy{tag}").cast("double")
-        sxx = F.col(f"__sxx{tag}").cast("double") - sx * sx / nsafe
-        sxy = F.col(f"__sxy{tag}").cast("double") - sx * sy / nsafe
-        syy = F.col(f"__syy{tag}").cast("double") - sy * sy / nsafe
-        return syy - sxy * sxy / F.when(sxx != 0, sxx), sxx
+
+        def cov(a, b):
+            return _cov(f"__s{a}{b}{tag}", f"__s{a}{tag}", f"__s{b}{tag}",
+                        nsafe)
+
+        sxx, sxy = cov("x", "x"), cov("x", "y")
+        return cov("y", "y") - sxy * sxy / F.when(sxx != 0, sxx), sxx
 
     sse1, sxx1 = sse("1")
     sse2, sxx2 = sse("2")
@@ -2184,9 +2083,7 @@ def levene_bf(df: DataFrame, value: Column,
     final group-by; the deviations table reuses the cells (rows never
     rejoin raw data). Degenerate inputs (k < 2, n ≤ k, zero
     within-group deviation spread) report f NULL-by-contract."""
-    src = df.select(F.col(group_col).alias("__g"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__g").isNotNull() & F.col("__v").isNotNull())
+    src = group_values(df, group_col, value)
     cells = src.groupBy("__g", "__v").agg(
         F.count(F.lit(1)).cast("long").alias("__c"))
     wcum = (Window.partitionBy("__g").orderBy("__v")
@@ -2201,32 +2098,13 @@ def levene_bf(df: DataFrame, value: Column,
     dev = (cells.join(med, "__g")
            .select("__g", F.abs(F.col("__v") - F.col("__med"))
                    .alias("__w"), "__c"))
-    per = dev.groupBy("__g").agg(
-        F.sum("__c").cast("long").alias("__ng"),
-        F.sum(dec(F.col("__w")) * dec(F.col("__c"))).alias("__sw"),
-        F.sum(dec(F.col("__w")) * dec(F.col("__w"))
-              * dec(F.col("__c"))).alias("__sww"))
-    agg = per.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("__ng").cast("long").alias("n"),
-        F.sum("__sw").alias("__tw"),
-        F.sum("__sww").alias("__tww"),
-        F.sum((F.col("__sw").cast("double")
-               * F.col("__sw") / F.col("__ng")))
-        .alias("__sgn"))
-    n = F.col("n").cast("double")
-    k = F.col("k").cast("double")
-    ssb = F.col("__sgn") - F.col("__tw").cast("double") \
-        * F.col("__tw") / n
-    ssw = F.col("__tww").cast("double") - F.col("__sgn")
-    fstat = (ssb / (k - 1)) / (ssw / (n - k))
-    ok = (F.col("k") > 1) & (n > k) & (ssw > 0)
-    return agg.select("k", "n", F.when(ok, pin(fstat)).alias("f"))
+    agg, f = _one_way_f(exact_moments(dev, "__w", weight="__c"))
+    return agg.select("k", "n", f)
 
 
 @query(
     "q301_mcnemar",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_returnflag = 'R' AS INT) AS a,
              CAST(l_discount >= 0.05 AS INT) AS b
@@ -2234,25 +2112,16 @@ def levene_bf(df: DataFrame, value: Column,
       WHERE l_returnflag IS NOT NULL AND l_discount IS NOT NULL
     ),
     agg AS (
-      SELECT
-        CAST(sum(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n00,
-        CAST(sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n01,
-        CAST(sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n10,
-        CAST(sum(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n11
+      SELECT {_cells_sql("a", "b", "n{}{}")}
       FROM s
+    ),
+    ex AS (
+      SELECT *, CAST(n01 AS DOUBLE) AS b, CAST(n10 AS DOUBLE) AS c FROM agg
     )
     SELECT n00, n01, n10, n11,
-      CASE WHEN n01 + n10 > 0 THEN
-        floor((CAST(n01 AS DOUBLE) - CAST(n10 AS DOUBLE))
-              * (CAST(n01 AS DOUBLE) - CAST(n10 AS DOUBLE))
-              / (CAST(n01 AS DOUBLE) + CAST(n10 AS DOUBLE))
-              * 1e6 + 0.5) / 1e6
+      CASE WHEN n01 + n10 > 0 THEN {pin_sql("(b - c) * (b - c) / (b + c)")}
       END AS chi2
-    FROM agg
+    FROM ex
     """,
 )
 def q301_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2268,7 +2137,7 @@ def q301_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q302_mantel_haenszel",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT CAST(l_linenumber AS BIGINT) AS st,
              CAST(l_discount >= 0.05 AS INT) AS e,
@@ -2278,22 +2147,14 @@ def q301_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND l_returnflag IS NOT NULL
     ),
     cells AS (
-      SELECT st,
-        CAST(sum(CASE WHEN e = 1 AND o = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS a,
-        CAST(sum(CASE WHEN e = 1 AND o = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS b,
-        CAST(sum(CASE WHEN e = 0 AND o = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS c,
-        CAST(sum(CASE WHEN e = 0 AND o = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS d
+      SELECT st, {_cells_sql("e", "o", "n{}{}")}
       FROM s GROUP BY st
     ),
     t AS (
-      SELECT a, b, c, d,
-             CAST(a AS DOUBLE) AS ad, CAST(b AS DOUBLE) AS bd,
-             CAST(c AS DOUBLE) AS cd, CAST(d AS DOUBLE) AS dd,
-             CAST(a AS DOUBLE) + b + c + d AS n
+      SELECT n11 AS a, n10 AS b, n01 AS c, n00 AS d,
+             CAST(n11 AS DOUBLE) AS ad, CAST(n10 AS DOUBLE) AS bd,
+             CAST(n01 AS DOUBLE) AS cd, CAST(n00 AS DOUBLE) AS dd,
+             CAST(n11 AS DOUBLE) + n10 + n01 + n00 AS n
       FROM cells
     ),
     agg AS (
@@ -2311,12 +2172,12 @@ def q301_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT k_strata, n,
       CASE WHEN rd > 0 THEN
-        floor(CAST(rn AS DOUBLE) / rd * 1e6 + 0.5) / 1e6
+        {pin_sql("CAST(rn AS DOUBLE) / rd")}
       END AS or_mh,
       CASE WHEN sv > 0 THEN
-        floor((CAST(sa AS DOUBLE) - se / 1e12)
-              * (CAST(sa AS DOUBLE) - se / 1e12)
-              / (sv / 1e12) * 1e6 + 0.5) / 1e6
+        {pin_sql("(CAST(sa AS DOUBLE) - se / 1e12)"
+                 " * (CAST(sa AS DOUBLE) - se / 1e12)"
+                 " / (sv / 1e12)")}
       END AS chi2_cmh
     FROM agg
     """,
@@ -2335,13 +2196,23 @@ def q302_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag") == "R")
 
 
-@query(
-    "q303_partial_correlation",
-    oracle="""
+def _partial_corr_oracle() -> str:
+    def cov(i: str, j: str) -> str:
+        return _cov_sql(f"s{i}{j}", f"s{i}", f"s{j}", "CAST(n AS DOUBLE)")
+
+    sums = ",\n             ".join(
+        [f"sum(CAST({k} AS HUGEINT)) AS s{k}" for k in "xyz"]
+        + [f"sum(CAST({i} AS HUGEINT) * {j}) AS s{i}{j}"
+           for i, j in ("xy", "xz", "yz", "xx", "yy", "zz")])
+    rs = ",\n        ".join(
+        f"{cov(i, j)}\n        / sqrt({cov(i, i)}\n"
+        f"               * {cov(j, j)}) AS r{i}{j}"
+        for i, j in ("xy", "xz", "yz"))
+    vs = ",\n        ".join(f"{cov(k, k)} AS v{k}" for k in "xyz")
+    return f"""
     WITH s AS (
-      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS x,
-             CAST(floor(l_extendedprice * (1 - l_discount) * 100
-               + 0.5) AS BIGINT) AS y,
+      SELECT {cents_sql("l_extendedprice")} AS x,
+             {cents_sql("l_extendedprice * (1 - l_discount)")} AS y,
              CAST(floor(l_quantity) AS BIGINT) AS z
       FROM lineitem
       WHERE l_extendedprice IS NOT NULL AND l_discount IS NOT NULL
@@ -2349,43 +2220,13 @@ def q302_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     a AS (
       SELECT CAST(count(*) AS BIGINT) AS n,
-             sum(CAST(x AS HUGEINT)) AS sx,
-             sum(CAST(y AS HUGEINT)) AS sy,
-             sum(CAST(z AS HUGEINT)) AS sz,
-             sum(CAST(x AS HUGEINT) * y) AS sxy,
-             sum(CAST(x AS HUGEINT) * z) AS sxz,
-             sum(CAST(y AS HUGEINT) * z) AS syz,
-             sum(CAST(x AS HUGEINT) * x) AS sxx,
-             sum(CAST(y AS HUGEINT) * y) AS syy,
-             sum(CAST(z AS HUGEINT) * z) AS szz
+             {sums}
       FROM s
     ),
     ex AS (
       SELECT n,
-        (CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * sy
-          / CAST(n AS DOUBLE))
-        / sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx
-                / CAST(n AS DOUBLE))
-               * (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy
-                  / CAST(n AS DOUBLE))) AS rxy,
-        (CAST(sxz AS DOUBLE) - CAST(sx AS DOUBLE) * sz
-          / CAST(n AS DOUBLE))
-        / sqrt((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx
-                / CAST(n AS DOUBLE))
-               * (CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * sz
-                  / CAST(n AS DOUBLE))) AS rxz,
-        (CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * sz
-          / CAST(n AS DOUBLE))
-        / sqrt((CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy
-                / CAST(n AS DOUBLE))
-               * (CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * sz
-                  / CAST(n AS DOUBLE))) AS ryz,
-        (CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * sx
-          / CAST(n AS DOUBLE)) AS vx,
-        (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy
-          / CAST(n AS DOUBLE)) AS vy,
-        (CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * sz
-          / CAST(n AS DOUBLE)) AS vz
+        {rs},
+        {vs}
       FROM a
     ),
     fin AS (
@@ -2396,15 +2237,17 @@ def q302_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ex
     )
     SELECT n,
-      CASE WHEN ok THEN floor(rxy * 1e6 + 0.5) / 1e6 END AS r_xy,
-      CASE WHEN ok THEN floor(rxz * 1e6 + 0.5) / 1e6 END AS r_xz,
-      CASE WHEN ok THEN floor(ryz * 1e6 + 0.5) / 1e6 END AS r_yz,
+      CASE WHEN ok THEN {pin_sql("rxy")} END AS r_xy,
+      CASE WHEN ok THEN {pin_sql("rxz")} END AS r_xz,
+      CASE WHEN ok THEN {pin_sql("ryz")} END AS r_yz,
       CASE WHEN ok AND rxz * rxz < 1 AND ryz * ryz < 1 THEN
-        floor(part * 1e6 + 0.5) / 1e6
+        {pin_sql("part")}
       END AS r_partial
     FROM fin
-    """,
-)
+    """
+
+
+@query("q303_partial_correlation", oracle=_partial_corr_oracle())
 def q303_partial_correlation(spark: SparkSession, sf_dir: str
                              ) -> DataFrame:
     """Is the price~revenue correlation just both tracking quantity?
@@ -2416,17 +2259,16 @@ def q303_partial_correlation(spark: SparkSession, sf_dir: str
         & F.col("l_discount").isNotNull()
         & F.col("l_quantity").isNotNull())
     return partial_correlation(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
-        F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                * 100 + F.lit(0.5)),
+        li, cents("l_extendedprice"),
+        cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
         F.floor(F.col("l_quantity")))
 
 
 @query(
     "q304_grubbs",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v
+      SELECT {cents_sql("o_totalprice")} AS v
       FROM orders WHERE o_totalprice IS NOT NULL
     ),
     a AS (
@@ -2442,18 +2284,16 @@ def q303_partial_correlation(spark: SparkSession, sf_dir: str
     ),
     ex AS (
       SELECT n, maxdev,
-        (CAST(qv AS DOUBLE) - CAST(sv AS DOUBLE) * sv
-          / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1) AS var
+        {_css_sql("qv", "sv", "CAST(n AS DOUBLE)")}
+          / (CAST(n AS DOUBLE) - 1) AS var
       FROM m
     )
     SELECT n,
       CASE WHEN n >= 3 AND var > 0 THEN
-        floor(CAST(maxdev AS DOUBLE) / CAST(n AS DOUBLE) * 1e6 + 0.5)
-          / 1e6
+        {pin_sql("CAST(maxdev AS DOUBLE) / CAST(n AS DOUBLE)")}
       END AS max_abs_dev,
       CASE WHEN n >= 3 AND var > 0 THEN
-        floor(CAST(maxdev AS DOUBLE) / CAST(n AS DOUBLE) / sqrt(var)
-              * 1e6 + 0.5) / 1e6
+        {pin_sql("CAST(maxdev AS DOUBLE) / CAST(n AS DOUBLE) / sqrt(var)")}
       END AS g
     FROM ex
     """,
@@ -2464,16 +2304,34 @@ def q304_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked (n, max_abs_dev, g) row."""
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice").isNotNull())
-    return grubbs_test(
-        o, F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)))
+    return grubbs_test(o, cents("o_totalprice"))
 
 
-@query(
-    "q305_chow",
-    oracle="""
+_CHOW_SEGMENTS = {"1": "g2 = 0", "2": "g2 = 1", "p": "TRUE"}
+
+
+def _chow_oracle() -> str:
+    def cov(i: str, j: str, t: str) -> str:
+        return _cov_sql(f"s{i}{j}{t}", f"s{i}{t}", f"s{j}{t}",
+                        f"CAST(n{t} AS DOUBLE)")
+
+    sums = ",\n        ".join(
+        f"{_count_sql(m)} AS n{t},\n"
+        + ",\n".join(
+            f"        {_masked_sum_sql(m, *f)} AS s{''.join(f)}{t}"
+            for f in (("x",), ("y",), ("x", "x"), ("x", "y"), ("y", "y")))
+        for t, m in _CHOW_SEGMENTS.items())
+    sses = ",\n        ".join(
+        f"{cov('x', 'x', t)} AS cxx{t},\n"
+        f"        {cov('y', 'y', t)}\n"
+        f"        - {cov('x', 'y', t)}\n"
+        f"          * {cov('x', 'y', t)}\n"
+        f"          / {cov('x', 'x', t)} AS sse{t}"
+        for t in _CHOW_SEGMENTS)
+    return f"""
     WITH s AS (
       SELECT CAST(floor(l_quantity) AS BIGINT) AS x,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y,
+             {cents_sql("l_extendedprice")} AS y,
              CAST(l_shipdate >= DATE '1998-01-01' AS INT) AS g2
       FROM lineitem
       WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
@@ -2481,70 +2339,12 @@ def q304_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     a AS (
       SELECT
-        CAST(sum(CASE WHEN g2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n1,
-        sum(CASE WHEN g2 = 0 THEN CAST(x AS HUGEINT) ELSE 0 END)
-          AS sx1,
-        sum(CASE WHEN g2 = 0 THEN CAST(y AS HUGEINT) ELSE 0 END)
-          AS sy1,
-        sum(CASE WHEN g2 = 0 THEN CAST(x AS HUGEINT) * x ELSE 0 END)
-          AS sxx1,
-        sum(CASE WHEN g2 = 0 THEN CAST(x AS HUGEINT) * y ELSE 0 END)
-          AS sxy1,
-        sum(CASE WHEN g2 = 0 THEN CAST(y AS HUGEINT) * y ELSE 0 END)
-          AS syy1,
-        CAST(sum(CASE WHEN g2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n2,
-        sum(CASE WHEN g2 = 1 THEN CAST(x AS HUGEINT) ELSE 0 END)
-          AS sx2,
-        sum(CASE WHEN g2 = 1 THEN CAST(y AS HUGEINT) ELSE 0 END)
-          AS sy2,
-        sum(CASE WHEN g2 = 1 THEN CAST(x AS HUGEINT) * x ELSE 0 END)
-          AS sxx2,
-        sum(CASE WHEN g2 = 1 THEN CAST(x AS HUGEINT) * y ELSE 0 END)
-          AS sxy2,
-        sum(CASE WHEN g2 = 1 THEN CAST(y AS HUGEINT) * y ELSE 0 END)
-          AS syy2,
-        CAST(count(*) AS BIGINT) AS np,
-        sum(CAST(x AS HUGEINT)) AS sxp,
-        sum(CAST(y AS HUGEINT)) AS syp,
-        sum(CAST(x AS HUGEINT) * x) AS sxxp,
-        sum(CAST(x AS HUGEINT) * y) AS sxyp,
-        sum(CAST(y AS HUGEINT) * y) AS syyp
+        {sums}
       FROM s
     ),
     ex AS (
       SELECT n1, n2,
-        (CAST(sxx1 AS DOUBLE) - CAST(sx1 AS DOUBLE) * sx1
-          / CAST(n1 AS DOUBLE)) AS cxx1,
-        (CAST(syy1 AS DOUBLE) - CAST(sy1 AS DOUBLE) * sy1
-          / CAST(n1 AS DOUBLE))
-        - (CAST(sxy1 AS DOUBLE) - CAST(sx1 AS DOUBLE) * sy1
-           / CAST(n1 AS DOUBLE))
-          * (CAST(sxy1 AS DOUBLE) - CAST(sx1 AS DOUBLE) * sy1
-             / CAST(n1 AS DOUBLE))
-          / (CAST(sxx1 AS DOUBLE) - CAST(sx1 AS DOUBLE) * sx1
-             / CAST(n1 AS DOUBLE)) AS sse1,
-        (CAST(sxx2 AS DOUBLE) - CAST(sx2 AS DOUBLE) * sx2
-          / CAST(n2 AS DOUBLE)) AS cxx2,
-        (CAST(syy2 AS DOUBLE) - CAST(sy2 AS DOUBLE) * sy2
-          / CAST(n2 AS DOUBLE))
-        - (CAST(sxy2 AS DOUBLE) - CAST(sx2 AS DOUBLE) * sy2
-           / CAST(n2 AS DOUBLE))
-          * (CAST(sxy2 AS DOUBLE) - CAST(sx2 AS DOUBLE) * sy2
-             / CAST(n2 AS DOUBLE))
-          / (CAST(sxx2 AS DOUBLE) - CAST(sx2 AS DOUBLE) * sx2
-             / CAST(n2 AS DOUBLE)) AS sse2,
-        (CAST(sxxp AS DOUBLE) - CAST(sxp AS DOUBLE) * sxp
-          / CAST(np AS DOUBLE)) AS cxxp,
-        (CAST(syyp AS DOUBLE) - CAST(syp AS DOUBLE) * syp
-          / CAST(np AS DOUBLE))
-        - (CAST(sxyp AS DOUBLE) - CAST(sxp AS DOUBLE) * syp
-           / CAST(np AS DOUBLE))
-          * (CAST(sxyp AS DOUBLE) - CAST(sxp AS DOUBLE) * syp
-             / CAST(np AS DOUBLE))
-          / (CAST(sxxp AS DOUBLE) - CAST(sxp AS DOUBLE) * sxp
-             / CAST(np AS DOUBLE)) AS ssep
+        {sses}
       FROM a
     ),
     fin AS (
@@ -2554,21 +2354,20 @@ def q304_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ex
     )
     SELECT n1, n2,
-      CASE WHEN ok THEN
-        floor(sqrt(ssep / CAST(n1 + n2 AS DOUBLE)) * 1e6 + 0.5) / 1e6
+      CASE WHEN ok THEN {pin_sql("sqrt(ssep / CAST(n1 + n2 AS DOUBLE))")}
       END AS rmse_pooled,
       CASE WHEN ok THEN
-        floor(sqrt((sse1 + sse2) / CAST(n1 + n2 AS DOUBLE))
-              * 1e6 + 0.5) / 1e6
+        {pin_sql("sqrt((sse1 + sse2) / CAST(n1 + n2 AS DOUBLE))")}
       END AS rmse_split,
       CASE WHEN ok AND sse1 + sse2 > 0 THEN
-        floor(((ssep - sse1 - sse2) / 2)
-              / ((sse1 + sse2) / (CAST(n1 + n2 AS DOUBLE) - 4))
-              * 1e6 + 0.5) / 1e6
+        {pin_sql("((ssep - sse1 - sse2) / 2)"
+                 " / ((sse1 + sse2) / (CAST(n1 + n2 AS DOUBLE) - 4))")}
       END AS f
     FROM fin
-    """,
-)
+    """
+
+
+@query("q305_chow", oracle=_chow_oracle())
 def q305_chow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Did the price~quantity RELATIONSHIP change at the 1998
     boundary? The Chow structural-break F over pooled vs per-segment
@@ -2578,20 +2377,14 @@ def q305_chow(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_extendedprice").isNotNull()
         & F.col("l_shipdate").isNotNull())
     return chow_test(
-        li, F.floor(F.col("l_quantity")),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
+        li, F.floor(F.col("l_quantity")), cents("l_extendedprice"),
         F.col("l_shipdate") >= F.lit("1998-01-01").cast("date"))
 
 
 @query(
     "q306_levene_bf",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
+    oracle=f"""
+    WITH s AS ({_FLAG_CENTS_SQL}),
     cells AS (
       SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM s GROUP BY g, v
     ),
@@ -2611,33 +2404,9 @@ def q305_chow(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT cells.g, abs(v - med) AS w, c
       FROM cells JOIN med ON cells.g = med.g
     ),
-    per AS (
-      SELECT g, CAST(sum(c) AS BIGINT) AS ng,
-             sum(CAST(w AS HUGEINT) * c) AS sw,
-             sum(CAST(w AS HUGEINT) * w * c) AS sww
-      FROM dev GROUP BY g
-    ),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(ng) AS BIGINT) AS n,
-             sum(sw) AS tw, sum(sww) AS tww,
-             sum(CAST(sw AS DOUBLE) * sw / ng) AS sgn
-      FROM per
-    ),
-    ex AS (
-      SELECT k, n,
-        sgn - CAST(tw AS DOUBLE) * tw / CAST(n AS DOUBLE) AS ssb,
-        CAST(tww AS DOUBLE) - sgn AS ssw
-      FROM agg
-    )
-    SELECT k, n,
-      CASE WHEN k > 1 AND CAST(n AS DOUBLE) > CAST(k AS DOUBLE)
-           AND ssw > 0 THEN
-        floor((ssb / (CAST(k AS DOUBLE) - 1))
-              / (ssw / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-              * 1e6 + 0.5) / 1e6
-      END AS f
-    FROM ex
+    per AS ({moments_sql("dev", "w", weight="c")}),
+    {_one_way_f_sql("per")}
+    SELECT k, n, f FROM fx
     """,
 )
 def q306_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2648,9 +2417,35 @@ def q306_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull()
         & F.col("l_extendedprice").isNotNull())
-    return levene_bf(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
-        "l_returnflag")
+    return levene_bf(li, cents("l_extendedprice"), "l_returnflag")
+
+
+def _cell_variances(df: DataFrame, value: Column,
+                    group_col: str) -> DataFrame:
+    """(__ng, __mean, __s2): each group's size, mean and sample
+    variance s² = (Σv² − (Σv)²/n)/(n − 1) from its exact moments. Groups
+    with n < 2 or s² = 0 cannot carry a weight or enter a log and are
+    DROPPED (documented by welch_anova and bartlett_test)."""
+    ngd = F.col("__ng").cast("double")
+    return (exact_moments(group_values(df, group_col, value))
+            .filter(F.col("__ng") >= 2)
+            .select("__ng", (F.col("__sg").cast("double") / ngd)
+                    .alias("__mean"),
+                    (_css("__ssg", "__sg", "__ng") / (ngd - 1))
+                    .alias("__s2"))
+            .filter(F.col("__s2") > 0))
+
+
+# ``_cell_variances`` in DuckDB SQL: the CTEs s, perg and cells(ng,
+# mean, s2) over the return-flag revenue source.
+_CELL_VARIANCES_SQL = f"""s AS ({_FLAG_CENTS_SQL}),
+    perg AS ({moments_sql("s")}),
+    cells AS (
+      SELECT ng, CAST(sg AS DOUBLE) / ng AS mean,
+             {_css_sql("ssg", "sg", "ng")} / (ng - 1) AS s2
+      FROM perg
+      WHERE ng >= 2 AND {_css_sql("ssg", "sg", "ng")} / (ng - 1) > 0
+    )"""
 
 
 # ---------------------------------------------------------------------------
@@ -2662,37 +2457,17 @@ def q306_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q277 (equal-variance F) / q306 (is that assumption true?) / q318
 # (the F that doesn't need it).
 #
-# Scale shape (the q277 recipe): ONE group-by produces per-cell exact
-# integer (n, sum, sum-of-squares); everything after runs on a k-row
-# frame (k = #groups) — a 1-row broadcast of the weight totals joins
-# back for the second moment pass.  Cells with n_i < 2 or zero
-# variance cannot carry a weight and are DROPPED (documented; k
-# reports the cells used).
+# Scale shape: _cell_variances' one group-by, then a k-row frame (k =
+# #groups) — a 1-row broadcast of the weight totals joins back for the
+# second moment pass; k reports the cells used.
 def welch_anova(df: DataFrame, value: Column,
                 group_col: str) -> DataFrame:
     """(k, n, f_star, df2): Welch's F* across groups with
     Satterthwaite-style denominator df.  k < 2 surviving cells
     reports f_star/df2 NULL-by-contract (one row either way)."""
-    src = df.select(F.col(group_col).alias("__g"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    perg = src.groupBy("__g").agg(
-        F.count(F.lit(1)).cast("long").alias("__ng"),
-        F.sum(dec(F.col("__v"))).alias("__sg"),
-        F.sum(dec(F.col("__v")) * dec(F.col("__v"))).alias("__ssg"))
-    ngd = F.col("__ng").cast("double")
-    s2 = ((F.col("__ssg").cast("double")
-           - F.col("__sg").cast("double") * F.col("__sg") / ngd)
-          / (ngd - 1))
-    cells = (perg.filter(F.col("__ng") >= 2)
-             .select("__ng",
-                     (F.col("__sg").cast("double") / ngd)
-                     .alias("__mean"),
-                     s2.alias("__s2"))
-             .filter(F.col("__s2") > 0)
-             .select("__ng", "__mean",
-                     (F.col("__ng").cast("double") / F.col("__s2"))
-                     .alias("__w")))
+    cells = _cell_variances(df, value, group_col).select(
+        "__ng", "__mean",
+        (F.col("__ng").cast("double") / F.col("__s2")).alias("__w"))
     tot = cells.agg(F.sum("__w").alias("__sw"),
                     F.sum(F.col("__w") * F.col("__mean"))
                     .alias("__swm"))
@@ -2720,49 +2495,26 @@ def welch_anova(df: DataFrame, value: Column,
 
 @query(
     "q318_welch_anova",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
-    perg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS ng,
-             sum(CAST(v AS HUGEINT)) AS sg,
-             sum(CAST(v AS HUGEINT) * v) AS ssg
-      FROM s GROUP BY g
-    ),
-    cells AS (
-      SELECT ng, CAST(sg AS DOUBLE) / ng AS mean,
-             CAST(ng AS DOUBLE)
-               / ((CAST(ssg AS DOUBLE)
-                   - CAST(sg AS DOUBLE) * sg / ng) / (ng - 1)) AS w
-      FROM perg
-      WHERE ng >= 2
-        AND (CAST(ssg AS DOUBLE)
-             - CAST(sg AS DOUBLE) * sg / ng) / (ng - 1) > 0
-    ),
-    tot AS (
-      SELECT sum(w) AS sw, sum(w * mean) AS swm FROM cells
-    ),
+    oracle=f"""
+    WITH {_CELL_VARIANCES_SQL},
+    wc AS (SELECT ng, mean, CAST(ng AS DOUBLE) / s2 AS w FROM cells),
+    tot AS (SELECT sum(w) AS sw, sum(w * mean) AS swm FROM wc),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
              CAST(sum(ng) AS BIGINT) AS n,
              max(sw) AS sw,
              sum(w * (mean - swm / sw) * (mean - swm / sw)) AS a,
              sum((1.0 - w / sw) * (1.0 - w / sw) / (ng - 1)) AS lam
-      FROM cells, tot
+      FROM wc, tot
     )
     SELECT k, n,
            CASE WHEN k >= 2 AND lam > 0 THEN
-             floor(a / (k - 1.0)
-                   / (1.0 + 2.0 * (k - 2.0)
-                      / (CAST(k AS DOUBLE) * k - 1) * lam)
-                   * 1e6 + 0.5) / 1e6 END AS f_star,
+             {pin_sql("a / (k - 1.0) / (1.0 + 2.0 * (k - 2.0)"
+                      " / (CAST(k AS DOUBLE) * k - 1) * lam)")}
+           END AS f_star,
            CASE WHEN k >= 2 AND lam > 0 THEN
-             floor((CAST(k AS DOUBLE) * k - 1) / (3.0 * lam)
-                   * 1e6 + 0.5) / 1e6 END AS df2
+             {pin_sql("(CAST(k AS DOUBLE) * k - 1) / (3.0 * lam)")}
+           END AS df2
     FROM agg
     """,
 )
@@ -2773,9 +2525,7 @@ def q318_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull()
         & F.col("l_extendedprice").isNotNull())
-    return welch_anova(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
-        "l_returnflag")
+    return welch_anova(li, cents("l_extendedprice"), "l_returnflag")
 
 
 # ---------------------------------------------------------------------------
@@ -2789,29 +2539,14 @@ def q318_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     C = 1 + (SUM 1/(n_i-1) - 1/(N-k)) / (3(k-1))
 #     chi2 = M / C   on k-1 df
 #
-# Same one-group-by shape as q277/q318: exact integer (n, sum, sum of
-# squares) per cell, then a k-row frame; ln() over identical pinned
-# double inputs is the q109 PMI precedent.  Cells with n_i < 2 or
-# zero variance cannot enter a log and are DROPPED (documented).
+# Same _cell_variances shape as q318; ln() over identical pinned
+# double inputs is the q109 PMI precedent.
 def bartlett_test(df: DataFrame, value: Column,
                   group_col: str) -> DataFrame:
     """(k, n, chi2): Bartlett's statistic across groups; k < 2
     surviving cells or a zero pooled variance reports chi2
     NULL-by-contract (one row either way)."""
-    src = df.select(F.col(group_col).alias("__g"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    perg = src.groupBy("__g").agg(
-        F.count(F.lit(1)).cast("long").alias("__ng"),
-        F.sum(dec(F.col("__v"))).alias("__sg"),
-        F.sum(dec(F.col("__v")) * dec(F.col("__v"))).alias("__ssg"))
-    ngd = F.col("__ng").cast("double")
-    s2 = ((F.col("__ssg").cast("double")
-           - F.col("__sg").cast("double") * F.col("__sg") / ngd)
-          / (ngd - 1))
-    cells = (perg.filter(F.col("__ng") >= 2)
-             .select("__ng", s2.alias("__s2"))
-             .filter(F.col("__s2") > 0))
+    cells = _cell_variances(df, value, group_col)
     agg = cells.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
         F.sum("__ng").cast("long").alias("n"),
@@ -2832,28 +2567,8 @@ def bartlett_test(df: DataFrame, value: Column,
 
 @query(
     "q319_bartlett",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
-    perg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS ng,
-             sum(CAST(v AS HUGEINT)) AS sg,
-             sum(CAST(v AS HUGEINT) * v) AS ssg
-      FROM s GROUP BY g
-    ),
-    cells AS (
-      SELECT ng,
-             (CAST(ssg AS DOUBLE)
-              - CAST(sg AS DOUBLE) * sg / ng) / (ng - 1) AS s2
-      FROM perg
-      WHERE ng >= 2
-        AND (CAST(ssg AS DOUBLE)
-             - CAST(sg AS DOUBLE) * sg / ng) / (ng - 1) > 0
-    ),
+    oracle=f"""
+    WITH {_CELL_VARIANCES_SQL},
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS k,
              CAST(sum(ng) AS BIGINT) AS n,
@@ -2864,11 +2579,11 @@ def bartlett_test(df: DataFrame, value: Column,
     )
     SELECT k, n,
            CASE WHEN k >= 2 AND n > k AND pool > 0 THEN
-             floor(((CAST(n AS DOUBLE) - k)
-                    * ln(pool / (CAST(n AS DOUBLE) - k)) - slog)
-                   / (1.0 + (sinv - 1.0 / (CAST(n AS DOUBLE) - k))
-                      / (3.0 * (CAST(k AS DOUBLE) - 1)))
-                   * 1e6 + 0.5) / 1e6 END AS chi2
+             {pin_sql("((CAST(n AS DOUBLE) - k)"
+                      " * ln(pool / (CAST(n AS DOUBLE) - k)) - slog)"
+                      " / (1.0 + (sinv - 1.0 / (CAST(n AS DOUBLE) - k))"
+                      " / (3.0 * (CAST(k AS DOUBLE) - 1)))")}
+           END AS chi2
     FROM agg
     """,
 )
@@ -2879,9 +2594,57 @@ def q319_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull()
         & F.col("l_extendedprice").isNotNull())
-    return bartlett_test(
-        li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)),
-        "l_returnflag")
+    return bartlett_test(li, cents("l_extendedprice"), "l_returnflag")
+
+
+def _block_cells(df: DataFrame, value: Column, block_col: str,
+                 treatment_col: str, *aggs: Column) -> DataFrame:
+    """The (__b, __t) cells of a blocked design: block, treatment and
+    the BIGINT value with NULLs dropped, aggregated by `aggs`.
+
+    r15 optimization: the cells (blocks × treatments rows — small by
+    construction) feed several downstream subtrees; unpersisted, each
+    re-ran the source scan + cell groupBy — 9 source scans in the
+    plan. Persist SIZE-GATED (keep(source=...)): the unconditional
+    persist measured ~2x SLOWER at sf0.1 (paired A/B, q320 0.98 vs
+    1.92 s, q325 0.79 vs 1.69 s — the cache barrier beats re-reading
+    a 3 MB source), while at production source sizes the saved scans
+    dominate."""
+    src = df.select(F.col(block_col).alias("__b"),
+                    F.col(treatment_col).alias("__t"),
+                    value.cast("long").alias("__v")).filter(
+        F.col("__b").isNotNull() & F.col("__t").isNotNull()
+        & F.col("__v").isNotNull())
+    return keep(src.groupBy("__b", "__t").agg(*aggs), source=src)
+
+
+def _complete_blocks(cells: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(kfr, complete): the treatment count k as a one-row frame (__k)
+    and the blocks (__b) that hold all k treatments."""
+    kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
+    complete = (cells.groupBy("__b")
+                .agg(F.count(F.lit(1)).cast("long").alias("__nb"))
+                .join(F.broadcast(kfr))
+                .filter(F.col("__nb") == F.col("__k"))
+                .select("__b"))
+    return kfr, complete
+
+
+# The oracles' blocked design of q320/q325 — users as blocks, event
+# types as treatments, value in integer cents — and its complete blocks.
+_BLOCKS_SRC_SQL = f"""src AS (
+      SELECT user_id AS b, event_type AS t, {cents_sql("value")} AS v
+      FROM events
+      WHERE user_id IS NOT NULL AND event_type IS NOT NULL
+        AND value IS NOT NULL
+    )"""
+_COMPLETE_BLOCKS_SQL = """kfr AS (
+      SELECT CAST(count(DISTINCT t) AS BIGINT) AS k FROM cells
+    ),
+    complete AS (
+      SELECT b FROM cells, kfr GROUP BY b, k
+      HAVING CAST(count(*) AS BIGINT) = k
+    )"""
 
 
 # ---------------------------------------------------------------------------
@@ -2907,28 +2670,11 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
     (chi2_adj = chi2 / (1 - SUM(t^3-t)/(b*k*(k^2-1)))).  b < 2,
     k < 2, or an all-tied layout (correction <= 0) reports
     NULL-by-contract (one row either way)."""
-    src = df.select(F.col(block_col).alias("__b"),
-                    F.col(treatment_col).alias("__t"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__b").isNotNull() & F.col("__t").isNotNull()
-        & F.col("__v").isNotNull())
-    # r15 optimization: cells (blocks × treatments rows — small by
-    # construction) feeds FIVE downstream subtrees (k, block sizes,
-    # kept→ranked→rank sums, kept→ties, complete→nblocks); unpersisted,
-    # each re-ran the source scan + cell groupBy — 9 source scans in
-    # the plan. Persist SIZE-GATED (keep(source=...)): the
-    # unconditional persist measured ~2x SLOWER at sf0.1 (paired A/B,
-    # 0.98 vs 1.92 s — cache barrier beats re-reading a 3 MB source),
-    # while at production source sizes the 5 saved scans dominate.
-    cells = keep(src.groupBy("__b", "__t").agg(
+    cells = _block_cells(
+        df, value, block_col, treatment_col,
         F.floor(F.sum("__v").cast("double") / F.count(F.lit(1))
-                * F.lit(1e4)).cast("long").alias("__score")), source=src)
-    kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
-    sized = cells.groupBy("__b").agg(
-        F.count(F.lit(1)).cast("long").alias("__nb"))
-    complete = (sized.join(F.broadcast(kfr))
-                .filter(F.col("__nb") == F.col("__k"))
-                .select("__b"))
+                * F.lit(1e4)).cast("long").alias("__score"))
+    kfr, complete = _complete_blocks(cells)
     kept = cells.join(complete, "__b")
     wr = Window.partitionBy("__b").orderBy("__score")
     wt = Window.partitionBy("__b", "__score")
@@ -2962,27 +2708,15 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
 
 @query(
     "q320_friedman",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS b, event_type AS t,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events
-      WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-        AND value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_BLOCKS_SRC_SQL},
     cells AS (
       SELECT b, t,
              CAST(floor(CAST(sum(v) AS DOUBLE) / count(*) * 1e4)
                   AS BIGINT) AS score
       FROM src GROUP BY b, t
     ),
-    kfr AS (
-      SELECT CAST(count(DISTINCT t) AS BIGINT) AS k FROM cells
-    ),
-    complete AS (
-      SELECT b FROM cells, kfr GROUP BY b, k
-      HAVING CAST(count(*) AS BIGINT) = k
-    ),
+    {_COMPLETE_BLOCKS_SQL},
     kept AS (
       SELECT cells.* FROM cells JOIN complete USING (b)
     ),
@@ -3013,25 +2747,21 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
       SELECT (SELECT sum(CAST(r2j AS HUGEINT) * r2j) FROM pert) AS sr2,
              k, nb, tcorr
       FROM kfr, nblocks, ties
+    ),
+    ex AS (
+      SELECT k, nb,
+             3.0 * CAST(sr2 AS DOUBLE) / (CAST(nb AS DOUBLE) * k * (k + 1))
+             - 3.0 * CAST(nb AS DOUBLE) * (k + 1) AS chi2,
+             1.0 - CAST(tcorr AS DOUBLE)
+             / (CAST(nb AS DOUBLE) * k * (CAST(k AS DOUBLE) * k - 1))
+               AS corr
+      FROM agg
     )
     SELECT k, nb AS b,
-           CASE WHEN nb >= 2 AND k >= 2 THEN
-             floor((3.0 * CAST(sr2 AS DOUBLE)
-                    / (CAST(nb AS DOUBLE) * k * (k + 1))
-                    - 3.0 * CAST(nb AS DOUBLE) * (k + 1))
-                   * 1e6 + 0.5) / 1e6 END AS chi2,
-           CASE WHEN nb >= 2 AND k >= 2
-                AND 1.0 - CAST(tcorr AS DOUBLE)
-                    / (CAST(nb AS DOUBLE) * k
-                       * (CAST(k AS DOUBLE) * k - 1)) > 0 THEN
-             floor((3.0 * CAST(sr2 AS DOUBLE)
-                    / (CAST(nb AS DOUBLE) * k * (k + 1))
-                    - 3.0 * CAST(nb AS DOUBLE) * (k + 1))
-                   / (1.0 - CAST(tcorr AS DOUBLE)
-                      / (CAST(nb AS DOUBLE) * k
-                         * (CAST(k AS DOUBLE) * k - 1)))
-                   * 1e6 + 0.5) / 1e6 END AS chi2_adj
-    FROM agg
+           CASE WHEN nb >= 2 AND k >= 2 THEN {pin_sql("chi2")} END AS chi2,
+           CASE WHEN nb >= 2 AND k >= 2 AND corr > 0 THEN
+             {pin_sql("chi2 / corr")} END AS chi2_adj
+    FROM ex
     """,
 )
 def q320_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3042,9 +2772,7 @@ def q320_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
         & F.col("value").isNotNull())
-    return friedman_test(
-        ev, F.floor(F.col("value") * 100 + F.lit(0.5)),
-        "user_id", "event_type")
+    return friedman_test(ev, cents("value"), "user_id", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -3069,30 +2797,16 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     """(k, b, n_success, q_stat): Cochran's Q over complete blocks.
     b < 2, k < 2, or a degenerate layout (every block all-hot or
     all-cold: denominator 0) reports q_stat NULL-by-contract."""
-    src = df.select(F.col(block_col).alias("__b"),
-                    F.col(treatment_col).alias("__t"),
-                    value.cast("long").alias("__v")).filter(
-        F.col("__b").isNotNull() & F.col("__t").isNotNull()
-        & F.col("__v").isNotNull())
-    # r15 optimization: cells (blocks × treatments rows) feeds kfr,
-    # complete and marked — unpersisted, each re-ran the source scan +
-    # groupBy (9 source scans in the plan). Persist SIZE-GATED
-    # (keep(source=...); the unconditional persist measured ~2x
-    # slower at sf0.1 — 0.79 vs 1.69 s paired — see its docstring). The block totals come FROM cells either way (sum of
-    # per-cell exact sums/counts — identical decimal/long values), not
-    # a second pass over the source.
-    cells = keep(src.groupBy("__b", "__t").agg(
-        dec(F.sum("__v")).alias("__cs"),
-        F.count(F.lit(1)).cast("long").alias("__cn")), source=src)
+    # The block totals come FROM cells (sum of per-cell exact
+    # sums/counts — identical decimal/long values), not a second pass
+    # over the source.
+    cells = _block_cells(df, value, block_col, treatment_col,
+                         dec(F.sum("__v")).alias("__cs"),
+                         F.count(F.lit(1)).cast("long").alias("__cn"))
     blocks = cells.groupBy("__b").agg(
         dec(F.sum("__cs")).alias("__bs"),
         F.sum("__cn").cast("long").alias("__bn"))
-    kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
-    complete = (cells.groupBy("__b")
-                .agg(F.count(F.lit(1)).cast("long").alias("__nb"))
-                .join(F.broadcast(kfr))
-                .filter(F.col("__nb") == F.col("__k"))
-                .select("__b"))
+    kfr, complete = _complete_blocks(cells)
     marked = (cells.join(complete, "__b").join(blocks, "__b")
               .select("__b", "__t",
                       # hot <=> mean_cell > mean_block, decided by
@@ -3124,14 +2838,8 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
 
 @query(
     "q325_cochran_q",
-    oracle="""
-    WITH src AS (
-      SELECT user_id AS b, event_type AS t,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-      FROM events
-      WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-        AND value IS NOT NULL
-    ),
+    oracle=f"""
+    WITH {_BLOCKS_SRC_SQL},
     cells AS (
       SELECT b, t, sum(CAST(v AS HUGEINT)) AS cs,
              CAST(count(*) AS BIGINT) AS cn
@@ -3142,13 +2850,7 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
              CAST(count(*) AS BIGINT) AS bn
       FROM src GROUP BY b
     ),
-    kfr AS (
-      SELECT CAST(count(DISTINCT t) AS BIGINT) AS k FROM cells
-    ),
-    complete AS (
-      SELECT b FROM cells, kfr GROUP BY b, k
-      HAVING CAST(count(*) AS BIGINT) = k
-    ),
+    {_COMPLETE_BLOCKS_SQL},
     marked AS (
       SELECT cells.b, cells.t,
              CAST(cells.cs * blocks.bn > blocks.bs * cells.cn
@@ -3171,9 +2873,8 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     SELECT k, b, n_success,
            CASE WHEN b >= 2 AND k >= 2
                 AND k * n_success - sr2 > 0 THEN
-             floor(CAST((k - 1) * (k * sc2 - n_success * n_success)
-                        AS DOUBLE) / (k * n_success - sr2)
-                   * 1e6 + 0.5) / 1e6 END AS q_stat
+             {pin_sql("CAST((k - 1) * (k * sc2 - n_success * n_success)"
+                      " AS DOUBLE) / (k * n_success - sr2)")} END AS q_stat
     FROM agg
     """,
 )
@@ -3185,9 +2886,7 @@ def q325_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
         & F.col("value").isNotNull())
-    return cochran_q(
-        ev, F.floor(F.col("value") * 100 + F.lit(0.5)),
-        "user_id", "event_type")
+    return cochran_q(ev, cents("value"), "user_id", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -3249,10 +2948,10 @@ def wilcoxon_signed_rank(df: DataFrame, group_col: str, x_value: Column,
                        / F.sqrt(var2))).alias("z"))
 
 
-_WILCOXON_ORACLE = """
+_WILCOXON_ORACLE = f"""
     WITH src AS (
       SELECT user_id AS g,
-             CAST(floor(value * 100 + 0.5) AS BIGINT)
+             {cents_sql("value")}
                - CAST(json_extract_string(props, '$.k') AS BIGINT) AS d
       FROM events
       WHERE value IS NOT NULL
@@ -3275,14 +2974,11 @@ _WILCOXON_ORACLE = """
     )
     SELECT g AS user_id, n,
            CAST(w2p AS DOUBLE) / 2.0 AS w_plus,
-           CASE WHEN n >= 10
-                AND (2.0 * n * (n + 1) * (2 * n + 1)
-                     - CAST(tcorr AS DOUBLE)) / 12.0 > 0 THEN
-             floor((CAST(w2p AS DOUBLE) - n * (n + 1.0) / 2.0)
-                   / sqrt((2.0 * n * (n + 1) * (2 * n + 1)
-                           - CAST(tcorr AS DOUBLE)) / 12.0)
-                   * 1e6 + 0.5) / 1e6 END AS z
-    FROM per
+           CASE WHEN n >= 10 AND var2 > 0 THEN
+             {pin_sql("(CAST(w2p AS DOUBLE) - n * (n + 1.0) / 2.0)"
+                      " / sqrt(var2)")} END AS z
+    FROM (SELECT *, (2.0 * n * (n + 1) * (2 * n + 1)
+                     - CAST(tcorr AS DOUBLE)) / 12.0 AS var2 FROM per)
     """
 
 
@@ -3298,6 +2994,5 @@ def q331_wilcoxon_signed_rank(spark: SparkSession,
         F.col("value").isNotNull()
         & F.get_json_object("props", "$.k").isNotNull())
     return wilcoxon_signed_rank(
-        ev, "user_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)),
+        ev, "user_id", cents("value"),
         F.get_json_object("props", "$.k").cast("long"))

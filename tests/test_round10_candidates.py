@@ -1,8 +1,8 @@
-"""Round-10 registration de-risking (the q245-q249 pattern, one round
-later): the operators held back by round 9's saturated driver head —
-threshold sweep, two-proportion z, Gini, Cramér's V, Kaplan-Meier —
-get their DuckDB oracles DRAFTED and driver-gate-compared here, so
-registering them next rotation is a pure registry edit."""
+"""Threshold sweep, two-proportion z, Gini, Cramér's V, Kaplan-Meier and
+the dominant ACF lag: each kernel call is compared with its registered
+DuckDB oracle (Gini and the dominant lag with their own drafts, their
+modules being outside the registered-oracle gate), plus property pins
+against pure-python references."""
 
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 
 from check_oracle import compare  # noqa: E402
 
+from auto_ml_platform_with_timeseries_data_spark import registry  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.operators import (  # noqa: E402
     evaluation,
     profile,
@@ -38,40 +39,6 @@ def _duck(sf_dir: str, sql: str):
     return con.sql(sql).df()
 
 
-_THRESH_ORACLE = """
-    WITH s AS (
-      SELECT CAST(l_discount AS DOUBLE) AS v,
-             CAST(l_returnflag = 'R' AS BIGINT) AS y
-      FROM lineitem WHERE l_discount IS NOT NULL
-    ),
-    c AS (
-      SELECT v, CAST(sum(y) AS BIGINT) AS cp,
-             CAST(sum(1 - y) AS BIGINT) AS cn
-      FROM s GROUP BY v
-    ),
-    m AS (
-      SELECT v AS threshold,
-             sum(cp) OVER (ORDER BY v DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-             sum(cn) OVER (ORDER BY v DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp,
-             sum(cp) OVER () AS p, sum(cn) OVER () AS nn
-      FROM c
-    )
-    SELECT threshold, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(p - tp AS BIGINT) AS fn, CAST(nn - fp AS BIGINT) AS tn,
-           CASE WHEN 2 * tp + fp + (p - tp) > 0 THEN
-             floor(2 * tp / CAST(2 * tp + fp + (p - tp) AS DOUBLE)
-                   * 1e6 + 0.5) / 1e6
-           END AS f1,
-           CASE WHEN p > 0 AND nn > 0 THEN
-             floor((CAST(tp AS DOUBLE) / p - CAST(fp AS DOUBLE) / nn)
-                   * 1e6 + 0.5) / 1e6
-           END AS youden_j
-    FROM m
-"""
-
-
 def test_threshold_sweep_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -79,41 +46,9 @@ def test_threshold_sweep_oracle_draft(spark, sf_dir):
     got = evaluation.threshold_sweep(
         li, F.col("l_discount"),
         (F.col("l_returnflag") == "R").cast("long")).toPandas()
-    want = _duck(sf_dir, _THRESH_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q261_threshold_sweep"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_TWOPROP_ORACLE = """
-    WITH s AS (
-      SELECT l_linestatus = 'O' AS a,
-             CAST(l_returnflag = 'R' AS BIGINT) AS y
-      FROM lineitem WHERE l_linestatus IN ('O', 'F')
-    ),
-    agg AS (
-      SELECT CAST(sum(CASE WHEN a THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN a THEN y ELSE 0 END) AS BIGINT) AS x_a,
-             CAST(sum(CASE WHEN a THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-             CAST(sum(CASE WHEN a THEN 0 ELSE y END) AS BIGINT) AS x_b
-      FROM s
-    )
-    SELECT n_a, x_a, n_b, x_b,
-           CASE WHEN n_a > 0 THEN
-             floor(CAST(x_a AS DOUBLE) / n_a * 1e6 + 0.5) / 1e6
-           END AS p_a,
-           CASE WHEN n_b > 0 THEN
-             floor(CAST(x_b AS DOUBLE) / n_b * 1e6 + 0.5) / 1e6
-           END AS p_b,
-           CASE WHEN n_a > 0 AND n_b > 0 AND x_a + x_b > 0
-                AND x_a + x_b < n_a + n_b THEN
-             floor((CAST(x_a AS DOUBLE) / n_a - CAST(x_b AS DOUBLE) / n_b)
-                   / sqrt((CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                          * (1 - CAST(x_a + x_b AS DOUBLE) / (n_a + n_b))
-                          * (1.0 / n_a + 1.0 / n_b))
-                   * 1e6 + 0.5) / 1e6
-           END AS z
-    FROM agg
-"""
 
 
 def test_two_proportion_z_oracle_draft(spark, sf_dir):
@@ -123,7 +58,7 @@ def test_two_proportion_z_oracle_draft(spark, sf_dir):
     got = validation.two_proportion_z(
         li, "l_linestatus", "O", "F",
         (F.col("l_returnflag") == "R").cast("long")).toPandas()
-    want = _duck(sf_dir, _TWOPROP_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q262_two_proportion_z"])
     ok, msg = compare(got, want)
     assert ok, msg
 
@@ -171,92 +106,14 @@ def test_gini_oracle_draft(spark, sf_dir):
     assert ok, msg
 
 
-_CRAMERS_ORACLE = """
-    WITH c AS (
-      SELECT lang, source, count(*) AS n FROM documents
-      WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2
-    ),
-    m AS (
-      SELECT n,
-             sum(n) OVER (PARTITION BY lang) AS ra,
-             sum(n) OVER (PARTITION BY source) AS cb,
-             sum(n) OVER () AS tot
-      FROM c
-    ),
-    agg AS (
-      SELECT floor((sum((n - CAST(ra AS DOUBLE) * cb / tot)
-                        * (n - CAST(ra AS DOUBLE) * cb / tot)
-                        / (CAST(ra AS DOUBLE) * cb / tot))
-                    + max(tot)
-                    - sum(CAST(ra AS DOUBLE) * cb / tot))
-                   * 1e6 + 0.5) / 1e6 AS chi2,
-             CAST(max(tot) AS BIGINT) AS n
-      FROM m
-    ),
-    ks AS (
-      SELECT count(DISTINCT lang) AS ka, count(DISTINCT source) AS kb
-      FROM c
-    )
-    SELECT chi2,
-           CAST((ka - 1) * (kb - 1) AS BIGINT) AS dof, n,
-           CASE WHEN least(ka, kb) > 1 THEN
-             floor(sqrt(chi2 / (CAST(n AS DOUBLE) * (least(ka, kb) - 1)))
-                   * 1e6 + 0.5) / 1e6
-           END AS v
-    FROM agg, ks
-"""
-
-
 def test_cramers_v_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     got = cramers_v(docs, "lang", "source").toPandas()
-    want = _duck(sf_dir, _CRAMERS_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q264_cramers_v"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_KM_ORACLE = """
-    WITH s AS (
-      SELECT user_id % 3 AS g,
-             CAST(floor(abs(value)) AS BIGINT) AS t,
-             CAST(event_id % 4 != 0 AS INT) AS e
-      FROM events WHERE value IS NOT NULL
-    ),
-    cells AS (
-      SELECT g, t, CAST(sum(e) AS BIGINT) AS d,
-             CAST(sum(1 - e) AS BIGINT) AS c
-      FROM s GROUP BY g, t
-    ),
-    stepped AS (
-      SELECT g, t, d, c,
-             sum(d + c) OVER (PARTITION BY g)
-             - coalesce(sum(d + c) OVER (PARTITION BY g ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS n_risk
-      FROM cells
-    ),
-    walked AS (
-      SELECT g, t, n_risk, d, c,
-             sum(CASE WHEN d < n_risk THEN
-                 CAST(floor(ln(1.0 - CAST(d AS DOUBLE) / n_risk)
-                            * 1e12) AS BIGINT) END)
-               OVER (PARTITION BY g ORDER BY t
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS ls,
-             max(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-               OVER (PARTITION BY g ORDER BY t
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS dead
-      FROM stepped
-    )
-    SELECT g AS cohort, t, CAST(n_risk AS BIGINT) AS n_risk, d, c,
-           CASE WHEN dead = 1 THEN 0.0 ELSE
-             floor(exp(ls / 1e12) * 1e6 + 0.5) / 1e6
-           END AS survival
-    FROM walked
-"""
 
 
 def test_kaplan_meier_oracle_draft(spark, sf_dir):
@@ -268,7 +125,7 @@ def test_kaplan_meier_oracle_draft(spark, sf_dir):
     got = ts_features.kaplan_meier(
         ev, "cohort", F.floor(F.abs(F.col("value"))),
         (F.col("event_id") % 4 != 0).cast("int")).toPandas()
-    want = _duck(sf_dir, _KM_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q265_kaplan_meier"])
     ok, msg = compare(got, want)
     assert ok, msg
 

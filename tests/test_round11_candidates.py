@@ -1,8 +1,7 @@
-"""Independent second witness for the rank/location-test tier
-(q275-q281): each operator's DuckDB oracle is DUPLICATED here (drafted
-before registration, kept afterward — the round-9/round-10 candidate
-pattern) and driver-gate-compared, alongside hypothesis property pins
-against pure-python textbook computations."""
+"""The rank/location-test tier (q275-q281): each kernel call is compared
+with its registered DuckDB oracle (Benjamini-Hochberg with its own
+draft, which differs from the registered one), alongside hypothesis
+property pins against pure-python textbook computations."""
 
 from __future__ import annotations
 
@@ -19,6 +18,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 
 from check_oracle import compare  # noqa: E402
 
+from auto_ml_platform_with_timeseries_data_spark import registry  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.operators import (  # noqa: E402
     curation,
     validation,
@@ -34,107 +34,15 @@ def _duck(sf_dir: str, sql: str):
     return con.sql(sql).df()
 
 
-_MWU_ORACLE = """
-    WITH s AS (
-      SELECT CAST(l_quantity AS DOUBLE) AS v, l_linestatus = 'O' AS ia
-      FROM lineitem WHERE l_linestatus IN ('O', 'F')
-    ),
-    cells AS (
-      SELECT v,
-             CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN ia THEN 0 ELSE 1 END) AS BIGINT) AS cb
-      FROM s GROUP BY v
-    ),
-    sp AS (
-      SELECT ca, cb, ca + cb AS t,
-             CAST(coalesce(sum(ca + cb) OVER (ORDER BY v
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS BIGINT) AS s
-      FROM cells
-    ),
-    agg AS (
-      SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-             CAST(sum(cb) AS BIGINT) AS n_b,
-             sum(CAST(ca AS HUGEINT) * (2 * s + t + 1)) AS tra,
-             sum(CAST(t AS HUGEINT) * t * t - t) AS ties
-      FROM sp
-    ),
-    ex AS (
-      SELECT n_a, n_b,
-             (CAST(tra AS DOUBLE)
-              - CAST(n_a AS DOUBLE) * (n_a + 1)) AS two_u,
-             CAST(n_a AS DOUBLE) * n_b / 12
-             * (CAST(n_a + n_b + 1 AS DOUBLE)
-                - CAST(ties AS DOUBLE)
-                / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1)))
-               AS var
-      FROM agg
-    )
-    SELECT n_a, n_b,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN two_u / 2 END AS u_a,
-           CASE WHEN n_a > 0 AND n_b > 0 AND n_a + n_b > 1
-                AND var > 0 THEN
-             floor((two_u - CAST(n_a AS DOUBLE) * n_b) / 2 / sqrt(var)
-                   * 1e6 + 0.5) / 1e6
-           END AS z
-    FROM ex
-"""
-
-
 def test_mann_whitney_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     got = validation.mann_whitney_u(
         li, "l_quantity", "l_linestatus", "O", "F").toPandas()
-    want = _duck(sf_dir, _MWU_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q275_mann_whitney_u"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_KW_ORACLE = """
-    WITH cells AS (
-      SELECT l_returnflag AS g, CAST(l_quantity AS DOUBLE) AS v,
-             CAST(count(*) AS BIGINT) AS c
-      FROM lineitem WHERE l_returnflag IS NOT NULL GROUP BY 1, 2
-    ),
-    vt AS (SELECT v, CAST(sum(c) AS BIGINT) AS t FROM cells GROUP BY v),
-    sp AS (
-      SELECT v, t,
-             CAST(coalesce(sum(t) OVER (ORDER BY v
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-               0) AS BIGINT) AS s
-      FROM vt
-    ),
-    perg AS (
-      SELECT g, CAST(sum(c) AS BIGINT) AS ng,
-             sum(CAST(c AS HUGEINT) * (2 * sp.s + sp.t + 1)) AS tr
-      FROM cells JOIN sp USING (v) GROUP BY g
-    ),
-    tie AS (SELECT sum(CAST(t AS HUGEINT) * t * t - t) AS ties FROM sp),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(ng) AS BIGINT) AS n,
-             sum(CAST(tr AS DOUBLE) * tr / (4 * ng)) AS rr
-      FROM perg
-    ),
-    ex AS (
-      SELECT k, n,
-             12 / (CAST(n AS DOUBLE) * (n + 1)) * rr
-             - 3 * (CAST(n AS DOUBLE) + 1) AS h_raw,
-             1 - CAST(ties AS DOUBLE)
-             / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-                - CAST(n AS DOUBLE)) AS corr
-      FROM agg, tie
-    )
-    SELECT k, n,
-           CASE WHEN k > 1 AND n > 1 THEN
-             floor(h_raw * 1e6 + 0.5) / 1e6 END AS h,
-           CASE WHEN k > 1 AND n > 1 AND corr > 0 THEN
-             floor(h_raw / corr * 1e6 + 0.5) / 1e6
-           END AS h_tie_corrected
-    FROM ex
-"""
 
 
 def test_kruskal_wallis_oracle_draft(spark, sf_dir):
@@ -143,47 +51,9 @@ def test_kruskal_wallis_oracle_draft(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     got = validation.kruskal_wallis(
         li, "l_quantity", "l_returnflag").toPandas()
-    want = _duck(sf_dir, _KW_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q276_kruskal_wallis"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_ANOVA_ORACLE = """
-    WITH s AS (
-      SELECT l_returnflag AS g,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_returnflag IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
-    perg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS ng,
-             sum(CAST(v AS HUGEINT)) AS sg,
-             sum(CAST(v AS HUGEINT) * v) AS ssg
-      FROM s GROUP BY g
-    ),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(ng) AS BIGINT) AS n,
-             sum(sg) AS sx, sum(ssg) AS ss,
-             sum(CAST(sg AS DOUBLE) * sg / ng) AS sgn
-      FROM perg
-    ),
-    ex AS (
-      SELECT k, n,
-             sgn - CAST(sx AS DOUBLE) * sx / CAST(n AS DOUBLE) AS ssb,
-             CAST(ss AS DOUBLE) - sgn AS ssw
-      FROM agg
-    )
-    SELECT k, n,
-           CAST(k - 1 AS BIGINT) AS df_between,
-           CAST(n - k AS BIGINT) AS df_within,
-           CASE WHEN k > 1 AND n > k AND ssw > 0 THEN
-             floor((ssb / (CAST(k AS DOUBLE) - 1))
-                   / (ssw / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-                   * 1e6 + 0.5) / 1e6
-           END AS f
-    FROM ex
-"""
 
 
 def test_anova_oracle_draft(spark, sf_dir):
@@ -193,49 +63,9 @@ def test_anova_oracle_draft(spark, sf_dir):
     got = validation.anova_f(
         li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
         .cast("long"), "l_returnflag").toPandas()
-    want = _duck(sf_dir, _ANOVA_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q277_anova_f"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_COHEN_ORACLE = """
-    WITH s AS (
-      SELECT l_linestatus = 'O' AS ia,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v
-      FROM lineitem
-      WHERE l_linestatus IN ('O', 'F') AND l_extendedprice IS NOT NULL
-    ),
-    agg AS (
-      SELECT CAST(sum(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(sum(CASE WHEN ia THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-             sum(CASE WHEN ia THEN CAST(v AS HUGEINT) ELSE 0 END) AS sa,
-             sum(CASE WHEN ia THEN 0 ELSE CAST(v AS HUGEINT) END) AS sb,
-             sum(CASE WHEN ia THEN CAST(v AS HUGEINT) * v ELSE 0 END)
-               AS ssa,
-             sum(CASE WHEN ia THEN 0 ELSE CAST(v AS HUGEINT) * v END)
-               AS ssb
-      FROM s
-    ),
-    ex AS (
-      SELECT n_a, n_b,
-             CAST(sa AS DOUBLE) / n_a AS ma,
-             CAST(sb AS DOUBLE) / n_b AS mb,
-             CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n_a AS da,
-             CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n_b AS db
-      FROM agg
-    )
-    SELECT n_a, n_b,
-           CASE WHEN n_a > 0 THEN floor(ma * 1e6 + 0.5) / 1e6 END
-             AS mean_a,
-           CASE WHEN n_b > 0 THEN floor(mb * 1e6 + 0.5) / 1e6 END
-             AS mean_b,
-           CASE WHEN n_a > 1 AND n_b > 1 AND da + db > 0 THEN
-             floor((ma - mb)
-                   / sqrt((da + db) / CAST(n_a + n_b - 2 AS DOUBLE))
-                   * 1e6 + 0.5) / 1e6
-           END AS d
-    FROM ex
-"""
 
 
 def test_cohens_d_oracle_draft(spark, sf_dir):
@@ -245,59 +75,9 @@ def test_cohens_d_oracle_draft(spark, sf_dir):
     got = validation.cohens_d(
         li, F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
         .cast("long"), "l_linestatus", "O", "F").toPandas()
-    want = _duck(sf_dir, _COHEN_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q278_cohens_d"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-def _cvm_oracle() -> str:
-    from auto_ml_platform_with_timeseries_data_spark.operators.curation import (
-        _hash_u32_sql,
-    )
-
-    gap = ("(CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE) / nb)")
-    return f"""
-    WITH s AS (
-      SELECT n_chars,
-             CASE WHEN {_hash_u32_sql('doc_id')} % 100 < 80 THEN 'train'
-                  WHEN {_hash_u32_sql('doc_id')} % 100 < 90 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents
-    ),
-    c AS (
-      SELECT CAST(n_chars AS DOUBLE) AS v,
-             CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-               AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-               AS BIGINT) AS cb
-      FROM s WHERE split IN ('train', 'test') GROUP BY 1
-    ),
-    m AS (
-      SELECT ca + cb AS c,
-             sum(ca) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cuma,
-             sum(cb) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cumb,
-             sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-      FROM c
-    ),
-    agg AS (
-      SELECT sum(CAST(c AS HUGEINT)
-                 * CAST(floor({gap} * {gap} * 1e12) AS HUGEINT)) AS ts,
-             CAST(max(na) AS BIGINT) AS n_a,
-             CAST(max(nb) AS BIGINT) AS n_b
-      FROM m WHERE na > 0 AND nb > 0
-    )
-    SELECT n_a, n_b,
-           floor(CAST(n_a AS DOUBLE) * n_b
-                 / (CAST(n_a + n_b AS DOUBLE)
-                    * CAST(n_a + n_b AS DOUBLE))
-                 * (CAST(ts AS DOUBLE) / 1e12) * 1e6 + 0.5) / 1e6
-             AS cvm
-    FROM agg
-    """
 
 
 def test_cramer_von_mises_oracle_draft(spark, sf_dir):
@@ -310,74 +90,9 @@ def test_cramer_von_mises_oracle_draft(spark, sf_dir):
     split = hash_split(docs, "doc_id")
     got = curation.cramer_von_mises(
         split, "n_chars", "split", "train", "test").toPandas()
-    want = _duck(sf_dir, _cvm_oracle())
+    want = _duck(sf_dir, registry.oracles()["q279_cramer_von_mises"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-def _relabel_oracle() -> str:
-    P = validation._RELABEL_P
-    half = 2 ** 31
-
-    def u(b: int) -> str:
-        return validation._relabel_u32_sql("o_orderkey", b)
-
-    perms = "\n".join(
-        f"      , CAST(sum(CASE WHEN ({u(b)}) < {half} THEN v ELSE 0 END)"
-        f" AS BIGINT) AS pva{b}\n"
-        f"      , CAST(sum(CASE WHEN ({u(b)}) < {half} THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS pna{b}"
-        for b in range(P))
-    pds = ",\n".join(
-        f"      CASE WHEN pna{b} > 0 AND pna{b} < n_a + n_b THEN"
-        f" floor(abs(CAST(pva{b} AS DOUBLE) / pna{b}"
-        f" - CAST(sa + sb - pva{b} AS DOUBLE)"
-        f" / (n_a + n_b - pna{b})) * 1e6 + 0.5) / 1e6 END AS pd{b}"
-        for b in range(P))
-    hits = " + ".join(
-        f"(CASE WHEN pd{b} >= obs_mag THEN 1 ELSE 0 END)"
-        for b in range(P))
-    return f"""
-    WITH s AS (
-      SELECT o_orderkey,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
-             CAST(o_orderstatus = 'O' AS INT) AS a
-      FROM orders
-      WHERE o_orderstatus IN ('O', 'F') AND o_totalprice IS NOT NULL
-    ),
-    agg AS (
-      SELECT CAST(sum(a) AS BIGINT) AS n_a,
-             CAST(sum(1 - a) AS BIGINT) AS n_b,
-             CAST(sum(a * v) AS BIGINT) AS sa,
-             CAST(sum((1 - a) * v) AS BIGINT) AS sb
-{perms}
-      FROM s
-    ),
-    obs AS (
-      SELECT *,
-             (CAST(sa AS DOUBLE) / n_a - CAST(sb AS DOUBLE) / n_b)
-               AS diff_raw,
-             floor(abs(CAST(sa AS DOUBLE) / n_a
-                       - CAST(sb AS DOUBLE) / n_b) * 1e6 + 0.5) / 1e6
-               AS obs_mag
-      FROM agg
-    ),
-    pd AS (
-      SELECT *,
-{pds}
-      FROM obs
-    ),
-    ex AS (SELECT *, {hits} AS extreme FROM pd)
-    SELECT n_a, n_b,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             floor(diff_raw * 1e6 + 0.5) / 1e6 END AS diff_obs,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             CAST(extreme AS BIGINT) END AS n_extreme,
-           CASE WHEN n_a > 0 AND n_b > 0 THEN
-             floor(CAST(1 + extreme AS DOUBLE) / {1 + P} * 1e6 + 0.5)
-               / 1e6 END AS p_value
-    FROM ex
-    """
 
 
 def test_relabeling_oracle_draft(spark, sf_dir):
@@ -389,7 +104,7 @@ def test_relabeling_oracle_draft(spark, sf_dir):
         o, "o_orderkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)),
         (F.col("o_orderstatus") == "O").cast("int")).toPandas()
-    want = _duck(sf_dir, _relabel_oracle())
+    want = _duck(sf_dir, registry.oracles()["q280_relabeling_test"])
     ok, msg = compare(got, want)
     assert ok, msg
 

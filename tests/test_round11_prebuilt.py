@@ -1,11 +1,9 @@
-"""Round-11 registration de-risking, fresh batch (the pattern's fourth
-round): Cochran-Armitage trend, Fleiss' kappa, quadratic-weighted
-kappa, mixture-conformance audit, two-sample Anderson-Darling, the
-turning-point randomness test, difference-in-differences, the
-covariate balance table, PACF (Durbin-Levinson), and the STL
-trend/seasonal strength pair — DuckDB oracles DRAFTED and
-driver-gate-compared here, so registering next rotation is a pure
-registry edit."""
+"""Cochran-Armitage trend, Fleiss' kappa, quadratic-weighted kappa,
+mixture-conformance audit, two-sample Anderson-Darling, the
+turning-point randomness test, difference-in-differences, the covariate
+balance table, PACF (Durbin-Levinson) and the STL trend/seasonal
+strength pair: each kernel call is compared with its registered DuckDB
+oracle, alongside property pins on planted fixtures."""
 
 from __future__ import annotations
 
@@ -23,6 +21,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
 
 from check_oracle import compare  # noqa: E402
 
+from auto_ml_platform_with_timeseries_data_spark import registry  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.operators import (  # noqa: E402
     curation,
     evaluation,
@@ -40,43 +39,6 @@ def _duck(sf_dir: str, sql: str):
     return con.sql(sql).df()
 
 
-_CA_ORACLE = """
-    WITH s AS (
-      SELECT CAST(floor(l_quantity) AS BIGINT) // 10 AS w,
-             CAST(l_returnflag = 'R' AS BIGINT) AS y
-      FROM lineitem WHERE l_quantity IS NOT NULL
-    ),
-    cells AS (
-      SELECT w, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(y) AS BIGINT) AS x
-      FROM s GROUP BY w
-    ),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS k,
-             CAST(sum(n) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS x,
-             sum(CAST(x AS HUGEINT) * w) AS xw,
-             sum(CAST(n AS HUGEINT) * w) AS nw,
-             sum(CAST(n AS HUGEINT) * w * w) AS nww
-      FROM cells
-    ),
-    ex AS (
-      SELECT k, n, x,
-             CAST(xw AS DOUBLE)
-             - (CAST(x AS DOUBLE) / CAST(n AS DOUBLE)) * nw AS t,
-             (CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-             * (1 - CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-             * (CAST(nww AS DOUBLE)
-                - CAST(nw AS DOUBLE) * nw / CAST(n AS DOUBLE)) AS var
-      FROM agg
-    )
-    SELECT k, n, x,
-           CASE WHEN k > 1 AND x > 0 AND x < n AND var > 0 THEN
-             floor(t / sqrt(var) * 1e6 + 0.5) / 1e6
-           END AS z
-    FROM ex
-"""
-
-
 def test_cochran_armitage_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -85,53 +47,9 @@ def test_cochran_armitage_oracle_draft(spark, sf_dir):
         li.filter(F.col("l_quantity").isNotNull()),
         F.expr("cast(floor(l_quantity) as bigint) div 10"),
         (F.col("l_returnflag") == "R").cast("long")).toPandas()
-    want = _duck(sf_dir, _CA_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q282_cochran_armitage"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_FLEISS_ORACLE = """
-    WITH src AS (
-      SELECT l_orderkey AS i, l_returnflag AS r
-      FROM lineitem WHERE l_linenumber <= 3
-    ),
-    fl AS (
-      SELECT i, r FROM src
-      WHERE i IN (SELECT i FROM src GROUP BY i HAVING count(*) = 3)
-    ),
-    cells AS (
-      SELECT i, r, CAST(count(*) AS BIGINT) AS c FROM fl GROUP BY i, r
-    ),
-    marg AS (SELECT r, CAST(sum(c) AS BIGINT) AS m FROM cells GROUP BY r),
-    magg AS (
-      SELECT CAST(count(*) AS BIGINT) AS kc,
-             sum(CAST(m AS HUGEINT) * m) AS m2,
-             CAST(sum(m) AS BIGINT) AS tot
-      FROM marg
-    ),
-    iagg AS (
-      SELECT CAST(count(DISTINCT i) AS BIGINT) AS ni,
-             sum(CAST(c AS HUGEINT) * c) AS s2
-      FROM cells
-    ),
-    ex AS (
-      SELECT ni, kc,
-             (CAST(s2 AS DOUBLE) - CAST(ni AS DOUBLE) * 3.0)
-             / (CAST(ni AS DOUBLE) * 3.0 * 2.0) AS p_bar,
-             CAST(m2 AS DOUBLE) / (CAST(tot AS DOUBLE) * tot) AS p_e
-      FROM iagg, magg
-    )
-    SELECT ni AS n_items, CAST(3 AS BIGINT) AS n_raters,
-           kc AS k_categories,
-           CASE WHEN ni > 0 THEN floor(p_bar * 1e6 + 0.5) / 1e6 END
-             AS p_bar,
-           CASE WHEN ni > 0 THEN floor(p_e * 1e6 + 0.5) / 1e6 END
-             AS p_e,
-           CASE WHEN ni > 0 AND p_e < 1 THEN
-             floor((p_bar - p_e) / (1 - p_e) * 1e6 + 0.5) / 1e6
-           END AS kappa
-    FROM ex
-"""
 
 
 def test_fleiss_kappa_oracle_draft(spark, sf_dir):
@@ -143,42 +61,9 @@ def test_fleiss_kappa_oracle_draft(spark, sf_dir):
         F.col("l_returnflag").alias("rating"))
     got = evaluation.fleiss_kappa(
         src, "item", F.col("rating"), nraters=3).toPandas()
-    want = _duck(sf_dir, _FLEISS_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q285_fleiss_kappa"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_WKAPPA_ORACLE = """
-    WITH s AS (
-      SELECT CAST(floor(l_quantity / 10) AS BIGINT) AS a,
-             CAST(least(floor(l_extendedprice / 20000), 5) AS BIGINT)
-               AS b
-      FROM lineitem
-      WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    ),
-    cells AS (
-      SELECT a, b, CAST(count(*) AS BIGINT) AS o FROM s GROUP BY a, b
-    ),
-    obs AS (
-      SELECT CAST(sum(o) AS BIGINT) AS n,
-             CAST(count(DISTINCT a) AS BIGINT) AS ka,
-             CAST(count(DISTINCT b) AS BIGINT) AS kb,
-             sum(CAST((a - b) * (a - b) AS HUGEINT) * o) AS wo
-      FROM cells
-    ),
-    ra AS (SELECT a, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY a),
-    cb AS (SELECT b, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY b),
-    we AS (
-      SELECT sum(CAST((a - b) * (a - b) AS HUGEINT) * r * c) AS we
-      FROM ra, cb
-    )
-    SELECT n, ka AS k_a, kb AS k_b,
-           CASE WHEN n > 0 AND we > 0 THEN
-             floor((1 - CAST(wo AS DOUBLE) * n / CAST(we AS DOUBLE))
-                   * 1e6 + 0.5) / 1e6
-           END AS kappa_w
-    FROM obs, we
-"""
 
 
 def test_weighted_kappa_oracle_draft(spark, sf_dir):
@@ -191,7 +76,7 @@ def test_weighted_kappa_oracle_draft(spark, sf_dir):
         li, F.floor(F.col("l_quantity") / 10).cast("long"),
         F.least(F.floor(F.col("l_extendedprice") / 20000),
                 F.lit(5.0)).cast("long")).toPandas()
-    want = _duck(sf_dir, _WKAPPA_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q286_weighted_kappa"])
     ok, msg = compare(got, want)
     assert ok, msg
 
@@ -200,108 +85,15 @@ _MIX_SPEC = {f"src{i}": 50_000 for i in range(16)}
 _MIX_SPEC["src16"] = 200_000
 
 
-def _mix_oracle() -> str:
-    declared = ", ".join(f"('{k}', {v})" for k, v in
-                         sorted(_MIX_SPEC.items()))
-    inlist = ", ".join(f"'{k}'" for k in sorted(_MIX_SPEC))
-    return f"""
-    WITH spec AS (
-      SELECT * FROM (VALUES {declared}, ('__other__', 0))
-        AS t(category, expected_ppm)
-    ),
-    cells AS (
-      SELECT CASE WHEN source IN ({inlist}) THEN source
-                  ELSE '__other__' END AS category,
-             CAST(count(*) AS BIGINT) AS n
-      FROM documents GROUP BY 1
-    ),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) AS tot FROM cells),
-    fl AS (
-      SELECT coalesce(s.category, c.category) AS category,
-             CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-             CAST(coalesce(s.expected_ppm, 0) AS BIGINT)
-               AS expected_ppm,
-             tot
-      FROM spec s FULL JOIN cells c ON s.category = c.category, tot
-    )
-    SELECT category, n, expected_ppm,
-           CAST((n * 1000000) // tot AS BIGINT) AS observed_ppm,
-           CAST((n * 1000000) // tot - expected_ppm AS BIGINT)
-             AS deviation_ppm,
-           CASE WHEN expected_ppm > 0 THEN
-             floor((n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   * (n - CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   / (CAST(expected_ppm AS DOUBLE) / 1e6 * tot)
-                   * 1e6 + 0.5) / 1e6
-           END AS chi2_term
-    FROM fl
-"""
-
-
 def test_mixture_conformance_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     got = curation.mixture_conformance(
         docs, "source", _MIX_SPEC).toPandas()
-    want = _duck(sf_dir, _mix_oracle())
+    want = _duck(sf_dir, registry.oracles()["q287_mixture_conformance"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-def _ad_oracle() -> str:
-    from auto_ml_platform_with_timeseries_data_spark.operators.curation import (
-        _hash_u32_sql,
-    )
-
-    return f"""
-    WITH s AS (
-      SELECT n_chars,
-             CASE WHEN {_hash_u32_sql('doc_id')} % 100 < 80 THEN 'train'
-                  WHEN {_hash_u32_sql('doc_id')} % 100 < 90 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM documents
-    ),
-    c AS (
-      SELECT CAST(n_chars AS DOUBLE) AS v,
-             CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-               AS BIGINT) AS ca,
-             CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-               AS BIGINT) AS cb
-      FROM s WHERE split IN ('train', 'test') GROUP BY 1
-    ),
-    m AS (
-      SELECT ca + cb AS l,
-             sum(ca) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS ma,
-             sum(cb) OVER (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS mb,
-             sum(ca) OVER () AS na, sum(cb) OVER () AS nb
-      FROM c
-    ),
-    t AS (
-      SELECT na, nb,
-             CAST(floor(
-               CAST(l AS DOUBLE)
-               * (CAST(CAST((na + nb) * ma - na * (ma + mb) AS HUGEINT)
-                       * ((na + nb) * ma - na * (ma + mb)) AS DOUBLE)
-                  / na
-                  + CAST(CAST((na + nb) * mb - nb * (ma + mb) AS HUGEINT)
-                         * ((na + nb) * mb - nb * (ma + mb)) AS DOUBLE)
-                    / nb)
-               / (CAST(na + nb AS DOUBLE) * (ma + mb)
-                  * ((na + nb) - (ma + mb)))
-               * 1e12) AS BIGINT) AS q
-      FROM m
-      WHERE na > 0 AND nb > 0 AND ma + mb < na + nb
-    )
-    SELECT CAST(max(na) AS BIGINT) AS n_a,
-           CAST(max(nb) AS BIGINT) AS n_b,
-           floor(sum(q) / 1e12 * 1e6 + 0.5) / 1e6 AS a2
-    FROM t
-"""
 
 
 def test_anderson_darling_oracle_draft(spark, sf_dir):
@@ -314,37 +106,9 @@ def test_anderson_darling_oracle_draft(spark, sf_dir):
     split = hash_split(docs, "doc_id")
     got = curation.anderson_darling_2s(
         split, "n_chars", "split", "train", "test").toPandas()
-    want = _duck(sf_dir, _ad_oracle())
+    want = _duck(sf_dir, registry.oracles()["q288_anderson_darling"])
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_TP_ORACLE = """
-    WITH s AS (
-      SELECT user_id AS g, value AS v,
-             lag(value) OVER w AS pv, lead(value) OVER w AS nv
-      FROM events WHERE value IS NOT NULL
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    per AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN pv IS NOT NULL AND nv IS NOT NULL
-                       AND ((pv < v AND nv < v) OR (pv > v AND nv > v))
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_turns
-      FROM s GROUP BY g
-    )
-    SELECT g AS user_id, n, n_turns,
-           CASE WHEN n >= 3 THEN
-             floor(2 * (CAST(n AS DOUBLE) - 2) / 3 * 1e6 + 0.5) / 1e6
-           END AS expected,
-           CASE WHEN n >= 3
-                AND (16 * CAST(n AS DOUBLE) - 29) / 90 > 0 THEN
-             floor((n_turns - 2 * (CAST(n AS DOUBLE) - 2) / 3)
-                   / sqrt((16 * CAST(n AS DOUBLE) - 29) / 90)
-                   * 1e6 + 0.5) / 1e6
-           END AS z
-    FROM per
-"""
 
 
 def test_turning_points_oracle_draft(spark, sf_dir):
@@ -354,7 +118,7 @@ def test_turning_points_oracle_draft(spark, sf_dir):
         F.col("value").isNotNull())
     got = ts_features.turning_points(
         ev, "user_id", "ts", "value", tie_break="event_id").toPandas()
-    want = _duck(sf_dir, _TP_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q289_turning_points"])
     ok, msg = compare(got, want)
     assert ok, msg
 
@@ -482,83 +246,6 @@ def test_turning_points_known_sequences(spark):
     assert out[0]["expected"] == _PIN(2 * 18 / 3)
 
 
-_DID_ORACLE = """
-    WITH s AS (
-      SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
-             CAST(o_orderpriority IN ('1-URGENT', '2-HIGH') AS INT)
-               AS t,
-             CAST(o_orderdate >= DATE '1995-01-01' AS INT) AS p
-      FROM orders WHERE o_totalprice IS NOT NULL
-    ),
-    agg AS (
-      SELECT
-        CAST(sum(CASE WHEN t = 1 AND p = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_t0,
-        CAST(sum(CASE WHEN t = 1 AND p = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_t1,
-        CAST(sum(CASE WHEN t = 0 AND p = 0 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_c0,
-        CAST(sum(CASE WHEN t = 0 AND p = 1 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_c1,
-        sum(CASE WHEN t = 1 AND p = 0 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_t0,
-        sum(CASE WHEN t = 1 AND p = 1 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_t1,
-        sum(CASE WHEN t = 0 AND p = 0 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_c0,
-        sum(CASE WHEN t = 0 AND p = 1 THEN CAST(v AS HUGEINT)
-            ELSE 0 END) AS s_c1,
-        sum(CASE WHEN t = 1 AND p = 0 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_t0,
-        sum(CASE WHEN t = 1 AND p = 1 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_t1,
-        sum(CASE WHEN t = 0 AND p = 0 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_c0,
-        sum(CASE WHEN t = 0 AND p = 1 THEN CAST(v AS HUGEINT) * v
-            ELSE 0 END) AS q_c1
-      FROM s
-    ),
-    ex AS (
-      SELECT *,
-        CAST(s_t0 AS DOUBLE) / n_t0 AS m_t0,
-        CAST(s_t1 AS DOUBLE) / n_t1 AS m_t1,
-        CAST(s_c0 AS DOUBLE) / n_c0 AS m_c0,
-        CAST(s_c1 AS DOUBLE) / n_c1 AS m_c1,
-        (CAST(q_t0 AS DOUBLE) - CAST(s_t0 AS DOUBLE) * s_t0 / n_t0)
-          / CAST(n_t0 - 1 AS DOUBLE) AS v_t0,
-        (CAST(q_t1 AS DOUBLE) - CAST(s_t1 AS DOUBLE) * s_t1 / n_t1)
-          / CAST(n_t1 - 1 AS DOUBLE) AS v_t1,
-        (CAST(q_c0 AS DOUBLE) - CAST(s_c0 AS DOUBLE) * s_c0 / n_c0)
-          / CAST(n_c0 - 1 AS DOUBLE) AS v_c0,
-        (CAST(q_c1 AS DOUBLE) - CAST(s_c1 AS DOUBLE) * s_c1 / n_c1)
-          / CAST(n_c1 - 1 AS DOUBLE) AS v_c1
-      FROM agg
-    ),
-    fin AS (
-      SELECT *,
-        (m_t1 - m_t0) - (m_c1 - m_c0) AS did_raw,
-        v_t0 / n_t0 + v_t1 / n_t1 + v_c0 / n_c0 + v_c1 / n_c1 AS se2,
-        (n_t0 > 1 AND n_t1 > 1 AND n_c0 > 1 AND n_c1 > 1) AS ok
-      FROM ex
-    )
-    SELECT n_t0, n_t1, n_c0, n_c1,
-      CASE WHEN n_t0 > 0 THEN floor(m_t0 * 1e6 + 0.5) / 1e6 END
-        AS mean_t0,
-      CASE WHEN n_t1 > 0 THEN floor(m_t1 * 1e6 + 0.5) / 1e6 END
-        AS mean_t1,
-      CASE WHEN n_c0 > 0 THEN floor(m_c0 * 1e6 + 0.5) / 1e6 END
-        AS mean_c0,
-      CASE WHEN n_c1 > 0 THEN floor(m_c1 * 1e6 + 0.5) / 1e6 END
-        AS mean_c1,
-      CASE WHEN ok THEN floor(did_raw * 1e6 + 0.5) / 1e6 END AS did,
-      CASE WHEN ok AND se2 > 0 THEN
-        floor(sqrt(se2) * 1e6 + 0.5) / 1e6 END AS se,
-      CASE WHEN ok AND se2 > 0 THEN
-        floor(did_raw / sqrt(se2) * 1e6 + 0.5) / 1e6 END AS z
-    FROM fin
-"""
-
-
 def test_diff_in_diff_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -572,68 +259,9 @@ def test_diff_in_diff_oracle_draft(spark, sf_dir):
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
         F.col("o_orderdate") >= F.lit("1995-01-01").cast("date"))\
         .toPandas()
-    want = con.sql(_DID_ORACLE).df()
+    want = con.sql(registry.oracles()["q283_diff_in_diff"]).df()
     ok, msg = compare(got, want)
     assert ok, msg
-
-
-_BAL_ORACLE = """
-    WITH m AS (
-      SELECT 'discount_pct' AS f,
-             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS v,
-             CAST(l_returnflag = 'R' AS INT) AS a
-      FROM lineitem WHERE l_discount IS NOT NULL
-      UNION ALL
-      SELECT 'price_cents',
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_extendedprice IS NOT NULL
-      UNION ALL
-      SELECT 'quantity', CAST(floor(l_quantity) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_quantity IS NOT NULL
-      UNION ALL
-      SELECT 'tax_pct', CAST(floor(l_tax * 100 + 0.5) AS BIGINT),
-             CAST(l_returnflag = 'R' AS INT)
-      FROM lineitem WHERE l_tax IS NOT NULL
-    ),
-    agg AS (
-      SELECT f,
-             CAST(sum(a) AS BIGINT) AS n_a,
-             CAST(sum(1 - a) AS BIGINT) AS n_b,
-             sum(CASE WHEN a = 1 THEN CAST(v AS HUGEINT) ELSE 0 END)
-               AS sa,
-             sum(CASE WHEN a = 0 THEN CAST(v AS HUGEINT) ELSE 0 END)
-               AS sb,
-             sum(CASE WHEN a = 1 THEN CAST(v AS HUGEINT) * v
-                 ELSE 0 END) AS qa,
-             sum(CASE WHEN a = 0 THEN CAST(v AS HUGEINT) * v
-                 ELSE 0 END) AS qb
-      FROM m GROUP BY f
-    ),
-    ex AS (
-      SELECT f, n_a, n_b,
-             CAST(sa AS DOUBLE) / n_a AS ma,
-             CAST(sb AS DOUBLE) / n_b AS mb,
-             (CAST(qa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n_a)
-               / CAST(n_a - 1 AS DOUBLE) AS va,
-             (CAST(qb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n_b)
-               / CAST(n_b - 1 AS DOUBLE) AS vb
-      FROM agg
-    )
-    SELECT f AS feature, n_a, n_b,
-      CASE WHEN n_a > 0 THEN floor(ma * 1e6 + 0.5) / 1e6 END
-        AS mean_a,
-      CASE WHEN n_b > 0 THEN floor(mb * 1e6 + 0.5) / 1e6 END
-        AS mean_b,
-      CASE WHEN n_a > 1 AND n_b > 1 AND (va + vb) / 2 > 0 THEN
-        floor((ma - mb) / sqrt((va + vb) / 2) * 1e6 + 0.5) / 1e6
-      END AS smd,
-      CASE WHEN n_a > 1 AND n_b > 1 AND vb > 0 THEN
-        floor(va / vb * 1e6 + 0.5) / 1e6
-      END AS var_ratio
-    FROM ex
-"""
 
 
 def test_covariate_balance_oracle_draft(spark, sf_dir):
@@ -649,7 +277,7 @@ def test_covariate_balance_oracle_draft(spark, sf_dir):
     }
     got = validation.covariate_balance(
         li, (F.col("l_returnflag") == "R").cast("int"), feats).toPandas()
-    want = _duck(sf_dir, _BAL_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q284_covariate_balance"])
     ok, msg = compare(got, want)
     assert ok, msg
 
@@ -751,53 +379,6 @@ def test_pacf_constant_series_null_by_contract(spark):
     assert len(out) == 5 and all(r["pacf"] is None for r in out)
 
 
-_TSS_ORACLE = """
-    WITH base AS (
-      SELECT user_id AS g, CAST(value AS DOUBLE) AS v, ts, event_id,
-             CAST(hour(ts) AS INT) AS s
-      FROM events WHERE value IS NOT NULL
-    ),
-    t AS (
-      SELECT g, v, s,
-             avg(v) OVER (PARTITION BY g ORDER BY ts, event_id
-               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend
-      FROM base
-    ),
-    d AS (SELECT g, v, s, v - trend AS dd FROM t),
-    prof AS (SELECT g, s, avg(dd) AS seas FROM d GROUP BY g, s),
-    j AS (
-      SELECT d.g, d.v, d.dd, d.dd - p.seas AS r,
-             d.v - p.seas AS deseason
-      FROM d JOIN prof p ON d.g = p.g AND d.s = p.s
-    ),
-    agg AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n,
-             sum(r) AS sr, sum(r * r) AS qr,
-             sum(dd) AS sd, sum(dd * dd) AS qd,
-             sum(deseason) AS su, sum(deseason * deseason) AS qu
-      FROM j GROUP BY g
-    ),
-    ex AS (
-      SELECT g, n,
-             (qr - sr * sr / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-               AS vr,
-             (qd - sd * sd / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-               AS vd,
-             (qu - su * su / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-               AS vu
-      FROM agg
-    )
-    SELECT g AS user_id, n,
-           CASE WHEN vu > 0 THEN
-             floor(greatest(0.0, 1 - vr / vu) * 1e6 + 0.5) / 1e6
-           END AS trend_strength,
-           CASE WHEN vd > 0 THEN
-             floor(greatest(0.0, 1 - vr / vd) * 1e6 + 0.5) / 1e6
-           END AS seasonal_strength
-    FROM ex
-"""
-
-
 def test_trend_seasonal_strength_oracle_draft(spark, sf_dir):
     from auto_ml_platform_with_timeseries_data_spark.tables import load_table
 
@@ -805,7 +386,7 @@ def test_trend_seasonal_strength_oracle_draft(spark, sf_dir):
     got = ts_features.trend_seasonal_strength(
         ev, "user_id", "ts", "value", F.hour("ts").cast("int"),
         tie_break="event_id").toPandas()
-    want = _duck(sf_dir, _TSS_ORACLE)
+    want = _duck(sf_dir, registry.oracles()["q290_trend_strength"])
     ok, msg = compare(got, want)
     assert ok, msg
 

@@ -27,6 +27,7 @@ from check_oracle import TABLES, compare  # noqa: E402
 
 from auto_ml_platform_with_timeseries_data_spark import registry  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.operators import (  # noqa: E402
+    curation,
     evaluation,
     forecast,
     multimodal,
@@ -42,10 +43,13 @@ _NEW = (
     "q309_ses_forecast", "q310_holt_forecast",
 )
 # every oracle-backed query of the per-series forecast and
-# time-series-feature kernels and of the similarity and multimodal
-# families, selected by module
+# time-series-feature kernels, of the similarity and multimodal
+# families and of the validation, evaluation and curation statistics,
+# selected by module
 _GATED_MODULES = (forecast.__name__, ts_features.__name__,
-                  similarity.__name__, multimodal.__name__)
+                  similarity.__name__, multimodal.__name__,
+                  validation.__name__, evaluation.__name__,
+                  curation.__name__)
 _GATED = tuple(
     name for name, fn in registry.queries().items()
     if fn.__module__ in _GATED_MODULES and name in registry.oracles()

@@ -1,12 +1,15 @@
 """Table handles start no Spark job once a file's schema is known, and
 query intermediates have one owner: ``tables.keep`` persists or
 checkpoints them, the registry releases them when the thread's next
-query starts, and nothing else in the package persists."""
+query starts, and nothing else in the package persists. The operators
+also share one exact-statistics vocabulary (``operators.timeseries``):
+no module writes the 1e-6 readout or an exact square by hand."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 import sys
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
@@ -17,6 +20,7 @@ from pyspark.sql import functions as F
 
 import auto_ml_platform_with_timeseries_data_spark as pkg
 from auto_ml_platform_with_timeseries_data_spark import registry, tables
+from auto_ml_platform_with_timeseries_data_spark.operators import timeseries
 
 
 def _jobs(spark, group: str, fn: Callable[[], object]) -> int:
@@ -211,4 +215,49 @@ def test_only_tables_persists():
             path = os.path.join(dirpath, f)
             if f.endswith(".py") and path != tables.__file__:
                 found += _persist_calls(path)
+    assert found == []
+
+
+# the hand-written copies of the shared vocabulary: the 1e-6 readout in
+# SQL (pin_sql), in Spark (pin) and on the driver (pin_float), and the
+# exact square dec(x) * dec(x) (dec_sq, which exact_moments sums)
+_MICRO = r"(?:1e6|1_000_000|1000000)"
+_HAND_COPIES = (
+    re.compile(rf"\*\s*{_MICRO}\s*\+\s*0\.5\)\s*/\s*{_MICRO}"),
+    re.compile(rf"\*\s*{_MICRO}\s*\+\s*F\.lit\(0\.5\)\)\s*/\s*{_MICRO}"),
+    re.compile(r"dec\((?P<x>[^()]*(?:\([^()]*\))*[^()]*)\)"
+               r"\s*\*\s*dec\((?P=x)\)"),
+)
+_VOCABULARY = {"pin", "pin_sql", "pin_float", "dec_sq"}
+
+
+def _hand_copies(path: str) -> list[str]:
+    """Hand-written vocabulary in one module (outside the vocabulary's
+    own definitions) and any local function or variable named pin."""
+    with open(path, encoding="utf-8") as fh:
+        src = fh.read()
+    tree = ast.parse(src, path)
+    own = [range(n.lineno, n.end_lineno + 1) for n in tree.body
+           if path == timeseries.__file__
+           and isinstance(n, ast.FunctionDef) and n.name in _VOCABULARY]
+    found = [f"{path}:{src.count(chr(10), 0, m.start()) + 1} {m.group(0)}"
+             for pat in _HAND_COPIES for m in pat.finditer(src)
+             if not any(src.count(chr(10), 0, m.start()) + 1 in r
+                        for r in own)]
+    pins = [n.lineno for n in ast.walk(tree)
+            if (isinstance(n, ast.FunctionDef) and n.name == "pin"
+                and path != timeseries.__file__)
+            or (isinstance(n, ast.Name) and n.id == "pin"
+                and isinstance(n.ctx, ast.Store))]
+    return found + [f"{path}:{line} local pin" for line in pins]
+
+
+def test_operators_use_the_exact_statistics_vocabulary():
+    """No operator module writes floor(x * 1e6 + 0.5) / 1e6 or
+    dec(x) * dec(x) by hand, or defines its own pin."""
+    root = os.path.dirname(timeseries.__file__)
+    found = []
+    for f in sorted(os.listdir(root)):
+        if f.endswith(".py"):
+            found += _hand_copies(os.path.join(root, f))
     assert found == []
