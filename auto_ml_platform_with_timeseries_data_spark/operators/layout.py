@@ -498,8 +498,7 @@ def continuous_aggregate_refresh(events: DataFrame, ts_col: str,
     version. Streaming sibling: q39/q182."""
     ev = events.select(
         F.date_trunc("hour", F.col(ts_col)).alias("__bucket"),
-        cents(value_col).cast("long")
-        .alias("__cents"),
+        cents(value_col).cast("long").alias("__cents"),
         delta_pred.alias("__is_delta"),
     )
     old_agg = (ev.filter(~F.col("__is_delta"))
@@ -714,8 +713,7 @@ def q218_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         (cents("l_extendedprice").cast("long")
-         * (F.lit(100) -
-            cents("l_discount").cast("long")))
+         * (F.lit(100) - cents("l_discount").cast("long")))
         .alias("rev")).withColumnRenamed("l_orderkey", "o_orderkey")
     old_o = o.filter(F.col("o_orderkey") % 10 != 0)
     new_o = o.filter(F.col("o_orderkey") % 10 == 0)

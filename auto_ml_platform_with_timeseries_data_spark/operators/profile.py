@@ -533,8 +533,7 @@ def corr_matrix(df: DataFrame, cols: list[str],
     expression are shared verbatim, so both correlations carry the
     same exactness contract."""
     if quantize:
-        q = {c: cents(c).cast("long")
-             for c in cols}
+        q = {c: cents(c).cast("long") for c in cols}
     else:
         q = {c: F.col(c).cast("long") for c in cols}
     aggs = [F.count(F.lit(1)).alias("n")]
@@ -571,7 +570,7 @@ def corr_matrix(df: DataFrame, cols: list[str],
 
 
 def _corr_oracle(cols=_CORR_COLS) -> str:
-    qs = {c: f"{cents_sql(c)}" for c in cols}
+    qs = {c: cents_sql(c) for c in cols}
     sums = ",\n             ".join(
         f"CAST(sum({qs[c]}) AS HUGEINT) AS s_{c},\n             "
         f"CAST(sum({qs[c]} * {qs[c]}) AS HUGEINT) AS ss_{c}"
@@ -831,10 +830,8 @@ def mutual_information(df: DataFrame, features: dict[str, Column],
 
 _MI_FEATURES_SQL = {
     "quantity": "CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)",
-    "discount_pct": f"CAST({cents_sql('l_discount')}"
-                    " AS VARCHAR)",
-    "tax_pct": f"CAST({cents_sql('l_tax')}"
-               " AS VARCHAR)",
+    "discount_pct": f"CAST({cents_sql('l_discount')} AS VARCHAR)",
+    "tax_pct": f"CAST({cents_sql('l_tax')} AS VARCHAR)",
     "linestatus": "l_linestatus",
 }
 
@@ -874,10 +871,8 @@ def q229_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     feats = {
         "quantity": F.col("l_quantity").cast("long"),
-        "discount_pct": cents("l_discount")
-        .cast("long"),
-        "tax_pct": cents("l_tax")
-        .cast("long"),
+        "discount_pct": cents("l_discount").cast("long"),
+        "tax_pct": cents("l_tax").cast("long"),
         "linestatus": F.col("l_linestatus"),
     }
     return mutual_information(li, feats,
@@ -968,8 +963,7 @@ def q263_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient one pinned hash-checked double."""
     li = load_table(spark, sf_dir, "lineitem")
     return gini_coefficient(
-        li, cents("l_extendedprice")
-        .cast("long"))
+        li, cents("l_extendedprice").cast("long"))
 
 
 def hhi_concentration(df: DataFrame, dim_col: str) -> DataFrame:
@@ -1118,5 +1112,4 @@ def q270_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked."""
     li = load_table(spark, sf_dir, "lineitem")
     return lorenz_curve(
-        li, cents("l_extendedprice")
-        .cast("long"))
+        li, cents("l_extendedprice").cast("long"))

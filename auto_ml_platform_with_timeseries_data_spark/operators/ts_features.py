@@ -749,8 +749,7 @@ def _event_series(ev: DataFrame, group_col: str) -> DataFrame:
     return ev.select(
         F.col(group_col).alias("__g"), "event_id",
         F.floor(F.col("ts").cast("double")).cast("long").alias("__s"),
-        cents("value").cast("long")
-        .alias("__c"))
+        cents("value").cast("long").alias("__c"))
 
 
 def theil_sen_slopes(ev: DataFrame, group_col: str) -> DataFrame:

@@ -35,6 +35,8 @@ explicit contract a multi-tenant platform needs.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -580,15 +582,13 @@ def q262_two_proportion_z(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every draw and the driver can hash the result.
 # ---------------------------------------------------------------------------
 
-import math as _math
-
 _BOOT_B = 32
 _BOOT_CAP = 5  # P(X > 5) ≈ 6e-5 per draw; capped tail documented
 _POIS_THRESH: list[int] = []
 _acc = 0.0
 for _k in range(_BOOT_CAP):
-    _acc += _math.exp(-1.0) / _math.factorial(_k)
-    _POIS_THRESH.append(int(_math.floor(_acc * 2 ** 32)))
+    _acc += math.exp(-1.0) / math.factorial(_k)
+    _POIS_THRESH.append(int(math.floor(_acc * 2 ** 32)))
 
 _BOOT_KNUTH = 2654435761
 _BOOT_PREMOD = 1000003
@@ -707,8 +707,6 @@ def poisson_bootstrap_mean(df: DataFrame, id_col: str, value: Column,
     # Σ(B·Q_b − ΣQ)² (Python ints are arbitrary-precision — the
     # cents-scale squares that top int64 cost nothing), one sqrt at
     # the end.
-    import math
-
     spark = df.sparkSession
     schema = ("n long, point_mean double, boot_se double, "
               "ci_lo double, ci_hi double")
@@ -1219,7 +1217,6 @@ def bh_fdr(df: DataFrame, key_col: str, p_col: str,
         F.col("rk").cast("long").alias("rk"),
         F.col("m").cast("long").alias("m"),
         (F.col("rk") <= cutoff).cast("int").alias("rejected"))
-
 
 
 @query(
@@ -2038,7 +2035,7 @@ def chow_test(df: DataFrame, x: Column, y: Column,
                     + sums(F.lit(True), "p")))
 
     def sse(tag):
-        n = F.col(f"n{tag}" if tag != "p" else "np").cast("double")
+        n = F.col(f"n{tag}").cast("double")
         # ANSI null-safe divisors: Spark 4 raises DIVIDE_BY_ZERO even
         # for doubles, and the `ok` CONDITION below evaluates these
         # eagerly — an empty segment must yield NULL-by-contract (the
