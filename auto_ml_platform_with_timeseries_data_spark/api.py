@@ -18,7 +18,7 @@ Usage:
     server = ApiServer(spark)
     port = server.start()          # background thread
     ... POST http://localhost:{port}/upload ...
-    server.stop()
+    server.stop()                  # also frees every task's kept upload
 """
 
 from __future__ import annotations
@@ -59,7 +59,7 @@ class ApiServer:
 
     def display_data(self, params: dict) -> dict:          # GET /display-data
         task = self._task(params)
-        pdf = task.preview(5).toPandas()
+        pdf = task.preview()
         out = {"rows": json.loads(pdf.to_json(orient="records"))}
         if params.get("format") == "html":
             out["html"] = pdf.to_html()                    # app.py:58 parity
@@ -206,7 +206,10 @@ class ApiServer:
         return self._httpd.server_address[1]
 
     def stop(self) -> None:
+        """Stop serving and free every task's kept upload."""
         if self._httpd:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+        for task in self.tasks.values():
+            task.release()

@@ -19,19 +19,42 @@ Endpoint → method map:
   POST /start_ml + /confirm_training → Task.train
   POST /upload-test-data        → Task.ingest_test
   POST /evaluate                → Task.evaluate
+
+Ingest profile. The reference loads the upload into one pandas frame
+and answers the requests that follow from it (data_analysis.py:18).
+``Task.ingest`` does the same work once, on Spark:
+- it keeps the upload (``tables.keep``), so every later request reads
+  the materialized frame instead of parsing the file again;
+- one ``profile.column_stats`` aggregate records each column's non-null
+  count and each numeric column's min and max;
+- it records the first ``PREVIEW_ROWS`` rows.
+
+Invariant: ingest fixes the task's rows. Until the next ingest,
+``pre_analyze`` and ``set_supervised_options`` only drop columns, so the
+profile stays valid and the task projects it onto its current columns:
+the preview and the all-NaN check start no Spark job, and a histogram
+runs only its bucket aggregate.
+
+Lifetime: the task owns its kept upload. A re-ingest releases the
+previous one and ``Task.release`` (``ApiServer.stop`` calls it for
+every task) frees the current one, whichever thread kept it.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from auto_ml_platform_with_timeseries_data_spark import tables
 from auto_ml_platform_with_timeseries_data_spark.operators import evaluation as ev
 from auto_ml_platform_with_timeseries_data_spark.operators import profile as prof
 from auto_ml_platform_with_timeseries_data_spark.operators import timeseries as ts
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 @dataclass
@@ -47,6 +70,9 @@ class TaskConfig:
     mode: str = "regression"
 
 
+PREVIEW_ROWS = 5  # the reference's head() (data_analysis.py:58)
+
+
 class Task:
     def __init__(self, spark: SparkSession, taskname: str,
                  storage_dir: str = "task_storage"):
@@ -57,14 +83,29 @@ class Task:
         self.test_df: DataFrame | None = None
         self.model = None
         self.automl_result = None
+        # the ingest profile (module docstring)
+        self._upload: DataFrame | None = None
+        self._non_null: dict[str, int] = {}
+        self._bounds: dict[str, tuple] = {}
+        self._head: pd.DataFrame | None = None
 
     # -- ingest ------------------------------------------------------------
     def ingest(self, df_or_path) -> "Task":
         from auto_ml_platform_with_timeseries_data_spark.sources.readers import read_any
 
-        self.df = (df_or_path if isinstance(df_or_path, DataFrame)
-                   else read_any(self.spark, df_or_path))
+        df = (df_or_path if isinstance(df_or_path, DataFrame)
+              else read_any(self.spark, df_or_path))
+        self.release()
+        self.df = self._upload = tables.keep(df)
+        self._non_null, self._bounds = prof.column_stats(self.df)
+        self._head = prof.head(self.df, PREVIEW_ROWS).toPandas()
         return self
+
+    def release(self) -> None:
+        """Free the kept upload; the task's frame stays readable from
+        its source."""
+        if self._upload is not None:
+            tables.release(self._upload)
 
     def ingest_test(self, df_or_path) -> "Task":
         from auto_ml_platform_with_timeseries_data_spark.sources.readers import read_any
@@ -74,13 +115,17 @@ class Task:
         return self
 
     # -- profiling ---------------------------------------------------------
-    def preview(self, n: int = 5) -> DataFrame:
-        return prof.head(self._req(), n)
+    def preview(self) -> pd.DataFrame:
+        """The first PREVIEW_ROWS rows of the current columns, from the
+        ingest record."""
+        return self._head[self._req().columns]
 
     def pre_analyze(self) -> list[str]:
         """Drop all-NaN columns; record + return their names
-        (data_analysis.py:23-28 + app.py:62-70)."""
-        self.df, removed = prof.drop_all_nan_columns(self._req())
+        (data_analysis.py:23-28 + app.py:62-70), from the recorded
+        non-null counts."""
+        removed = [c for c in self._req().columns if self._non_null[c] == 0]
+        self.df = self.df.drop(*removed)
         self.config.nan_columns = removed
         return removed
 
@@ -111,7 +156,9 @@ class Task:
         return [c for c in self._req().columns if c not in skip]
 
     def histogram(self, column: str, nbins: int = 10) -> DataFrame:
-        return prof.histogram(self._req(), column, nbins)
+        if column not in self._req().columns or column not in self._bounds:
+            raise ValueError(f"no numeric column {column!r}")
+        return prof.histogram(self.df, column, nbins, *self._bounds[column])
 
     def correlation(self) -> DataFrame:
         numeric = [c for c, t in self._req().dtypes

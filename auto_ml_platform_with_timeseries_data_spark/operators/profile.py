@@ -16,14 +16,19 @@ map-side partial aggregation, no driver-side loops. The per-column
 null-count and per-feature correlation are each ONE ``agg`` over the
 table (k aggregate expressions), then an ``unpivot`` of the single
 result row — at 100 TB this is one pass with partial combine, not k
-passes. The histogram needs a min/max pre-pass; the tiny (1-row) stats
-result is broadcast-joined, never collected into the plan as a literal.
+passes. A histogram takes its column's bounds as arguments: one
+``column_stats`` aggregate collects the non-null count of every column
+and the min/max of every numeric one (one row of at most 3·k scalars,
+never data-sized), so the bucket aggregate is the histogram's only
+scan. The catalog Task runs ``column_stats`` once per upload and
+serves every later histogram from it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (
@@ -78,8 +83,8 @@ def null_profile(df: DataFrame) -> DataFrame:
 
 def all_nan_columns(df: DataFrame) -> list[str]:
     """Names of all-null columns (the reference's `nan_columns` report)."""
-    row = df.agg(*[F.count(F.col(c)).alias(c) for c in df.columns]).collect()[0]
-    return [c for c in df.columns if row[c] == 0]
+    non_null, _ = column_stats(df)
+    return [c for c, n in non_null.items() if n == 0]
 
 
 def drop_all_nan_columns(df: DataFrame) -> tuple[DataFrame, list[str]]:
@@ -95,17 +100,34 @@ def remove_features(df: DataFrame, features: list[str]) -> DataFrame:
     return df.drop(*features)
 
 
-def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
-    """Fixed-width histogram: (bin, bin_lo, bin_hi, cnt).
+def column_stats(df: DataFrame, cols: list[str] | None = None
+                 ) -> tuple[dict[str, int], dict[str, tuple]]:
+    """({column: non-null count}, {numeric column: (min, max)}) of
+    ``cols`` (default: every column), from ONE aggregate collected as
+    one row. min/max are None for an all-null column."""
+    fields = df.select(*(cols or df.columns)).schema.fields
+    numeric = [f.name for f in fields if isinstance(f.dataType, NumericType)]
+    row = df.agg(*[F.count(F.col(f.name)) for f in fields],
+                 *[F.min(F.col(c)) for c in numeric],
+                 *[F.max(F.col(c)) for c in numeric]).collect()[0]
+    k, m = len(fields), len(numeric)
+    non_null = {f.name: row[i] for i, f in enumerate(fields)}
+    bounds = {c: (row[k + i], row[k + m + i]) for i, c in enumerate(numeric)}
+    return non_null, bounds
+
+
+def histogram(df: DataFrame, col: str, nbins: int, lo, hi) -> DataFrame:
+    """Fixed-width histogram of ``col`` over [lo, hi], its min and max
+    (``column_stats``): (bin, bin_lo, bin_hi, cnt).
 
     The reference uses numpy bins='auto' (data_analysis.py:49); the engine
     standardizes on explicit fixed-width bins (parity on bin *contents*
-    given the same edges). min/max come from a 1-row aggregate that is
-    broadcast back — the table is scanned exactly twice, both passes
-    map-side-combined; no collect.
+    given the same edges). The bounds enter the plan as two literals of
+    the column's type, so the table is scanned once, map-side combined;
+    no collect.
     """
-    stats = df.agg(F.min(col).alias("__mn"), F.max(col).alias("__mx"))
-    x, mn, mx = F.col(col), F.col("__mn"), F.col("__mx")
+    t = df.select(col).schema.fields[0].dataType
+    x, mn, mx = F.col(col), F.lit(lo).cast(t), F.lit(hi).cast(t)
     # constant column: zero span puts everything in bin 0 (numpy's
     # behavior for constant data), instead of an ANSI divide error
     bucket = F.when(
@@ -114,18 +136,12 @@ def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
                 F.lit(nbins - 1)),
     ).otherwise(F.lit(0))
     return (
-        df.select(col)
-        .crossJoin(F.broadcast(stats))
-        .groupBy(bucket.alias("bin"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("__mn").alias("__mn"),
-            F.first("__mx").alias("__mx"),
-        )
+        df.groupBy(bucket.alias("bin"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             "bin",
-            F.round(F.col("__mn") + F.col("bin") * (F.col("__mx") - F.col("__mn")) / nbins, 6).alias("bin_lo"),
-            F.round(F.col("__mn") + (F.col("bin") + 1) * (F.col("__mx") - F.col("__mn")) / nbins, 6).alias("bin_hi"),
+            F.round(mn + F.col("bin") * (mx - mn) / nbins, 6).alias("bin_lo"),
+            F.round(mn + (F.col("bin") + 1) * (mx - mn) / nbins, 6).alias("bin_hi"),
             "cnt",
         )
     )
@@ -134,12 +150,12 @@ def histogram(df: DataFrame, col: str, nbins: int = 10) -> DataFrame:
 def histogram_auto(df: DataFrame, col: str) -> DataFrame:
     """numpy bins='auto' parity (SURVEY A3, data_analysis.py:49): bin
     count = max(Sturges, Freedman-Diaconis), derived from ONE stats
-    aggregate (n, min, max, IQR) — no collect; the 1-row stats frame is
-    broadcast and the bin arithmetic happens per row against it.
+    aggregate (n, min, max, IQR) whose single row — nbins, min, max —
+    is collected and handed to `histogram`.
 
     numpy: sturges_bins = ceil(log2(n)) + 1; fd width h = 2·IQR/∛n,
     fd_bins = ceil((max−min)/h); auto = max of the two (FD falls back to
-    Sturges when IQR = 0). Output shape matches `histogram`.
+    Sturges when IQR = 0). Output: `histogram`'s columns plus nbins.
     """
     stats = df.agg(
         F.count(col).alias("__n"),
@@ -153,32 +169,10 @@ def histogram_auto(df: DataFrame, col: str) -> DataFrame:
     sturges = F.ceil(F.log2(n)) + 1
     fd_width = F.lit(2.0) * iqr / F.pow(n, 1.0 / 3.0)
     fd = F.when(iqr > 0, F.ceil((mx - mn) / fd_width)).otherwise(F.lit(0))
-    nbins = F.greatest(sturges, fd).cast("int")
-    x = F.col(col)
-    bucket = F.when(
-        mx > mn,
-        F.least(F.floor((x - mn) * nbins / (mx - mn)).cast("int"),
-                nbins - 1),
-    ).otherwise(F.lit(0))
-    return (
-        df.select(col)
-        .crossJoin(F.broadcast(stats))
-        .groupBy(
-            bucket.alias("bin"),
-            nbins.alias("nbins"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("__mn").alias("__mn"),
-            F.first("__mx").alias("__mx"),
-        )
-        .select(
-            "bin", "nbins",
-            F.round(F.col("__mn") + F.col("bin") * (F.col("__mx") - F.col("__mn")) / F.col("nbins"), 6).alias("bin_lo"),
-            F.round(F.col("__mn") + (F.col("bin") + 1) * (F.col("__mx") - F.col("__mn")) / F.col("nbins"), 6).alias("bin_hi"),
-            "cnt",
-        )
-    )
+    nbins, lo, hi = stats.select(
+        F.greatest(sturges, fd).cast("int"), mn, mx).collect()[0]
+    return histogram(df, col, nbins, lo, hi).select(
+        "bin", F.lit(nbins).alias("nbins"), "bin_lo", "bin_hi", "cnt")
 
 
 def corr_with_label(df: DataFrame, features: list[str], label: str,
@@ -279,7 +273,9 @@ def q02_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q03_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return histogram(load_table(spark, sf_dir, "lineitem"), LINEITEM_LABEL, 10)
+    li = load_table(spark, sf_dir, "lineitem")
+    _, bounds = column_stats(li, [LINEITEM_LABEL])
+    return histogram(li, LINEITEM_LABEL, 10, *bounds[LINEITEM_LABEL])
 
 
 @query(

@@ -48,6 +48,11 @@ _RUNTIME_CONFS = {
 }
 
 
+# Confs whose absence changes results, not speed: tune() raises when
+# either does not apply.
+_CRITICAL_CONFS = ("spark.sql.session.timeZone",
+                   "spark.sql.parquet.inferTimestampNTZ.enabled")
+
 _TUNE_WARNED = False
 _SHIP_WARNED = False
 
@@ -63,15 +68,21 @@ def tune(spark: SparkSession) -> SparkSession:
     ``shuffle_partitions``, a caller's override) holds. A conf the
     session refuses (static on this build) keeps the session's value,
     and the first such call warns, naming every conf that did not apply.
+    A refused correctness-critical conf (_CRITICAL_CONFS) raises
+    RuntimeError instead, and the session stays untuned.
     """
     if getattr(spark, "_sparkgraft_tuned", False):
         return spark
-    failed = []
+    failed, critical = [], []
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception as exc:
-            failed.append(f"{k}={v} ({type(exc).__name__})")
+            (critical if k in _CRITICAL_CONFS else failed).append(
+                f"{k}={v} ({type(exc).__name__})")
+    if critical:
+        raise RuntimeError("session.tune: correctness-critical confs did "
+                           "not apply: " + ", ".join(critical))
     global _TUNE_WARNED
     if failed and not _TUNE_WARNED:
         _TUNE_WARNED = True

@@ -99,6 +99,8 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append",
 # Registered query: a REAL incremental streaming run, oracle-checked
 # ---------------------------------------------------------------------------
 
+from auto_ml_platform_with_timeseries_data_spark.operators.timeseries import (  # noqa: E402
+    cents, cents_sql)
 from auto_ml_platform_with_timeseries_data_spark.registry import query  # noqa: E402
 from auto_ml_platform_with_timeseries_data_spark.tables import (  # noqa: E402
     keep, load_table, release)
@@ -818,8 +820,7 @@ def rollup_partial(bdf: DataFrame) -> DataFrame:
     """Hourly (bucket, count, integer-cent sum) partial of one batch."""
     return (bdf.select(
         F.date_trunc("hour", F.col("ts")).alias("bucket"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        .alias("cents"))
+        cents("value").cast("long").alias("cents"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.sum("cents").alias("sum_cents")))
@@ -920,11 +921,10 @@ def rollup_merge_epoch(spark_or_bdf_session, bdf: DataFrame,
 
 @query(
     "q204_stream_continuous_aggregate",
-    oracle="""
+    oracle=f"""
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS sum_cents
+           CAST(sum({cents_sql("value")}) AS BIGINT) AS sum_cents
     FROM events GROUP BY 1
     """,
 )
@@ -1389,7 +1389,7 @@ def fleet_triage_epoch(sp: SparkSession, bdf: DataFrame, epoch_id: int,
         hist = hist.join(touched, "user_id", "left_semi")
         evid = fleet_evidence(
             hist.drop("__bkt"), "user_id", "ts", "event_id", "value",
-            F.floor(F.col("value") * 100 + F.lit(0.5)), tie_break="event_id")
+            cents("value"), tie_break="event_id")
         # Cluster by bucket before the partitioned write: without this,
         # every write task emits a file into every bucket it saw (tasks x
         # buckets small files — measured 3.3x slower sliver epochs at 100x

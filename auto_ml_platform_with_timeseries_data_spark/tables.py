@@ -103,8 +103,11 @@ class _Kept(threading.local):
 
 
 # Per-thread record of kept frames; registry.query releases a thread's
-# frames when its next query starts.
+# frames when its next query starts. Each kept handle also carries the
+# list that records it (_OWNER), so release() finds it from any thread.
 _KEPT = _Kept()
+_OWNER = "_sparkgraft_kept_by"
+_RELEASE_LOCK = threading.Lock()
 PERSIST_SRC_MB_ENV = "SPARK_GRAFT_PERSIST_SRC_MB"
 _PERSIST_SRC_MB_DEFAULT = 256.0
 _PROBE_WARNED = False
@@ -114,7 +117,9 @@ def keep(frame: DataFrame, *, source: DataFrame | None = None,
          checkpoint: bool = False) -> DataFrame:
     """Persist ``frame`` (or, with ``checkpoint``, localCheckpoint it
     eagerly) for the rest of the current query and return the handle to
-    read from. The persist adds no action.
+    read from. The persist adds no action. An owner that outlives the
+    query (a catalog Task's upload) releases the handle itself, from
+    whichever thread.
 
     ``source`` size-gates the persist on the optimizer's size of the
     source whose N-1 re-scans it saves (``frame`` itself is small by
@@ -128,18 +133,27 @@ def keep(frame: DataFrame, *, source: DataFrame | None = None,
         return frame
     frame = frame.localCheckpoint(eager=True) if checkpoint \
         else frame.persist()
-    _KEPT.frames.append((frame, checkpoint))
+    kept = _KEPT.frames
+    kept.append((frame, checkpoint))
+    setattr(frame, _OWNER, kept)
     return frame
 
 
 def release(*frames: DataFrame) -> None:
-    """Free kept frames now: a loop's previous round, or what a caller
-    outside a registry query kept. Frames keep() did not record (a
-    size-gated no-op, or already released) are ignored."""
-    ids = {id(f) for f in frames}
-    kept = _KEPT.frames
-    gone = [h for h in kept if id(h[0]) in ids]
-    kept[:] = [h for h in kept if id(h[0]) not in ids]
+    """Free kept frames now, whichever thread kept them: a loop's
+    previous round, or what a caller outside a registry query kept.
+    Frames keep() did not record (a size-gated no-op, or already
+    released) are ignored."""
+    gone = []
+    with _RELEASE_LOCK:
+        for frame in frames:
+            # vars(): a DataFrame's __getattr__ would resolve a missing
+            # attribute as a column, one py4j round trip per call
+            kept = vars(frame).get(_OWNER, _KEPT.frames)
+            at = next((i for i, (f, _) in enumerate(kept) if f is frame),
+                      None)
+            if at is not None:
+                gone.append(kept.pop(at))
     for frame, checkpoint in gone:
         if frame.sparkSession.sparkContext._jsc is None:
             continue  # the stopped context took the blocks with it

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pytest
 
 
@@ -14,3 +16,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def jobs_started(spark) -> Callable[[str, Callable[[], object]], int]:
+    """``count(group, fn)``: the Spark jobs ``fn`` starts on this
+    thread, counted under a fresh job group."""
+    def count(group: str, fn: Callable[[], object]) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

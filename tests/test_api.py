@@ -99,6 +99,80 @@ def test_api_full_flow(spark, csvs):
         server.stop()
 
 
+def _persistent(spark) -> int:
+    return int(spark.sparkContext._jsc.getPersistentRDDs().size())
+
+
+def test_upload_profile_serves_preview_and_pre_analyze_without_jobs(
+        spark, csvs, jobs_started):
+    """The upload's ingest profile answers the preview and the all-NaN
+    check with no Spark job, and a histogram runs only its bucket
+    aggregate. Endpoints are called on this thread so that the job
+    group sees their jobs."""
+    train_csv, _ = csvs
+    server = ApiServer(spark)
+    try:
+        server.upload({"taskname": "p", "train_data_path": train_csv})
+        t = {"taskname": "p"}
+        out = {}
+        assert jobs_started("api-preview",
+                            lambda: out.update(server.display_data(t))) == 0
+        assert len(out["rows"]) == 5
+        assert jobs_started("api-pre-analyze",
+                            lambda: out.update(server.pre_analyze(t))) == 0
+        assert out["nan_columns"] == ["all_null"]
+        assert jobs_started("api-histogram", lambda: out.update(
+            server.generate_histogram(dict(t, column="l_quantity")))) <= 2
+        assert sum(b["cnt"] for b in out["histogram"]) == 300
+        hist = server.tasks["p"].histogram("l_quantity")
+        plan = hist._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan
+    finally:
+        server.stop()
+
+
+def test_reupload_replaces_the_profile_and_stop_frees_every_upload(
+        spark, csvs, tmp_path):
+    """A re-upload to the same task serves the new file's preview, nan
+    columns and histogram and frees the old upload; the preview follows
+    dropped columns; stop() frees every task's upload."""
+    import pandas as pd
+
+    train_csv, test_csv = csvs
+    other = str(tmp_path / "other.csv")
+    pd.DataFrame({"l_quantity": [100.0 + i for i in range(8)],
+                  "k": list(range(8)), "empty": [None] * 8}).to_csv(
+        other, index=False)
+    before = _persistent(spark)
+    server = ApiServer(spark)
+    try:
+        server.upload({"taskname": "r", "train_data_path": train_csv})
+        server.upload({"taskname": "s", "train_data_path": test_csv})
+        assert _persistent(spark) == before + 2
+        t = {"taskname": "r"}
+        first = (server.display_data(t)["rows"],
+                 server.pre_analyze(t)["nan_columns"],
+                 server.generate_histogram(dict(t, column="l_quantity")))
+        server.set_supervised_options(
+            dict(t, label="l_extendedprice", excluded_features=["l_tax"]))
+        assert set(server.display_data(t)["rows"][0]) == {
+            "l_quantity", "l_discount", "l_extendedprice"}
+
+        server.upload(dict(t, train_data_path=other))
+        assert _persistent(spark) == before + 2
+        rows = server.display_data(t)["rows"]
+        assert rows != first[0]
+        assert rows[0] == {"l_quantity": 100.0, "k": 0, "empty": None}
+        assert server.pre_analyze(t)["nan_columns"] == ["empty"] != first[1]
+        hist = server.generate_histogram(dict(t, column="l_quantity"))
+        assert hist != first[2]
+        assert sum(b["cnt"] for b in hist["histogram"]) == 8
+        assert min(b["bin_lo"] for b in hist["histogram"]) == 100.0
+    finally:
+        server.stop()
+    assert _persistent(spark) == before
+
+
 def test_api_errors(spark):
     server = ApiServer(spark)
     port = server.start()

@@ -44,9 +44,18 @@ def test_remove_features_ignores_missing(spark):
     assert df2.columns == ["id", "allnull", "s"]
 
 
+def test_column_stats_one_row_of_counts_and_numeric_bounds(spark):
+    non_null, bounds = prof.column_stats(_df(spark))
+    assert non_null == {"id": 4, "a": 3, "allnull": 0, "s": 3}
+    # strings have no bounds; an all-null column's are None
+    assert bounds == {"id": (1, 4), "a": (1.0, 4.0), "allnull": (None, None)}
+
+
 def test_histogram_bin_edges_and_counts(spark):
     df = spark.createDataFrame([(float(i),) for i in range(100)], "v double")
-    got = {r["bin"]: r for r in prof.histogram(df, "v", 10).collect()}
+    _, bounds = prof.column_stats(df)
+    assert bounds == {"v": (0.0, 99.0)}
+    got = {r["bin"]: r for r in prof.histogram(df, "v", 10, *bounds["v"]).collect()}
     assert len(got) == 10
     assert got[0]["cnt"] == 10
     # max value lands in the LAST bin (the least() clamp)

@@ -1,5 +1,6 @@
 """The session contract: the driver-memory default, every engine conf on
-the get_spark() session, and the warnings when a conf does not apply or
+the get_spark() session, the error when a correctness-critical conf
+does not apply, and the warnings when another conf does not apply or
 the package cannot be shipped to the Python workers."""
 
 from __future__ import annotations
@@ -77,6 +78,30 @@ def test_tune_warns_once_naming_confs_that_did_not_apply(monkeypatch):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         session.tune(fake)
+
+
+class _RefusingConf:
+    def __init__(self, refused: str) -> None:
+        self.refused = refused
+
+    def set(self, key, value):
+        if key == self.refused:
+            raise RuntimeError("static conf")
+
+
+@pytest.mark.parametrize("key", session._CRITICAL_CONFS)
+def test_tune_raises_when_a_correctness_conf_does_not_apply(monkeypatch,
+                                                            key):
+    """A session whose timezone or timestamp inference cannot be pinned
+    would give different results, so tune() refuses it (a stub session:
+    no second SparkContext)."""
+    shipped = []
+    monkeypatch.setattr(session, "_ship_package", shipped.append)
+    fake = SimpleNamespace(conf=_RefusingConf(key))
+    with pytest.raises(RuntimeError, match=key):
+        session.tune(fake)
+    assert not getattr(fake, "_sparkgraft_tuned", False)
+    assert shipped == []
 
 
 class _NoShipContext:

@@ -3,7 +3,8 @@ query intermediates have one owner: ``tables.keep`` persists or
 checkpoints them, the registry releases them when the thread's next
 query starts, and nothing else in the package persists. The operators
 also share one exact-statistics vocabulary (``operators.timeseries``):
-no module writes the 1e-6 readout or an exact square by hand."""
+no operator or streaming module writes the 1e-6 readout, an exact
+square or the half-up cents by hand."""
 
 from __future__ import annotations
 
@@ -11,7 +12,6 @@ import ast
 import os
 import re
 import sys
-from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from types import SimpleNamespace
 
@@ -23,29 +23,18 @@ from auto_ml_platform_with_timeseries_data_spark import registry, tables
 from auto_ml_platform_with_timeseries_data_spark.operators import timeseries
 
 
-def _jobs(spark, group: str, fn: Callable[[], object]) -> int:
-    """Spark jobs ``fn`` starts, counted under a fresh job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture
 def no_schemas(monkeypatch):
     monkeypatch.setattr(tables, "_SCHEMAS", {})
 
 
-def test_second_load_starts_no_job(spark, sf_dir, no_schemas):
+def test_second_load_starts_no_job(spark, sf_dir, no_schemas,
+                                  jobs_started):
     def load():
         return tables.load_table(spark, sf_dir, "orders")
 
-    assert _jobs(spark, "tables-cold-load", load) >= 1
-    assert _jobs(spark, "tables-warm-load", load) == 0
+    assert jobs_started("tables-cold-load", load) >= 1
+    assert jobs_started("tables-warm-load", load) == 0
 
 
 def test_rewritten_file_is_read_afresh(spark, tmp_path, no_schemas):
@@ -162,7 +151,27 @@ def test_release_frees_kept_frames_in_place(spark):
     tables.release(cp)                        # already released: no-op
 
 
+def test_release_frees_a_frame_kept_on_another_thread(spark):
+    """A frame kept on a worker thread (an HTTP request's) is freed by
+    release() from any thread; release_all() frees only the calling
+    thread's own frames."""
+    tables.release_all()
+    before = _persistent(spark)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        kept = pool.submit(tables.keep, spark.range(7)).result(timeout=60)
+    assert kept.count() == 7
+    assert _persistent(spark) == before + 1
+    tables.release_all()
+    assert _persistent(spark) == before + 1
+    tables.release(kept)
+    assert _persistent(spark) == before
+    tables.release(kept)                      # already released: no-op
+
+
 class _Frame:
+    # a stopped context: release() drops the record and frees nothing
+    sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+
     def persist(self):
         return self
 
@@ -179,6 +188,31 @@ def test_on_caller_records_every_worker_keep():
             futures = [pool.submit(keep, 200) for _ in range(32)]
             assert all(len(f.result(timeout=60)) == 200 for f in futures)
         assert len(tables._KEPT.frames) == 32 * 200
+    finally:
+        sys.setswitchinterval(old)
+        tables._KEPT.frames.clear()
+
+
+def test_concurrent_keeps_and_cross_thread_releases_lose_no_handle():
+    """Releases from other threads while workers keep onto the same
+    list drop exactly the released handles."""
+    tables.release_all()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        keep = tables.on_caller(
+            lambda n: [tables.keep(_Frame()) for _ in range(n)])
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            batches = [f.result(timeout=60)
+                       for f in [pool.submit(keep, 100) for _ in range(16)]]
+            futures = ([pool.submit(tables.release, *b[:50]) for b in batches]
+                       + [pool.submit(keep, 100) for _ in range(16)])
+            later = [f.result(timeout=60) for f in futures][16:]
+        released = {id(f) for b in batches for f in b[:50]}
+        left = {id(f) for f, _ in tables._KEPT.frames}
+        assert len(tables._KEPT.frames) == 16 * 50 + 16 * 100
+        assert not left & released
+        assert left == {id(f) for b in batches + later for f in b} - released
     finally:
         sys.setswitchinterval(old)
         tables._KEPT.frames.clear()
@@ -219,16 +253,19 @@ def test_only_tables_persists():
 
 
 # the hand-written copies of the shared vocabulary: the 1e-6 readout in
-# SQL (pin_sql), in Spark (pin) and on the driver (pin_float), and the
-# exact square dec(x) * dec(x) (dec_sq, which exact_moments sums)
+# SQL (pin_sql), in Spark (pin) and on the driver (pin_float), the
+# exact square dec(x) * dec(x) (dec_sq, which exact_moments sums) and
+# the half-up cents x * 100 + 0.5 (cents, cents_sql)
 _MICRO = r"(?:1e6|1_000_000|1000000)"
 _HAND_COPIES = (
     re.compile(rf"\*\s*{_MICRO}\s*\+\s*0\.5\)\s*/\s*{_MICRO}"),
     re.compile(rf"\*\s*{_MICRO}\s*\+\s*F\.lit\(0\.5\)\)\s*/\s*{_MICRO}"),
     re.compile(r"dec\((?P<x>[^()]*(?:\([^()]*\))*[^()]*)\)"
                r"\s*\*\s*dec\((?P=x)\)"),
+    re.compile(r"\*\s*100\s*\+\s*0\.5"),
+    re.compile(r"\*\s*100\s*\+\s*F\.lit\(0\.5\)"),
 )
-_VOCABULARY = {"pin", "pin_sql", "pin_float", "dec_sq"}
+_VOCABULARY = {"pin", "pin_sql", "pin_float", "dec_sq", "cents", "cents_sql"}
 
 
 def _hand_copies(path: str) -> list[str]:
@@ -253,11 +290,13 @@ def _hand_copies(path: str) -> list[str]:
 
 
 def test_operators_use_the_exact_statistics_vocabulary():
-    """No operator module writes floor(x * 1e6 + 0.5) / 1e6 or
-    dec(x) * dec(x) by hand, or defines its own pin."""
-    root = os.path.dirname(timeseries.__file__)
+    """No operator or streaming module writes floor(x * 1e6 + 0.5) /
+    1e6, dec(x) * dec(x) or x * 100 + 0.5 by hand, or defines its own
+    pin."""
     found = []
-    for f in sorted(os.listdir(root)):
-        if f.endswith(".py"):
-            found += _hand_copies(os.path.join(root, f))
+    for root in (os.path.dirname(timeseries.__file__),
+                 os.path.join(os.path.dirname(pkg.__file__), "streaming")):
+        for f in sorted(os.listdir(root)):
+            if f.endswith(".py"):
+                found += _hand_copies(os.path.join(root, f))
     assert found == []
